@@ -28,6 +28,8 @@ from __future__ import annotations
 import posixpath
 import threading
 
+from quickwit_spark.functions.lru import LRU
+
 _SUPPORTED_HINT = (
     "supported: local paths, file://, mock://<abs-path> (tests), and any "
     "pyarrow-supported object store (s3://, gs://, hdfs://, abfs://)"
@@ -91,10 +93,10 @@ def parquet_file(path: str):
 # Cache entries are shared across threads (the searcher's leaf pool +
 # the ThreadingHTTPServer in serve.py), so the dict is lock-guarded and
 # each entry is a _SyncParquetFile that serializes I/O-performing reads
-# per file — pyarrow ParquetFile reads are not thread-safe.
-_PF_CACHE: "dict[str, _SyncParquetFile]" = {}
+# per file — pyarrow ParquetFile reads are not thread-safe. Each handle
+# weighs 1, so the LRU's budget counts open files.
 _PF_CACHE_MAX = 128
-_PF_CACHE_LOCK = threading.Lock()
+_PF_CACHE = LRU(lambda: _PF_CACHE_MAX)
 
 
 class _SyncParquetFile:
@@ -132,22 +134,13 @@ def parquet_file_cached(path: str):
     """``parquet_file`` with a per-process LRU footer cache — ONLY for
     paths whose bytes never change under that name (split files,
     versioned stats files). Returns a :class:`_SyncParquetFile`."""
-    with _PF_CACHE_LOCK:
-        got = _PF_CACHE.pop(path, None)
-        if got is not None:
-            _PF_CACHE[path] = got  # re-insert = move to MRU end
-            return got
-    # open OUTSIDE the cache lock (footer parse / object-store round
-    # trip must not serialize unrelated paths); last writer wins on a
-    # racing double-open of the same immutable file — harmless
-    opened = _SyncParquetFile(parquet_file(path), threading.Lock())
-    with _PF_CACHE_LOCK:
-        got = _PF_CACHE.pop(path, None)
-        if got is None:
-            got = opened
-            while len(_PF_CACHE) >= _PF_CACHE_MAX:
-                del _PF_CACHE[next(iter(_PF_CACHE))]
-        _PF_CACHE[path] = got
+    got = _PF_CACHE.get(path)
+    if got is None:
+        # open OUTSIDE the cache lock (footer parse / object-store round
+        # trip must not serialize unrelated paths); the first writer wins
+        # a racing double-open of the same immutable file — harmless
+        opened = _SyncParquetFile(parquet_file(path), threading.Lock())
+        got = _PF_CACHE.put(path, opened, 1)
     return got
 
 

@@ -21,27 +21,24 @@ from __future__ import annotations
 from bisect import bisect_left
 
 
-def read_pruned(path_or_file, columns, key_col: str, values):
+def read_pruned(path: str, columns, key_col: str, values, cache=None):
     """Read ``columns`` of the rows where ``key_col`` ∈ ``values``,
     touching only row groups whose [min, max] stats can contain one of
     the values. ``values`` must be non-empty; returns a pyarrow Table
-    (the residual mask is exact). ``path_or_file`` may be a path or an
-    open ``pq.ParquetFile`` (pass the latter to amortize footer parsing
-    across reads of the same file)."""
+    (the residual mask is exact). ``path`` is always an immutable index
+    file (split parquet, versioned term stats), so the cached open is
+    safe and saves the per-read footer parse.
+
+    ``cache`` (an :class:`~quickwit_spark.functions.lru.LRU`) keeps the
+    DECODED row groups under ``(path, row group, columns)``, so a
+    repeated read skips the decompress + decode and only re-applies the
+    residual mask."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     from quickwit_spark.functions import fs as fsio
 
-    # string paths here are always immutable index files (split parquet,
-    # versioned term-stats) — the cached open is safe and saves the
-    # per-query footer parse. Non-strings are already-open handles
-    # (pq.ParquetFile or the cache's thread-safe _SyncParquetFile).
-    pf = (
-        fsio.parquet_file_cached(path_or_file)
-        if isinstance(path_or_file, str)
-        else path_or_file
-    )
+    pf = fsio.parquet_file_cached(path)
     md = pf.metadata
     key_idx = md.schema.to_arrow_schema().get_field_index(key_col)
     vals = sorted(set(values))
@@ -63,15 +60,23 @@ def read_pruned(path_or_file, columns, key_col: str, values):
         fields = [
             schema.field(c) for c in (read_cols or schema.names)
         ]
-        empty = pa.table(
+        tbl = pa.table(
             {f.name: pa.array([], type=f.type) for f in fields}
         )
     else:
-        empty = None
-    if empty is not None:
-        tbl = empty
-    else:
-        tbl = pf.read_row_groups(groups, columns=read_cols)
+        if cache is None:
+            tbl = pf.read_row_groups(groups, columns=read_cols)
+        else:
+            ckey = None if read_cols is None else tuple(read_cols)
+            parts = []
+            for g in groups:
+                key = (path, g, ckey)
+                got = cache.get(key)
+                if got is None:
+                    got = pf.read_row_group(g, columns=read_cols)
+                    got = cache.put(key, got, got.nbytes)
+                parts.append(got)
+            tbl = pa.concat_tables(parts)
         mask = pc.is_in(tbl.column(key_col), value_set=pa.array(vals))
         tbl = tbl.filter(mask)
     if columns is not None and key_col not in columns:

@@ -48,7 +48,6 @@ from __future__ import annotations
 
 import math
 import os
-import threading
 from dataclasses import dataclass, field as dc_field
 
 import numpy as np
@@ -57,6 +56,7 @@ import pandas as pd
 from quickwit_spark.config import IndexConfig
 from quickwit_spark.functions import fs as fsio
 from quickwit_spark.functions.codec import decode_positions, decode_varint, delta_decode
+from quickwit_spark.functions.lru import LRU
 from quickwit_spark.functions.phrase import phrase_freq_bulk
 from quickwit_spark.operators.build import DOCS_FILE, POSTINGS_FILE
 from quickwit_spark.plans.catalog import Catalog
@@ -130,8 +130,9 @@ class SearchResponse:
 # split-local evaluation (runs inside the mapInPandas kernel)
 # ---------------------------------------------------------------------------
 
-def _read_postings(split_dir: str, terms: set[tuple[str, str]]):
-    """Read + decode only the query terms' posting rows.
+def _read_postings(split_dir: str, terms: set[tuple[str, str]], cache=None):
+    """Read + decode only the query terms' posting rows (``cache``: the
+    decoded row-group LRU, see :func:`read_pruned`).
 
     Returns {(field, term): (docids, tfs, positions_concat|None)} with
     shards concatenated in docid order.
@@ -140,7 +141,7 @@ def _read_postings(split_dir: str, terms: set[tuple[str, str]]):
 
     path = fsio.join(split_dir, POSTINGS_FILE)
     term_values = sorted({t for _, t in terms})
-    tbl = read_pruned(path, None, "term", term_values)
+    tbl = read_pruned(path, None, "term", term_values, cache)
     out: dict[tuple[str, str], tuple] = {}
     fields = tbl.column("field").to_pylist()
     tvals = tbl.column("term").to_pylist()
@@ -273,10 +274,11 @@ class _ShardPostings:
     tfs blobs are read in one pushdown-filtered scan but only DECODED
     for shards the evaluator actually visits."""
 
-    def __init__(self, path: str, keys: list[tuple[str, str]]):
+    def __init__(self, path: str, keys: list[tuple[str, str]], cache=None):
         from quickwit_spark.functions.parquet_io import read_pruned
 
-        self._pf = fsio.parquet_file_cached(path)
+        self._path = path
+        self._cache = cache
         keyset = set(keys)
         term_values = sorted({t for _, t in keyset})
         self._term_values = term_values
@@ -285,10 +287,10 @@ class _ShardPostings:
         # decode-on-demand skips the DECODE per shard, not the read —
         # and one scan halves the per-query row-group read count
         tbl = read_pruned(
-            self._pf,
+            path,
             ["field", "term", "shard", "df", "max_tf", "min_dl",
              "first_docid", "last_docid", "doc_ids", "tfs"],
-            "term", term_values,
+            "term", term_values, cache,
         )
         fields = tbl.column("field").to_pylist()
         terms = tbl.column("term").to_pylist()
@@ -361,9 +363,9 @@ class _ShardPostings:
             from quickwit_spark.functions.parquet_io import read_pruned
 
             self._pos_tbl = read_pruned(
-                self._pf,
+                self._path,
                 ["field", "term", "shard", "positions"],
-                "term", self._term_values,
+                "term", self._term_values, self._cache,
             )
             self._pos_row = {
                 (f, t, int(s)): i
@@ -400,7 +402,7 @@ class _ShardPostings:
 
 
 def _wand_bool(
-    split_dir: str, groups, neg, doc_len, stats, config, m: int
+    split_dir: str, groups, neg, doc_len, stats, config, m: int, cache=None
 ) -> tuple[np.ndarray, np.ndarray, int, dict]:
     """Block-max pruned top-m for flat term booleans at shard
     granularity — the posting-row analog of tantivy's block-max WAND
@@ -473,7 +475,7 @@ def _wand_bool(
     neg_info = [_minfo(n) for n in neg_shapes]
     all_pos = [k for g in member_info for (_, keys, _) in g for k in keys]
     neg_keys = [k for (_, keys, _) in neg_info for k in keys]
-    sp = _ShardPostings(path, all_pos + negk + neg_keys)
+    sp = _ShardPostings(path, all_pos + negk + neg_keys, cache)
     k1, b = config.k1, config.b
     N, avgdl = stats["N"], stats["avgdl"]
     empty = (np.empty(0, np.int64), np.empty(0, np.float64))
@@ -1030,8 +1032,6 @@ def _top_m(ids, scores, m):
 # latency floor after the postings read (profiled at 16 splits/200k
 # docs). Bounded by BYTES, not entries: a 10M-doc split's fast columns
 # are ~160 MB, so a count bound would be unsafe on big-split executors.
-_FAST_CACHE: dict[tuple, tuple] = {}  # key -> (arrow table, nbytes)
-_FAST_CACHE_BYTES = 0
 # 256 MB default per process: the driver holds one; EVERY reused Spark
 # python worker holds one too, so size for workers-many copies (tune
 # with QS_FASTFIELD_CACHE_BYTES; a 10M-doc split's fast columns are
@@ -1039,27 +1039,22 @@ _FAST_CACHE_BYTES = 0
 _FAST_CACHE_MAX_BYTES = int(
     os.environ.get("QS_FASTFIELD_CACHE_BYTES", 256 << 20)
 )
-_FAST_CACHE_LOCK = threading.Lock()
+# the budget is read at every insert, so the node config's
+# fast_field_cache_capacity (cli.py) resizes a live cache
+_FAST_CACHE = LRU(lambda: _FAST_CACHE_MAX_BYTES)
+
+# Per-Searcher budget of decoded posting / doc-store row groups (see
+# Searcher._blocks).
+_BLOCK_CACHE_MAX_BYTES = 128 << 20
 
 
 def _fast_table_cached(dpath: str, cols: tuple):
-    global _FAST_CACHE_BYTES
     key = (dpath, cols)
-    with _FAST_CACHE_LOCK:
-        got = _FAST_CACHE.pop(key, None)
-        if got is not None:
-            _FAST_CACHE[key] = got  # re-insert = move to MRU end
-            return got[0]
-    tbl = fsio.read_table(dpath, columns=list(cols))
-    nbytes = tbl.nbytes
-    with _FAST_CACHE_LOCK:
-        if key not in _FAST_CACHE:
-            _FAST_CACHE[key] = (tbl, nbytes)
-            _FAST_CACHE_BYTES += nbytes
-            while _FAST_CACHE_BYTES > _FAST_CACHE_MAX_BYTES and _FAST_CACHE:
-                oldest = next(iter(_FAST_CACHE))  # insertion order = LRU
-                _FAST_CACHE_BYTES -= _FAST_CACHE.pop(oldest)[1]
-    return tbl
+    got = _FAST_CACHE.get(key)
+    if got is None:
+        tbl = fsio.read_table(dpath, columns=list(cols))
+        got = _FAST_CACHE.put(key, tbl, tbl.nbytes)
+    return got
 
 
 def _eval_split_partial(
@@ -1076,11 +1071,14 @@ def _eval_split_partial(
     aggs: dict | None,
     wand: bool = True,
     fetch_payload: bool = True,
+    cache=None,
 ) -> pd.DataFrame:
     """One leaf search: returns partial rows (hits + count + agg buckets).
     ``fetch_payload=False`` defers doc-store reads to the root's
     fetch_docs phase (driver mode only — spark-mode kernels keep the
-    fetch leaf-side for data locality on a real cluster)."""
+    fetch leaf-side for data locality on a real cluster). ``cache`` is
+    the Searcher's decoded row-group LRU for the postings reads (driver
+    mode only)."""
     import pyarrow.parquet as pq
 
     from quickwit_spark.operators.build import limit_worker_threads
@@ -1128,7 +1126,7 @@ def _eval_split_partial(
         w_groups, w_neg = wplan
         ids, scores, num_hits, _skips = _wand_bool(
             split_dir, w_groups, w_neg,
-            doc_len.astype(np.float64), stats, config, m,
+            doc_len.astype(np.float64), stats, config, m, cache,
         )
         return _partial_rows_from_topk(
             split_id, dpath, ids, scores, scores, num_hits, ts_us,
@@ -1136,7 +1134,7 @@ def _eval_split_partial(
         )
 
     terms = query_terms(ast)
-    postings = _read_postings(split_dir, terms) if terms else {}
+    postings = _read_postings(split_dir, terms, cache) if terms else {}
     ev = _SplitEval(postings, doc_len, stats, config)
     ids, scores = ev.eval(ast)
 
@@ -1224,9 +1222,10 @@ def _eval_split_partial(
     return pd.DataFrame(out_rows, columns=_HIT_COLS)
 
 
-def fetch_doc_payloads(dpath: str, docids) -> dict[int, str]:
+def fetch_doc_payloads(dpath: str, docids, cache=None) -> dict[int, str]:
     """fetch_docs for one split (fetch_docs.rs:98-173 — grouped,
-    docid-filtered doc-store read): {docid: doc json}."""
+    docid-filtered doc-store read): {docid: doc json}. ``cache``: the
+    decoded row-group LRU, see :func:`read_pruned`."""
     import json as _json
 
     from quickwit_spark.functions.parquet_io import read_pruned
@@ -1234,7 +1233,7 @@ def fetch_doc_payloads(dpath: str, docids) -> dict[int, str]:
     schema_cols = fsio.parquet_file_cached(dpath).schema_arrow.names
     fetch_cols = [c for c in schema_cols if c not in ("ts_us", "doc_len")]
     doc_tbl = read_pruned(
-        dpath, fetch_cols, "docid", [int(d) for d in docids]
+        dpath, fetch_cols, "docid", [int(d) for d in docids], cache
     )
     out = {}
     for rec in doc_tbl.to_pylist():
@@ -1647,8 +1646,9 @@ def _df_candidate_splits(splits, missing, default_field):
 
 class Searcher:
     """Warm search handle over one index: caches catalog, global stats,
-    and per-term global doc-freqs across queries (the root's metastore +
-    footer caches, leaf.rs:64-107 analog)."""
+    per-term global doc-freqs and decoded row groups across queries (the
+    root's metastore + footer + byte-range caches, leaf.rs:64-107
+    analog)."""
 
     def __init__(self, spark, index_dir: str, at_seq: int | None = None):
         self.spark = spark
@@ -1663,6 +1663,13 @@ class Searcher:
         self.catalog = Catalog.load(index_dir, at_seq=at_seq)
         self.config = self.catalog.config
         self._df_cache: dict[tuple[str, str], int] = {}
+        # decoded posting / doc-store row groups of the driver-mode read
+        # paths, keyed (file path, row group, columns). Per HANDLE, not
+        # per process: a fresh Searcher always re-reads the disk, so a
+        # corrupted split surfaces as a per-split error instead of being
+        # served from memory. Split files are immutable, so entries stay
+        # valid across refresh(), which drops only unpublished splits.
+        self._blocks = LRU(lambda: _BLOCK_CACHE_MAX_BYTES)
         self._catalog_mtime = self._mtime()
         self._pool = None  # lazy persistent leaf-thread pool
 
@@ -1690,6 +1697,12 @@ class Searcher:
         self.catalog = Catalog.load(self.index_dir, at_seq=self.at_seq)
         self.config = self.catalog.config
         self._df_cache.clear()
+        live = {
+            fsio.join(self.catalog.split_dir(s.split_id), f)
+            for s in self.catalog.published_splits()
+            for f in (POSTINGS_FILE, DOCS_FILE)
+        }
+        self._blocks.retain(lambda key: key[0] in live)
         self._catalog_mtime = self._mtime()
 
     def _refresh_if_stale(self) -> None:
@@ -1818,7 +1831,9 @@ class Searcher:
             dpath = fsio.join(self.catalog.split_dir(split_id), DOCS_FILE)
             for attempt in (0, 1):
                 try:
-                    return hs, fetch_doc_payloads(dpath, [h.docid for h in hs])
+                    return hs, fetch_doc_payloads(
+                        dpath, [h.docid for h in hs], self._blocks
+                    )
                 except Exception as exc:  # noqa: BLE001 - reported
                     if attempt:
                         return hs, (split_id, exc)
@@ -1897,7 +1912,7 @@ class Searcher:
                         return _eval_split_partial(
                             r[0], r[1], ast, stats, config, m,
                             start_us, end_us, sort_by, sort_desc, aggs,
-                            wand, fetch_payload=False,
+                            wand, fetch_payload=False, cache=self._blocks,
                         )
                     except Exception as exc:  # noqa: BLE001 - reported
                         if attempt:

@@ -82,13 +82,16 @@ def _write_manifest(shard_dir: str, manifest: dict) -> None:
 def _load_manifest(shard_dir: str) -> dict | None:
     """Parsed manifest, cached per immutable path; None when missing OR
     unparsable (a torn/foreign file must degrade to the distributed
-    fallback, never crash the query path)."""
+    fallback, never crash the query path). A cache hit still checks the
+    file exists: a stats directory removed from outside the process
+    must read as missing so refresh rewrites it."""
     mpath = fsio.join(shard_dir, _MANIFEST)
+    if not fsio.exists(mpath):
+        _MANIFEST_CACHE.pop(mpath, None)
+        return None
     cached = _MANIFEST_CACHE.get(mpath)
     if cached is not None:
         return cached
-    if not fsio.exists(mpath):
-        return None
     try:
         manifest = json.loads(fsio.read_bytes(mpath))
         parts = manifest["parts"]  # shape check

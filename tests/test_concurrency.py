@@ -1,9 +1,10 @@
 """Concurrent serving: many client threads sharing one Searcher (and
 the live HTTP server) must return bit-identical results with no
-errors. This exercises the thread-safety of the process-wide caches —
-fs._PF_CACHE's per-handle read locks (ADVICE r3 #1) and the fast-field
-LRU — under real parallel load with cold caches, the situation a
-ThreadingHTTPServer + persistent leaf pool creates in production."""
+errors. This exercises the thread-safety of the caches — fs._PF_CACHE's
+per-handle read locks (ADVICE r3 #1), the fast-field LRU and the shared
+Searcher's decoded row-group LRU — under real parallel load with cold
+caches, the situation a ThreadingHTTPServer + persistent leaf pool
+creates in production."""
 
 from __future__ import annotations
 
@@ -41,17 +42,16 @@ N_THREADS = 16
 ROUNDS_PER_THREAD = 6
 
 
-def _clear_process_caches():
-    """Force cold parquet-handle / fast-field opens so threads race on
-    cache population, not just on cached reads."""
+def _clear_process_caches(searcher):
+    """Force cold parquet-handle / fast-field opens and row-group
+    decodes so threads race on cache population, not just on cached
+    reads."""
     from quickwit_spark.functions import fs
     from quickwit_spark.operators import search
 
-    with fs._PF_CACHE_LOCK:
-        fs._PF_CACHE.clear()
-    with search._FAST_CACHE_LOCK:
-        search._FAST_CACHE.clear()
-        search._FAST_CACHE_BYTES = 0
+    fs._PF_CACHE.clear()
+    search._FAST_CACHE.clear()
+    searcher._blocks.clear()
 
 
 def _key(resp):
@@ -61,7 +61,7 @@ def _key(resp):
 def test_concurrent_searches_bit_identical(searcher):
     ref = {q: _key(searcher.search(q, k=10)) for q in QUERIES}
     assert all(len(v) for v in ref.values())
-    _clear_process_caches()
+    _clear_process_caches(searcher)
 
     def worker(seed: int):
         rng = random.Random(seed)
@@ -100,7 +100,7 @@ def test_concurrent_http_requests(index):
     try:
         ref = {q: get(q.replace(" ", "%20").replace('"', "%22"))
                for q in ("w00001", "w00003%20w00007", "hotterm")}
-        _clear_process_caches()
+        _clear_process_caches(index.searcher())
 
         def worker(seed: int):
             rng = random.Random(seed)

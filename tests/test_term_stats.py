@@ -34,24 +34,34 @@ TERMS = {
 }
 
 
-def _force_sharded(spark, index_dir, monkeypatch):
-    cat = Catalog.load(index_dir)
-    shutil.rmtree(os.path.join(index_dir, "term_stats"))
-    monkeypatch.setattr(stats_mod, "DRIVER_REFRESH_MAX_SPLITS", 0)
-    stats_mod.refresh_term_stats(spark, cat)
-    return cat
+def _refresh_sharded(spark, cat):
+    """refresh_term_stats forced onto the distributed (sharded) path."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(stats_mod, "DRIVER_REFRESH_MAX_SPLITS", 0)
+        return stats_mod.refresh_term_stats(spark, cat)
+
+
+@pytest.fixture(scope="module")
+def single_file_stats(spark, stats_index):
+    """Converts ``stats_index`` to the sharded layout once per module, so
+    every sharded test passes on its own; returns the lookup of TERMS
+    through the single-file layout the build published, taken before
+    the conversion (the ground truth)."""
+    cat = Catalog.load(stats_index)
+    want = stats_mod.lookup_term_stats(cat, TERMS)
+    shutil.rmtree(os.path.join(stats_index, "term_stats"))
+    _refresh_sharded(spark, cat)
+    return want
 
 
 def test_sharded_layout_matches_single_file(
-    spark, stats_index, monkeypatch
+    spark, stats_index, single_file_stats
 ):
-    # ground truth from the single-file layout the build published
-    cat = Catalog.load(stats_index)
-    want = stats_mod.lookup_term_stats(cat, TERMS)
+    want = single_file_stats
     assert want is not None and want[("text", "w00001")] > 0
     assert want[("text", "zzz_not_a_term")] == 0
 
-    cat = _force_sharded(spark, stats_index, monkeypatch)
+    cat = Catalog.load(stats_index)
     path = cat.term_stats_path()
     shard_dir = stats_mod._shard_dir(path)
     # distributed layout: parts + manifest, NO single vocab-sized file
@@ -83,7 +93,8 @@ def test_sharded_layout_matches_single_file(
     assert stats_mod.refresh_term_stats(spark, cat) == path
 
 
-def test_sharded_stats_search_parity(spark, stats_index, monkeypatch):
+@pytest.mark.usefixtures("single_file_stats")
+def test_sharded_stats_search_parity(spark, stats_index):
     """BM25 results over the sharded-stats index are bit-identical to
     the distributed-aggregation fallback (stats hidden)."""
     from quickwit_spark.operators.search import Searcher
@@ -93,7 +104,7 @@ def test_sharded_stats_search_parity(spark, stats_index, monkeypatch):
         os.path.join(
             stats_mod._shard_dir(cat.term_stats_path()), stats_mod._MANIFEST
         )
-    ), "run after test_sharded_layout_matches_single_file (module order)"
+    )
     warm = Searcher(spark, stats_index)
     a = warm.search("w00001 w00002", k=10)
     stats_root = os.path.join(stats_index, "term_stats")
@@ -110,6 +121,7 @@ def test_sharded_stats_search_parity(spark, stats_index, monkeypatch):
     ]
 
 
+@pytest.mark.usefixtures("single_file_stats")
 def test_carry_forward_sharded(spark, stats_index, monkeypatch):
     """A merge-style carry-forward republishes the shard directory
     under the new version (manifest last), and lookups still agree."""
@@ -129,6 +141,7 @@ def test_carry_forward_sharded(spark, stats_index, monkeypatch):
     assert got == want
 
 
+@pytest.mark.usefixtures("single_file_stats")
 def test_torn_manifest_degrades_not_crashes(spark, stats_index):
     """A torn/garbage manifest must read as 'no stats' (refresh repairs
     it, lookup returns None for the distributed fallback) — never a
@@ -144,12 +157,7 @@ def test_torn_manifest_degrades_not_crashes(spark, stats_index):
         assert not stats_mod._stats_exists(cat.term_stats_path())
         assert stats_mod.lookup_term_stats(cat, TERMS) is None
         # refresh repairs: clears the torn dir and rewrites
-        monkey_thresh = stats_mod.DRIVER_REFRESH_MAX_SPLITS
-        stats_mod.DRIVER_REFRESH_MAX_SPLITS = 0
-        try:
-            stats_mod.refresh_term_stats(spark, cat)
-        finally:
-            stats_mod.DRIVER_REFRESH_MAX_SPLITS = monkey_thresh
+        _refresh_sharded(spark, cat)
         assert stats_mod.lookup_term_stats(cat, TERMS)[
             ("text", "w00001")
         ] > 0
@@ -171,12 +179,31 @@ def test_cached_manifest_with_missing_parts_falls_back(spark, stats_index):
     # the footer cache legitimately serves moved-but-immutable part
     # files (same invariant as split files); clear it to simulate a
     # COLD process whose manifest cache outlived the files
-    with fsio._PF_CACHE_LOCK:
-        fsio._PF_CACHE.clear()
+    fsio._PF_CACHE.clear()
     try:
         assert stats_mod.lookup_term_stats(cat, TERMS) is None
     finally:
         shutil.move(bak, stats_root)
+
+
+def test_removed_stats_dir_reads_missing_and_refresh_rewrites(
+    spark, stats_index, single_file_stats
+):
+    """A stats directory removed from outside the process must not be
+    answered from the manifest cache: _stats_exists reads False, so
+    refresh_term_stats rewrites it instead of no-opping."""
+    cat = Catalog.load(stats_index)
+    path = cat.term_stats_path()
+    assert stats_mod.lookup_term_stats(cat, TERMS) == single_file_stats
+    assert stats_mod._stats_exists(path)  # manifest now cached
+    shutil.rmtree(stats_mod._shard_dir(path))
+    assert not stats_mod._stats_exists(path)
+    assert stats_mod.lookup_term_stats(cat, TERMS) is None
+    assert _refresh_sharded(spark, cat) == path
+    assert os.path.exists(
+        os.path.join(stats_mod._shard_dir(path), stats_mod._MANIFEST)
+    )
+    assert stats_mod.lookup_term_stats(cat, TERMS) == single_file_stats
 
 
 def test_point_read_latency_no_regression(spark, stats_index):
