@@ -43,17 +43,20 @@ class LRU:
     def put(self, key: Hashable, value, nbytes: int):
         """Insert ``value`` unless another thread got there first, then
         evict least-recently used entries until the weight fits the
-        budget. Returns the value now cached under ``key`` (or
-        ``value`` itself when it alone exceeds the budget)."""
+        budget. Returns the value now cached under ``key``. A value that
+        alone exceeds the budget is returned uncached and evicts
+        nothing: it could never stay, so it must not empty the cache."""
         with self._lock:
             got = self._data.get(key)
             if got is not None:
                 self._data.move_to_end(key)
                 return got[0]
+            cap = self._max_bytes()
+            if nbytes > cap:
+                return value
             self._data[key] = (value, nbytes)
             self.bytes += nbytes
-            cap = self._max_bytes()
-            while self.bytes > cap and self._data:
+            while self.bytes > cap:
                 self.bytes -= self._data.popitem(last=False)[1][1]
             return value
 

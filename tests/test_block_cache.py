@@ -90,9 +90,11 @@ def test_lru_bytes_never_exceed_cap():
     assert lru.get("a") == "a"
     lru.put("d", "d", 1)
     assert lru.get("b") is None and lru.get("a") == "a"
-    # an entry larger than the whole budget is returned but not kept
+    # an entry larger than the whole budget is returned but not kept,
+    # and evicts nothing
     assert lru.put("big", "big", 4) == "big" and lru.get("big") is None
-    assert lru.bytes <= 3
+    assert lru.bytes == 3
+    assert [lru.get(k) for k in "cad"] == ["c", "a", "d"]
 
 
 def test_lru_counters_survive_thread_contention():
@@ -183,3 +185,32 @@ def test_read_pruned_cached_equals_uncached(index_dir, cols):
     for _ in range(2):
         assert read_pruned(path, cols, "term", terms, lru).equals(want)
     assert lru.misses == len(lru) and lru.hits == len(lru)
+
+
+def test_read_pruned_partly_cached_keeps_group_order(tmp_path):
+    """Cached and freshly read row groups mix back in file order, and
+    the missing groups' slices are cached one group per entry."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quickwit_spark.functions.parquet_io import read_pruned
+
+    path = str(tmp_path / "t.parquet")
+    # sorted keys, 10 rows a group: 0, 7, 13 and 19 live in groups
+    # 0, 2, 3+4 and 5
+    keys = [i // 3 for i in range(60)]
+    pq.write_table(
+        pa.table({"k": keys, "v": [f"v{i}" for i in range(60)]}), path,
+        row_group_size=10,
+    )
+    lru = LRU(lambda: 1 << 30)
+    read_pruned(path, ["v"], "k", [7], lru)  # warms group 2 only
+    assert len(lru) == 1
+    want = read_pruned(path, ["v"], "k", [0, 7, 13, 19])
+    assert want.column("v").to_pylist()[:3] == ["v0", "v1", "v2"]
+    got = read_pruned(path, ["v"], "k", [0, 7, 13, 19], lru)
+    assert got.equals(want)
+    assert lru.hits == 1 and len(lru) == 5
+    assert lru.bytes == sum(n for _, n in lru._data.values())
+    assert read_pruned(path, ["v"], "k", [0, 7, 13, 19], lru).equals(want)
+    assert lru.hits == 6
