@@ -1044,7 +1044,12 @@ _FAST_CACHE_MAX_BYTES = int(
 _FAST_CACHE = LRU(lambda: _FAST_CACHE_MAX_BYTES)
 
 # Per-Searcher budget of decoded posting / doc-store row groups (see
-# Searcher._blocks).
+# Searcher._blocks). The cache pays off only while the row groups the
+# traffic touches fit in it. Measured full working sets: 13 MB for a
+# 40k-turn, 8-split index under a mix of ranked, phrase, sorted and
+# agg queries; 36 MB for 188k turns in 32 splits under term queries.
+# So 128 MB holds every decoded group of an index of roughly 400k
+# turns; beyond that the hit share depends on the traffic's locality.
 _BLOCK_CACHE_MAX_BYTES = 128 << 20
 
 
