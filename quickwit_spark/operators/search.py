@@ -130,9 +130,8 @@ class SearchResponse:
 # split-local evaluation (runs inside the mapInPandas kernel)
 # ---------------------------------------------------------------------------
 
-def _read_postings(split_dir: str, terms: set[tuple[str, str]], cache=None):
-    """Read + decode only the query terms' posting rows (``cache``: the
-    decoded row-group LRU, see :func:`read_pruned`).
+def _read_postings(split_dir: str, terms: set[tuple[str, str]]):
+    """Read + decode only the query terms' posting rows.
 
     Returns {(field, term): (docids, tfs, positions_concat|None)} with
     shards concatenated in docid order.
@@ -141,7 +140,7 @@ def _read_postings(split_dir: str, terms: set[tuple[str, str]], cache=None):
 
     path = fsio.join(split_dir, POSTINGS_FILE)
     term_values = sorted({t for _, t in terms})
-    tbl = read_pruned(path, None, "term", term_values, cache)
+    tbl = read_pruned(path, None, "term", term_values)
     out: dict[tuple[str, str], tuple] = {}
     fields = tbl.column("field").to_pylist()
     tvals = tbl.column("term").to_pylist()
@@ -274,11 +273,10 @@ class _ShardPostings:
     tfs blobs are read in one pushdown-filtered scan but only DECODED
     for shards the evaluator actually visits."""
 
-    def __init__(self, path: str, keys: list[tuple[str, str]], cache=None):
+    def __init__(self, path: str, keys: list[tuple[str, str]]):
         from quickwit_spark.functions.parquet_io import read_pruned
 
         self._path = path
-        self._cache = cache
         keyset = set(keys)
         term_values = sorted({t for _, t in keyset})
         self._term_values = term_values
@@ -290,7 +288,7 @@ class _ShardPostings:
             path,
             ["field", "term", "shard", "df", "max_tf", "min_dl",
              "first_docid", "last_docid", "doc_ids", "tfs"],
-            "term", term_values, cache,
+            "term", term_values,
         )
         fields = tbl.column("field").to_pylist()
         terms = tbl.column("term").to_pylist()
@@ -365,7 +363,7 @@ class _ShardPostings:
             self._pos_tbl = read_pruned(
                 self._path,
                 ["field", "term", "shard", "positions"],
-                "term", self._term_values, self._cache,
+                "term", self._term_values,
             )
             self._pos_row = {
                 (f, t, int(s)): i
@@ -402,7 +400,7 @@ class _ShardPostings:
 
 
 def _wand_bool(
-    split_dir: str, groups, neg, doc_len, stats, config, m: int, cache=None
+    split_dir: str, groups, neg, doc_len, stats, config, m: int
 ) -> tuple[np.ndarray, np.ndarray, int, dict]:
     """Block-max pruned top-m for flat term booleans at shard
     granularity — the posting-row analog of tantivy's block-max WAND
@@ -475,7 +473,7 @@ def _wand_bool(
     neg_info = [_minfo(n) for n in neg_shapes]
     all_pos = [k for g in member_info for (_, keys, _) in g for k in keys]
     neg_keys = [k for (_, keys, _) in neg_info for k in keys]
-    sp = _ShardPostings(path, all_pos + negk + neg_keys, cache)
+    sp = _ShardPostings(path, all_pos + negk + neg_keys)
     k1, b = config.k1, config.b
     N, avgdl = stats["N"], stats["avgdl"]
     empty = (np.empty(0, np.int64), np.empty(0, np.float64))
@@ -1043,13 +1041,15 @@ _FAST_CACHE_MAX_BYTES = int(
 # fast_field_cache_capacity (cli.py) resizes a live cache
 _FAST_CACHE = LRU(lambda: _FAST_CACHE_MAX_BYTES)
 
-# Per-Searcher budget of decoded posting / doc-store row groups (see
-# Searcher._blocks). The cache pays off only while the row groups the
-# traffic touches fit in it. Measured full working sets: 13 MB for a
-# 40k-turn, 8-split index under a mix of ranked, phrase, sorted and
-# agg queries; 36 MB for 188k turns in 32 splits under term queries.
-# So 128 MB holds every decoded group of an index of roughly 400k
-# turns; beyond that the hit share depends on the traffic's locality.
+# Per-Searcher budget of decoded doc-store row groups (see
+# Searcher._blocks). The root fetch decodes a whole row group (up to
+# 8192 docs) to return a few payloads, so a hit saves that decode. It
+# pays off only while the groups holding the traffic's winners fit in
+# the budget. The full doc store of a 40k-turn index decodes to 6 MB
+# (about 150 bytes a turn), so 128 MB holds every group of an index of
+# roughly 850k turns. Leaf postings reads are not cached: a cached
+# scan measured no faster than the zstd decode, which runs outside the
+# GIL in parallel leaf threads.
 _BLOCK_CACHE_MAX_BYTES = 128 << 20
 
 
@@ -1076,14 +1076,11 @@ def _eval_split_partial(
     aggs: dict | None,
     wand: bool = True,
     fetch_payload: bool = True,
-    cache=None,
 ) -> pd.DataFrame:
     """One leaf search: returns partial rows (hits + count + agg buckets).
     ``fetch_payload=False`` defers doc-store reads to the root's
     fetch_docs phase (driver mode only — spark-mode kernels keep the
-    fetch leaf-side for data locality on a real cluster). ``cache`` is
-    the Searcher's decoded row-group LRU for the postings reads (driver
-    mode only)."""
+    fetch leaf-side for data locality on a real cluster)."""
     import pyarrow.parquet as pq
 
     from quickwit_spark.operators.build import limit_worker_threads
@@ -1131,7 +1128,7 @@ def _eval_split_partial(
         w_groups, w_neg = wplan
         ids, scores, num_hits, _skips = _wand_bool(
             split_dir, w_groups, w_neg,
-            doc_len.astype(np.float64), stats, config, m, cache,
+            doc_len.astype(np.float64), stats, config, m,
         )
         return _partial_rows_from_topk(
             split_id, dpath, ids, scores, scores, num_hits, ts_us,
@@ -1139,7 +1136,7 @@ def _eval_split_partial(
         )
 
     terms = query_terms(ast)
-    postings = _read_postings(split_dir, terms, cache) if terms else {}
+    postings = _read_postings(split_dir, terms) if terms else {}
     ev = _SplitEval(postings, doc_len, stats, config)
     ids, scores = ev.eval(ast)
 
@@ -1651,9 +1648,9 @@ def _df_candidate_splits(splits, missing, default_field):
 
 class Searcher:
     """Warm search handle over one index: caches catalog, global stats,
-    per-term global doc-freqs and decoded row groups across queries (the
-    root's metastore + footer + byte-range caches, leaf.rs:64-107
-    analog)."""
+    per-term global doc-freqs and decoded doc-store row groups across
+    queries (the root's metastore + footer + byte-range caches,
+    leaf.rs:64-107 analog)."""
 
     def __init__(self, spark, index_dir: str, at_seq: int | None = None):
         self.spark = spark
@@ -1668,12 +1665,12 @@ class Searcher:
         self.catalog = Catalog.load(index_dir, at_seq=at_seq)
         self.config = self.catalog.config
         self._df_cache: dict[tuple[str, str], int] = {}
-        # decoded posting / doc-store row groups of the driver-mode read
-        # paths, keyed (file path, row group, columns). Per HANDLE, not
-        # per process: a fresh Searcher always re-reads the disk, so a
-        # corrupted split surfaces as a per-split error instead of being
-        # served from memory. Split files are immutable, so entries stay
-        # valid across refresh(), which drops only unpublished splits.
+        # decoded doc-store row groups of the root doc fetch, keyed
+        # (file path, row group, columns). Per HANDLE, not per process:
+        # a fresh Searcher always re-reads the disk, so a corrupted
+        # split surfaces as a per-split error instead of being served
+        # from memory. Split files are immutable, so entries stay valid
+        # across refresh(), which drops only unpublished splits.
         self._blocks = LRU(lambda: _BLOCK_CACHE_MAX_BYTES)
         self._catalog_mtime = self._mtime()
         self._pool = None  # lazy persistent leaf-thread pool
@@ -1703,9 +1700,8 @@ class Searcher:
         self.config = self.catalog.config
         self._df_cache.clear()
         live = {
-            fsio.join(self.catalog.split_dir(s.split_id), f)
+            fsio.join(self.catalog.split_dir(s.split_id), DOCS_FILE)
             for s in self.catalog.published_splits()
-            for f in (POSTINGS_FILE, DOCS_FILE)
         }
         self._blocks.retain(lambda key: key[0] in live)
         self._catalog_mtime = self._mtime()
@@ -1917,7 +1913,7 @@ class Searcher:
                         return _eval_split_partial(
                             r[0], r[1], ast, stats, config, m,
                             start_us, end_us, sort_by, sort_desc, aggs,
-                            wand, fetch_payload=False, cache=self._blocks,
+                            wand, fetch_payload=False,
                         )
                     except Exception as exc:  # noqa: BLE001 - reported
                         if attempt:

@@ -15,7 +15,8 @@ from quickwit_spark.operators import search as search_mod
 from quickwit_spark.operators.search import Searcher
 
 # WAND (term, conj, disj, negation), the positions scan (phrase), and
-# the exhaustive evaluator (sort_by, aggs) — every cached read path
+# the exhaustive evaluator (sort_by, aggs): every evaluator path ends
+# in the cached root doc fetch
 QUERIES = [
     ("w00001", {}),
     ("w00003 w00007", {}),
@@ -57,7 +58,8 @@ def test_repeated_queries_decode_no_new_row_group(spark, index_dir):
 def test_byte_budget_holds_under_eviction(spark, index_dir, monkeypatch):
     big = Searcher(spark, index_dir)
     want = _run_all(big)
-    cap = 200_000  # a few row groups: far below the working set
+    # room for the largest row group, far below the working set
+    cap = max(n for _, n in big._blocks._data.values()) + 1
     assert big._blocks.bytes > 2 * cap
     monkeypatch.setattr(search_mod, "_BLOCK_CACHE_MAX_BYTES", cap)
     s = Searcher(spark, index_dir)
@@ -147,14 +149,15 @@ def test_refresh_after_merge_drops_merged_away_splits(
     before = _run_all(s)
     old_dirs = {s.catalog.split_dir(x.split_id)
                 for x in s.catalog.published_splits()}
-    assert {k[0].rsplit("/", 1)[0] for k in s._blocks._data} == old_dirs
+    was_cached = {k[0].rsplit("/", 1)[0] for k in s._blocks._data}
+    assert was_cached and was_cached <= old_dirs
 
     assert run_merge_pipeline(spark, d) >= 1
     s.refresh()
     live = {s.catalog.split_dir(x.split_id)
             for x in s.catalog.published_splits()}
     gone = old_dirs - live
-    assert gone, "the merge replaced no split"
+    assert was_cached & gone, "the merge replaced no cached split"
     cached = {k[0].rsplit("/", 1)[0] for k in s._blocks._data}
     assert cached <= live and not cached & gone
     assert s._blocks.bytes == sum(n for _, n in s._blocks._data.values())
