@@ -4243,14 +4243,15 @@ WITH s AS (
 d AS (SELECT doc_id, batch_id,
              coalesce(md5(text), chr(1)) AS dg FROM s),
 k AS (
-  SELECT dg, doc_id AS keeper_id FROM (
-    SELECT dg, doc_id,
+  SELECT dg, doc_id AS keeper_id, batch_id AS keeper_batch FROM (
+    SELECT dg, doc_id, batch_id,
            row_number() OVER (PARTITION BY dg ORDER BY batch_id, doc_id)
              AS rn
     FROM d) WHERE rn = 1
 )
 SELECT d.doc_id, d.batch_id, k.keeper_id,
-       (CASE WHEN d.doc_id = k.keeper_id THEN 1 ELSE 0 END)::BIGINT AS kept
+       (CASE WHEN d.doc_id = k.keeper_id AND d.batch_id = k.keeper_batch
+             THEN 1 ELSE 0 END)::BIGINT AS kept
 FROM d JOIN k USING (dg)
 """
 

@@ -1076,13 +1076,13 @@ def _eval_split_partial(
     aggs: dict | None,
     wand: bool = True,
     fetch_payload: bool = True,
-) -> pd.DataFrame:
-    """One leaf search: returns partial rows (hits + count + agg buckets).
+) -> list[dict]:
+    """One leaf search: returns partial rows (hits + count + agg buckets)
+    as ``_HIT_COLS`` records; the caller frames them (per query in
+    driver mode, per split at the Spark-mode ``mapInPandas`` boundary).
     ``fetch_payload=False`` defers doc-store reads to the root's
     fetch_docs phase (driver mode only — spark-mode kernels keep the
     fetch leaf-side for data locality on a real cluster)."""
-    import pyarrow.parquet as pq
-
     from quickwit_spark.operators.build import limit_worker_threads
 
     limit_worker_threads()
@@ -1130,10 +1130,9 @@ def _eval_split_partial(
             split_dir, w_groups, w_neg,
             doc_len.astype(np.float64), stats, config, m,
         )
-        return _partial_rows_from_topk(
-            split_id, dpath, ids, scores, scores, num_hits, ts_us,
-            fetch_payload,
-        )
+        return _hit_rows(
+            split_id, dpath, ids, scores, scores, ts_us, fetch_payload
+        ) + [_count_row(split_id, num_hits)]
 
     terms = query_terms(ast)
     postings = _read_postings(split_dir, terms) if terms else {}
@@ -1151,7 +1150,6 @@ def _eval_split_partial(
         ids, scores = ids[mask], scores[mask]
 
     out_rows: list[dict] = []
-    base = {c: None for c in _HIT_COLS}
 
     # partial top-m hits (+ count row)
     if m > 0 and ids.size:
@@ -1172,10 +1170,7 @@ def _eval_split_partial(
                       fetch_payload)
         )
 
-    # count row (collector.rs:191 num_hits)
-    count_row = dict(base)
-    count_row.update(kind="count", split_id=split_id, agg_count=int(ids.size))
-    out_rows.append(count_row)
+    out_rows.append(_count_row(split_id, ids.size))
 
     # partial aggregations (collector.rs:214-221 intermediate results).
     # A zero-match split still participates when a terms agg asks for
@@ -1221,7 +1216,7 @@ def _eval_split_partial(
                 r["agg_name"] = name
             out_rows.extend(rows)
 
-    return pd.DataFrame(out_rows, columns=_HIT_COLS)
+    return out_rows
 
 
 def fetch_doc_payloads(dpath: str, docids, cache=None) -> dict[int, str]:
@@ -1253,37 +1248,26 @@ def _hit_rows(
     fetch_docs phase): the root merges k+offset winners out of
     m×splits candidates, so fetching per-leaf reads splits× more doc
     rows than the response needs."""
-    base = {c: None for c in _HIT_COLS}
     if len(top_ids) == 0:
         return []
-    dmap = (
-        fetch_doc_payloads(dpath, top_ids) if fetch_payload else {}
-    )
-    rows = []
-    for did, ordkey, val in zip(top_ids, sel, real_vals):
-        r = dict(base)
-        r.update(
-            kind="hit", split_id=split_id, docid=int(did),
-            score=float(val), sort_value=float(ordkey),
-            doc=dmap.get(int(did)),
-            ts_us=int(ts_us[did]),
-        )
-        rows.append(r)
-    return rows
+    dmap = fetch_doc_payloads(dpath, top_ids) if fetch_payload else {}
+    base = dict.fromkeys(_HIT_COLS)
+    return [
+        {
+            **base, "kind": "hit", "split_id": split_id, "docid": int(did),
+            "score": float(val), "sort_value": float(ordkey),
+            "doc": dmap.get(int(did)), "ts_us": int(ts_us[did]),
+        }
+        for did, ordkey, val in zip(top_ids, sel, real_vals)
+    ]
 
 
-def _partial_rows_from_topk(
-    split_id: str, dpath: str, top_ids, sel, real_vals, num_hits: int, ts_us,
-    fetch_payload: bool = True,
-) -> pd.DataFrame:
-    base = {c: None for c in _HIT_COLS}
-    out_rows = _hit_rows(
-        split_id, dpath, top_ids, sel, real_vals, ts_us, fetch_payload
-    )
-    count_row = dict(base)
-    count_row.update(kind="count", split_id=split_id, agg_count=int(num_hits))
-    out_rows.append(count_row)
-    return pd.DataFrame(out_rows, columns=_HIT_COLS)
+def _count_row(split_id: str, num_hits) -> dict:
+    """The split's num_hits partial (collector.rs:191)."""
+    return {
+        **dict.fromkeys(_HIT_COLS), "kind": "count", "split_id": split_id,
+        "agg_count": int(num_hits),
+    }
 
 
 _AGG_KINDS = ("terms", "histogram", "range", "stats", "avg")
@@ -1932,15 +1916,12 @@ class Searcher:
                 raise RuntimeError(
                     f"all {len(rows)} splits failed; first: {errors[0]}"
                 )
-            # object dtype avoids the all-NA-column concat dtype warning
-            parts = [
-                p.astype(object)
-                for p in results
-                if not isinstance(p, tuple) and len(p)
+            # one frame per query: per-leaf frames + concat held the GIL
+            # longer than the leaves' (GIL-free) parquet decode
+            rows = [
+                row for x in results if not isinstance(x, tuple) for row in x
             ]
-            if not parts:
-                return pd.DataFrame(columns=_HIT_COLS), errors
-            return pd.concat(parts, ignore_index=True), errors
+            return pd.DataFrame(rows, columns=_HIT_COLS), errors
 
         sdf = self.spark.createDataFrame(
             self.spark.sparkContext.parallelize(rows, len(rows)),
@@ -1950,10 +1931,10 @@ class Searcher:
         def kernel(iterator):
             for pdf in iterator:
                 for split_id, path in zip(pdf["split_id"], pdf["path"]):
-                    yield _eval_split_partial(
+                    yield pd.DataFrame(_eval_split_partial(
                         split_id, path, ast, stats, config, m,
                         start_us, end_us, sort_by, sort_desc, aggs, wand,
-                    )
+                    ), columns=_HIT_COLS)
 
         out = sdf.mapInPandas(kernel, schema=HIT_SCHEMA)
         return out.toPandas(), []
@@ -1977,28 +1958,30 @@ def _validate_phrase_fields(ast, config) -> None:
 
 
 def merge_partials(pdf: pd.DataFrame, k, offset, sort_by, aggs) -> SearchResponse:
-    """Root merge (collector.rs:325-419 + root.rs:263-288): tiny pandas
-    merge of per-split partials — hits re-sorted by
-    (sort_value desc|score desc, split_id, docid), offset applied once
+    """Root merge (collector.rs:325-419 + root.rs:263-288) of per-split
+    partials: hits ordered by (sort_value desc, split_id asc, docid asc)
+    with one stable lexsort (NaN sort values last), offset applied once
     (root.rs:341-356), agg buckets merged and finalized."""
     if pdf.empty:
         return SearchResponse(0, [], {})
-    counts = pdf[pdf["kind"] == "count"]
-    num_hits = int(counts["agg_count"].sum())
-    hits_df = pdf[pdf["kind"] == "hit"].copy()
-    if not hits_df.empty:
-        hits_df = hits_df.sort_values(
-            ["sort_value", "split_id", "docid"], ascending=[False, True, True],
-            kind="mergesort",
-        ).iloc[offset : offset + k]
     import json as _json
 
+    kind = pdf["kind"].to_numpy()
+    num_hits = int(pdf["agg_count"].to_numpy()[kind == "count"].sum())
+    h = np.flatnonzero(kind == "hit")
+    split_id, docid, score, doc, ts_us = (
+        pdf[c].to_numpy()[h]
+        for c in ("split_id", "docid", "score", "doc", "ts_us")
+    )
+    split_rank = np.unique(split_id, return_inverse=True)[1]
+    sort_value = pdf["sort_value"].to_numpy(dtype=np.float64)[h]
+    order = np.lexsort((docid, split_rank, -sort_value))[offset : offset + k]
     hits = [
         SearchHit(
-            r.split_id, int(r.docid), float(r.score),
-            _json.loads(r.doc) if r.doc is not None else None, int(r.ts_us),
+            split_id[i], int(docid[i]), float(score[i]),
+            _json.loads(doc[i]) if doc[i] is not None else None, int(ts_us[i]),
         )
-        for r in hits_df.itertuples(index=False)
+        for i in order
     ]
     final_aggs: dict = {}
     if aggs:

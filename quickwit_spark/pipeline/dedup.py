@@ -938,7 +938,9 @@ def exact_dedup_stream_replay(
         id_col,
         batch_col,
         keeper["i"].alias("keeper_id"),
-        (F.col(id_col) == keeper["i"]).cast("long").alias("kept"),
+        # the whole arrival key: a redelivered copy of the keeper's id
+        # in a later batch is a duplicate, not a second keeper
+        (arrival == keeper).cast("long").alias("kept"),
     )
 
 

@@ -11,6 +11,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """48g, capped at 60 % of physical memory: a JVM allowed more heap
+    than the host has gets OOM-killed instead of collecting garbage."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 << 10, int(phys * 0.6) >> 20)}m"
+
+
 def get_spark(
     app_name: str = "quickwit_spark",
     cpus: int | None = None,
@@ -44,7 +51,10 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "zstd")
         # single large parquet files should still scan wide
         .config("spark.sql.files.maxPartitionBytes", "33554432")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.maxResultSize", "4g")
     )

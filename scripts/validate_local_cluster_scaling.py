@@ -134,20 +134,25 @@ def _submit_probe_concurrent(
 ) -> list[dict]:
     """The narrow level as ``replicas`` CONCURRENT independent
     local-cluster[execs] jobs: equalizes active-core clocks and bus
-    share with the wide level (see module docstring)."""
-    procs = [
-        subprocess.Popen(
-            _probe_cmd(execs, zip_path, src, n_turns),
-            stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
-            env=_probe_env(), cwd=REPO,
-        )
-        for _ in range(replicas)
-    ]
-    results = []
-    for p in procs:
-        stdout, stderr = p.communicate(timeout=2400)
-        results.append(_parse_probe(stdout, stderr, execs))
-    return results
+    share with the wide level (see module docstring). A replica that
+    fails or times out kills and reaps the others before the error
+    propagates."""
+    procs = []
+    try:
+        for _ in range(replicas):
+            procs.append(subprocess.Popen(
+                _probe_cmd(execs, zip_path, src, n_turns),
+                stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+                env=_probe_env(), cwd=REPO,
+            ))
+        return [
+            _parse_probe(*p.communicate(timeout=2400), execs) for p in procs
+        ]
+    finally:
+        for p in procs:
+            if p.poll() is None:
+                p.kill()
+                p.communicate()
 
 
 def main() -> None:
@@ -234,7 +239,9 @@ def main() -> None:
         }
         pairs.append(rec)
         print(json.dumps(rec))
-        if clean and (best is None or eff > best):
+        # an equalized-mode ratio above 1.0 stays in its record but is
+        # not a scaling efficiency: it must not feed `best` or `met`
+        if clean and eff <= 1.0 and (best is None or eff > best):
             best = eff
             if eff >= 0.8:
                 break

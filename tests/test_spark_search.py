@@ -40,18 +40,57 @@ def test_rank_identity(oracle, searcher, query):
         assert_rank_identical(oracle.search(query, k=k), searcher.search(query, k=k))
 
 
-def test_spark_and_driver_modes_agree(oracle, searcher):
+def _typed(x):
+    """``x`` with every leaf tagged by its type, so ``==`` tells an int
+    ``doc_count`` from the same value as a float."""
+    if isinstance(x, dict):
+        return {k: _typed(v) for k, v in x.items()}
+    if isinstance(x, (list, tuple)):
+        return [_typed(v) for v in x]
+    return (type(x).__name__, x)
+
+
+def _response(resp):
+    return _typed({
+        "num_hits": resp.num_hits,
+        "hits": [
+            (h.split_id, h.docid, h.score, h.ts_us, h.doc) for h in resp.hits
+        ],
+        "aggs": resp.aggs,
+        "errors": resp.errors,
+    })
+
+
+def test_spark_and_driver_modes_agree(oracle, searcher, corpus):
     """The distributed mapInPandas path and the single-node thread-pool
     path (single_node_search analog, lib.rs:189-251) share the kernel
-    and must return identical responses."""
-    for q in ["w00001", "hotterm", '"w00001 w00002"~2', "w00004 -w00001"]:
-        a = searcher.search(q, k=10, mode="spark")
-        b = searcher.search(q, k=10, mode="driver")
-        assert a.num_hits == b.num_hits
-        assert [(h.split_id, h.docid, h.score) for h in a.hits] == [
-            (h.split_id, h.docid, h.score) for h in b.hits
-        ]
-        assert_rank_identical(oracle.search(q, k=10), a)
+    and must return identical responses: hits with payloads, num_hits
+    and aggs, value types included."""
+    ts_us = (pd.to_datetime(corpus["ts"]).astype("int64") // 1000).to_numpy()
+    lo, hi = (int(np.quantile(ts_us, f)) for f in (0.25, 0.75))
+    shapes = [
+        dict(query=q, k=10)
+        for q in ["w00001", "hotterm", '"w00001 w00002"~2', "w00004 -w00001"]
+    ] + [
+        dict(query="w00002", k=12, sort_by="ts"),
+        dict(query="w00002", k=12, sort_by="ts", sort_desc=False),
+        dict(query="w00001", k=15, start_us=lo, end_us=hi),
+        dict(
+            query="w00001", k=5,
+            aggs={"by_role": {"terms": {"field": "role", "size": 5}}},
+        ),
+    ]
+    for kw in shapes:
+        a = searcher.search(mode="spark", **kw)
+        b = searcher.search(mode="driver", **kw)
+        assert _response(a) == _response(b), kw
+        assert all(isinstance(h.doc, dict) for h in a.hits), kw
+        assert type(a.num_hits) is int, kw
+        for agg in a.aggs.values():
+            assert agg["buckets"], kw
+            assert all(type(b["doc_count"]) is int for b in agg["buckets"]), kw
+        oracle_kw = {k: v for k, v in kw.items() if k != "aggs"}
+        assert_rank_identical(oracle.search(**oracle_kw), a)
 
 
 class TestWand:

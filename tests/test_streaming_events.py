@@ -163,7 +163,8 @@ def test_dedup_stream_replay_matches_real_stream(spark, tmp_path):
     a REAL exact_dedup_stream run over the same micro-batches (digests
     unique within each batch, so the stream is deterministic). Plants a
     later-id copy in an EARLIER batch to prove first-seen-wins differs
-    from batch exact_dedup's min-id keeper."""
+    from batch exact_dedup's min-id keeper, and redelivers the keeper
+    (same id, later batch): that copy is a duplicate, not kept."""
     import pandas as pd
 
     from quickwit_spark.pipeline.dedup import (
@@ -174,7 +175,7 @@ def test_dedup_stream_replay_matches_real_stream(spark, tmp_path):
     batches = {
         0: [(100, "alpha"), (101, "beta")],
         1: [(10, "alpha"), (11, "gamma"), (12, "delta")],
-        2: [(1, "beta"), (2, "gamma"), (3, "epsilon")],
+        2: [(1, "beta"), (2, "gamma"), (3, "epsilon"), (100, "alpha")],
     }
     src = tmp_path / "dedup_replay_in"
     src.mkdir()
@@ -206,14 +207,20 @@ def test_dedup_stream_replay_matches_real_stream(spark, tmp_path):
         assert q.awaitTermination(120)
     finally:
         q.stop()
-    stream_kept = {
+    stream_kept = sorted(
         r.doc_id for r in spark.sql("select * from dedup_replay").collect()
-    }
+    )
     df = spark.createDataFrame(rows, "doc_id long, batch_id long, text string")
     replay = exact_dedup_stream_replay(df).collect()
-    replay_kept = {r.doc_id for r in replay if r.kept == 1}
+    replay_kept = sorted(r.doc_id for r in replay if r.kept == 1)
     # maxFilesPerTrigger=1 processes files in discovery order p0,p1,p2
-    assert stream_kept == replay_kept == {100, 101, 11, 12, 3}
+    assert stream_kept == replay_kept == [3, 11, 12, 100, 101]
+    # exactly one kept row per digest: the batch-2 redelivery of 100 is not
+    text_of = {(i, b): t for i, b, t in rows}
+    kept_texts = [
+        text_of[(r.doc_id, r.batch_id)] for r in replay if r.kept == 1
+    ]
+    assert sorted(kept_texts) == sorted({t for _, _, t in rows})
     # first-seen beats min-id: 'alpha' keeps 100 (batch 0), not 10
     keepers = {r.doc_id: r.keeper_id for r in replay}
     assert keepers[10] == 100 and keepers[1] == 101
