@@ -27,7 +27,8 @@ def read_pruned(path: str, columns, key_col: str, values, cache=None):
     the values. ``values`` must be non-empty; returns a pyarrow Table
     (the residual mask is exact). ``path`` is always an immutable index
     file (split parquet, versioned term stats), so the cached open is
-    safe and saves the per-read footer parse.
+    safe and saves the per-read footer parse and, via
+    ``key_bounds``, the per-group statistics walk.
 
     ``cache`` (an :class:`~quickwit_spark.functions.lru.LRU`) keeps the
     DECODED row groups under ``(path, row group, columns)``, so a
@@ -40,15 +41,13 @@ def read_pruned(path: str, columns, key_col: str, values, cache=None):
 
     pf = fsio.parquet_file_cached(path)
     md = pf.metadata
-    key_idx = md.schema.to_arrow_schema().get_field_index(key_col)
     vals = sorted(set(values))
     groups = []
-    for g in range(md.num_row_groups):
-        st = md.row_group(g).column(key_idx).statistics
-        if st is None or not st.has_min_max:
+    for g, bounds in enumerate(pf.key_bounds(key_col)):
+        if bounds is None:
             groups.append(g)  # no stats — must read (sound)
             continue
-        lo, hi = st.min, st.max
+        lo, hi = bounds
         i = bisect_left(vals, lo)
         if i < len(vals) and vals[i] <= hi:
             groups.append(g)

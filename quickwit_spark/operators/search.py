@@ -130,17 +130,17 @@ class SearchResponse:
 # split-local evaluation (runs inside the mapInPandas kernel)
 # ---------------------------------------------------------------------------
 
-def _read_postings(split_dir: str, terms: set[tuple[str, str]]):
+def _read_postings(split_dir: str, terms: set[tuple[str, str]], cache=None):
     """Read + decode only the query terms' posting rows.
 
     Returns {(field, term): (docids, tfs, positions_concat|None)} with
-    shards concatenated in docid order.
+    shards concatenated in docid order. ``cache``: see :func:`read_pruned`.
     """
     from quickwit_spark.functions.parquet_io import read_pruned
 
     path = fsio.join(split_dir, POSTINGS_FILE)
     term_values = sorted({t for _, t in terms})
-    tbl = read_pruned(path, None, "term", term_values)
+    tbl = read_pruned(path, None, "term", term_values, cache)
     out: dict[tuple[str, str], tuple] = {}
     fields = tbl.column("field").to_pylist()
     tvals = tbl.column("term").to_pylist()
@@ -271,12 +271,14 @@ class _ShardPostings:
     the decode-on-demand half of the block-max evaluator. Stat columns
     (df, max_tf, min_dl, first/last_docid) are read up front; doc_ids /
     tfs blobs are read in one pushdown-filtered scan but only DECODED
-    for shards the evaluator actually visits."""
+    for shards the evaluator actually visits. Both scans read through
+    ``cache``, see :func:`read_pruned`."""
 
-    def __init__(self, path: str, keys: list[tuple[str, str]]):
+    def __init__(self, path: str, keys: list[tuple[str, str]], cache=None):
         from quickwit_spark.functions.parquet_io import read_pruned
 
         self._path = path
+        self._cache = cache
         keyset = set(keys)
         term_values = sorted({t for _, t in keyset})
         self._term_values = term_values
@@ -288,7 +290,7 @@ class _ShardPostings:
             path,
             ["field", "term", "shard", "df", "max_tf", "min_dl",
              "first_docid", "last_docid", "doc_ids", "tfs"],
-            "term", term_values,
+            "term", term_values, cache,
         )
         fields = tbl.column("field").to_pylist()
         terms = tbl.column("term").to_pylist()
@@ -327,15 +329,11 @@ class _ShardPostings:
         self._tf_cache: dict[tuple[str, str, int], np.ndarray] = {}
         self._pos_cache: dict[tuple[str, str, int], np.ndarray | None] = {}
 
-    def _blobs(self):
-        return self._blob_tbl, self._blob_row
-
     def docids(self, field: str, term: str, shard: int) -> np.ndarray:
         key = (field, term, shard)
         got = self._doc_cache.get(key)
         if got is None:
-            tbl, rowmap = self._blobs()
-            blob = tbl.column("doc_ids")[rowmap[key]].as_py()
+            blob = self._blob_tbl.column("doc_ids")[self._blob_row[key]].as_py()
             got = delta_decode(blob).astype(np.int64)
             self._doc_cache[key] = got
         return got
@@ -344,8 +342,7 @@ class _ShardPostings:
         key = (field, term, shard)
         got = self._tf_cache.get(key)
         if got is None:
-            tbl, rowmap = self._blobs()
-            blob = tbl.column("tfs")[rowmap[key]].as_py()
+            blob = self._blob_tbl.column("tfs")[self._blob_row[key]].as_py()
             got = decode_varint(blob).astype(np.int64)
             self._tf_cache[key] = got
         return got
@@ -363,7 +360,7 @@ class _ShardPostings:
             self._pos_tbl = read_pruned(
                 self._path,
                 ["field", "term", "shard", "positions"],
-                "term", self._term_values,
+                "term", self._term_values, self._cache,
             )
             self._pos_row = {
                 (f, t, int(s)): i
@@ -400,7 +397,7 @@ class _ShardPostings:
 
 
 def _wand_bool(
-    split_dir: str, groups, neg, doc_len, stats, config, m: int
+    split_dir: str, groups, neg, doc_len, stats, config, m: int, cache=None
 ) -> tuple[np.ndarray, np.ndarray, int, dict]:
     """Block-max pruned top-m for flat term booleans at shard
     granularity — the posting-row analog of tantivy's block-max WAND
@@ -473,7 +470,7 @@ def _wand_bool(
     neg_info = [_minfo(n) for n in neg_shapes]
     all_pos = [k for g in member_info for (_, keys, _) in g for k in keys]
     neg_keys = [k for (_, keys, _) in neg_info for k in keys]
-    sp = _ShardPostings(path, all_pos + negk + neg_keys)
+    sp = _ShardPostings(path, all_pos + negk + neg_keys, cache)
     k1, b = config.k1, config.b
     N, avgdl = stats["N"], stats["avgdl"]
     empty = (np.empty(0, np.int64), np.empty(0, np.float64))
@@ -1041,15 +1038,13 @@ _FAST_CACHE_MAX_BYTES = int(
 # fast_field_cache_capacity (cli.py) resizes a live cache
 _FAST_CACHE = LRU(lambda: _FAST_CACHE_MAX_BYTES)
 
-# Per-Searcher budget of decoded doc-store row groups (see
-# Searcher._blocks). The root fetch decodes a whole row group (up to
-# 8192 docs) to return a few payloads, so a hit saves that decode. It
-# pays off only while the groups holding the traffic's winners fit in
-# the budget. The full doc store of a 40k-turn index decodes to 6 MB
-# (about 150 bytes a turn), so 128 MB holds every group of an index of
-# roughly 850k turns. Leaf postings reads are not cached: a cached
-# scan measured no faster than the zstd decode, which runs outside the
-# GIL in parallel leaf threads.
+# Per-Searcher budget of decoded postings and doc-store row groups (see
+# Searcher._blocks). The leaves' postings scans and the root fetch each
+# decode whole row groups for a few terms or payloads, so a hit saves
+# that decode. It pays off only while the groups holding the query
+# terms and the winners fit in the budget. A 40k-turn, 8-split index
+# keeps about 13 MB resident (7 MB postings, 6 MB docs), so 128 MB
+# holds every group of an index of roughly 400k turns.
 _BLOCK_CACHE_MAX_BYTES = 128 << 20
 
 
@@ -1076,13 +1071,16 @@ def _eval_split_partial(
     aggs: dict | None,
     wand: bool = True,
     fetch_payload: bool = True,
+    cache=None,
 ) -> list[dict]:
     """One leaf search: returns partial rows (hits + count + agg buckets)
     as ``_HIT_COLS`` records; the caller frames them (per query in
     driver mode, per split at the Spark-mode ``mapInPandas`` boundary).
     ``fetch_payload=False`` defers doc-store reads to the root's
     fetch_docs phase (driver mode only — spark-mode kernels keep the
-    fetch leaf-side for data locality on a real cluster)."""
+    fetch leaf-side for data locality on a real cluster). ``cache``:
+    the decoded row-group LRU the postings reads go through (driver
+    mode passes ``Searcher._blocks``; Spark-mode kernels read uncached)."""
     from quickwit_spark.operators.build import limit_worker_threads
 
     limit_worker_threads()
@@ -1128,14 +1126,14 @@ def _eval_split_partial(
         w_groups, w_neg = wplan
         ids, scores, num_hits, _skips = _wand_bool(
             split_dir, w_groups, w_neg,
-            doc_len.astype(np.float64), stats, config, m,
+            doc_len.astype(np.float64), stats, config, m, cache,
         )
         return _hit_rows(
             split_id, dpath, ids, scores, scores, ts_us, fetch_payload
         ) + [_count_row(split_id, num_hits)]
 
     terms = query_terms(ast)
-    postings = _read_postings(split_dir, terms) if terms else {}
+    postings = _read_postings(split_dir, terms, cache) if terms else {}
     ev = _SplitEval(postings, doc_len, stats, config)
     ids, scores = ev.eval(ast)
 
@@ -1632,9 +1630,9 @@ def _df_candidate_splits(splits, missing, default_field):
 
 class Searcher:
     """Warm search handle over one index: caches catalog, global stats,
-    per-term global doc-freqs and decoded doc-store row groups across
-    queries (the root's metastore + footer + byte-range caches,
-    leaf.rs:64-107 analog)."""
+    per-term global doc-freqs and decoded postings and doc-store row
+    groups across queries (the root's metastore + footer + byte-range
+    caches, leaf.rs:64-107 analog)."""
 
     def __init__(self, spark, index_dir: str, at_seq: int | None = None):
         self.spark = spark
@@ -1649,27 +1647,15 @@ class Searcher:
         self.catalog = Catalog.load(index_dir, at_seq=at_seq)
         self.config = self.catalog.config
         self._df_cache: dict[tuple[str, str], int] = {}
-        # decoded doc-store row groups of the root doc fetch, keyed
-        # (file path, row group, columns). Per HANDLE, not per process:
-        # a fresh Searcher always re-reads the disk, so a corrupted
-        # split surfaces as a per-split error instead of being served
-        # from memory. Split files are immutable, so entries stay valid
-        # across refresh(), which drops only unpublished splits.
+        # decoded postings and doc-store row groups of the driver-mode
+        # leaves and root fetch, keyed (file path, row group, columns).
+        # Per HANDLE, not per process: a fresh Searcher always re-reads
+        # the disk, so a corrupted split surfaces as a per-split error
+        # instead of being served from memory. Split files are
+        # immutable, so entries stay valid across refresh(), which
+        # drops only unpublished splits.
         self._blocks = LRU(lambda: _BLOCK_CACHE_MAX_BYTES)
         self._catalog_mtime = self._mtime()
-        self._pool = None  # lazy persistent leaf-thread pool
-
-    def _leaf_pool(self):
-        """Persistent executor for the driver-mode leaf fan-out —
-        spawning 16 threads per query cost ~50 ms (profiled); reuse
-        across queries like the reference's searcher thread pool."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        if self._pool is None:
-            self._pool = ThreadPoolExecutor(
-                max_workers=16, thread_name_prefix="leaf"
-            )
-        return self._pool
 
     def _mtime(self):
         # backend-aware commit token (JSON mtime / sqlite WAL state)
@@ -1684,8 +1670,9 @@ class Searcher:
         self.config = self.catalog.config
         self._df_cache.clear()
         live = {
-            fsio.join(self.catalog.split_dir(s.split_id), DOCS_FILE)
+            fsio.join(self.catalog.split_dir(s.split_id), name)
             for s in self.catalog.published_splits()
+            for name in (DOCS_FILE, POSTINGS_FILE)
         }
         self._blocks.retain(lambda key: key[0] in live)
         self._catalog_mtime = self._mtime()
@@ -1791,10 +1778,8 @@ class Searcher:
 
     def _fetch_missing_docs(self, resp: SearchResponse) -> None:
         """Root fetch_docs phase (fetch_docs.rs:98-173): payloads for
-        the final winners only, grouped per split and fetched in
-        parallel on the leaf pool (the reference issues per-split
-        fetch_docs_in_split tasks concurrently too; serially this was
-        ~5 ms × winners-bearing-splits of pure row-group reads).
+        the final winners only, grouped per split and read through the
+        block cache in the calling thread.
 
         Same failure tolerance as the leaf phase: a split whose doc
         fetch fails (e.g. GC'd between the leaf phase and the root
@@ -1811,24 +1796,19 @@ class Searcher:
         if not pending:
             return
 
-        def fetch(item):
-            split_id, hs = item
+        dropped: set[int] = set()
+        for split_id, hs in pending.items():
             dpath = fsio.join(self.catalog.split_dir(split_id), DOCS_FILE)
-            for attempt in (0, 1):
+            for _attempt in (0, 1):
                 try:
-                    return hs, fetch_doc_payloads(
+                    dmap = fetch_doc_payloads(
                         dpath, [h.docid for h in hs], self._blocks
                     )
+                    break
                 except Exception as exc:  # noqa: BLE001 - reported
-                    if attempt:
-                        return hs, (split_id, exc)
-            return None  # unreachable
-
-        dropped: set[int] = set()
-        for hs, dmap in self._leaf_pool().map(fetch, pending.items()):
-            if isinstance(dmap, tuple):
-                split_id, exc = dmap
-                resp.errors.append(f"split {split_id}: doc fetch: {exc}")
+                    dmap = exc
+            if isinstance(dmap, Exception):
+                resp.errors.append(f"split {split_id}: doc fetch: {dmap}")
                 dropped.update(id(h) for h in hs)
                 continue
             for h in hs:
@@ -1836,9 +1816,9 @@ class Searcher:
         if dropped:
             resp.hits = [h for h in resp.hits if id(h) not in dropped]
 
-    # a leaf search is executed in driver threads when the pruned split
-    # set is small — the reference's single_node_search skips the gRPC
-    # fan-out the same way (quickwit-search/src/lib.rs:189-251); larger
+    # a leaf search is executed in the calling thread when the pruned
+    # split set is small — the reference's single_node_search skips the
+    # gRPC fan-out the same way (quickwit-search/src/lib.rs:189-251); larger
     # split sets go through the Spark job (the root→leaf fan-out)
     DRIVER_EXEC_MAX_SPLITS = 32
 
@@ -1850,7 +1830,14 @@ class Searcher:
         """Run the leaf phase; returns (partial rows, per-split errors).
 
         mode: 'spark' (distributed mapInPandas over splits), 'driver'
-        (thread pool in-process — same kernel function), or 'auto'.
+        (in-process, same kernel function), or 'auto'.
+
+        Driver mode runs the leaves one after another in the calling
+        thread, reading postings through the block cache (``_blocks``),
+        as the reference's leaf searches warmed postings synchronously
+        (leaf.rs:166-356). Their Python work holds the GIL, so a thread
+        pool only added hand-off cost: on a warm 40k-turn, 8-split index
+        the mix's p50 was ~23 ms pooled, ~14 ms inline (both cached).
 
         Failure tolerance mirrors the reference root: a failing split
         is retried once (quickwit-search/src/retry/search.rs), then its
@@ -1891,24 +1878,19 @@ class Searcher:
             # leaves return doc ADDRESSES; the root fetches payloads for
             # the k winners only (the reference's fetch_docs phase) —
             # per-leaf fetching reads splits× more doc rows than needed
-            def leaf(r):
+            hit_rows, errors = [], []
+            for split_id, split_dir in rows:
                 for attempt in (0, 1):
                     try:
-                        return _eval_split_partial(
-                            r[0], r[1], ast, stats, config, m,
+                        hit_rows += _eval_split_partial(
+                            split_id, split_dir, ast, stats, config, m,
                             start_us, end_us, sort_by, sort_desc, aggs,
-                            wand, fetch_payload=False,
+                            wand, fetch_payload=False, cache=self._blocks,
                         )
+                        break
                     except Exception as exc:  # noqa: BLE001 - reported
                         if attempt:
-                            return (r[0], exc)
-                return None  # unreachable
-
-            results = list(self._leaf_pool().map(leaf, rows))
-            errors = [
-                f"split {sid}: {exc}"
-                for sid, exc in (x for x in results if isinstance(x, tuple))
-            ]
+                            errors.append(f"split {split_id}: {exc}")
             if errors and len(errors) == len(rows):
                 # every split failed: that's not a partial result, it's
                 # a broken query/index — surface it loudly (the
@@ -1916,12 +1898,9 @@ class Searcher:
                 raise RuntimeError(
                     f"all {len(rows)} splits failed; first: {errors[0]}"
                 )
-            # one frame per query: per-leaf frames + concat held the GIL
-            # longer than the leaves' (GIL-free) parquet decode
-            rows = [
-                row for x in results if not isinstance(x, tuple) for row in x
-            ]
-            return pd.DataFrame(rows, columns=_HIT_COLS), errors
+            # one frame per query: per-leaf frames + concat cost more
+            # than the leaves' parquet decode
+            return pd.DataFrame(hit_rows, columns=_HIT_COLS), errors
 
         sdf = self.spark.createDataFrame(
             self.spark.sparkContext.parallelize(rows, len(rows)),

@@ -1,7 +1,10 @@
 """The Searcher's decoded row-group cache (``Searcher._blocks``) and the
-LRU behind it: warm queries decode nothing new and answer exactly as
-cold ones, refresh() drops merged-away splits, and the byte budget
-holds under eviction."""
+LRU behind it: the driver-mode leaves' postings reads and the root doc
+fetch both go through it, warm queries decode nothing new and answer
+exactly as cold ones, refresh() keeps still-published splits' entries
+and drops merged-away ones, and the byte budget holds under eviction.
+Also: footer key bounds cached per file handle prune like a fresh
+footer walk."""
 
 from __future__ import annotations
 
@@ -53,6 +56,31 @@ def test_repeated_queries_decode_no_new_row_group(spark, index_dir):
     fresh = Searcher(spark, index_dir)
     assert len(fresh._blocks) == 0
     assert _run_all(fresh) == cold
+
+
+# the three postings reads, by the columns in their cache key: the WAND
+# stats + blob scan, the WAND phrase positions scan, and the exhaustive
+# evaluator's all-column read (sort_by, aggs)
+WAND_COLS = ("field", "term", "shard", "df", "max_tf", "min_dl",
+             "first_docid", "last_docid", "doc_ids", "tfs")
+POSITION_COLS = ("field", "term", "shard", "positions")
+
+
+def _postings_keys(s):
+    return {k for k in s._blocks._data if k[0].endswith("/postings.parquet")}
+
+
+def test_leaf_postings_reads_go_through_the_block_cache(spark, index_dir):
+    s = Searcher(spark, index_dir)
+    cold = _run_all(s)
+    misses = s._blocks.misses
+    assert _run_all(s) == cold
+    assert s._blocks.misses == misses
+    cols = {k[2] for k in _postings_keys(s)}
+    assert cols == {WAND_COLS, POSITION_COLS, None}
+    assert {k[0].rsplit("/", 1)[1] for k in s._blocks._data} == {
+        "postings.parquet", "docs.parquet"
+    }
 
 
 def test_byte_budget_holds_under_eviction(spark, index_dir, monkeypatch):
@@ -171,6 +199,86 @@ def test_refresh_after_merge_drops_merged_away_splits(
     s.refresh()
     assert len(s._blocks) == n
     assert _run_all(s) == after and s._blocks.misses == misses
+
+
+def test_refresh_after_append_keeps_older_postings(spark, corpus, tmp_path):
+    from quickwit_spark.operators.build import build_index
+    from quickwit_spark.operators.merge import run_merge_pipeline
+
+    cfg = IndexConfig(
+        hot_term_doc_freq=200, salt_docid_range=64,
+        merge_factor=2, max_merge_factor=4, min_level_num_docs=10,
+    )
+    d = str(tmp_path / "idx")
+    half = len(corpus) // 2
+    build_index(spark, spark.createDataFrame(corpus[:half]), d, cfg,
+                n_splits=2, ingest_id="b0000")
+    s = Searcher(spark, d)
+    _run_all(s)
+    older = _postings_keys(s)
+    assert older
+
+    appended = corpus[half:].copy()
+    appended["conv_id"] = "a-" + appended["conv_id"]
+    build_index(spark, spark.createDataFrame(appended), d, cfg,
+                n_splits=2, ingest_id="b0001")
+    s.refresh()
+    assert len(s.catalog.published_splits()) == 4
+    assert _postings_keys(s) == older
+    assert _run_all(s) == _run_all(Searcher(spark, d))
+    cached = {k[0].rsplit("/", 1)[0] for k in _postings_keys(s)}
+    assert len(cached) == 4
+
+    assert run_merge_pipeline(spark, d) >= 1
+    s.refresh()
+    live = {s.catalog.split_dir(x.split_id)
+            for x in s.catalog.published_splits()}
+    kept = {k[0].rsplit("/", 1)[0] for k in _postings_keys(s)}
+    gone = cached - live
+    assert gone, "the merge replaced no cached split"
+    assert kept == cached & live
+
+
+@pytest.mark.parametrize("kind", ["postings", "docs", "term_stats"])
+def test_read_pruned_cached_key_bounds_equal_full_scan(
+    index_dir, tmp_path, kind
+):
+    """Row-group selection from the bounds cached on the file handle
+    answers like a full scan + filter, on the index's own files and on
+    an eight-group copy of each, for the first read (bounds built) and
+    the repeat (bounds cached)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from quickwit_spark.functions import fs as fsio
+    from quickwit_spark.functions.parquet_io import read_pruned
+    from quickwit_spark.plans.catalog import Catalog
+
+    cat = Catalog.load(index_dir)
+    split_dir = cat.split_dir(cat.published_splits()[0].split_id)
+    src, key = {
+        "postings": (fsio.join(split_dir, "postings.parquet"), "term"),
+        "docs": (fsio.join(split_dir, "docs.parquet"), "docid"),
+        "term_stats": (cat.term_stats_path(), "term"),
+    }[kind]
+    full = pq.read_table(src)
+    multi = str(tmp_path / "multi.parquet")
+    pq.write_table(full, multi, row_group_size=-(-len(full) // 8))
+    assert pq.ParquetFile(multi).metadata.num_row_groups == 8
+    keys = full.column(key).to_pylist()
+    top = max(keys)
+    value_sets = [
+        [keys[0], keys[len(keys) // 2]],
+        [top + ("~" if isinstance(top, str) else 1)],  # matches no group
+        keys[:: len(keys) // 16] + [top],  # spans every group
+    ]
+    for path in (src, multi):
+        for vals in value_sets:
+            want = full.filter(pc.is_in(full.column(key), value_set=pa.array(vals)))
+            for _ in range(2):
+                assert read_pruned(path, None, key, vals).equals(want)
+        assert key in fsio.parquet_file_cached(path)._bounds
 
 
 @pytest.mark.parametrize("cols", [None, ["field", "term", "df"]])

@@ -2,15 +2,17 @@
 the live HTTP server) must return bit-identical results with no
 errors. This exercises the thread-safety of the caches — fs._PF_CACHE's
 per-handle read locks (ADVICE r3 #1), the fast-field LRU and the shared
-Searcher's decoded row-group LRU — under real parallel load with cold
-caches, the situation a ThreadingHTTPServer + persistent leaf pool
-creates in production."""
+Searcher's decoded row-group LRU, which every caller's leaves and doc
+fetch read through from the caller's own thread — under real parallel
+load with cold caches, the situation a ThreadingHTTPServer creates in
+production. A driver-mode search itself starts no thread."""
 
 from __future__ import annotations
 
 import concurrent.futures as cf
 import json
 import random
+import threading
 import urllib.request
 
 import pytest
@@ -79,6 +81,26 @@ def test_concurrent_searches_bit_identical(searcher):
     for per_thread in results:
         for q, key in per_thread:
             assert key == ref[q], q
+    # the racing callers filled ONE cache with postings and doc groups
+    names = {k[0].rsplit("/", 1)[1] for k in searcher._blocks._data}
+    assert names == {"postings.parquet", "docs.parquet"}
+
+
+def test_driver_search_starts_no_thread(spark, index_dir):
+    """Driver-mode leaves and the root doc fetch run in the calling
+    thread: a fresh Searcher's searches leave the set of live threads
+    as it was (a first search on another, still referenced handle warms
+    process-wide state)."""
+    from quickwit_spark.operators.search import Searcher
+
+    warm = Searcher(spark, index_dir)
+    warm.search(QUERIES[0], k=10)
+    before = set(threading.enumerate())
+    s = Searcher(spark, index_dir)
+    for q in QUERIES:
+        resp = s.search(q, k=10, mode="driver")
+        assert resp.errors == [] and resp.hits, q
+    assert set(threading.enumerate()) == before
 
 
 def test_concurrent_http_requests(index):

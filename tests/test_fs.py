@@ -206,8 +206,8 @@ class TestMockE2E:
         assert Catalog.load(d).total_docs() == 300
 
     def test_parquet_cache_thread_safety(self, tmp_path):
-        """The footer cache is shared by the searcher leaf pool and the
-        ThreadingHTTPServer; concurrent read_pruned calls on the SAME
+        """The footer cache is shared by concurrent searches (the
+        ThreadingHTTPServer); concurrent read_pruned calls on the SAME
         cached handle must serialize per file (pyarrow ParquetFile
         reads are not thread-safe) and return correct rows."""
         import concurrent.futures as cf
