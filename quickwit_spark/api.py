@@ -101,7 +101,6 @@ class Index:
         an explicit id — appended data is never silently dropped)."""
         build_index(
             self.spark, source, self.index_dir,
-            config=self.catalog().config if Catalog.exists(self.index_dir) else None,
             n_splits=n_splits, resume=True, ingest_id=ingest_id,
         )
         self._searcher = None

@@ -9,19 +9,22 @@ The Spark-first re-expression of the reference's indexing pipeline
   same data movement the actor pipeline does with mailboxes.
 * Indexer+Packager (tokenize, build in-RAM index, serialize one segment —
   quickwit-indexing/src/actors/indexer.rs:230-286, packager.rs:168-233)
-  become a vectorized ``applyInPandas`` kernel per split group: numpy
+  become a vectorized ``applyInArrow`` kernel per split group: numpy
   factorize/lexsort posting construction, delta+varint encoding in one
   pass (no per-row Python), written as Parquet from the worker.
-* Uploader/Publisher staging (uploader.rs:240-271, publisher.rs:140-148)
-  become ``Catalog.stage_split`` + atomic ``publish_splits`` with a
-  checkpoint delta per routing partition — killing the driver between
-  publishes and re-running resumes at split granularity (the build
-  filters out already-published partitions).
+* Uploader/Publisher (uploader.rs:240-271, publisher.rs:140-148) become
+  ``Catalog.stage_and_publish``: one atomic commit per chunk of splits
+  with their checkpoint deltas — killing the driver between chunks and
+  re-running resumes at split granularity (the build filters out
+  already-published partitions).
+* Every source feeds this one pipeline, as in the reference: streaming
+  micro-batches (streaming/ingest.py) are batch ingests namespaced
+  ``stream-<batch_key>``.
 
 Scale notes (100 TB / 10^12 turns):
 * one split group ≈ ``split_num_docs_target`` docs (10M, reference
   default — quickwit-config/src/index_config.rs:180-182); choose
-  ``n_splits ≈ total_docs / target`` so each applyInPandas group fits an
+  ``n_splits ≈ total_docs / target`` so each applyInArrow group fits an
   executor (the reference sizes splits the same way).
 * hot terms are salted *within* a split: posting lists longer than
   ``hot_term_doc_freq`` docs are sharded into rows of at most
@@ -55,11 +58,6 @@ DOCS_FILE = "docs.parquet"
 # publish unit); a crash between chunks loses at most one chunk of work
 # to the resume filter.
 PUBLISH_CHUNK = 16
-
-# internal columns added to the doc store next to the original row
-# (the reference stores the raw doc under _source — default_mapper.rs:296-300;
-# our doc store is the full original row plus fast-field extras)
-INTERNAL_DOC_COLUMNS = ("docid", "ts_us", "doc_len")
 
 
 def _field_posting_columns(
@@ -179,99 +177,12 @@ def limit_worker_threads(n: int = 1) -> None:
         pass
 
 
-def build_split_tables(pdf: pd.DataFrame, config: IndexConfig):
-    """Pure (no-Spark) split build: one routing partition's docs →
-    (postings DataFrame, docs DataFrame, metadata dict).
-
-    Docid assignment is the stable ``(conv_id, turn_idx)`` sort —
-    SURVEY.md §7.2 tie-breaking: the reference's
-    ``(split_id, segment_ord, doc_id)`` order (quickwit-search/src/lib.rs:100-105)
-    is deterministic here because docids are a deterministic function of
-    doc identity.
-    """
-    limit_worker_threads()
-    pdf = pdf.sort_values(
-        list(config.doc_key_fields), kind="mergesort"
-    ).reset_index(drop=True)
-    n = len(pdf)
-    ts = pd.to_datetime(pdf[config.timestamp_field])
-    ts_us = (ts.astype("int64") // 1000).to_numpy()
-
-    field_tokens: dict[str, tuple] = {}
-    for f in config.fields:
-        field_tokens[f.name] = tokenize_encode(pdf[f.name], f.tokenizer)
-
-    doc_len = field_tokens[config.default_search_field][0]
-
-    posting_cols: dict[str, list] = {
-        k: []
-        for k in (
-            "field", "term", "shard", "df", "max_tf", "min_dl",
-            "first_docid", "last_docid", "doc_ids", "tfs", "positions",
-        )
-    }
-    term_range = None
-    tags: dict[str, list | None] = {}
-    tag_has_null: dict[str, bool] = {}
-    for f in config.fields:
-        f_lens, f_codes, f_uniq = field_tokens[f.name]
-        if f.name in config.tag_fields:
-            # presence marker: some doc contributed NO tag token
-            # (null / empty / dropped) — keeps must_not pruning sound
-            tag_has_null[f.name] = bool((f_lens == 0).any())
-        cols = _field_posting_columns(
-            f_lens,
-            f_codes,
-            f_uniq,
-            doc_len,
-            f.name,
-            f.with_positions,
-            config.hot_term_doc_freq,
-            config.salt_docid_range,
-        )
-        if cols is None:
-            continue
-        uniq = cols.pop("_uniq_terms")
-        if f.name == config.default_search_field:
-            term_range = (str(uniq[0]), str(uniq[-1]))
-        if f.name in config.tag_fields:
-            tags[f.name] = (
-                sorted(map(str, uniq))
-                if uniq.size <= config.max_tag_values
-                else None  # overflow ⇒ uninformative (packager.rs:36-43)
-            )
-        for k, v in cols.items():
-            posting_cols[k].extend(v if isinstance(v, list) else v.tolist())
-
-    postings = pd.DataFrame(posting_cols)
-    source_cols = [c for c in pdf.columns if c not in INTERNAL_DOC_COLUMNS]
-    docs = pd.DataFrame(
-        {
-            "docid": np.arange(n, dtype=np.int64),
-            **{c: pdf[c].to_numpy() for c in source_cols},
-            "ts_us": ts_us,
-            "doc_len": doc_len,
-        }
-    )
-    meta = {
-        "num_docs": int(n),
-        "sum_doc_len": int(doc_len.sum()),
-        "uncompressed_docs_size_in_bytes": int(
-            pdf[config.default_search_field].str.len().fillna(0).sum()
-        ),
-        "time_range": (int(ts_us.min()), int(ts_us.max())) if n else None,
-        "term_range": term_range,
-        "tags": tags,
-        "tag_has_null": tag_has_null,
-    }
-    return postings, docs, meta
-
-
 def write_split(postings: pd.DataFrame, docs, split_dir: str) -> int:
     """Write a split's two Parquet files (zstd, like the reference's doc
-    store — index_config.rs:172-178); returns total bytes. ``docs`` may
-    be a pandas DataFrame or a pyarrow Table. ``split_dir`` may be any
-    pyarrow-supported URI (functions/fs) — the storage-trait analog."""
+    store — index_config.rs:172-178); returns total bytes. ``docs`` is
+    the pyarrow Table :func:`build_split_tables_arrow` returns.
+    ``split_dir`` may be any pyarrow-supported URI (functions/fs) — the
+    storage-trait analog."""
     import pyarrow as pa
 
     from quickwit_spark.functions import fs as fsio
@@ -287,8 +198,6 @@ def write_split(postings: pd.DataFrame, docs, split_dir: str) -> int:
         # (functions/parquet_io.read_pruned touches O(1) groups)
         row_group_size=2048,
     )
-    if not isinstance(docs, pa.Table):
-        docs = pa.Table.from_pandas(docs, preserve_index=False)
     # 8k-doc groups: fetch_docs decompresses ~8k rows per hit group
     # instead of 65k, at a still-tiny footer overhead
     fsio.write_table(docs, dpath, compression="zstd", row_group_size=8192)
@@ -296,11 +205,17 @@ def write_split(postings: pd.DataFrame, docs, split_dir: str) -> int:
 
 
 def build_split_tables_arrow(tbl, config: IndexConfig):
-    """Arrow-native variant of :func:`build_split_tables` — the
-    ``applyInArrow`` kernel body. Keeps every string in C++ buffers
-    (sort_by, tokenize, dictionary-encode, doc-store assembly) so 32
-    concurrent kernels don't fight over Python object allocation;
-    output is identical (tests assert byte parity of posting blobs).
+    """Pure (no-Spark) split build, the ``applyInArrow`` kernel body:
+    one routing partition's docs (a pyarrow Table) → (postings
+    DataFrame, docs Table, metadata dict). Keeps every string in C++
+    buffers (sort_by, tokenize, dictionary-encode, doc-store assembly)
+    so 32 concurrent kernels don't fight over Python object allocation.
+
+    Docid assignment is the stable ``(conv_id, turn_idx)`` sort —
+    SURVEY.md §7.2 tie-breaking: the reference's
+    ``(split_id, segment_ord, doc_id)`` order (quickwit-search/src/lib.rs:100-105)
+    is deterministic here because docids are a deterministic function of
+    doc identity.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -331,6 +246,8 @@ def build_split_tables_arrow(tbl, config: IndexConfig):
     for f in config.fields:
         f_lens, f_codes, f_uniq = field_tokens[f.name]
         if f.name in config.tag_fields:
+            # presence marker: some doc contributed NO tag token
+            # (null / empty / dropped) — keeps must_not pruning sound
             tag_has_null[f.name] = bool((f_lens == 0).any())
         cols = _field_posting_columns(
             f_lens, f_codes, f_uniq, doc_len, f.name, f.with_positions,
@@ -345,7 +262,7 @@ def build_split_tables_arrow(tbl, config: IndexConfig):
             tags[f.name] = (
                 sorted(map(str, uniq))
                 if uniq.size <= config.max_tag_values
-                else None
+                else None  # overflow ⇒ uninformative (packager.rs:36-43)
             )
         for k, v in cols.items():
             posting_cols[k].extend(v if isinstance(v, list) else v.tolist())
@@ -384,18 +301,28 @@ def split_id_for_partition(ingest_id: str, split_ord: int) -> str:
 
 
 def _migrate_legacy_checkpoint(catalog: Catalog) -> None:
-    """Indexes written before per-ingest namespacing recorded bare
-    ``"<partition>": "done"`` checkpoint keys. Fold them into the
-    ``batch/b0000/<partition>`` namespace (no completion marker — the
-    next resume re-derives it), so a resume on a pre-upgrade index
-    keeps skipping its published partitions instead of silently
-    rebuilding and double-publishing every document."""
-    legacy = [k for k in catalog.checkpoint if k.isdigit()]
+    """Fold pre-upgrade checkpoint keys into the batch namespaces, so a
+    resume or replay on an old index keeps skipping published work
+    instead of silently rebuilding and double-publishing it:
+
+    * bare ``"<partition>": "done"`` keys (before per-ingest
+      namespacing) → ``batch/b0000/<partition>`` (no completion marker —
+      the next resume re-derives it);
+    * ``"stream/<batch_key>": "done"`` (before stream batches ran
+      :func:`build_index`) → the ``batch/stream-<batch_key>`` completion
+      marker."""
+    legacy = [
+        k for k in catalog.checkpoint if k.isdigit() or k.startswith("stream/")
+    ]
     if not legacy:
         return
     new = dict(catalog.checkpoint)
     for k in legacy:
-        new[f"batch/b0000/{k}"] = new.pop(k)
+        if k.isdigit():
+            new[f"batch/b0000/{k}"] = new.pop(k)
+        else:
+            del new[k]
+            new[f"batch/stream-{k.split('/', 1)[1]}"] = "complete"
     catalog.replace_checkpoint(new)
 
 
@@ -480,7 +407,9 @@ def build_index(
 ) -> Catalog:
     """Build (or resume) the index for ``source`` (DataFrame or parquet
     path of transcripts). One Spark job: shuffle by routing hash, build
-    each split in a vectorized kernel, then stage+publish per split.
+    each split in a vectorized kernel, then publish the splits in
+    chunked atomic commits. An existing index builds with its own
+    ``catalog.config``; ``config`` only configures a new one.
 
     Resume semantics (publisher.rs:140-148 / checkpoint.rs analog):
     partitions whose checkpoint position is already recorded under THIS
@@ -490,7 +419,10 @@ def build_index(
     """
     from pyspark.sql import functions as F
 
-    config = config or IndexConfig()
+    catalog = (
+        Catalog.load(index_dir) if resume and Catalog.exists(index_dir) else None
+    )
+    config = catalog.config if catalog is not None else config or IndexConfig()
     if config.default_search_field is None:
         # BM25 doc length = default-field token count (locked engine
         # invariant) — a search-only no-default-field config (valid for
@@ -506,8 +438,7 @@ def build_index(
         df = source
         source_path = None
 
-    if resume and Catalog.exists(index_dir):
-        catalog = Catalog.load(index_dir)
+    if catalog is not None:
         _migrate_legacy_checkpoint(catalog)
     else:
         # retain_history=True (manifest backend) keeps superseded

@@ -130,24 +130,37 @@ class SearchResponse:
 # split-local evaluation (runs inside the mapInPandas kernel)
 # ---------------------------------------------------------------------------
 
+# the two postings column sets the leaves read (each its own block-cache
+# entry per row group): stats + docid/tf blobs, and the position blobs
+_WAND_COLS = (
+    "field", "term", "shard", "df", "max_tf", "min_dl",
+    "first_docid", "last_docid", "doc_ids", "tfs",
+)
+_POSITION_COLS = ("field", "term", "shard", "positions")
+
+
 def _read_postings(split_dir: str, terms: set[tuple[str, str]], cache=None):
     """Read + decode only the query terms' posting rows.
 
     Returns {(field, term): (docids, tfs, positions_concat|None)} with
     shards concatenated in docid order. ``cache``: see :func:`read_pruned`.
+    Reads the same two column sets as :class:`_ShardPostings`, so the
+    row groups both evaluators touch are cached once; both reads select
+    the same groups and rows, so their rows align.
     """
     from quickwit_spark.functions.parquet_io import read_pruned
 
     path = fsio.join(split_dir, POSTINGS_FILE)
     term_values = sorted({t for _, t in terms})
-    tbl = read_pruned(path, None, "term", term_values, cache)
+    tbl = read_pruned(path, _WAND_COLS, "term", term_values, cache)
+    pos_tbl = read_pruned(path, _POSITION_COLS, "term", term_values, cache)
     out: dict[tuple[str, str], tuple] = {}
     fields = tbl.column("field").to_pylist()
     tvals = tbl.column("term").to_pylist()
     shards = tbl.column("shard").to_pylist()
     doc_blobs = tbl.column("doc_ids").to_pylist()
     tf_blobs = tbl.column("tfs").to_pylist()
-    pos_blobs = tbl.column("positions").to_pylist()
+    pos_blobs = pos_tbl.column("positions").to_pylist()
     rows_by_key: dict[tuple[str, str], list] = {}
     for i in range(len(fields)):
         key = (fields[i], tvals[i])
@@ -286,12 +299,7 @@ class _ShardPostings:
         # of the query terms' rows are (almost) always needed anyway —
         # decode-on-demand skips the DECODE per shard, not the read —
         # and one scan halves the per-query row-group read count
-        tbl = read_pruned(
-            path,
-            ["field", "term", "shard", "df", "max_tf", "min_dl",
-             "first_docid", "last_docid", "doc_ids", "tfs"],
-            "term", term_values, cache,
-        )
+        tbl = read_pruned(path, _WAND_COLS, "term", term_values, cache)
         fields = tbl.column("field").to_pylist()
         terms = tbl.column("term").to_pylist()
         cols = {
@@ -358,9 +366,7 @@ class _ShardPostings:
             from quickwit_spark.functions.parquet_io import read_pruned
 
             self._pos_tbl = read_pruned(
-                self._path,
-                ["field", "term", "shard", "positions"],
-                "term", self._term_values, self._cache,
+                self._path, _POSITION_COLS, "term", self._term_values, self._cache
             )
             self._pos_row = {
                 (f, t, int(s)): i

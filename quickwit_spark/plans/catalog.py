@@ -403,7 +403,7 @@ class Catalog:
         the checkpoint advance in ONE atomic commit — the batch-build
         fast path (split files are already durable on storage when this
         runs, so the intermediate Staged commit adds no safety; Staged
-        remains the state for the streaming/merge paths where work
+        remains the state for the merge/demux paths where work
         continues after staging)."""
         for meta in metas:
             self._check_stageable(meta, allow_staged=False)
@@ -516,7 +516,7 @@ class Catalog:
             return
         df = pd.DataFrame(rows)
         # pin dtypes so lineage files from different ops (build / merge /
-        # stream_ingest) present one mergeable parquet schema
+        # demux) present one mergeable parquet schema
         df["partition"] = (
             df["partition"].map(lambda v: -1 if v is None else int(v)).astype("int64")
         )

@@ -7,11 +7,17 @@ Reference mapping:
   source (kafka, file, rate); Spark owns offset tracking exactly as
   the reference's SourceCheckpoint does (checkpoint.rs:34-105).
 * exactly-once publish (publisher.rs:140-148: checkpoint delta applied
-  atomically WITH split publication) → the catalog records
-  ``stream/<batch_id>`` in its checkpoint inside the same atomic
-  commit that publishes the batch's splits; a replayed micro-batch
-  (foreachBatch can re-run on failure) sees the position and becomes
-  a no-op — no duplicated docs.
+  atomically WITH split publication) → each micro-batch is the batch
+  ingest ``stream-<batch_key>`` of :func:`build_index`, whose
+  ``batch/stream-<batch_key>`` completion marker lands in the same
+  atomic commit that publishes the batch's splits; a replayed
+  micro-batch (foreachBatch can re-run on failure) sees the marker and
+  becomes a no-op — no duplicated docs.
+* one indexing pipeline for every source (the reference feeds file,
+  Kafka, Kinesis and ingest-API sources through the same
+  indexer → packager → uploader → publisher chain) → a micro-batch
+  takes the batch build's routing, ``applyInArrow`` kernel, chunked
+  publish, lineage and term-stats refresh unchanged.
 * commit triggers (indexer.rs:392-397: NumDocsLimit / Timeout /
   NoMoreDocs) → the micro-batch trigger (processingTime /
   availableNow) plays the Timeout role; a batch yields one split per
@@ -19,23 +25,16 @@ Reference mapping:
   resulting small splits — identical to the reference's
   small-split-then-merge lifecycle.
 
-Scale: each micro-batch is one bounded build job (same kernel as the
-batch path); routing partitions bound per-task memory; the merge
-planner keeps the split count logarithmic.
+Scale: each micro-batch is one bounded build job; routing partitions
+bound per-task memory; the merge planner keeps the split count
+logarithmic.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import time
-
-import pandas as pd
-
 from quickwit_spark.config import IndexConfig
-from quickwit_spark.functions import fs as fsio
-from quickwit_spark.operators.build import build_split_tables, write_split
-from quickwit_spark.plans.catalog import Catalog, SplitMetadata
+from quickwit_spark.operators.build import build_index
+from quickwit_spark.plans.catalog import Catalog
 
 
 def ingest_batch(
@@ -46,90 +45,22 @@ def ingest_batch(
     config: IndexConfig | None = None,
     n_splits: int = 4,
 ) -> list[str]:
-    """Index one (micro-)batch: returns the published split ids.
-    Idempotent on ``batch_key`` — a replay publishes nothing."""
-    from pyspark.sql import functions as F
-
-    if Catalog.exists(index_dir):
-        catalog = Catalog.load(index_dir)
-        config = catalog.config
-    else:
-        catalog = Catalog.create(index_dir, config or IndexConfig())
-        config = catalog.config
-
-    ckpt_key = f"stream/{batch_key}"
-    if catalog.checkpoint.get(ckpt_key) == "done":
-        return []  # replayed batch — exactly-once no-op
-
-    df = batch_df.withColumn(
-        "split_ord",
-        F.pmod(
-            F.crc32(F.encode(F.col(config.routing_field).cast("string"), "utf-8")),
-            F.lit(n_splits),
-        ).cast("long"),
+    """Index one (micro-)batch as the batch ingest ``stream-<batch_key>``
+    (split ids ``split-stream-<batch_key>-NNNNN``); returns the split
+    ids it published. Idempotent on ``batch_key`` — a replay publishes
+    nothing and returns ``[]``."""
+    before = (
+        {s.split_id for s in Catalog.load(index_dir).published_splits()}
+        if Catalog.exists(index_dir)
+        else set()
     )
-    index_dir_b = index_dir
-    config_dict = config.to_dict()
-    batch_key_b = batch_key
-
-    def build_group(key, pdf):
-        split_ord = int(key[0])
-        cfg = IndexConfig.from_dict(config_dict)
-        t0 = time.time()
-        postings, docs, meta = build_split_tables(
-            pdf.drop(columns=["split_ord"]), cfg
-        )
-        split_id = f"stream-{batch_key_b}-{split_ord:04d}"
-        size = write_split(
-            postings, docs, fsio.join(index_dir_b, "splits", split_id)
-        )
-        meta.update(
-            split_id=split_id, split_ord=split_ord, size_in_bytes=size,
-            wall_time_sec=time.time() - t0,
-        )
-        return pd.DataFrame({"split_ord": [split_ord], "meta": [json.dumps(meta)]})
-
-    results = (
-        df.groupBy("split_ord")
-        .applyInPandas(build_group, schema="split_ord long, meta string")
-        .collect()
+    catalog = build_index(
+        spark, batch_df, index_dir, config, n_splits=n_splits,
+        ingest_id=f"stream-{batch_key}",
     )
-
-    new_ids: list[str] = []
-    lineage = []
-    for row in sorted(results, key=lambda r: r.split_ord):
-        meta = json.loads(row.meta)
-        sm = SplitMetadata(
-            split_id=meta["split_id"],
-            num_docs=meta["num_docs"],
-            sum_doc_len=meta["sum_doc_len"],
-            uncompressed_docs_size_in_bytes=meta["uncompressed_docs_size_in_bytes"],
-            size_in_bytes=meta["size_in_bytes"],
-            time_range=tuple(meta["time_range"]) if meta["time_range"] else None,
-            term_range=tuple(meta["term_range"]) if meta["term_range"] else None,
-            tags=meta["tags"],
-            tag_has_null=meta.get("tag_has_null", {}),
-            source_partitions=[meta["split_ord"]],
-        )
-        catalog.stage_split(sm)
-        new_ids.append(sm.split_id)
-        lineage.append(
-            {
-                "split_id": sm.split_id, "op": "stream_ingest",
-                "partition": meta["split_ord"], "num_docs": sm.num_docs,
-                "size_in_bytes": sm.size_in_bytes,
-                "term_min": sm.term_range[0] if sm.term_range else None,
-                "term_max": sm.term_range[1] if sm.term_range else None,
-                "wall_time_sec": meta["wall_time_sec"], "ts": time.time(),
-            }
-        )
-    # ONE atomic commit: all the batch's splits + the batch position
-    catalog.publish_splits(new_ids, checkpoint_delta={ckpt_key: "done"})
-    catalog.append_lineage(lineage)
-    from quickwit_spark.operators.stats import refresh_term_stats
-
-    refresh_term_stats(spark, catalog)
-    return new_ids
+    return [
+        s.split_id for s in catalog.published_splits() if s.split_id not in before
+    ]
 
 
 def start_stream_build(

@@ -58,9 +58,10 @@ def test_repeated_queries_decode_no_new_row_group(spark, index_dir):
     assert _run_all(fresh) == cold
 
 
-# the three postings reads, by the columns in their cache key: the WAND
-# stats + blob scan, the WAND phrase positions scan, and the exhaustive
-# evaluator's all-column read (sort_by, aggs)
+# the two postings reads, by the columns in their cache key: the stats +
+# blob scan and the positions scan; the WAND and the exhaustive evaluator
+# (sort_by, aggs) both read through these two, so a row group is cached
+# at most once per column set
 WAND_COLS = ("field", "term", "shard", "df", "max_tf", "min_dl",
              "first_docid", "last_docid", "doc_ids", "tfs")
 POSITION_COLS = ("field", "term", "shard", "positions")
@@ -77,7 +78,7 @@ def test_leaf_postings_reads_go_through_the_block_cache(spark, index_dir):
     assert _run_all(s) == cold
     assert s._blocks.misses == misses
     cols = {k[2] for k in _postings_keys(s)}
-    assert cols == {WAND_COLS, POSITION_COLS, None}
+    assert cols == {WAND_COLS, POSITION_COLS}
     assert {k[0].rsplit("/", 1)[1] for k in s._blocks._data} == {
         "postings.parquet", "docs.parquet"
     }

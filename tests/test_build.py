@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from quickwit_spark.config import IndexConfig
@@ -16,7 +17,7 @@ from quickwit_spark.functions.codec import (
     varint_sizes,
 )
 from quickwit_spark.functions.tokenize import tokenize_default
-from quickwit_spark.operators.build import build_split_tables
+from quickwit_spark.operators.build import build_split_tables_arrow
 from quickwit_spark.sources.transcripts import generate_transcripts
 
 
@@ -49,7 +50,10 @@ class TestBuildSplitTables:
     def built(self):
         pdf = generate_transcripts(500, seed=3, hot_term_frac=0.5)
         cfg = IndexConfig(hot_term_doc_freq=50, salt_docid_range=32)
-        return pdf, cfg, build_split_tables(pdf, cfg)
+        postings, docs, meta = build_split_tables_arrow(
+            pa.Table.from_pandas(pdf, preserve_index=False), cfg
+        )
+        return pdf, cfg, (postings, docs.to_pandas(), meta)
 
     def test_doc_conservation(self, built):
         pdf, cfg, (postings, docs, meta) = built
@@ -100,32 +104,29 @@ class TestBuildSplitTables:
         assert meta["tags"]["tool"] is not None  # ≤ 20 tools
 
 
-def test_arrow_and_pandas_split_builders_agree():
-    """The applyInArrow kernel body must produce byte-identical posting
-    blobs and equal doc stores to the pandas reference builder."""
-    import pyarrow as pa
+def test_append_builds_with_the_index_config(spark, tmp_path):
+    """An append without a config builds with the index's own config,
+    not IndexConfig() defaults: its hot term is salted like the first
+    ingest's."""
+    from quickwit_spark.operators.build import POSTINGS_FILE, build_index
+    from quickwit_spark.plans.catalog import Catalog
 
-    from quickwit_spark.operators.build import build_split_tables_arrow
-
-    pdf = generate_transcripts(800, seed=5, hot_term_frac=0.4)
     cfg = IndexConfig(hot_term_doc_freq=50, salt_docid_range=32)
-    p_post, p_docs, p_meta = build_split_tables(pdf, cfg)
-    tbl = pa.Table.from_pandas(pdf, preserve_index=False).set_column(
-        pdf.columns.get_loc("ts"),
-        "ts",
-        pa.Table.from_pandas(pdf[["ts"]]).column("ts").cast(pa.timestamp("us")),
-    )
-    a_post, a_docs, a_meta = build_split_tables_arrow(tbl, cfg)
-    assert p_meta == a_meta
-    assert len(p_post) == len(a_post)
-    for col in ("field", "term", "shard", "df", "max_tf", "min_dl",
-                "first_docid", "last_docid"):
-        assert p_post[col].tolist() == a_post[col].tolist(), col
-    for col in ("doc_ids", "tfs", "positions"):
-        assert p_post[col].tolist() == a_post[col].tolist(), col
-    ad = a_docs.to_pandas()
-    for col in ("docid", "conv_id", "turn_idx", "text", "ts_us", "doc_len"):
-        assert p_docs[col].tolist() == ad[col].tolist(), col
+    pdf = generate_transcripts(800, seed=3, hot_term_frac=0.5)
+    idx = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(pdf.iloc[:400]), idx, cfg,
+                n_splits=1, ingest_id="first")
+    build_index(spark, spark.createDataFrame(pdf.iloc[400:]), idx,
+                n_splits=1, ingest_id="append")
+    cat = Catalog.load(idx)
+    assert cat.config == cfg
+    for sid in ("split-first-00000", "split-append-00000"):
+        postings = pd.read_parquet(
+            f"{cat.split_dir(sid)}/{POSTINGS_FILE}", columns=["field", "term", "df"]
+        )
+        hot = postings[(postings["field"] == "text") & (postings["term"] == "hotterm")]
+        assert len(hot) > 1, sid
+        assert (hot["df"] <= cfg.salt_docid_range).all(), sid
 
 
 def test_resume_after_partial_publish(spark, corpus, config, tmp_path):

@@ -4,6 +4,7 @@ merge_executor.rs doc conservation; proptest analogs via hypothesis)."""
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -297,7 +298,7 @@ class TestMergeIdsAndFanout:
         """A planner round of 3 independent merge ops (one per level)
         must fan out as ONE Spark job with one task per op, not one
         job per op."""
-        from quickwit_spark.operators.build import build_split_tables, write_split
+        from quickwit_spark.operators.build import build_split_tables_arrow, write_split
         from quickwit_spark.operators.merge import run_merge_pipeline
         from quickwit_spark.plans.catalog import Catalog, SplitMetadata
         from quickwit_spark.sources.transcripts import generate_transcripts
@@ -318,7 +319,9 @@ class TestMergeIdsAndFanout:
         for i, sz in enumerate(sizes):
             pdf = big.iloc[lo : lo + sz].reset_index(drop=True)
             lo += sz
-            postings, docs, meta = build_split_tables(pdf, cfg)
+            postings, docs, meta = build_split_tables_arrow(
+                pa.Table.from_pandas(pdf, preserve_index=False), cfg
+            )
             sid = f"seed-{i:04d}"
             size = write_split(postings, docs, os.path.join(d, "splits", sid))
             sms.append(SplitMetadata(

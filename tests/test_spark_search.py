@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from tests.conftest import assert_rank_identical
@@ -208,7 +209,7 @@ class TestWand:
         shard provably dominates."""
         from quickwit_spark.config import FieldConfig, IndexConfig
         from quickwit_spark.functions.tokenize import tokenize_default
-        from quickwit_spark.operators.build import build_split_tables, write_split
+        from quickwit_spark.operators.build import build_split_tables_arrow, write_split
         from quickwit_spark.operators.search import _wand_bool
         from quickwit_spark.plans.query import Term
         from quickwit_spark.sources.transcripts import fixture_corpus
@@ -222,7 +223,9 @@ class TestWand:
         ]
         pdf = fixture_corpus(strong + weak)
         cfg = IndexConfig(hot_term_doc_freq=10, salt_docid_range=8)
-        postings, docs, meta = build_split_tables(pdf, cfg)
+        postings, docs, meta = build_split_tables_arrow(
+            pa.Table.from_pandas(pdf, preserve_index=False), cfg
+        )
         sd = str(tmp_path / "skew")
         write_split(postings, docs, sd)
         doc_len = docs["doc_len"].to_numpy().astype(np.float64)
@@ -256,7 +259,7 @@ class TestWand:
         the unpruned evaluation."""
         from quickwit_spark.config import IndexConfig
         from quickwit_spark.functions.tokenize import tokenize_default
-        from quickwit_spark.operators.build import build_split_tables, write_split
+        from quickwit_spark.operators.build import build_split_tables_arrow, write_split
         from quickwit_spark.operators.search import _wand_bool
         from quickwit_spark.plans.query import Bool, Term
         from quickwit_spark.sources.transcripts import fixture_corpus
@@ -270,7 +273,9 @@ class TestWand:
         ]
         pdf = fixture_corpus(strong + weak)
         cfg = IndexConfig(hot_term_doc_freq=10, salt_docid_range=8)
-        postings, docs, meta = build_split_tables(pdf, cfg)
+        postings, docs, meta = build_split_tables_arrow(
+            pa.Table.from_pandas(pdf, preserve_index=False), cfg
+        )
         sd = str(tmp_path / "skewconj")
         write_split(postings, docs, sd)
         doc_len = docs["doc_len"].to_numpy().astype(np.float64)
@@ -324,7 +329,7 @@ class TestWand:
 
         from quickwit_spark.config import IndexConfig
         from quickwit_spark.functions.tokenize import tokenize_default
-        from quickwit_spark.operators.build import build_split_tables, write_split
+        from quickwit_spark.operators.build import build_split_tables_arrow, write_split
         from quickwit_spark.operators.search import _wand_bool
         from quickwit_spark.plans.query import Phrase, Term
         from quickwit_spark.sources.transcripts import fixture_corpus
@@ -334,7 +339,9 @@ class TestWand:
         ]
         pdf = fixture_corpus(docs)
         cfg = IndexConfig(hot_term_doc_freq=10, salt_docid_range=8)
-        postings, dstore, meta = build_split_tables(pdf, cfg)
+        postings, dstore, meta = build_split_tables_arrow(
+            pa.Table.from_pandas(pdf, preserve_index=False), cfg
+        )
         sd = str(tmp_path / "phrase")
         write_split(postings, dstore, sd)
         doc_len = dstore["doc_len"].to_numpy().astype(np.float64)
@@ -370,7 +377,7 @@ class TestWand:
         import numpy as np
 
         from quickwit_spark.config import IndexConfig
-        from quickwit_spark.operators.build import build_split_tables, write_split
+        from quickwit_spark.operators.build import build_split_tables_arrow, write_split
         from quickwit_spark.operators.search import _wand_bool
         from quickwit_spark.plans.query import Bool, Phrase, Term
         from quickwit_spark.sources.transcripts import fixture_corpus
@@ -380,7 +387,9 @@ class TestWand:
         ]
         pdf = fixture_corpus(docs)
         cfg = IndexConfig(hot_term_doc_freq=10, salt_docid_range=8)
-        postings, dstore, meta = build_split_tables(pdf, cfg)
+        postings, dstore, meta = build_split_tables_arrow(
+            pa.Table.from_pandas(pdf, preserve_index=False), cfg
+        )
         sd = str(tmp_path / "nested")
         write_split(postings, dstore, sd)
         doc_len = dstore["doc_len"].to_numpy().astype(np.float64)

@@ -94,6 +94,82 @@ class TestIngestBatch:
         _match_set(Searcher(spark, idx), oracle, "w00001")
 
 
+class TestStreamBatchIsABatchIngest:
+    """A micro-batch runs build_index as the batch ingest
+    ``stream-<batch_key>``: one atomic catalog commit, batch split ids
+    and lineage, and pre-upgrade ``stream/<key>`` checkpoints still
+    make a replay a no-op."""
+
+    @pytest.fixture(scope="class")
+    def batches(self):
+        full = generate_transcripts(600, seed=17)
+        convs = sorted(full["conv_id"].unique())
+        half = set(convs[: len(convs) // 2])
+        return full[full["conv_id"].isin(half)], full[~full["conv_id"].isin(half)]
+
+    def test_micro_batch_is_one_catalog_commit(self, spark, batches, tmp_path, monkeypatch):
+        from quickwit_spark.plans.catalog import Catalog
+        from quickwit_spark.streaming.ingest import ingest_batch
+
+        b1, b2 = batches
+        idx = str(tmp_path / "cidx")
+        ingest_batch(spark, spark.createDataFrame(b1), idx, "b1", CFG, n_splits=2)
+        backend = type(Catalog.load(idx))
+        commits = []
+        commit = backend._commit
+
+        def counting_commit(cat):
+            commits.append(cat)
+            commit(cat)
+
+        monkeypatch.setattr(backend, "_commit", counting_commit)
+        ids = ingest_batch(spark, spark.createDataFrame(b2), idx, "b2", CFG, n_splits=2)
+        assert len(ids) == 2
+        assert len(commits) == 1  # splits + completion marker together
+        assert ingest_batch(spark, spark.createDataFrame(b2), idx, "b2", CFG, n_splits=2) == []
+        assert len(commits) == 1  # a replay commits nothing
+
+    def test_split_ids_checkpoint_and_lineage(self, spark, batches, tmp_path):
+        import pandas as pd
+
+        from quickwit_spark.plans.catalog import Catalog
+        from quickwit_spark.streaming.ingest import ingest_batch
+
+        b1, _ = batches
+        idx = str(tmp_path / "lidx")
+        ids = ingest_batch(spark, spark.createDataFrame(b1), idx, "b1", CFG, n_splits=2)
+        assert ids == ["split-stream-b1-00000", "split-stream-b1-00001"]
+        cat = Catalog.load(idx)
+        assert cat.checkpoint == {
+            "batch/stream-b1/0": "done",
+            "batch/stream-b1/1": "done",
+            "batch/stream-b1": "complete",
+        }
+        lineage = pd.concat(
+            pd.read_parquet(os.path.join(idx, "lineage", f))
+            for f in os.listdir(os.path.join(idx, "lineage"))
+        )
+        assert sorted(lineage["split_id"]) == ids
+        assert set(lineage["op"]) == {"build"}
+
+    def test_pre_upgrade_stream_checkpoint_replay_is_noop(self, spark, batches, tmp_path):
+        from quickwit_spark.plans.catalog import Catalog
+        from quickwit_spark.streaming.ingest import ingest_batch
+
+        b1, _ = batches
+        idx = str(tmp_path / "uidx")
+        ingest_batch(spark, spark.createDataFrame(b1), idx, "b1", CFG, n_splits=2)
+        cat = Catalog.load(idx)
+        n_docs = cat.total_docs()
+        # the checkpoint as a pre-upgrade streaming ingest recorded it
+        cat.replace_checkpoint({"stream/b1": "done"})
+        replay = ingest_batch(spark, spark.createDataFrame(b1), idx, "b1", CFG, n_splits=2)
+        assert replay == []
+        cat = Catalog.load(idx)
+        assert cat.total_docs() == n_docs
+        assert cat.checkpoint == {"batch/stream-b1": "complete"}
+
+
 def test_file_stream_available_now_resume(spark, tmp_path):
     """Two availableNow rounds with a file added in between: the second
     run indexes ONLY the new file (Spark source checkpoint) and the
@@ -177,8 +253,11 @@ def test_non_file_streaming_source_drives_ingest(spark, tmp_path):
         q.stop()
     cat = Catalog.load(idx_dir)
     assert cat.total_docs() >= 400  # >= 2 published micro-batches
-    # exactly-once: batch checkpoint keys recorded once per batch
-    batches = [k for k in cat.checkpoint if k.startswith("stream/")]
+    # exactly-once: one completion marker per published batch
+    batches = [
+        k for k, pos in cat.checkpoint.items()
+        if k.startswith("batch/stream-") and pos == "complete"
+    ]
     assert len(batches) >= 2
     se = Searcher(spark, idx_dir)
     assert se.search("streamed", k=5).num_hits == cat.total_docs()

@@ -2,8 +2,8 @@
 score-identical to the exhaustive evaluator (`_SplitEval`) on random
 corpora and random positive boolean query trees with random negations.
 
-Spark-free: splits build via the pure pandas/arrow kernel
-(`build_split_tables`), so hundreds of examples run in seconds. This is
+Spark-free: splits build via the pure Arrow kernel
+(`build_split_tables_arrow`), so hundreds of examples run in seconds. This is
 the strongest guard on the recursive node evaluator — every tree shape
 the planner accepts must yield bit-identical (ids, scores, num_hits).
 """
@@ -13,11 +13,12 @@ from __future__ import annotations
 import tempfile
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from quickwit_spark.config import IndexConfig
 from quickwit_spark.functions.tokenize import tokenize_default
-from quickwit_spark.operators.build import build_split_tables, write_split
+from quickwit_spark.operators.build import build_split_tables_arrow, write_split
 from quickwit_spark.operators.search import (
     _read_postings,
     _SplitEval,
@@ -76,7 +77,9 @@ def test_wand_equals_exhaustive_property(corpus, tree, negs, k):
     docs = [(" ".join(toks),) for toks in corpus]
     pdf = fixture_corpus(docs)
     cfg = IndexConfig(hot_term_doc_freq=5, salt_docid_range=8)
-    postings_tbl, dstore, meta = build_split_tables(pdf, cfg)
+    postings_tbl, dstore, meta = build_split_tables_arrow(
+        pa.Table.from_pandas(pdf, preserve_index=False), cfg
+    )
     sd = tempfile.mkdtemp(prefix="wandprop")
     write_split(postings_tbl, dstore, sd)
 
