@@ -1897,12 +1897,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     * positions 1-3: core sentinels (bm25_topk, bm25_phrase,
       agg_terms_stats) — the index-build/search/agg spine stays in
       every round's window;
-    * positions 4-50: entries never driver-attested through r4 (the
-      r4 artifact froze the first 50 of the old ordering), plus the
-      two new streaming-replay entries — 47 first-time attestations;
-    * positions 51+: first the 7 never-attested VARIANTS whose base op
-      is in-window (substring/paragraph-scrub/spans/by-lang/select
-      flavors — next round's rotation candidates), then previously
+    * positions 4-10: the 7 VARIANTS never attested through r5
+      (substring/paragraph-scrub/spans/by-lang/select flavors of
+      attested base ops) — first-time attestations;
+    * positions 11-50: the r5 window (attested in r5) in its r5 order,
+      minus its last 7 entries;
+    * positions 51-57: those 7 (transcript_dedup … transcript_curation,
+      attested in r5), displaced by the variants; then previously
       attested entries ordered by last-attested round ascending.
 
     Every entry stays verified every round regardless of position via
@@ -1912,6 +1913,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_topk": q_bm25_topk,
         "bm25_phrase": q_bm25_phrase,
         "agg_terms_stats": q_agg_terms_stats,
+        "corpus_curation_spans": q_corpus_curation_spans,
+        "dedup_substring_keepfirst": q_dedup_substring_keepfirst,
+        "dedup_substring_scrub": q_dedup_substring_scrub,
+        "decontaminate_spans": q_decontaminate_spans,
+        "dedup_paragraph_scrub": q_dedup_paragraph_scrub,
+        "ccnet_buckets_by_lang": q_ccnet_buckets_by_lang,
+        "dsir_select": q_dsir_select,
         "sessionize_stream_replay": q_sessionize_stream_replay,
         "dedup_stream_replay": q_dedup_stream_replay,
         "corpus_curation": q_corpus_curation,
@@ -1959,13 +1967,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "transcript_lint": q_transcript_lint,
         "transcript_divergence": q_transcript_divergence,
         "transcript_curation": q_transcript_curation,
-        "corpus_curation_spans": q_corpus_curation_spans,
-        "dedup_substring_keepfirst": q_dedup_substring_keepfirst,
-        "dedup_substring_scrub": q_dedup_substring_scrub,
-        "decontaminate_spans": q_decontaminate_spans,
-        "dedup_paragraph_scrub": q_dedup_paragraph_scrub,
-        "ccnet_buckets_by_lang": q_ccnet_buckets_by_lang,
-        "dsir_select": q_dsir_select,
         "dedup_minhash_lsh": q_dedup_minhash_lsh,
         "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
         "dedup_simhash": q_dedup_simhash,

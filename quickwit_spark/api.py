@@ -28,8 +28,8 @@ class Index:
     def __init__(self, spark, index_dir: str, at_seq: int | None = None):
         self.spark = spark
         self.index_dir = index_dir
-        # pin reads to a historical catalog commit (manifest backend
-        # with retained history — Iceberg snapshot-read analog)
+        # pin reads to a historical catalog commit (retained manifest
+        # history — Iceberg snapshot-read analog)
         self.at_seq = at_seq
         self._searcher: Searcher | None = None
 
@@ -38,14 +38,11 @@ class Index:
     @staticmethod
     def create(
         spark, index_dir: str, config: IndexConfig | None = None,
-        doc_mapping: dict | None = None, backend: str | None = None,
+        doc_mapping: dict | None = None,
     ) -> "Index":
         if Catalog.exists(index_dir):
             raise ValueError(f"index already exists at {index_dir}")
-        Catalog.create(
-            index_dir, config or IndexConfig(),
-            backend=backend, doc_mapping=doc_mapping,
-        )
+        Catalog.create(index_dir, config or IndexConfig(), doc_mapping=doc_mapping)
         return Index(spark, index_dir)
 
     @staticmethod

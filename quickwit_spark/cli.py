@@ -47,7 +47,6 @@ def _build_parser() -> argparse.ArgumentParser:
 
     c = idx_cmd("create")
     c.add_argument("--config", help="IndexConfig overrides as JSON")
-    c.add_argument("--backend", choices=["json", "sqlite", "manifest"])
     c.add_argument("--index-config",
                    help="reference-format index-config YAML file "
                         "(quickwit `index create --index-config` analog); "
@@ -70,7 +69,7 @@ def _build_parser() -> argparse.ArgumentParser:
     c.add_argument("--query", required=True)
     c.add_argument("--at-seq", type=int,
                    help="search the historical catalog state after this "
-                        "commit (manifest backend with retained history)")
+                        "commit (needs an index built with retained history)")
     c.add_argument("--max-hits", type=int, default=20)
     c.add_argument("--start-offset", type=int, default=0)
     c.add_argument("--sort-by-field")
@@ -221,7 +220,7 @@ def _dispatch(args, spark, serve_forever):
             else IndexConfig()
         from quickwit_spark.plans.catalog import Catalog
 
-        Catalog.create(args.index_dir, cfg, backend=args.backend)
+        Catalog.create(args.index_dir, cfg)
         return {"index_dir": args.index_dir, "created": True}
 
     if cmd == ("index", "ingest"):

@@ -441,12 +441,10 @@ def build_index(
     if catalog is not None:
         _migrate_legacy_checkpoint(catalog)
     else:
-        # retain_history=True (manifest backend) keeps superseded
-        # manifests so Searcher(at_seq=...) can time-travel past commits
+        # retain_history=True keeps superseded manifests so
+        # Searcher(at_seq=...) can time-travel past commits
         catalog = Catalog.create(
-            index_dir, config, source_path,
-            backend="manifest" if retain_history else None,
-            retain_history=retain_history,
+            index_dir, config, source_path, retain_history=retain_history,
         )
     ingest_id = _resolve_ingest_id(catalog, source, ingest_id)
     marker_key = f"batch/{ingest_id}"

@@ -484,7 +484,7 @@ def gc_deleted_splits(
     # expire_snapshots-before-remove_orphan_files rule, ENFORCED here
     # rather than left to the caller)
     protected: set = set()
-    if getattr(catalog, "retain_history", False):
+    if catalog.retain_history:
         protected = catalog.history_referenced_split_ids()
     doomed = [
         s.split_id

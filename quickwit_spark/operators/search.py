@@ -1643,7 +1643,7 @@ class Searcher:
     def __init__(self, spark, index_dir: str, at_seq: int | None = None):
         self.spark = spark
         self.index_dir = index_dir
-        # at_seq: search a HISTORICAL catalog state (manifest backend
+        # at_seq: search a HISTORICAL catalog state (an index built
         # with retain_history — Iceberg snapshot-read analog). Split
         # files are immutable so the old split set answers exactly as
         # it did then, as long as split GC has not reaped deleted
@@ -1664,7 +1664,8 @@ class Searcher:
         self._catalog_mtime = self._mtime()
 
     def _mtime(self):
-        # backend-aware commit token (JSON mtime / sqlite WAL state)
+        # commit token: manifest head mtime (legacy file mtimes until
+        # the first commit after an import)
         return Catalog.state_token(self.index_dir)
 
     @property

@@ -9,8 +9,9 @@ Mirrors the reference's split lifecycle and metadata:
 * atomic publish + checkpoint — quickwit-indexing/src/actors/publisher.rs:140-148,
   quickwit-metastore/src/checkpoint.rs:286-330: publishing new splits,
   replacing merged-away splits, and advancing the source checkpoint is
-  ONE atomic catalog write (temp-file + rename), which is what makes the
-  build checkpoint-resumable at split granularity.
+  ONE atomic catalog commit (one manifest, then a temp-file + rename
+  swap of the manifest head), which is what makes the build
+  checkpoint-resumable at split granularity.
 
 Lineage/metrics rows (north rule): one row per split build/merge op with
 split id, term range, doc count, bytes, wall time — appended to
@@ -96,29 +97,25 @@ class SplitMetadata:
 
 
 class Catalog:
-    """File-backed catalog with atomic rename commits (the reference's
-    FileBackedMetastore analog; a production deployment would put this
-    in an Iceberg table / PostgreSQL as the reference does).
+    """The split catalog (the reference's metastore analog). Every
+    index persists it as :class:`ManifestCatalog`'s append log; this
+    base class holds the state and the transaction-shaped mutators.
 
-    Backend swap surface: ``create`` / ``load`` / ``_commit`` are the
-    only persistence points — every mutation funnels through the
-    transaction-shaped methods (stage_splits / stage_and_publish /
-    publish_splits / delete_splits), each exactly one ``_commit``, and
-    records WHAT it touched in the dirty sets (``_dirty_splits`` /
-    ``_deleted_split_ids`` / ``_dirty_checkpoint`` /
-    ``_removed_checkpoint`` / ``_dirty_meta``) so a row-oriented
-    backend can commit O(splits touched), not O(total splits).
-    :class:`SqliteCatalog` (the sandbox stand-in for the reference's
-    PostgreSQL metastore —
-    quickwit-metastore/src/metastore/postgresql_metastore.rs) and
-    :class:`ManifestCatalog` (Iceberg-manifest-style append log, the
-    object-store default) both do exactly that; this JSON backend
-    rewrites the whole file per commit and is the small-local-index
-    default."""
+    Every mutation funnels through those mutators (stage_splits /
+    stage_and_publish / publish_splits / delete_splits / ...), each
+    exactly one ``_commit``, and records WHAT it touched in the dirty
+    sets (``_dirty_splits`` / ``_deleted_split_ids`` /
+    ``_dirty_checkpoint`` / ``_removed_checkpoint`` / ``_dirty_meta``),
+    so a commit writes O(splits touched), not O(total splits).
+
+    Indexes written before the manifest log existed keep a
+    ``catalog.json`` (full rewrite per commit) or a ``catalog.db``
+    (SQLite, one row per split). :meth:`load` imports either read-only;
+    the first commit after such a load writes a full snapshot to the
+    log, whose head then shadows the legacy file."""
 
     def __init__(self, index_dir: str):
         self.index_dir = index_dir
-        self.path = fsio.join(index_dir, "catalog.json")
         self.config: IndexConfig | None = None
         self.splits: dict[str, SplitMetadata] = {}
         self.checkpoint: dict[str, str] = {}  # source partition -> position
@@ -136,7 +133,7 @@ class Catalog:
         # ids never repeat across run_merge_pipeline invocations (a reused
         # id would silently overwrite a published split's catalog entry)
         self.merge_seq: int = 0
-        # delta tracking for row-oriented backends (JSON ignores these)
+        # the delta the next commit writes
         self._dirty_splits: set[str] = set()
         self._deleted_split_ids: set[str] = set()
         self._dirty_checkpoint: set[str] = set()
@@ -150,46 +147,17 @@ class Catalog:
         index_dir: str,
         config: IndexConfig,
         source_path: str | None = None,
-        backend: str | None = None,
         doc_mapping: dict | None = None,
         retain_history: bool = False,
-    ) -> "Catalog":
-        """Create a fresh catalog. ``backend`` ∈ {"json", "sqlite",
-        "manifest"}; defaults to $QUICKWIT_SPARK_CATALOG, else "json"
-        locally / "manifest" on object stores. The reference ships
-        file-backed and PostgreSQL metastores behind one trait — same
-        shape here."""
-        backend = backend or os.environ.get("QUICKWIT_SPARK_CATALOG") or (
-            # object stores default to the append-log backend: the JSON
-            # backend's full-rewrite commit is O(total splits) of PUT
-            # bytes, the manifest log is O(delta)
-            "json" if fsio.is_local(index_dir) else "manifest"
-        )
-        if backend not in ("json", "sqlite", "manifest"):
-            raise ValueError(f"unknown catalog backend {backend!r}")
-        if backend == "sqlite" and not fsio.is_local(index_dir):
-            raise ValueError(
-                "the sqlite catalog backend requires a local index_dir "
-                f"(got {index_dir!r}); at object-store scale use the "
-                "manifest backend or a DB-server metastore"
-            )
+    ) -> "ManifestCatalog":
+        """Create a fresh catalog. ``retain_history`` keeps superseded
+        manifests so ``load(at_seq=...)`` can time-travel."""
         config.validate()
         fsio.resolve_fs(index_dir)  # reject unknown schemes before any I/O
         fsio.makedirs(fsio.join(index_dir, "splits"))
         fsio.makedirs(fsio.join(index_dir, "lineage"))
-        if retain_history and backend != "manifest":
-            raise ValueError(
-                "retain_history (snapshot time travel) requires the "
-                f"manifest backend, not {backend!r} — the append log IS "
-                "the history; row/JSON backends keep only current state"
-            )
-        cat = {
-            "sqlite": SqliteCatalog,
-            "manifest": ManifestCatalog,
-            "json": Catalog,
-        }[backend](index_dir)
-        if retain_history:
-            cat.retain_history = True
+        cat = ManifestCatalog(index_dir)
+        cat.retain_history = retain_history
         cat.config = config
         cat.source_path = source_path
         cat.doc_mapping = doc_mapping
@@ -198,37 +166,35 @@ class Catalog:
         return cat
 
     @staticmethod
-    def load(index_dir: str, at_seq: int | None = None) -> "Catalog":
-        """Load whichever backend lives at ``index_dir`` (an index has
-        exactly one backend: manifest head > catalog.db > catalog.json).
+    def _state_files(index_dir: str) -> tuple:
+        """The files a catalog can live in, in load order: the manifest
+        head, then the legacy catalog.db, then the legacy catalog.json."""
+        return (
+            ManifestCatalog._head_path(index_dir),
+            fsio.join(index_dir, SqliteCatalog.DB_FILE),
+            fsio.join(index_dir, "catalog.json"),
+        )
 
-        ``at_seq`` time-travels a MANIFEST catalog to the state after
-        commit ``at_seq`` (Iceberg snapshot-read analog; the returned
-        catalog is read-only). Other backends keep only current state
-        and reject it loudly."""
-        if fsio.exists(ManifestCatalog._head_path(index_dir)):
+    @staticmethod
+    def load(index_dir: str, at_seq: int | None = None) -> "ManifestCatalog":
+        """Load the catalog at ``index_dir``: the manifest log when it
+        has a head, else a read-only import of a legacy catalog.db or
+        catalog.json.
+
+        ``at_seq`` time-travels to the state after commit ``at_seq``
+        (Iceberg snapshot-read analog; the returned catalog is
+        read-only). A legacy import has no commits to travel to."""
+        head, db, js = Catalog._state_files(index_dir)
+        if fsio.exists(head):
             return ManifestCatalog._load(index_dir, at_seq=at_seq)
-        if at_seq is not None:
-            raise ValueError(
-                "time travel (at_seq) requires the manifest catalog "
-                f"backend; {index_dir!r} uses a current-state-only backend"
+        if fsio.exists(db):
+            cat = SqliteCatalog._load(index_dir)
+        else:
+            cat = ManifestCatalog._from_legacy(
+                index_dir, json.loads(fsio.read_bytes(js))
             )
-        if fsio.is_local(index_dir) and os.path.exists(
-            os.path.join(fsio.strip_local(index_dir), SqliteCatalog.DB_FILE)
-        ):
-            return SqliteCatalog._load(index_dir)
-        cat = Catalog(index_dir)
-        d = json.loads(fsio.read_bytes(cat.path))
-        d = Catalog._migrate(d)
-        cat.config = IndexConfig.from_dict(d["config"])
-        cat.splits = {
-            s["split_id"]: SplitMetadata.from_dict(s) for s in d["splits"]
-        }
-        cat.checkpoint = d.get("checkpoint", {})
-        cat.source_path = d.get("source_path")
-        cat.merge_seq = int(d.get("merge_seq", 0))
-        cat.sources = d.get("sources", {})
-        cat.doc_mapping = d.get("doc_mapping")
+        if at_seq is not None:
+            cat._replay_at(at_seq)  # raises: the log has no commits yet
         return cat
 
     @staticmethod
@@ -246,34 +212,15 @@ class Catalog:
 
     @staticmethod
     def exists(index_dir: str) -> bool:
-        if fsio.exists(fsio.join(index_dir, "catalog.json")):
-            return True
-        if fsio.exists(ManifestCatalog._head_path(index_dir)):
-            return True
-        return fsio.is_local(index_dir) and os.path.exists(
-            os.path.join(fsio.strip_local(index_dir), SqliteCatalog.DB_FILE)
-        )
+        return any(fsio.exists(p) for p in Catalog._state_files(index_dir))
 
     @staticmethod
     def state_token(index_dir: str) -> tuple:
-        """A cheap token that changes on every commit, whichever backend
-        (JSON rewrite → file mtime/size; sqlite WAL → the -wal file
-        moves even when catalog.db doesn't). Searchers poll this to
-        detect a republish (the metastore-poll analog)."""
-        tok = [
-            fsio.mtime_ns(fsio.join(index_dir, "catalog.json")),
-            fsio.mtime_ns(ManifestCatalog._head_path(index_dir)),
-        ]
-        if fsio.is_local(index_dir):
-            base = fsio.strip_local(index_dir)
-            for f in (SqliteCatalog.DB_FILE, SqliteCatalog.DB_FILE + "-wal"):
-                p = os.path.join(base, f)
-                try:
-                    st = os.stat(p)
-                    tok.append((st.st_mtime_ns, st.st_size))
-                except OSError:
-                    tok.append(0)
-        return tuple(tok)
+        """A cheap token that changes on every commit (the head is
+        swapped per commit; a legacy file's mtime covers an index not
+        yet committed to by the log). Searchers poll this to detect a
+        republish (the metastore-poll analog)."""
+        return tuple(fsio.mtime_ns(p) for p in Catalog._state_files(index_dir))
 
     def _clear_dirty(self) -> None:
         self._dirty_splits.clear()
@@ -281,24 +228,6 @@ class Catalog:
         self._dirty_checkpoint.clear()
         self._removed_checkpoint.clear()
         self._dirty_meta = False
-
-    def _commit(self) -> None:
-        """Atomic write. Local: temp file + fsync + rename
-        (publisher.rs:140-148 analog). Object stores: one PUT — object
-        writes are already all-or-nothing at the object level (the
-        reference's S3 file-backed metastore commits the same way)."""
-        payload = {
-            "version": CATALOG_VERSION,
-            "config": self.config.to_dict(),
-            "splits": [s.to_dict() for s in self.splits.values()],
-            "checkpoint": self.checkpoint,
-            "source_path": self.source_path,
-            "merge_seq": self.merge_seq,
-            "sources": self.sources,
-            "doc_mapping": self.doc_mapping,
-        }
-        _atomic_write_text(self.path, json.dumps(payload, indent=1, sort_keys=True))
-        self._clear_dirty()
 
     def replace_checkpoint(self, new: dict) -> None:
         """Swap the whole checkpoint map in one commit (used by the
@@ -534,170 +463,61 @@ class Catalog:
         fsio.write_table(pa.Table.from_pandas(df, preserve_index=False), out)
 
 
-class SqliteCatalog(Catalog):
-    """Row-oriented catalog backend — the sandbox stand-in for the
-    reference's PostgreSQL metastore
-    (quickwit-metastore/src/metastore/postgresql_metastore.rs: one row
-    per split, transactional publish, `index_metadata` side table).
-
-    Commits are O(splits touched): every state transition upserts /
-    deletes exactly the rows the mutator marked dirty inside ONE
-    transaction, so publishing a 16-split chunk into a 100k-split index
-    writes 16 rows + a few checkpoint rows — not a 100 MB JSON rewrite.
-    ``alloc_split_ids`` bumps one `meta` row. This is the backend a
-    100×-scale deployment starts from (swap sqlite3 for a Postgres
-    driver; the SQL is deliberately vanilla).
-
-    Single-writer by design, like the JSON backend: all commits happen
-    on the Spark driver (kernels only write split FILES). WAL mode +
-    synchronous=FULL gives rename-level durability per commit.
-    """
+class SqliteCatalog:
+    """Read-only import of a legacy ``catalog.db``: the SQLite catalog
+    (one row per split, a ``meta`` and a ``checkpoint`` table) that
+    stood in for the reference's PostgreSQL metastore before the
+    manifest log became the only writer. Nothing writes this file any
+    more; :meth:`_load` turns it into a :class:`ManifestCatalog`."""
 
     DB_FILE = "catalog.db"
 
-    def __init__(self, index_dir: str):
-        super().__init__(index_dir)
-        # sqlite needs a REAL local file even when index_dir is a
-        # local-backed URI (file:// / mock://); split I/O still routes
-        # through the filesystem layer via split_dir()
-        self.path = os.path.join(fsio.strip_local(index_dir), self.DB_FILE)
-        self._conn = None
-
-    # -- connection / schema ----------------------------------------------
-
-    def _db(self):
-        import sqlite3
-
-        if self._conn is None:
-            conn = sqlite3.connect(self.path)
-            conn.execute("PRAGMA journal_mode=WAL")
-            conn.execute("PRAGMA synchronous=FULL")
-            conn.executescript(
-                """
-                CREATE TABLE IF NOT EXISTS meta (
-                    key TEXT PRIMARY KEY, value TEXT NOT NULL);
-                CREATE TABLE IF NOT EXISTS splits (
-                    split_id TEXT PRIMARY KEY,
-                    state TEXT NOT NULL,
-                    json TEXT NOT NULL);
-                CREATE TABLE IF NOT EXISTS checkpoint (
-                    key TEXT PRIMARY KEY, pos TEXT NOT NULL);
-                CREATE INDEX IF NOT EXISTS splits_state ON splits(state);
-                """
-            )
-            self._conn = conn
-        return self._conn
-
     @staticmethod
-    def _load(index_dir: str) -> "SqliteCatalog":
-        cat = SqliteCatalog(index_dir)
-        db = cat._db()
-        meta = dict(db.execute("SELECT key, value FROM meta"))
-        v = int(meta.get("version", "1"))
-        if v > CATALOG_VERSION:
-            raise ValueError(
-                f"catalog version {v} is newer than this library "
-                f"(supports ≤ {CATALOG_VERSION}) — upgrade quickwit_spark"
-            )
-        cat.config = IndexConfig.from_dict(json.loads(meta["config"]))
-        sp = meta.get("source_path")
-        cat.source_path = json.loads(sp) if sp is not None else None
-        cat.merge_seq = int(meta.get("merge_seq", "0"))
-        cat.sources = json.loads(meta.get("sources", "{}"))
-        cat.doc_mapping = json.loads(meta.get("doc_mapping", "null"))
-        cat.splits = {
-            sid: SplitMetadata.from_dict(json.loads(blob))
-            for sid, blob in db.execute("SELECT split_id, json FROM splits")
-        }
-        cat.checkpoint = dict(db.execute("SELECT key, pos FROM checkpoint"))
-        return cat
+    def _load(index_dir: str) -> "ManifestCatalog":
+        import sqlite3
+        from urllib.parse import quote
 
-    # -- O(delta) commit -----------------------------------------------------
-
-    def _commit(self) -> None:
-        db = self._db()
-        dirty_splits = self._dirty_splits
-        deleted = self._deleted_split_ids
-        dirty_ckpt = self._dirty_checkpoint
-        removed_ckpt = self._removed_checkpoint
-        if not (
-            dirty_splits or deleted or dirty_ckpt or removed_ckpt or self._dirty_meta
-        ):
-            # safety net for callers that mutated state out-of-band
-            # (test hooks): fall back to a full upsert
-            dirty_splits = set(self.splits)
-            dirty_ckpt = set(self.checkpoint)
-            self._dirty_meta = True
-        with db:  # one transaction == one atomic publish
-            if self._dirty_meta:
-                db.executemany(
-                    "INSERT INTO meta(key, value) VALUES(?, ?) "
-                    "ON CONFLICT(key) DO UPDATE SET value=excluded.value",
-                    [
-                        ("version", str(CATALOG_VERSION)),
-                        ("config", json.dumps(self.config.to_dict())),
-                        ("source_path", json.dumps(self.source_path)),
-                        ("merge_seq", str(self.merge_seq)),
-                        ("sources", json.dumps(self.sources)),
-                        ("doc_mapping", json.dumps(self.doc_mapping)),
-                    ],
-                )
-            if dirty_splits:
-                db.executemany(
-                    "INSERT INTO splits(split_id, state, json) VALUES(?, ?, ?) "
-                    "ON CONFLICT(split_id) DO UPDATE SET "
-                    "state=excluded.state, json=excluded.json",
-                    [
-                        (sid, self.splits[sid].state,
-                         json.dumps(self.splits[sid].to_dict()))
-                        for sid in dirty_splits
-                        if sid in self.splits
-                    ],
-                )
-            if deleted:
-                db.executemany(
-                    "DELETE FROM splits WHERE split_id=?", [(s,) for s in deleted]
-                )
-            if dirty_ckpt:
-                db.executemany(
-                    "INSERT INTO checkpoint(key, pos) VALUES(?, ?) "
-                    "ON CONFLICT(key) DO UPDATE SET pos=excluded.pos",
-                    [(k, self.checkpoint[k]) for k in dirty_ckpt
-                     if k in self.checkpoint],
-                )
-            if removed_ckpt:
-                db.executemany(
-                    "DELETE FROM checkpoint WHERE key=?",
-                    [(k,) for k in removed_ckpt],
-                )
-        self._clear_dirty()
+        path = os.path.join(fsio.strip_local(index_dir), SqliteCatalog.DB_FILE)
+        # immutable: opens no -wal/-shm side files. A -wal left behind
+        # by a crashed writer holds committed rows, so read it in ro mode
+        mode = "mode=ro" if os.path.exists(path + "-wal") else "immutable=1"
+        db = sqlite3.connect(f"file:{quote(path)}?{mode}", uri=True)
+        try:
+            # every meta value was stored JSON-encoded (or as a bare int)
+            d = {k: json.loads(v) for k, v in db.execute("SELECT key, value FROM meta")}
+            d["splits"] = [json.loads(b) for (b,) in db.execute("SELECT json FROM splits")]
+            d["checkpoint"] = dict(db.execute("SELECT key, pos FROM checkpoint"))
+        finally:
+            db.close()
+        return ManifestCatalog._from_legacy(index_dir, d)
 
 
 class ManifestCatalog(Catalog):
-    """Append-log catalog backend for object storage — the
-    Iceberg-manifest-style answer to the JSON backend's O(total splits)
-    rewrite per commit, for deployments without a DB server (the
-    reference's file-backed metastore has the same full-rewrite cost;
-    its production answer is PostgreSQL — here the log keeps even the
-    pure-object-store path O(delta)).
+    """The catalog's persistence: an Iceberg-manifest-style append log.
+    The reference's file-backed metastore rewrites the whole index
+    metadata per commit (its production answer is PostgreSQL); the log
+    keeps every commit O(delta) on local disks and object stores alike.
 
     Layout under ``<index_dir>/manifests/``::
 
         head.json                  {"version", "seq", "manifests": [...]}
         m-<seq:08d>-<uuid8>.json   immutable delta or snapshot
 
-    A commit PUTs ONE immutable manifest holding exactly the delta the
+    A commit writes ONE immutable manifest holding exactly the delta the
     mutator marked dirty (splits upserted/deleted, checkpoint keys
     set/removed, meta when changed), then atomically swaps head.json to
     list it — O(delta) manifest bytes + O(#manifests) head names per
     commit, never O(total splits). Loading replays the listed manifests
-    in order. Every ``COMPACT_AFTER`` commits the next commit writes a
-    full snapshot instead and resets the list; superseded manifests are
-    deleted AFTER the head swap, and a reader that raced the compaction
-    (listed manifest already deleted) retries from the new head.
+    in order. A commit writes a full snapshot instead, and resets the
+    list, every ``COMPACT_AFTER`` commits, as the first commit after a
+    legacy import, and when nothing is marked dirty (a caller mutated
+    state out-of-band, so no delta can describe the change). Superseded
+    manifests are deleted AFTER the head swap, and a reader that raced
+    the compaction (listed manifest already deleted) retries from the
+    new head.
 
-    Single-writer by design like the other backends: all commits happen
-    on the Spark driver (kernels only write split files)."""
+    Single-writer by design: all commits happen on the Spark driver
+    (kernels only write split files)."""
 
     DIR = "manifests"
     HEAD = "head.json"
@@ -716,6 +536,8 @@ class ManifestCatalog(Catalog):
         # set when loaded with at_seq: this handle is a read-only
         # historical view and must never commit
         self._frozen_at: int | None = None
+        # the next commit writes a full snapshot (legacy import,
+        # checkpoint_snapshot)
         self._force_snapshot_next = False
 
     @staticmethod
@@ -732,13 +554,7 @@ class ManifestCatalog(Catalog):
         last_err: Exception | None = None
         for _ in range(3):  # retry a compaction race (manifest vanished)
             cat = ManifestCatalog(index_dir)
-            head = json.loads(fsio.read_bytes(cat.path))
-            v = int(head.get("version", 1))
-            if v > CATALOG_VERSION:
-                raise ValueError(
-                    f"catalog version {v} is newer than this library "
-                    f"(supports ≤ {CATALOG_VERSION}) — upgrade quickwit_spark"
-                )
+            head = Catalog._migrate(json.loads(fsio.read_bytes(cat.path)))
             cat._seq = int(head["seq"])
             cat._manifests = list(head["manifests"])
             cat.retain_history = bool(head.get("retain_history", False))
@@ -756,6 +572,21 @@ class ManifestCatalog(Catalog):
         raise RuntimeError(
             f"manifest log at {index_dir} kept changing under the reader"
         ) from last_err
+
+    @staticmethod
+    def _from_legacy(index_dir: str, d: dict) -> "ManifestCatalog":
+        """The state of a legacy catalog (a catalog.json payload, or the
+        same fields read from catalog.db) on an empty log. The legacy
+        file is never rewritten: the first commit writes a full snapshot,
+        and from then on the head shadows the legacy file."""
+        cat = ManifestCatalog(index_dir)
+        Catalog._migrate(d)
+        cat._apply({
+            "kind": "snapshot", "meta": d, "splits": d["splits"],
+            "checkpoint": d.get("checkpoint", {}),
+        })
+        cat._force_snapshot_next = True
+        return cat
 
     # -- snapshot time travel (Iceberg snapshot-read analog) ------------------
 
@@ -859,11 +690,7 @@ class ManifestCatalog(Catalog):
         `checkpoint_snapshot(); expire_history(that_seq)` trims
         everything older than "now"."""
         self._force_snapshot_next = True
-        try:
-            self._dirty_meta = True
-            self._commit()
-        finally:
-            self._force_snapshot_next = False
+        self._commit()
         return self._seq
 
     def history_referenced_split_ids(self) -> set:
@@ -972,17 +799,11 @@ class ManifestCatalog(Catalog):
                 f"this catalog is a read-only time-travel view at commit "
                 f"{self._frozen_at}; load the head (no at_seq) to mutate"
             )
-        dirty_splits = self._dirty_splits
-        deleted = self._deleted_split_ids
-        dirty_ckpt = self._dirty_checkpoint
-        removed_ckpt = self._removed_checkpoint
-        dirty_meta = self._dirty_meta
-        if not (dirty_splits or deleted or dirty_ckpt or removed_ckpt or dirty_meta):
-            # safety net for callers that mutated state out-of-band
-            # (test hooks): full upsert
-            dirty_splits = set(self.splits)
-            dirty_ckpt = set(self.checkpoint)
-            dirty_meta = True
+        dirty = (
+            self._dirty_splits or self._deleted_split_ids
+            or self._dirty_checkpoint or self._removed_checkpoint
+            or self._dirty_meta
+        )
         self._seq += 1
         name = f"m-{self._seq:08d}-{uuid.uuid4().hex[:8]}.json"
         # committed-chain pointer: replay/snapshots walk prev links from
@@ -990,11 +811,11 @@ class ManifestCatalog(Catalog):
         # head-swapped, possibly half-written, possibly seq-colliding
         # with the recommit) is unreachable by construction
         prev_name = self._manifests[-1] if self._manifests else None
-        compact = (
+        if (
             self._force_snapshot_next
+            or not dirty  # out-of-band mutation: only a snapshot records removals
             or len(self._manifests) >= self.COMPACT_AFTER
-        )
-        if compact:
+        ):
             payload = {
                 "kind": "snapshot",
                 "meta": self._meta_payload(),
@@ -1008,27 +829,28 @@ class ManifestCatalog(Catalog):
         else:
             payload = {
                 "kind": "delta",
-                "meta": self._meta_payload() if dirty_meta else None,
+                "meta": self._meta_payload() if self._dirty_meta else None,
                 "splits_upserted": [
                     self.splits[sid].to_dict()
-                    for sid in sorted(dirty_splits)
+                    for sid in sorted(self._dirty_splits)
                     if sid in self.splits
                 ],
-                "splits_deleted": sorted(deleted),
+                "splits_deleted": sorted(self._deleted_split_ids),
                 "checkpoint_set": {
                     k: self.checkpoint[k]
-                    for k in sorted(dirty_ckpt)
+                    for k in sorted(self._dirty_checkpoint)
                     if k in self.checkpoint
                 },
-                "checkpoint_removed": sorted(removed_ckpt),
+                "checkpoint_removed": sorted(self._removed_checkpoint),
             }
             new_list = self._manifests + [name]
             superseded = []
         payload["committed_at"] = int(time.time())
         payload["prev"] = prev_name
         fsio.makedirs(fsio.join(self.index_dir, self.DIR))
-        fsio.write_bytes(
-            self._manifest_path(name), json.dumps(payload, sort_keys=True).encode()
+        # durable before the head can point at it
+        _atomic_write_text(
+            self._manifest_path(name), json.dumps(payload, sort_keys=True)
         )
         head = {
             "version": CATALOG_VERSION,
@@ -1044,4 +866,5 @@ class ManifestCatalog(Catalog):
                 fsio.delete(self._manifest_path(old))
             except FileNotFoundError:
                 pass
+        self._force_snapshot_next = False
         self._clear_dirty()

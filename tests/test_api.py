@@ -222,9 +222,7 @@ def test_merge_and_gc_and_lineage(index, corpus):
 def test_catalog_scales_to_10k_splits(tmp_path):
     """10k-split catalog: adaptive chunked publishing keeps the number
     of atomic commits bounded (<=9 for any split count), and load /
-    stats-version stay fast. (The production swap for truly huge
-    catalogs is the Iceberg/Postgres backend — Catalog.create/load/
-    _commit are the override surface; see plans/catalog.py.)"""
+    stats-version stay fast."""
     import time
 
     from quickwit_spark.config import IndexConfig
@@ -234,7 +232,7 @@ def test_catalog_scales_to_10k_splits(tmp_path):
     d = str(tmp_path / "big")
     cat = Catalog.create(d, IndexConfig())
     commits = {"n": 0}
-    real_commit = Catalog._commit
+    real_commit = type(cat)._commit
 
     def counting_commit(self):
         commits["n"] += 1
@@ -247,7 +245,7 @@ def test_catalog_scales_to_10k_splits(tmp_path):
         )
         for i in range(10_000)
     ]
-    Catalog._commit = counting_commit
+    type(cat)._commit = counting_commit
     try:
         chunk = max(PUBLISH_CHUNK, -(-len(metas) // 8))
         t0 = time.time()
@@ -255,8 +253,8 @@ def test_catalog_scales_to_10k_splits(tmp_path):
             cat.stage_and_publish(metas[i : i + chunk])
         publish_sec = time.time() - t0
     finally:
-        Catalog._commit = real_commit
-    assert commits["n"] <= 9          # adaptive chunking bounds commits
+        type(cat)._commit = real_commit
+    assert 1 <= commits["n"] <= 9     # adaptive chunking bounds commits
     assert publish_sec < 30
 
     t0 = time.time()

@@ -1,8 +1,9 @@
-"""Catalog backend tests: the SQLite metastore (PostgreSQL stand-in —
-quickwit-metastore/src/metastore/postgresql_metastore.rs), O(delta)
-commit cost, backend dispatch, and schema-version backward
-compatibility (quickwit-metastore/src/backward_compatibility_tests/
-analog: frozen fixtures per format version)."""
+"""Catalog tests: the manifest append log (the only catalog writer),
+O(delta) commit cost, durable commits, snapshot time travel, and
+backward compatibility with every earlier on-disk format
+(quickwit-metastore/src/backward_compatibility_tests/ analog: frozen
+fixtures per format version, including the legacy catalog.json and
+catalog.db files, which are imported read-only)."""
 
 from __future__ import annotations
 
@@ -21,10 +22,16 @@ from quickwit_spark.plans.catalog import (
     Catalog,
     ManifestCatalog,
     SplitMetadata,
-    SqliteCatalog,
 )
 
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures")
+
+# frozen legacy catalogs -> the one file each keeps its state in
+LEGACY_FIXTURES = {
+    "catalog_v1": "catalog.json",
+    "catalog_v2": "catalog.json",
+    "catalog_sqlite_v2": "catalog.db",
+}
 
 
 def _sm(sid: str, n: int = 10) -> SplitMetadata:
@@ -35,122 +42,17 @@ def _sm(sid: str, n: int = 10) -> SplitMetadata:
     )
 
 
-class TestSqliteStateMachine:
-    """The full split lifecycle against the row backend — same
-    semantics the JSON suites assert, persisted per-row."""
-
-    def test_create_load_roundtrip(self, tmp_path):
-        d = str(tmp_path / "idx")
-        cat = Catalog.create(d, IndexConfig(), source_path="/x.parquet",
-                             backend="sqlite")
-        assert isinstance(cat, SqliteCatalog)
-        assert Catalog.exists(d)
-        cat.stage_and_publish([_sm("s-0"), _sm("s-1")],
-                              checkpoint_delta={"batch/b0000/0": "done"})
-        got = Catalog.load(d)
-        assert isinstance(got, SqliteCatalog)  # dispatch by catalog.db
-        assert got.source_path == "/x.parquet"
-        assert {s.split_id for s in got.published_splits()} == {"s-0", "s-1"}
-        assert got.checkpoint == {"batch/b0000/0": "done"}
-        assert got.splits["s-0"].tags == {"tool": ["bash"]}
-        assert got.splits["s-0"].tag_has_null == {"tool": False}
-        assert got.splits["s-0"].time_range == (0, 1000)
-
-    def test_stage_publish_replace_delete(self, tmp_path):
-        d = str(tmp_path / "idx")
-        cat = Catalog.create(d, IndexConfig(), backend="sqlite")
-        cat.stage_and_publish([_sm("a"), _sm("b")])
-        cat.stage_splits([_sm("m")])
-        assert Catalog.load(d).splits["m"].state == STAGED
-        cat.publish_splits(["m"], replaced_split_ids=["a", "b"])
-        got = Catalog.load(d)
-        assert got.splits["m"].state == PUBLISHED
-        assert got.splits["a"].state == MARKED_FOR_DELETION
-        cat.delete_splits(["a", "b"])
-        got = Catalog.load(d)
-        assert set(got.splits) == {"m"}
-
-    def test_id_collision_raises(self, tmp_path):
-        cat = Catalog.create(str(tmp_path / "i"), IndexConfig(), backend="sqlite")
-        cat.stage_and_publish([_sm("dup")])
-        with pytest.raises(ValueError, match="already exists"):
-            cat.stage_splits([_sm("dup")])
-
-    def test_backwards_checkpoint_rejected(self, tmp_path):
-        cat = Catalog.create(str(tmp_path / "i"), IndexConfig(), backend="sqlite")
-        cat.stage_and_publish([_sm("a")], checkpoint_delta={"p": "5"})
-        with pytest.raises(ValueError, match="incompatible"):
-            cat.stage_and_publish([_sm("b")], checkpoint_delta={"p": "3"})
-
-    def test_alloc_ids_survive_reload(self, tmp_path):
-        d = str(tmp_path / "i")
-        cat = Catalog.create(d, IndexConfig(), backend="sqlite")
-        first = cat.alloc_merge_ids(3)
-        second = Catalog.load(d).alloc_merge_ids(2)
-        assert len(set(first) | set(second)) == 5  # no reuse across loads
-
-    def test_replace_checkpoint(self, tmp_path):
-        d = str(tmp_path / "i")
-        cat = Catalog.create(d, IndexConfig(), backend="sqlite")
-        cat.stage_and_publish([_sm("a")], checkpoint_delta={"0": "done", "1": "done"})
-        cat.replace_checkpoint({"batch/b0000/0": "done"})
-        assert Catalog.load(d).checkpoint == {"batch/b0000/0": "done"}
-
-    def test_unknown_backend_rejected(self, tmp_path):
-        with pytest.raises(ValueError, match="unknown catalog backend"):
-            Catalog.create(str(tmp_path / "i"), IndexConfig(), backend="etcd")
-
-
-def test_sqlite_commit_cost_is_o_delta(tmp_path):
-    """Publishing a 16-split chunk into a catalog that already holds
-    100k splits must write O(16) rows, not O(100k) — measured with
-    sqlite's total_changes counter (deterministic, no wall-clock
-    flakiness). This is the property the JSON backend lacks (it
-    rewrites every split's metadata per commit, which is why it caps
-    out at ~10k splits)."""
-    d = str(tmp_path / "big")
-    cat = Catalog.create(d, IndexConfig(), backend="sqlite")
-    total = 100_000
-    batch = 10_000
-    for i in range(0, total, batch):
-        cat.stage_and_publish([_sm(f"s-{j:06d}") for j in range(i, i + batch)])
-    db = cat._db()
-    before = db.total_changes
-    cat.stage_and_publish(
-        [_sm(f"t-{j}") for j in range(16)],
-        checkpoint_delta={"batch/bX/0": "done"},
-    )
-    written = db.total_changes - before
-    assert written <= 16 + 1 + 4  # splits + checkpoint + meta slack
-    # and a fresh load still sees everything
-    got = Catalog.load(d)
-    assert len(got.splits) == total + 16
-
-
-def test_json_backend_unchanged_default(tmp_path):
-    d = str(tmp_path / "idx")
-    cat = Catalog.create(d, IndexConfig())
-    assert type(cat) is Catalog
-    assert os.path.exists(os.path.join(d, "catalog.json"))
-    cat.stage_and_publish([_sm("a")])
-    got = Catalog.load(d)
-    assert type(got) is Catalog
-    assert got.splits["a"].state == PUBLISHED
-
-
 class TestBackwardCompatibility:
-    """Frozen-fixture loads per catalog format version."""
+    """Frozen-fixture loads per catalog format version. The legacy
+    catalog.json (full rewrite) and catalog.db (SQLite, one row per
+    split) files are read into a manifest catalog with an empty log."""
 
     def _load_fixture(self, name: str, tmp_path) -> Catalog:
         d = str(tmp_path / name)
-        os.makedirs(d)
-        shutil.copy(
-            os.path.join(FIXTURES, name, "catalog.json"),
-            os.path.join(d, "catalog.json"),
-        )
+        shutil.copytree(os.path.join(FIXTURES, name), d)
         return Catalog.load(d)
 
-    @pytest.mark.parametrize("name", ["catalog_v1", "catalog_v2"])
+    @pytest.mark.parametrize("name", sorted(LEGACY_FIXTURES))
     def test_old_catalog_loads(self, name, tmp_path):
         cat = self._load_fixture(name, tmp_path)
         assert len(cat.published_splits()) == 2
@@ -161,6 +63,30 @@ class TestBackwardCompatibility:
         cat._commit()
         with open(cat.path) as f:
             assert json.load(f)["version"] == CATALOG_VERSION
+
+    @pytest.mark.parametrize("name", sorted(LEGACY_FIXTURES))
+    def test_first_commit_after_import_is_a_snapshot(self, name, tmp_path):
+        """Publishing one split into an imported legacy catalog leaves
+        the legacy file byte-identical and starts the manifest log with
+        a full snapshot: a reload sees all 3 splits and the checkpoint
+        (a delta would lose the 2 imported splits)."""
+        d = str(tmp_path / name)
+        shutil.copytree(os.path.join(FIXTURES, name), d)
+        legacy = os.path.join(d, LEGACY_FIXTURES[name])
+        with open(legacy, "rb") as f:
+            before = f.read()
+        cat = Catalog.load(d)
+        assert isinstance(cat, ManifestCatalog)
+        cat.stage_and_publish([_sm("s-new")])
+        with open(legacy, "rb") as f:
+            assert f.read() == before
+        assert os.path.exists(os.path.join(d, "manifests", "head.json"))
+        got = Catalog.load(d)
+        assert len(got.published_splits()) == 3
+        assert got.total_docs() == 310
+        assert got.checkpoint["batch/b0000"] == "complete"
+        assert got.checkpoint["batch/b0000/1"] == "done"
+        assert [s["kind"] for s in got.snapshots()] == ["snapshot"]
 
     def test_future_version_rejected(self, tmp_path):
         d = str(tmp_path / "future")
@@ -174,65 +100,12 @@ class TestBackwardCompatibility:
             Catalog.load(d)
 
 
-def test_sqlite_e2e_build_search_merge_gc(spark, corpus, config, oracle,
-                                          tmp_path, monkeypatch):
-    """Full engine e2e on the row backend: build → resume no-op →
-    search parity vs the oracle → merge rounds → gc — every catalog
-    transaction the engine issues, against sqlite."""
-    from quickwit_spark.operators.build import build_index
-    from quickwit_spark.operators.merge import gc_deleted_splits, run_merge_pipeline
-    from quickwit_spark.operators.search import Searcher
-
-    import dataclasses
-
-    monkeypatch.setenv("QUICKWIT_SPARK_CATALOG", "sqlite")
-    # low merge factor so the merge round later collapses the 4 built
-    # splits (search semantics are unaffected)
-    config = dataclasses.replace(
-        config, merge_factor=2, max_merge_factor=4, min_level_num_docs=10,
-    )
-    d = str(tmp_path / "idx")
-    sdf = spark.createDataFrame(corpus)
-    cat = build_index(spark, sdf, d, config, n_splits=4)
-    assert isinstance(cat, SqliteCatalog)
-    assert cat.total_docs() == len(corpus)
-    # idempotent retry of the completed ingest (same ingest_id)
-    cat2 = build_index(spark, sdf, d, config, n_splits=4, ingest_id="b0000")
-    assert cat2.total_docs() == len(corpus)
-
-    se = Searcher(spark, d)
-    for q in ["w00001", "hotterm", '"w00001 w00002"~2', "w00004 -w00001",
-              "role:assistant AND w00002"]:
-        n_o, hits_o = oracle.search(q, k=20)
-        r = se.search(q, k=20)
-        assert r.num_hits == n_o
-        assert sorted((h.conv_id, h.turn_idx, round(h.score, 9)) for h in r.hits) \
-            == sorted((h.conv_id, h.turn_idx, round(h.score, 9)) for h in hits_o)
-
-    # merge everything into one split, then gc
-    assert run_merge_pipeline(spark, d) >= 1
-    reaped = gc_deleted_splits(d, grace_period_secs=0)
-    assert reaped
-    cat = Catalog.load(d)
-    assert cat.total_docs() == len(corpus)
-    assert all(s.state == PUBLISHED for s in cat.splits.values())
-    # post-merge search still oracle-identical
-    se2 = Searcher(spark, d)
-    n_o, hits_o = oracle.search("w00002", k=10)
-    r = se2.search("w00002", k=10)
-    assert r.num_hits == n_o
-    assert sorted((h.conv_id, h.turn_idx, round(h.score, 9)) for h in r.hits) \
-        == sorted((h.conv_id, h.turn_idx, round(h.score, 9)) for h in hits_o)
-
-
 class TestManifestStateMachine:
-    """Split lifecycle against the append-log backend (the
-    object-store-native O(delta) catalog)."""
+    """Split lifecycle against the manifest append log."""
 
     def test_create_load_roundtrip(self, tmp_path):
         d = str(tmp_path / "idx")
-        cat = Catalog.create(d, IndexConfig(), source_path="/x.parquet",
-                             backend="manifest")
+        cat = Catalog.create(d, IndexConfig(), source_path="/x.parquet")
         assert isinstance(cat, ManifestCatalog)
         assert Catalog.exists(d)
         cat.stage_and_publish([_sm("s-0"), _sm("s-1")],
@@ -248,7 +121,7 @@ class TestManifestStateMachine:
 
     def test_stage_publish_replace_delete(self, tmp_path):
         d = str(tmp_path / "idx")
-        cat = Catalog.create(d, IndexConfig(), backend="manifest")
+        cat = Catalog.create(d, IndexConfig())
         cat.stage_and_publish([_sm("a"), _sm("b")])
         cat.stage_splits([_sm("m")])
         assert Catalog.load(d).splits["m"].state == STAGED
@@ -261,15 +134,75 @@ class TestManifestStateMachine:
         assert set(got.splits) == {"m"}
 
     def test_id_collision_raises(self, tmp_path):
-        cat = Catalog.create(str(tmp_path / "i"), IndexConfig(),
-                             backend="manifest")
+        cat = Catalog.create(str(tmp_path / "i"), IndexConfig())
         cat.stage_and_publish([_sm("dup")])
         with pytest.raises(ValueError, match="already exists"):
             cat.stage_splits([_sm("dup")])
 
+    def test_backwards_checkpoint_rejected(self, tmp_path):
+        cat = Catalog.create(str(tmp_path / "i"), IndexConfig())
+        cat.stage_and_publish([_sm("a")], checkpoint_delta={"p": "5"})
+        with pytest.raises(ValueError, match="incompatible"):
+            cat.stage_and_publish([_sm("b")], checkpoint_delta={"p": "3"})
+
+    def test_replace_checkpoint(self, tmp_path):
+        d = str(tmp_path / "i")
+        cat = Catalog.create(d, IndexConfig())
+        cat.stage_and_publish([_sm("a")], checkpoint_delta={"0": "done", "1": "done"})
+        cat.replace_checkpoint({"batch/b0000/0": "done"})
+        assert Catalog.load(d).checkpoint == {"batch/b0000/0": "done"}
+
+    def test_out_of_band_removal_survives_reload(self, tmp_path):
+        """A caller that edits ``splits``/``checkpoint`` directly and
+        then commits marks nothing dirty; the commit must record the
+        REMOVED checkpoint key and split too (a full snapshot), not
+        upsert what is left and resurrect the rest on reload."""
+        d = str(tmp_path / "i")
+        cat = Catalog.create(d, IndexConfig())
+        cat.stage_and_publish([_sm("a"), _sm("b")],
+                              checkpoint_delta={"a": "1", "b": "2"})
+        cat.checkpoint = {"a": "1"}
+        del cat.splits["b"]
+        cat.splits["a"].num_docs = 99
+        cat._commit()
+        got = Catalog.load(d)
+        assert got.checkpoint == {"a": "1"}
+        assert set(got.splits) == {"a"}
+        assert got.splits["a"].num_docs == 99
+
+    def test_manifest_is_durable_before_the_head_swap(self, tmp_path,
+                                                      monkeypatch):
+        """A crash right after the head swap must not leave the head
+        pointing at a torn manifest: the manifest is fsynced and renamed
+        into place before head.json is replaced."""
+        cat = Catalog.create(str(tmp_path / "i"), IndexConfig())
+        events = []
+        real_fsync, real_replace = os.fsync, os.replace
+
+        def fsync(fd):
+            events.append(("fsync", os.fstat(fd).st_ino))
+            real_fsync(fd)
+
+        def replace(src, dst):
+            events.append(("replace", dst))
+            real_replace(src, dst)
+
+        monkeypatch.setattr(os, "fsync", fsync)
+        monkeypatch.setattr(os, "replace", replace)
+        cat.stage_and_publish([_sm("a")])
+        manifest = os.path.join(cat.index_dir, "manifests", cat._manifests[-1])
+        head = ManifestCatalog._head_path(cat.index_dir)
+        # a rename keeps the inode: the fsynced temp file IS the final file
+        assert events == [
+            ("fsync", os.stat(manifest).st_ino),
+            ("replace", manifest),
+            ("fsync", os.stat(head).st_ino),
+            ("replace", head),
+        ]
+
     def test_alloc_ids_persisted(self, tmp_path):
         d = str(tmp_path / "i")
-        cat = Catalog.create(d, IndexConfig(), backend="manifest")
+        cat = Catalog.create(d, IndexConfig())
         first = cat.alloc_split_ids(3)
         # a crashed op must not reuse ids: a fresh load continues after
         got = Catalog.load(d)
@@ -278,7 +211,7 @@ class TestManifestStateMachine:
 
     def test_future_version_rejected(self, tmp_path):
         d = str(tmp_path / "i")
-        Catalog.create(d, IndexConfig(), backend="manifest")
+        Catalog.create(d, IndexConfig())
         head_path = ManifestCatalog._head_path(d)
         with open(head_path) as f:
             head = json.load(f)
@@ -290,7 +223,7 @@ class TestManifestStateMachine:
 
     def test_vanished_manifest_fails_loudly(self, tmp_path):
         d = str(tmp_path / "i")
-        cat = Catalog.create(d, IndexConfig(), backend="manifest")
+        cat = Catalog.create(d, IndexConfig())
         cat.stage_and_publish([_sm("a")])
         name = cat._manifests[-1]
         os.unlink(os.path.join(d, "manifests", name))
@@ -301,9 +234,9 @@ class TestManifestStateMachine:
 def test_manifest_commit_cost_is_o_delta(tmp_path):
     """Publishing a 16-split chunk into a catalog already holding 10k
     splits writes ONE manifest containing exactly those 16 splits —
-    O(delta) bytes — while the JSON backend would rewrite ~10 MB."""
+    O(delta) bytes — a full-rewrite catalog would write ~10 MB."""
     d = str(tmp_path / "big")
-    cat = Catalog.create(d, IndexConfig(), backend="manifest")
+    cat = Catalog.create(d, IndexConfig())
     for i in range(0, 10_000, 1_000):
         cat.stage_and_publish([_sm(f"s-{j:06d}") for j in range(i, i + 1_000)])
     cat.stage_and_publish(
@@ -330,7 +263,7 @@ def test_manifest_compaction(tmp_path, monkeypatch):
     load sees identical state."""
     monkeypatch.setattr(ManifestCatalog, "COMPACT_AFTER", 5)
     d = str(tmp_path / "i")
-    cat = Catalog.create(d, IndexConfig(), backend="manifest")
+    cat = Catalog.create(d, IndexConfig())
     for i in range(9):
         cat.stage_and_publish([_sm(f"s-{i}")],
                               checkpoint_delta={f"p/{i}": "done"})
@@ -347,7 +280,7 @@ def test_manifest_compaction(tmp_path, monkeypatch):
 
 
 def test_manifest_e2e_build_search_merge_gc(spark, corpus, config, oracle,
-                                            tmp_path, monkeypatch):
+                                            tmp_path):
     """Full engine e2e with the manifest catalog: build → resume no-op →
     oracle-parity search → merge → gc."""
     from quickwit_spark.operators.build import build_index
@@ -356,7 +289,6 @@ def test_manifest_e2e_build_search_merge_gc(spark, corpus, config, oracle,
 
     import dataclasses
 
-    monkeypatch.setenv("QUICKWIT_SPARK_CATALOG", "manifest")
     config = dataclasses.replace(
         config, merge_factor=2, max_merge_factor=4, min_level_num_docs=10,
     )
@@ -369,7 +301,8 @@ def test_manifest_e2e_build_search_merge_gc(spark, corpus, config, oracle,
     assert cat2.total_docs() == len(corpus)
 
     se = Searcher(spark, d)
-    for q in ["w00001", "hotterm", '"w00001 w00002"~2']:
+    for q in ["w00001", "hotterm", '"w00001 w00002"~2', "w00004 -w00001",
+              "role:assistant AND w00002"]:
         n_o, hits_o = oracle.search(q, k=20)
         r = se.search(q, k=20)
         assert r.num_hits == n_o
@@ -383,6 +316,48 @@ def test_manifest_e2e_build_search_merge_gc(spark, corpus, config, oracle,
     assert all(s.state == PUBLISHED for s in cat.splits.values())
     n_o, hits_o = oracle.search("w00002", k=10)
     r = Searcher(spark, d).search("w00002", k=10)
+    assert r.num_hits == n_o
+    assert sorted((h.conv_id, h.turn_idx, round(h.score, 9)) for h in r.hits) \
+        == sorted((h.conv_id, h.turn_idx, round(h.score, 9)) for h in hits_o)
+
+
+def test_searcher_on_legacy_json_index_sees_first_append(
+    spark, corpus, config, oracle, tmp_path
+):
+    """A Searcher opened on a legacy catalog.json index notices the
+    first append after the upgrade (the head appears, so the state
+    token moves) and answers over the imported and the new splits."""
+    from quickwit_spark.operators.build import build_index
+    from quickwit_spark.operators.search import Searcher
+
+    d = str(tmp_path / "legacy")
+    convs = sorted(corpus["conv_id"].unique())
+    first = corpus["conv_id"].isin(set(convs[: len(convs) // 2]))
+    cat = build_index(spark, spark.createDataFrame(corpus[first]), d, config,
+                      n_splits=2)
+    # the same index in the legacy full-rewrite format: catalog.json only
+    with open(os.path.join(d, "catalog.json"), "w") as f:
+        json.dump({
+            "version": CATALOG_VERSION,
+            "config": cat.config.to_dict(),
+            "splits": [s.to_dict() for s in cat.splits.values()],
+            "checkpoint": cat.checkpoint,
+            "source_path": cat.source_path,
+            "merge_seq": cat.merge_seq,
+            "sources": cat.sources,
+            "doc_mapping": cat.doc_mapping,
+        }, f)
+    shutil.rmtree(os.path.join(d, "manifests"))
+
+    se = Searcher(spark, d)
+    assert se.n_docs == int(first.sum())
+    build_index(spark, spark.createDataFrame(corpus[~first]), d, config,
+                n_splits=2, ingest_id="b0001")
+    assert os.path.exists(os.path.join(d, "manifests", "head.json"))
+    n_o, hits_o = oracle.search("w00002", k=10)
+    r = se.search("w00002", k=10)
+    assert se.n_docs == len(corpus)
+    assert len(se.catalog.published_splits()) == 4
     assert r.num_hits == n_o
     assert sorted((h.conv_id, h.turn_idx, round(h.score, 9)) for h in r.hits) \
         == sorted((h.conv_id, h.turn_idx, round(h.score, 9)) for h in hits_o)
@@ -412,13 +387,12 @@ def test_manifest_fixture_loads(tmp_path):
     assert len(got.published_splits()) == 3
 
 
-@pytest.mark.parametrize("backend", ["json", "sqlite", "manifest"])
-def test_source_configs_roundtrip_all_backends(tmp_path, backend):
+def test_source_configs_roundtrip(tmp_path):
     """Source configs (metastore add_source/toggle/delete —
-    quickwit-metastore/src/metastore/mod.rs) persist through every
-    catalog backend and survive a reload."""
-    d = str(tmp_path / f"src_{backend}")
-    cat = Catalog.create(d, IndexConfig(), backend=backend)
+    quickwit-metastore/src/metastore/mod.rs) persist through the
+    catalog and survive a reload."""
+    d = str(tmp_path / "src")
+    cat = Catalog.create(d, IndexConfig())
     cat.add_source("s1", "file", {"path": "/data/a.parquet"})
     cat.add_source("s2", "kafka", {"topic": "t", "brokers": "b:9092"},
                    enabled=False)
@@ -451,7 +425,7 @@ def test_manifest_time_travel_across_compaction(tmp_path, monkeypatch):
     is read-only; snapshots() lists the reachable log."""
     monkeypatch.setattr(ManifestCatalog, "COMPACT_AFTER", 4)
     d = str(tmp_path / "tt")
-    cat = Catalog.create(d, IndexConfig(), backend="manifest",
+    cat = Catalog.create(d, IndexConfig(),
                          retain_history=True)
     for i in range(8):  # crosses at least one compaction
         cat.stage_and_publish([_sm(f"s-{i}")])
@@ -483,7 +457,7 @@ def test_manifest_expire_history(tmp_path, monkeypatch):
     untouched."""
     monkeypatch.setattr(ManifestCatalog, "COMPACT_AFTER", 4)
     d = str(tmp_path / "ex")
-    cat = Catalog.create(d, IndexConfig(), backend="manifest",
+    cat = Catalog.create(d, IndexConfig(),
                          retain_history=True)
     for i in range(8):
         cat.stage_and_publish([_sm(f"s-{i}")])
@@ -500,21 +474,11 @@ def test_manifest_expire_history(tmp_path, monkeypatch):
     assert len(Catalog.load(d).published_splits()) == 8
 
 
-def test_time_travel_requires_manifest_backend(tmp_path):
-    d = str(tmp_path / "js")
-    Catalog.create(d, IndexConfig(), backend="json")
-    with pytest.raises(ValueError, match="manifest"):
-        Catalog.load(d, at_seq=1)
-    with pytest.raises(ValueError, match="manifest"):
-        Catalog.create(str(tmp_path / "js2"), IndexConfig(),
-                       backend="json", retain_history=True)
-
-
 def test_without_retention_recent_commits_still_reachable(tmp_path):
     """Default (no retention): at_seq works within the live,
     un-compacted manifest window — and fails loudly past it."""
     d = str(tmp_path / "nr")
-    cat = Catalog.create(d, IndexConfig(), backend="manifest")
+    cat = Catalog.create(d, IndexConfig())
     for i in range(3):
         cat.stage_and_publish([_sm(f"s-{i}")])
     got = Catalog.load(d, at_seq=2)
@@ -588,7 +552,7 @@ def test_expire_history_never_strands_later_commits(tmp_path, monkeypatch):
     snapshot at-or-before it nothing is deleted at all."""
     monkeypatch.setattr(ManifestCatalog, "COMPACT_AFTER", 3)
     d = str(tmp_path / "sf")
-    cat = Catalog.create(d, IndexConfig(), backend="manifest",
+    cat = Catalog.create(d, IndexConfig(),
                          retain_history=True)
     for i in range(9):  # multiple compactions
         cat.stage_and_publish([_sm(f"s-{i}")])
@@ -662,7 +626,7 @@ def test_orphan_manifest_is_unreachable(tmp_path):
     import os as _os
 
     d = str(tmp_path / "oi")
-    cat = Catalog.create(d, IndexConfig(), backend="manifest",
+    cat = Catalog.create(d, IndexConfig(),
                          retain_history=True)
     for i in range(3):
         cat.stage_and_publish([_sm(f"s-{i}")])

@@ -85,10 +85,6 @@ class TestSchemeGuard:
         assert fsio.spark_read_path("/t/idx") == "/t/idx"
         assert fsio.spark_read_path("hdfs://nn/idx") == "hdfs://nn/idx"
 
-    def test_sqlite_backend_requires_local(self):
-        with pytest.raises(ValueError, match="sqlite catalog backend"):
-            Catalog.create("s3://bucket/idx", IndexConfig(), backend="sqlite")
-
 
 class TestMockE2E:
     def test_no_stray_local_writes(self, mock_index, mock_backing):
@@ -96,7 +92,7 @@ class TestMockE2E:
         # (a stray open("mock://…") would have thrown, not escaped —
         # this asserts the index actually materialized through the fs)
         root = os.path.join(mock_backing, "idx")
-        assert os.path.exists(os.path.join(root, "catalog.json"))
+        assert os.path.exists(os.path.join(root, "manifests", "head.json"))
         assert len(os.listdir(os.path.join(root, "splits"))) == 4
 
     def test_search_parity_with_local(self, mock_index, local_twin):
@@ -183,15 +179,12 @@ class TestMockE2E:
 
     def test_manifest_catalog_on_mock(self, spark, corpus, mock_backing):
         """The append-log catalog routed through the FileSystem layer —
-        the object-store deployment shape (manifest backend + URI split
+        the object-store deployment shape (manifest log + URI split
         I/O) end-to-end."""
         from quickwit_spark.plans.catalog import Catalog, ManifestCatalog
 
         d = "mock://" + os.path.join(mock_backing, "manifest_idx")
-        idx = Index.create(spark, d, _cfg())  # json default on local-backed
-        idx.delete()
-        Catalog.create(d, _cfg(), backend="manifest")
-        idx = Index.open(spark, d)
+        idx = Index.create(spark, d, _cfg())
         idx.ingest(spark.createDataFrame(corpus[:300]), n_splits=2,
                    ingest_id="mf")
         assert isinstance(idx.catalog(), ManifestCatalog)
