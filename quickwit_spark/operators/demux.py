@@ -20,16 +20,11 @@ tenant isolation at 10^12 scale).
 from __future__ import annotations
 
 import json
-import os
 import time
 
 from quickwit_spark.config import IndexConfig
 from quickwit_spark.functions import fs as fsio
-from quickwit_spark.operators.build import (
-    DOCS_FILE,
-    build_split_tables_arrow,
-    write_split,
-)
+from quickwit_spark.operators.build import DOCS_FILE, build_split, split_metadata
 from quickwit_spark.plans.catalog import Catalog, SplitMetadata
 
 
@@ -107,18 +102,9 @@ def demux_splits(
         import pyarrow as pa
 
         bin_ord = int(bkey[0].as_py() if hasattr(bkey[0], "as_py") else bkey[0])
-        cfg = IndexConfig.from_dict(config_dict)
-        t0 = time.time()
-        postings, dtbl, meta = build_split_tables_arrow(
-            tbl.drop_columns(["demux_bin"]), cfg
-        )
-        split_id = bin_ids_b[bin_ord]
-        size = write_split(
-            postings, dtbl, fsio.join(index_dir_b, "splits", split_id)
-        )
-        meta.update(
-            split_id=split_id, bin=bin_ord, size_in_bytes=size,
-            wall_time_sec=time.time() - t0,
+        meta = build_split(
+            tbl.drop_columns(["demux_bin"]), IndexConfig.from_dict(config_dict),
+            index_dir_b, bin_ids_b[bin_ord], bin=bin_ord,
         )
         return pa.table({"bin": [bin_ord], "meta": [json.dumps(meta)]})
 
@@ -132,19 +118,8 @@ def demux_splits(
     lineage = []
     for row in sorted(results, key=lambda r: r.bin):
         m = json.loads(row.meta)
-        sm = SplitMetadata(
-            split_id=m["split_id"],
-            num_docs=m["num_docs"],
-            sum_doc_len=m["sum_doc_len"],
-            uncompressed_docs_size_in_bytes=m["uncompressed_docs_size_in_bytes"],
-            size_in_bytes=m["size_in_bytes"],
-            time_range=tuple(m["time_range"]) if m["time_range"] else None,
-            term_range=tuple(m["term_range"]) if m["term_range"] else None,
-            tags=m["tags"],
-            # propagate presence info like build/stream/merge do — a
-            # missing key reads as True and permanently disables
-            # NotTagPred must_not pruning on the demuxed splits
-            tag_has_null=m.get("tag_has_null", {}),
+        sm = split_metadata(
+            m,
             num_merge_ops=max(s.num_merge_ops for s in inputs) + 1,
             source_partitions=sorted(
                 {p for s in inputs for p in s.source_partitions}

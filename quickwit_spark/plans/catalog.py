@@ -102,10 +102,10 @@ class Catalog:
     base class holds the state and the transaction-shaped mutators.
 
     Every mutation funnels through those mutators (stage_splits /
-    stage_and_publish / publish_splits / delete_splits / ...), each
-    exactly one ``_commit``, and records WHAT it touched in the dirty
-    sets (``_dirty_splits`` / ``_deleted_split_ids`` /
-    ``_dirty_checkpoint`` / ``_removed_checkpoint`` / ``_dirty_meta``),
+    stage_and_publish / publish_splits / delete_splits / ...), each one
+    ``_commit`` (none when it changes nothing), and records WHAT it
+    touched in the dirty sets (``_dirty_splits`` / ``_deleted_split_ids``
+    / ``_dirty_checkpoint`` / ``_removed_checkpoint`` / ``_dirty_meta``),
     so a commit writes O(splits touched), not O(total splits).
 
     Indexes written before the manifest log existed keep a
@@ -313,6 +313,8 @@ class Catalog:
         Re-staging an id that is Published/MarkedForDeletion raises
         (id collision = silent data loss); re-staging a Staged id is
         allowed (crash-retry idempotence)."""
+        if not metas:
+            return  # no-op: skip the commit (nothing dirty = full snapshot)
         for meta in metas:
             self._check_stageable(meta, allow_staged=True)
         for meta in metas:
@@ -361,6 +363,8 @@ class Catalog:
         """Atomic publish: new splits become visible, replaced splits are
         marked for deletion, checkpoint advances — all in one commit.
         Backwards checkpoint deltas are rejected (checkpoint.rs:286-330)."""
+        if not (split_ids or replaced_split_ids or checkpoint_delta):
+            return
         if checkpoint_delta:
             for part, pos in checkpoint_delta.items():
                 cur = self.checkpoint.get(part, "")
@@ -385,6 +389,8 @@ class Catalog:
         self._commit()
 
     def mark_for_deletion(self, split_ids: list[str]) -> None:
+        if not split_ids:
+            return
         for sid in split_ids:
             self.splits[sid].state = MARKED_FOR_DELETION
             self._dirty_splits.add(sid)
@@ -392,6 +398,8 @@ class Catalog:
 
     def delete_splits(self, split_ids: list[str]) -> None:
         """GC: physically removable only once marked (garbage_collection.rs)."""
+        if not any(sid in self.splits for sid in split_ids):
+            return
         for sid in split_ids:
             meta = self.splits.get(sid)
             if meta is None:

@@ -129,16 +129,32 @@ def test_append_builds_with_the_index_config(spark, tmp_path):
         assert (hot["df"] <= cfg.salt_docid_range).all(), sid
 
 
-def test_resume_after_partial_publish(spark, corpus, config, tmp_path):
+def _write_source(pdf, path) -> str:
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.Table.from_pandas(pdf, preserve_index=False), str(path),
+        coerce_timestamps="us",
+    )
+    return str(path)
+
+
+@pytest.mark.parametrize("source_kind", ["dataframe", "file"])
+def test_resume_after_partial_publish(spark, corpus, config, tmp_path,
+                                      source_kind):
     """Kill between split publishes → re-run → no loss, no duplication
-    (publisher.rs:140-148 atomic publish; checkpoint.rs resume)."""
+    (publisher.rs:140-148 atomic publish; checkpoint.rs resume), for a
+    DataFrame (Spark build) and a small parquet file (driver build)."""
     from quickwit_spark.operators.build import build_index
     from quickwit_spark.plans.catalog import Catalog
 
     import quickwit_spark.operators.build as build_mod
 
     idx = str(tmp_path / "idx")
-    sdf = spark.createDataFrame(corpus)
+    if source_kind == "dataframe":
+        sdf = spark.createDataFrame(corpus)
+    else:
+        sdf = _write_source(corpus, tmp_path / "src.parquet")
 
     monkey_chunk = build_mod.PUBLISH_CHUNK
     build_mod.PUBLISH_CHUNK = 1  # per-split publishes for this test
@@ -161,6 +177,9 @@ def test_resume_after_partial_publish(spark, corpus, config, tmp_path):
 
     cat = Catalog.load(idx)
     assert len(cat.published_splits()) == 2  # partial progress persisted
+    # a DataFrame ingest starts b0000; a path gets a path-derived one
+    ns = next(iter(cat.checkpoint)).split("/")[1]
+    assert (ns == "b0000") == (source_kind == "dataframe")
 
     # resume: must rebuild ONLY the missing partitions
     cat2 = build_index(spark, sdf, idx, config, n_splits=4)
@@ -169,10 +188,114 @@ def test_resume_after_partial_publish(spark, corpus, config, tmp_path):
     # all four checkpoint positions recorded exactly once, plus the
     # ingest-completion marker (all namespaced under this ingest)
     assert sorted(cat2.checkpoint) == [
-        "batch/b0000",
-        "batch/b0000/0", "batch/b0000/1", "batch/b0000/2", "batch/b0000/3",
+        f"batch/{ns}", *(f"batch/{ns}/{p}" for p in range(4)),
     ]
-    assert cat2.checkpoint["batch/b0000"] == "complete"
+    assert cat2.checkpoint[f"batch/{ns}"] == "complete"
+
+
+def _parity_source(tmp_path, utc: bool) -> str:
+    """NULL role/tool, non-ASCII text and routing keys, and a hot term
+    that the parity config salts into shards."""
+    pdf = generate_transcripts(3000, seed=11, hot_term_frac=0.3)
+    pdf.loc[::17, "role"] = None
+    pdf.loc[::13, "tool"] = None
+    pdf.loc[::7, "text"] = pdf.loc[::7, "text"] + " İstanbul ΟΔΟΣ 東京 ü_naïve 🙂"
+    pdf["conv_id"] = pdf["conv_id"].where(
+        ~pdf["conv_id"].str.endswith("3"), pdf["conv_id"] + "-ü"
+    )
+    if utc:
+        pdf["ts"] = pdf["ts"].dt.tz_localize("UTC")
+    return _write_source(pdf, tmp_path / f"src-{'utc' if utc else 'naive'}.parquet")
+
+
+@pytest.mark.parametrize("utc", [False, True], ids=["naive_ts", "utc_ts"])
+def test_driver_build_matches_spark_build(spark, tmp_path, monkeypatch, utc):
+    """A small single file builds in the driver; forced through Spark,
+    the same file must give the same split files, split metadata,
+    checkpoint keys and lineage."""
+    import pyarrow.parquet as pq
+
+    import quickwit_spark.operators.build as build_mod
+    from quickwit_spark.plans.catalog import Catalog
+
+    cfg = IndexConfig(hot_term_doc_freq=50, salt_docid_range=32)
+    src = _parity_source(tmp_path, utc)
+    driver_idx, spark_idx = str(tmp_path / "driver"), str(tmp_path / "spark")
+    build_mod.build_index(spark, src, driver_idx, cfg, n_splits=4, ingest_id="x")
+    monkeypatch.setattr(build_mod, "DRIVER_BUILD_MAX_ROWS", 0)
+    build_mod.build_index(spark, src, spark_idx, cfg, n_splits=4, ingest_id="x")
+
+    dcat, scat = Catalog.load(driver_idx), Catalog.load(spark_idx)
+    assert dcat.checkpoint == scat.checkpoint
+    assert sorted(dcat.splits) == sorted(scat.splits)
+    assert len(dcat.splits) == 4
+    volatile = ("create_timestamp", "update_timestamp")
+    for sid in dcat.splits:
+        dm, sm = dcat.splits[sid].to_dict(), scat.splits[sid].to_dict()
+        for k in volatile:
+            dm.pop(k), sm.pop(k)
+        assert dm == sm, sid
+        for name in (build_mod.POSTINGS_FILE, build_mod.DOCS_FILE):
+            dt = pq.read_table(f"{dcat.split_dir(sid)}/{name}")
+            st = pq.read_table(f"{scat.split_dir(sid)}/{name}")
+            assert dt.schema.equals(st.schema, check_metadata=True), (sid, name)
+            assert dt.equals(st), (sid, name)
+        docs = pq.read_table(f"{dcat.split_dir(sid)}/{build_mod.DOCS_FILE}")
+        assert docs.schema.field("ts").type == pa.timestamp(
+            "us", tz="UTC" if utc else None
+        )
+        assert docs.column("role").null_count and docs.column("tool").null_count
+    hot = pd.read_parquet(
+        f"{dcat.split_dir(sorted(dcat.splits)[0])}/{build_mod.POSTINGS_FILE}"
+    ).query("term == 'hotterm'")
+    assert len(hot) > 1  # salted into shards
+
+    def lineage(idx):
+        tbl = pd.read_parquet(f"{idx}/lineage")
+        return sorted(zip(tbl["split_id"], tbl["op"], tbl["partition"]))
+
+    assert lineage(driver_idx) == lineage(spark_idx)
+
+
+def test_small_file_build_starts_no_spark_job(spark, corpus, config, tmp_path):
+    """A single small parquet file builds in the driver with no Spark
+    job; a DataFrame of the same rows still runs the Spark build."""
+    from quickwit_spark.operators.build import build_index
+
+    src = _write_source(corpus, tmp_path / "src.parquet")
+    sdf = spark.createDataFrame(corpus)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group, source, idx):
+        sc.setJobGroup(group, group)
+        try:
+            cat = build_index(spark, source, str(tmp_path / idx), config, n_splits=4)
+        finally:
+            sc.setJobGroup(None, None)
+        assert cat.total_docs() == len(corpus)
+        return tracker.getJobIdsForGroup(group)
+
+    assert jobs("driver-build-test", src, "driver") == []
+    assert jobs("spark-build-test", sdf, "spark")
+
+
+def test_driver_build_rejects_null_routing_value(spark, corpus, config, tmp_path):
+    """A NULL routing value fails the driver build before any split is
+    written or published (the Spark build fails on it too)."""
+    import os
+
+    from quickwit_spark.operators.build import build_index
+    from quickwit_spark.plans.catalog import Catalog
+
+    pdf = corpus.copy()
+    pdf.loc[5, "conv_id"] = None
+    src = _write_source(pdf, tmp_path / "src.parquet")
+    idx = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match="NULL"):
+        build_index(spark, src, idx, config, n_splits=4)
+    assert Catalog.load(idx).splits == {}
+    assert os.listdir(os.path.join(idx, "splits")) == []
 
 
 def test_crc32_routing_matches_spark(spark):

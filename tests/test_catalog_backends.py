@@ -170,6 +170,28 @@ class TestManifestStateMachine:
         assert set(got.splits) == {"a"}
         assert got.splits["a"].num_docs == 99
 
+    def test_noop_mutators_write_no_manifest(self, tmp_path):
+        """gc with nothing doomed, and every split mutator given nothing
+        to change, must not commit: a commit with nothing dirty writes a
+        full snapshot (334 KB at 1,000 splits)."""
+        from quickwit_spark.operators.merge import gc_deleted_splits
+
+        d = str(tmp_path / "i")
+        cat = Catalog.create(d, IndexConfig())
+        cat.stage_and_publish([_sm("a")], checkpoint_delta={"a": "1"})
+        mdir = os.path.join(d, ManifestCatalog.DIR)
+        before = sorted(os.listdir(mdir))
+
+        assert gc_deleted_splits(d, grace_period_secs=0) == []
+        cat = Catalog.load(d)
+        cat.stage_splits([])
+        cat.publish_splits([])
+        cat.mark_for_deletion([])
+        cat.delete_splits([])
+        cat.delete_splits(["gone"])
+        assert sorted(os.listdir(mdir)) == before
+        assert Catalog.load(d)._seq == cat._seq
+
     def test_manifest_is_durable_before_the_head_swap(self, tmp_path,
                                                       monkeypatch):
         """A crash right after the head swap must not leave the head
