@@ -10,8 +10,10 @@ The Spark re-expression of the reference's root/leaf search
   = ``mapInPandas`` over a DataFrame of split paths, one task per
   split: the kernel reads ONLY the query terms' posting rows (Parquet
   predicate pushdown = the reference's warmup downloading only needed
-  postings), decodes delta+varint lists, evaluates the boolean/phrase
-  AST vectorized in numpy, scores BM25, and emits a partial top-k
+  postings) through one reader, ``_ShardPostings``, decodes
+  delta+varint lists (positions only for phrases), evaluates the
+  boolean/phrase AST vectorized in numpy, scores BM25, and emits a
+  partial top-k
   (collector.rs:136-231 analog) + per-split match count + partial agg
   buckets;
 * root merge (collector.rs:325-419, root.rs:263-288) = a driver-side
@@ -46,6 +48,7 @@ query battery.
 
 from __future__ import annotations
 
+import logging
 import math
 import os
 from dataclasses import dataclass, field as dc_field
@@ -78,6 +81,8 @@ HIT_SCHEMA = (
     "agg_min double, agg_max double, agg_sq double"
 )
 _HIT_COLS = [c.split(" ")[0] for c in HIT_SCHEMA.split(", ")]
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -139,58 +144,41 @@ _WAND_COLS = (
 _POSITION_COLS = ("field", "term", "shard", "positions")
 
 
-def _read_postings(split_dir: str, terms: set[tuple[str, str]], cache=None):
-    """Read + decode only the query terms' posting rows.
-
-    Returns {(field, term): (docids, tfs, positions_concat|None)} with
-    shards concatenated in docid order. ``cache``: see :func:`read_pruned`.
-    Reads the same two column sets as :class:`_ShardPostings`, so the
-    row groups both evaluators touch are cached once; both reads select
-    the same groups and rows, so their rows align.
-    """
-    from quickwit_spark.functions.parquet_io import read_pruned
-
-    path = fsio.join(split_dir, POSTINGS_FILE)
-    term_values = sorted({t for _, t in terms})
-    tbl = read_pruned(path, _WAND_COLS, "term", term_values, cache)
-    pos_tbl = read_pruned(path, _POSITION_COLS, "term", term_values, cache)
-    out: dict[tuple[str, str], tuple] = {}
-    fields = tbl.column("field").to_pylist()
-    tvals = tbl.column("term").to_pylist()
-    shards = tbl.column("shard").to_pylist()
-    doc_blobs = tbl.column("doc_ids").to_pylist()
-    tf_blobs = tbl.column("tfs").to_pylist()
-    pos_blobs = pos_tbl.column("positions").to_pylist()
-    rows_by_key: dict[tuple[str, str], list] = {}
-    for i in range(len(fields)):
-        key = (fields[i], tvals[i])
-        if key not in terms:
-            continue
-        rows_by_key.setdefault(key, []).append(
-            (shards[i], doc_blobs[i], tf_blobs[i], pos_blobs[i])
-        )
-    for key, rows in rows_by_key.items():
-        rows.sort()
-        docids = np.concatenate([delta_decode(r[1]) for r in rows]).astype(np.int64)
-        tfs = np.concatenate([decode_varint(r[2]) for r in rows]).astype(np.int64)
-        if rows[0][3] is not None:
-            positions = np.concatenate(
-                [
-                    decode_positions(r[3], decode_varint(r[2]).astype(np.int64))
-                    for r in rows
-                ]
-            ).astype(np.int64)
-        else:
-            positions = None
-        out[key] = (docids, tfs, positions)
-    return out
+def _idf(stats: dict, key: tuple[str, str]) -> float:
+    """BM25 idf of one (field, term) from the GLOBAL stats (N, df)."""
+    df = stats["df"].get(key, 0)
+    return math.log(1.0 + (stats["N"] - df + 0.5) / (df + 0.5))
 
 
-def _bm25_scores(tfs, dls, df_global, n_total, avgdl, k1, b):
-    idf = math.log(1.0 + (n_total - df_global + 0.5) / (df_global + 0.5))
+def _bm25_scores(tfs, dls, idf, avgdl, k1, b):
+    """BM25 of term (or phrase) frequencies ``tfs`` in docs of length
+    ``dls``; also the block-max upper bound given (max_tf, min_dl)."""
     tfs = tfs.astype(np.float64)
     norm = tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
     return idf * norm
+
+
+def _phrase_hits(cand, token_lists, slop: int):
+    """(docids, phrase freqs) of the candidates ``cand`` that hold the
+    phrase. ``token_lists`` has one ``(docids, tfs, positions)`` per
+    token, each covering every candidate: each token's candidate-doc
+    position runs are gathered with one vectorized variable-length
+    take, then matched in bulk."""
+    token_positions = []
+    for docids, tfs, pos in token_lists:
+        starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
+        idx = np.searchsorted(docids, cand)
+        seg_starts = starts[idx]
+        seg_lens = tfs[idx]
+        total = int(seg_lens.sum())
+        inner = np.arange(total, dtype=np.int64) - np.repeat(
+            np.concatenate(([0], np.cumsum(seg_lens)[:-1])), seg_lens
+        )
+        gathered = pos[np.repeat(seg_starts, seg_lens) + inner]
+        token_positions.append((seg_lens, gathered))
+    freqs = phrase_freq_bulk(token_positions, slop).astype(np.float64)
+    mask = freqs > 0
+    return cand[mask], freqs[mask]
 
 
 def _node_ok(node) -> bool:
@@ -280,17 +268,21 @@ def _wand_plan(ast):
 
 
 class _ShardPostings:
-    """Lazily-decoded posting shards of the query's terms in one split —
-    the decode-on-demand half of the block-max evaluator. Stat columns
-    (df, max_tf, min_dl, first/last_docid) are read up front; doc_ids /
-    tfs blobs are read in one pushdown-filtered scan but only DECODED
-    for shards the evaluator actually visits. Both scans read through
-    ``cache``, see :func:`read_pruned`."""
+    """The one postings reader of a leaf: the query terms' posting
+    shards in one split, decoded on demand. Stat columns (df, max_tf,
+    min_dl, first/last_docid) and the doc_ids / tfs blobs come from one
+    pushdown-filtered scan; a blob is DECODED only when an evaluator
+    asks for its shard, and the position blobs are read in a second
+    scan on the first position request, which only phrases make. The
+    block-max evaluator asks per shard (:meth:`docids`, :meth:`tfs`,
+    :meth:`positions`), the exhaustive one per term (:meth:`term`,
+    :meth:`term_positions`: shards concatenated in first_docid order).
+    Both scans read through ``cache``, see :func:`read_pruned`."""
 
-    def __init__(self, path: str, keys: list[tuple[str, str]], cache=None):
+    def __init__(self, split_dir: str, keys, cache=None):
         from quickwit_spark.functions.parquet_io import read_pruned
 
-        self._path = path
+        self._path = fsio.join(split_dir, POSTINGS_FILE)
         self._cache = cache
         keyset = set(keys)
         term_values = sorted({t for _, t in keyset})
@@ -299,7 +291,7 @@ class _ShardPostings:
         # of the query terms' rows are (almost) always needed anyway —
         # decode-on-demand skips the DECODE per shard, not the read —
         # and one scan halves the per-query row-group read count
-        tbl = read_pruned(path, _WAND_COLS, "term", term_values, cache)
+        tbl = read_pruned(self._path, _WAND_COLS, "term", term_values, cache)
         fields = tbl.column("field").to_pylist()
         terms = tbl.column("term").to_pylist()
         cols = {
@@ -389,6 +381,28 @@ class _ShardPostings:
         self._pos_cache[key] = got
         return got
 
+    def term(self, field: str, term: str):
+        """(docids, tfs) of one term over all its shards, concatenated in
+        first_docid order so the docids stay sorted; None when the split
+        lacks the term."""
+        st = self.stats.get((field, term))
+        if st is None:
+            return None
+        shards = st["shard"].tolist()
+        return (
+            np.concatenate([self.docids(field, term, sh) for sh in shards]),
+            np.concatenate([self.tfs(field, term, sh) for sh in shards]),
+        )
+
+    def term_positions(self, field: str, term: str):
+        """Positions of every shard of :meth:`term`, concatenated in the
+        same order; None when the field has no positions."""
+        parts = [
+            self.positions(field, term, sh)
+            for sh in self.stats[(field, term)]["shard"].tolist()
+        ]
+        return None if parts[0] is None else np.concatenate(parts)
+
     @property
     def n_docid_decoded(self) -> int:
         return len(self._doc_cache)
@@ -441,7 +455,6 @@ def _wand_bool(
     only ever skips work that cannot change the top-m. Returns
     (ids, scores, num_hits, skip_stats).
     """
-    path = fsio.join(split_dir, POSTINGS_FILE)
     # negated single terms exclude via direct shard-overlap scans (no
     # segmentation needed); every other negation (phrase, nested bool)
     # becomes a node evaluated per segment like a member, score-ignored
@@ -476,9 +489,9 @@ def _wand_bool(
     neg_info = [_minfo(n) for n in neg_shapes]
     all_pos = [k for g in member_info for (_, keys, _) in g for k in keys]
     neg_keys = [k for (_, keys, _) in neg_info for k in keys]
-    sp = _ShardPostings(path, all_pos + negk + neg_keys, cache)
+    sp = _ShardPostings(split_dir, all_pos + negk + neg_keys, cache)
     k1, b = config.k1, config.b
-    N, avgdl = stats["N"], stats["avgdl"]
+    avgdl = stats["avgdl"]
     empty = (np.empty(0, np.int64), np.empty(0, np.float64))
     no_work = {"shards": 0, "docid_decoded": 0, "tf_decoded": 0,
                "pos_decoded": 0}
@@ -516,10 +529,6 @@ def _wand_bool(
     # a negation that can never match (absent term/token somewhere
     # required) excludes nothing — drop it
     neg_info = [p for p in map(_prune_minfo, neg_info) if p is not None]
-
-    def _idf(key):
-        df_g = stats["df"].get(key, 0)
-        return math.log(1.0 + (N - df_g + 0.5) / (df_g + 0.5))
 
     # flat member list; memb[i] carries group, kind, keys, and (after
     # annotation below) the recursive node tree with per-segment
@@ -579,32 +588,21 @@ def _wand_bool(
                 )
                 tok_k.append(np.maximum(kk, 0))
             nd["tok_k"] = tok_k
-            if kind == "term":
-                nd["val"] = stats["df"].get(keys[0], 0)
-                cov = key_cov[0]
-                st = sp.stats[keys[0]]
-                kk = tok_k[0]
-                raw = _bm25_scores(
-                    st["max_tf"][kk], st["min_dl"][kk].astype(np.float64),
-                    nd["val"], N, avgdl, k1, b,
-                )
-            else:
+            # a term is the one-token case of the phrase bound below
+            nd["val"] = sum(_idf(stats, k) for k in keys)
+            if kind == "phrase":
                 nd["slop"] = extra
-                nd["val"] = sum(_idf(k) for k in keys)
-                cov = key_cov[0]
-                for kc in key_cov[1:]:
-                    cov = cov & kc
-                f_ub = dl_lb = None
-                for key, kk in zip(keys, tok_k):
-                    st = sp.stats[key]
-                    mt = st["max_tf"][kk].astype(np.float64)
-                    md = st["min_dl"][kk].astype(np.float64)
-                    f_ub = mt if f_ub is None else np.minimum(f_ub, mt)
-                    dl_lb = md if dl_lb is None else np.maximum(dl_lb, md)
-                raw = nd["val"] * (
-                    f_ub * (k1 + 1.0)
-                    / (f_ub + k1 * (1.0 - b + b * dl_lb / avgdl))
-                )
+            cov = key_cov[0]
+            for kc in key_cov[1:]:
+                cov = cov & kc
+            f_ub = dl_lb = None
+            for key, kk in zip(keys, tok_k):
+                st = sp.stats[key]
+                mt = st["max_tf"][kk].astype(np.float64)
+                md = st["min_dl"][kk].astype(np.float64)
+                f_ub = mt if f_ub is None else np.minimum(f_ub, mt)
+                dl_lb = md if dl_lb is None else np.maximum(dl_lb, md)
+            raw = _bm25_scores(f_ub, dl_lb, nd["val"], avgdl, k1, b)
             nd["cov"] = cov
             nd["ub"] = np.where(cov, raw, 0.0)
             return nd
@@ -690,27 +688,13 @@ def _wand_bool(
             if cand.size == 0:
                 return empty
             toks.append((key, shard, dec))
-        token_positions = []
+        token_lists = []
         for key, shard, dec in toks:
-            tfs = sp.tfs(key[0], key[1], shard)
             pos = sp.positions(key[0], key[1], shard)
             if pos is None:
                 return empty  # field without positions: phrase matches nothing
-            starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-            idx = np.searchsorted(dec, cand)
-            seg_starts = starts[idx]
-            seg_lens = tfs[idx]
-            total = int(seg_lens.sum())
-            inner = np.arange(total, dtype=np.int64) - np.repeat(
-                np.concatenate(([0], np.cumsum(seg_lens)[:-1])), seg_lens
-            )
-            gathered = pos[np.repeat(seg_starts, seg_lens) + inner]
-            token_positions.append((seg_lens, gathered))
-        freqs = phrase_freq_bulk(token_positions, slop).astype(
-            np.float64
-        )
-        mask = freqs > 0
-        return cand[mask], freqs[mask]
+            token_lists.append((dec, sp.tfs(key[0], key[1], shard), pos))
+        return _phrase_hits(cand, token_lists, slop)
 
     def _node_seg(nd, s: int, lo: int, hi: int):
         """(matching docids, scores) of one annotated node within
@@ -731,20 +715,14 @@ def _wand_bool(
             if ids.size == 0:
                 return empty
             tfs = sp.tfs(key[0], key[1], shard)[a_:b_]
-            return ids, _bm25_scores(
-                tfs, doc_len[ids], nd["val"], N, avgdl, k1, b
-            )
+            return ids, _bm25_scores(tfs, doc_len[ids], nd["val"], avgdl, k1, b)
         if kind == "phrase":
             ids, freqs = _phrase_match(
                 nd["keys"], nd["tok_k"], nd["slop"], s, lo, hi
             )
             if ids.size == 0:
                 return empty
-            dls = doc_len[ids]
-            norm = freqs * (k1 + 1.0) / (
-                freqs + k1 * (1.0 - b + b * dls / avgdl)
-            )
-            return ids, nd["val"] * norm
+            return ids, _bm25_scores(freqs, doc_len[ids], nd["val"], avgdl, k1, b)
         if kind == "boost":
             ids, sc = _node_seg(nd["children"][0], s, lo, hi)
             return ids, sc * nd["factor"]
@@ -866,13 +844,13 @@ def _wand_bool(
                     continue
                 if m_["kind"] == "term":
                     _, sl_tf = _term_slice(m_["node"], s, lo, hi, with_tf=True)
-                    df_t = m_["node"]["val"]
+                    idf_t = m_["node"]["val"]
                     if single:
                         # candidates ⊆ the member's slice (candidates
                         # were intersected with this very slice)
                         idx = np.searchsorted(sl_ids, ids)
                         g_scores += _bm25_scores(
-                            sl_tf[idx], doc_len[ids], df_t, N, avgdl, k1, b
+                            sl_tf[idx], doc_len[ids], idf_t, avgdl, k1, b
                         )
                     else:
                         common, ci, si = np.intersect1d(
@@ -880,8 +858,8 @@ def _wand_bool(
                         )
                         if common.size:
                             g_scores[ci] += _bm25_scores(
-                                sl_tf[si], doc_len[common], df_t,
-                                N, avgdl, k1, b,
+                                sl_tf[si], doc_len[common], idf_t,
+                                avgdl, k1, b,
                             )
                 else:
                     # phrase/conj/group member: _node_seg already
@@ -915,21 +893,18 @@ def _wand_bool(
 
 
 class _SplitEval:
-    """Evaluates a query AST against one split, vectorized."""
+    """Evaluates a query AST against one split, vectorized, over the
+    whole postings of each query term (``postings``: a
+    :class:`_ShardPostings`, None when the query has no terms)."""
 
     def __init__(self, postings, doc_len, stats, config):
         self.postings = postings
         self.doc_len = doc_len.astype(np.float64)
         self.n_split = doc_len.size
-        self.N = stats["N"]
+        self.stats = stats
         self.avgdl = stats["avgdl"]
-        self.df = stats["df"]  # {(field, term): global doc freq}
         self.k1 = config.k1
         self.b = config.b
-
-    def _idf(self, key) -> float:
-        df = self.df.get(key, 0)
-        return math.log(1.0 + (self.N - df + 0.5) / (df + 0.5))
 
     def eval(self, node):
         """Returns (docids sorted int64, scores float64)."""
@@ -940,51 +915,34 @@ class _SplitEval:
             ids, scores = self.eval(node.node)
             return ids, scores * node.factor
         if isinstance(node, Term):
-            key = (node.field, node.value)
-            p = self.postings.get(key)
+            p = self.postings.term(node.field, node.value)
             if p is None:
                 return empty
-            docids, tfs, _ = p
-            scores = _bm25_scores(
-                tfs, self.doc_len[docids], self.df.get(key, 0),
-                self.N, self.avgdl, self.k1, self.b,
+            docids, tfs = p
+            idf = _idf(self.stats, (node.field, node.value))
+            return docids, _bm25_scores(
+                tfs, self.doc_len[docids], idf, self.avgdl, self.k1, self.b
             )
-            return docids, scores
         if isinstance(node, Phrase):
-            keys = [(node.field, t) for t in node.tokens]
-            plists = [self.postings.get(k) for k in keys]
-            if any(p is None or p[2] is None for p in plists):
+            plists = [self.postings.term(node.field, t) for t in node.tokens]
+            if any(p is None for p in plists):
                 return empty
             cand = plists[0][0]
             for p in plists[1:]:
                 cand = np.intersect1d(cand, p[0], assume_unique=True)
             if cand.size == 0:
                 return empty
-            idf_sum = sum(self._idf(k) for k in keys)
-            # gather each token's candidate-doc position segments with a
-            # vectorized variable-length take, then bulk phrase matching
-            token_positions = []
-            for docids, tfs, pos in plists:
-                starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-                idx = np.searchsorted(docids, cand)
-                seg_starts = starts[idx]
-                seg_lens = tfs[idx]
-                total = int(seg_lens.sum())
-                inner = np.arange(total, dtype=np.int64) - np.repeat(
-                    np.concatenate(([0], np.cumsum(seg_lens)[:-1])), seg_lens
-                )
-                gathered = pos[np.repeat(seg_starts, seg_lens) + inner]
-                token_positions.append((seg_lens, gathered))
-            freqs = phrase_freq_bulk(token_positions, node.slop).astype(
-                np.float64
+            token_lists = []
+            for t, (docids, tfs) in zip(node.tokens, plists):
+                pos = self.postings.term_positions(node.field, t)
+                if pos is None:
+                    return empty  # field without positions
+                token_lists.append((docids, tfs, pos))
+            cand, freqs = _phrase_hits(cand, token_lists, node.slop)
+            idf = sum(_idf(self.stats, (node.field, t)) for t in node.tokens)
+            return cand, _bm25_scores(
+                freqs, self.doc_len[cand], idf, self.avgdl, self.k1, self.b
             )
-            mask = freqs > 0
-            cand, freqs = cand[mask], freqs[mask]
-            dls = self.doc_len[cand]
-            norm = freqs * (self.k1 + 1.0) / (
-                freqs + self.k1 * (1.0 - self.b + self.b * dls / self.avgdl)
-            )
-            return cand, idf_sum * norm
         if isinstance(node, Bool):
             if node.must:
                 parts = [self.eval(c) for c in node.must]
@@ -1014,6 +972,26 @@ class _SplitEval:
         raise TypeError(f"unknown AST node {node!r}")
 
 
+def _exhaustive_matches(
+    split_dir, ast, doc_len, ts_us, stats, config, start_us, end_us, cache=None
+):
+    """(docids, scores) of EVERY match of ``ast`` in one split whose
+    timestamp lies in [start_us, end_us) (filters.rs:61-155; a None
+    bound is open). ``cache``: see :func:`read_pruned`."""
+    terms = query_terms(ast)
+    postings = _ShardPostings(split_dir, terms, cache) if terms else None
+    ids, scores = _SplitEval(postings, doc_len, stats, config).eval(ast)
+    if start_us is not None or end_us is not None:
+        tvals = ts_us[ids]
+        keep = np.ones(ids.size, dtype=bool)
+        if start_us is not None:
+            keep &= tvals >= start_us
+        if end_us is not None:
+            keep &= tvals < end_us
+        ids, scores = ids[keep], scores[keep]
+    return ids, scores
+
+
 def _top_m(ids, scores, m):
     """Exact top-m by (score desc, docid asc), safe under ties."""
     if ids.size <= m:
@@ -1027,8 +1005,9 @@ def _top_m(ids, scores, m):
 
 
 # Per-process fast-field cache. Split files are IMMUTABLE once written
-# (merge/demux create new dirs), so a split's (doc_len, ts_us[, sort])
-# arrow table never changes under its path — yet re-reading it cost
+# (merge/demux create new dirs), so a split's fast-field columns
+# (doc_len, ts_us, a sort, aggregation or search-stream column) never
+# change under its path — yet re-reading them cost
 # ~2 ms per split per query, the biggest slice of the warm driver-mode
 # latency floor after the postings read (profiled at 16 splits/200k
 # docs). Bounded by BYTES, not entries: a 10M-doc split's fast columns
@@ -1138,20 +1117,9 @@ def _eval_split_partial(
             split_id, dpath, ids, scores, scores, ts_us, fetch_payload
         ) + [_count_row(split_id, num_hits)]
 
-    terms = query_terms(ast)
-    postings = _read_postings(split_dir, terms, cache) if terms else {}
-    ev = _SplitEval(postings, doc_len, stats, config)
-    ids, scores = ev.eval(ast)
-
-    # timestamp fast-field filter, [start, end) (filters.rs:61-155)
-    if start_us is not None or end_us is not None:
-        mask = np.ones(ids.size, dtype=bool)
-        tvals = ts_us[ids]
-        if start_us is not None:
-            mask &= tvals >= start_us
-        if end_us is not None:
-            mask &= tvals < end_us
-        ids, scores = ids[mask], scores[mask]
+    ids, scores = _exhaustive_matches(
+        split_dir, ast, doc_len, ts_us, stats, config, start_us, end_us, cache
+    )
 
     out_rows: list[dict] = []
 
@@ -1197,9 +1165,8 @@ def _eval_split_partial(
             elif c == "doc_len":
                 col_arrays[c] = doc_len
             else:
-                col_arrays[c] = fsio.read_table(dpath, columns=[c]).column(c).to_numpy(
-                    zero_copy_only=False
-                )
+                col = _fast_table_cached(dpath, (c,)).column(c)
+                col_arrays[c] = col.to_numpy(zero_copy_only=False)
         for name, spec in aggs.items():
             kind, params = next(iter(spec.items()))
             vals = col_arrays[params["field"]][ids]
@@ -1653,6 +1620,7 @@ class Searcher:
         self.catalog = Catalog.load(index_dir, at_seq=at_seq)
         self.config = self.catalog.config
         self._df_cache: dict[tuple[str, str], int] = {}
+        self._warned_no_stats = False
         # decoded postings and doc-store row groups of the driver-mode
         # leaves and root fetch, keyed (file path, row group, columns).
         # Per HANDLE, not per process: a fresh Searcher always re-reads
@@ -1705,7 +1673,15 @@ class Searcher:
             if found is not None:
                 self._df_cache.update(found)
                 return {t: self._df_cache[t] for t in terms}
-        if missing:
+            if not self._warned_no_stats:
+                # once per handle: every later miss takes the same path
+                self._warned_no_stats = True
+                _log.warning(
+                    "index %s: term-stats artifact missing or unreadable; "
+                    "global doc freqs fall back to a Spark job over the "
+                    "splits until refresh_term_stats rewrites it",
+                    self.index_dir,
+                )
             # term-range pruning is sound for df too: a split whose
             # default-field term range excludes EVERY missing term has
             # zero occurrences of them
@@ -2251,8 +2227,6 @@ def stream_fast_field(
     )
 
     def kernel(iterator):
-        import pyarrow.parquet as pq
-
         for pdf in iterator:
             for split_id, path in zip(pdf["split_id"], pdf["path"]):
                 dpath = fsio.join(path, DOCS_FILE)
@@ -2261,21 +2235,12 @@ def stream_fast_field(
                     cols.append(fast_field)
                 if partition_by and partition_by not in cols:
                     cols.append(partition_by)
-                fast = fsio.read_table(dpath, columns=cols)
+                fast = _fast_table_cached(dpath, tuple(cols))
                 doc_len = fast.column("doc_len").to_numpy().astype(np.int64)
                 ts_us = fast.column("ts_us").to_numpy()
-                terms = query_terms(ast)
-                postings = _read_postings(path, terms) if terms else {}
-                ev = _SplitEval(postings, doc_len, stats, config)
-                ids, _ = ev.eval(ast)
-                if start_us is not None or end_us is not None:
-                    mask = np.ones(ids.size, dtype=bool)
-                    tvals = ts_us[ids]
-                    if start_us is not None:
-                        mask &= tvals >= start_us
-                    if end_us is not None:
-                        mask &= tvals < end_us
-                    ids = ids[mask]
+                ids, _ = _exhaustive_matches(
+                    path, ast, doc_len, ts_us, stats, config, start_us, end_us
+                )
                 vals = (
                     ts_us if fast_field in ("ts", "ts_us")
                     else fast.column(fast_field).to_numpy()

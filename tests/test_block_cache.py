@@ -60,8 +60,8 @@ def test_repeated_queries_decode_no_new_row_group(spark, index_dir):
 
 # the two postings reads, by the columns in their cache key: the stats +
 # blob scan and the positions scan; the WAND and the exhaustive evaluator
-# (sort_by, aggs) both read through these two, so a row group is cached
-# at most once per column set
+# (sort_by, aggs) share the one reader behind them, so a row group is
+# cached at most once per column set
 WAND_COLS = ("field", "term", "shard", "df", "max_tf", "min_dl",
              "first_docid", "last_docid", "doc_ids", "tfs")
 POSITION_COLS = ("field", "term", "shard", "positions")
@@ -82,6 +82,40 @@ def test_leaf_postings_reads_go_through_the_block_cache(spark, index_dir):
     assert {k[0].rsplit("/", 1)[1] for k in s._blocks._data} == {
         "postings.parquet", "docs.parquet"
     }
+
+
+def test_exhaustive_term_queries_read_no_positions(
+    spark, index_dir, corpus, monkeypatch
+):
+    """Only phrases use positions: a term-only query on the exhaustive
+    path (time bounds, sort_by and aggs each rule out the block-max
+    one) reads no position row group and decodes no position blob."""
+    import numpy as np
+    import pandas as pd
+
+    decoded = []
+    real = search_mod.decode_positions
+
+    def counting(buf, counts):
+        decoded.append(len(counts))
+        return real(buf, counts)
+
+    monkeypatch.setattr(search_mod, "decode_positions", counting)
+    ts_us = (pd.to_datetime(corpus["ts"]).astype("int64") // 1000).to_numpy()
+    lo, hi = (int(np.quantile(ts_us, f)) for f in (0.25, 0.75))
+    s = Searcher(spark, index_dir)
+    for q, kw in [
+        ("w00001 w00002", {"start_us": lo, "end_us": hi}),
+        ("hotterm", {"sort_by": "ts_us"}),
+        ("w00002 OR w00003", {"aggs": {"roles": {"terms": {"field": "role"}}}}),
+    ]:
+        assert s.search(q, k=10, **kw).num_hits > 0, q
+    assert decoded == []
+    assert POSITION_COLS not in {k[2] for k in _postings_keys(s)}
+    # a phrase on the same path does read and decode them
+    assert s.search('"w00001 w00002"~2', k=10, sort_by="ts_us").num_hits > 0
+    assert decoded
+    assert POSITION_COLS in {k[2] for k in _postings_keys(s)}
 
 
 def test_byte_budget_holds_under_eviction(spark, index_dir, monkeypatch):

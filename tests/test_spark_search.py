@@ -122,6 +122,35 @@ class TestWand:
                 (h.split_id, h.docid, h.score) for h in b.hits
             ], q
 
+    @pytest.mark.parametrize(
+        "query", ['"w00001 hotterm"~20', '"w00001 w00002"', '"w00002 hotterm"~20']
+    )
+    def test_sharded_phrase_exhaustive_matches_oracle(
+        self, spark, corpus, oracle, sharded_index, query
+    ):
+        """Phrases over salted (multi-shard) postings on the exhaustive
+        path, which sort_by, time bounds and wand=False force, against
+        the oracle: it reads no postings, so it pins the order in which
+        the leaf concatenates a term's shards and their positions.
+        Salting changes only the storage, so the session oracle
+        answers for this index too."""
+        from quickwit_spark.operators.search import Searcher
+
+        ts_us = (pd.to_datetime(corpus["ts"]).astype("int64") // 1000).to_numpy()
+        lo, hi = (int(np.quantile(ts_us, f)) for f in (0.2, 0.8))
+        se = Searcher(spark, sharded_index)
+        for kw in (
+            dict(k=10, wand=False),
+            dict(k=10, sort_by="ts"),
+            dict(k=10, sort_by="ts", sort_desc=False),
+            dict(k=10, start_us=lo, end_us=hi),
+            dict(k=10, sort_by="ts", start_us=lo, end_us=hi),
+        ):
+            resp = se.search(query, **kw)
+            assert resp.num_hits > 0, (query, kw)
+            oracle_kw = {k: v for k, v in kw.items() if k != "wand"}
+            assert_rank_identical(oracle.search(query, **oracle_kw), resp)
+
     @staticmethod
     def _split_env(sharded_index, terms):
         import numpy as np

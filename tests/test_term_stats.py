@@ -6,6 +6,7 @@ the manifest agree exactly with the single-file layout."""
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import time
@@ -163,6 +164,45 @@ def test_torn_manifest_degrades_not_crashes(spark, stats_index):
         ] > 0
     finally:
         pass  # repaired state is the valid state; nothing to restore
+
+
+@pytest.mark.usefixtures("single_file_stats")
+def test_stats_fallback_logged_once(spark, stats_index, caplog):
+    """A torn manifest sends every df lookup to the distributed
+    fallback: the Searcher logs that once, not per query, and answers
+    exactly as it does with readable stats."""
+    from quickwit_spark.operators import search as search_mod
+
+    # distinct terms per query: each one misses the df cache
+    queries = ["w00001 w00002", "w00003", "w00004 OR w00005"]
+
+    def answers(s):
+        return [
+            (r.num_hits, [(h.split_id, h.docid, h.score) for h in r.hits])
+            for r in (s.search(q, k=10) for q in queries)
+        ]
+
+    want = answers(search_mod.Searcher(spark, stats_index))
+    cat = Catalog.load(stats_index)
+    mpath = os.path.join(
+        stats_mod._shard_dir(cat.term_stats_path()), stats_mod._MANIFEST
+    )
+    good = open(mpath, "rb").read()
+    stats_mod._MANIFEST_CACHE.clear()
+    try:
+        with open(mpath, "wb") as f:
+            f.write(good[: len(good) // 2])  # torn write
+        torn = search_mod.Searcher(spark, stats_index)
+        with caplog.at_level(logging.WARNING, logger=search_mod.__name__):
+            got = answers(torn)
+    finally:
+        with open(mpath, "wb") as f:
+            f.write(good)
+        stats_mod._MANIFEST_CACHE.clear()
+    assert got == want
+    warned = [r for r in caplog.records if r.name == search_mod.__name__]
+    assert len(warned) == 1
+    assert "term-stats" in warned[0].getMessage()
 
 
 def test_cached_manifest_with_missing_parts_falls_back(spark, stats_index):

@@ -20,7 +20,7 @@ from quickwit_spark.config import IndexConfig
 from quickwit_spark.functions.tokenize import tokenize_default
 from quickwit_spark.operators.build import build_split_tables_arrow, write_split
 from quickwit_spark.operators.search import (
-    _read_postings,
+    _ShardPostings,
     _SplitEval,
     _top_m,
     _wand_bool,
@@ -103,7 +103,7 @@ def test_wand_equals_exhaustive_property(corpus, tree, negs, k):
         sd, groups, wneg, doc_len, stats, cfg, k
     )
 
-    postings = _read_postings(sd, query_terms(ast))
+    postings = _ShardPostings(sd, query_terms(ast))
     e_ids_all, e_scores_all = _SplitEval(postings, doc_len, stats, cfg).eval(ast)
     assert w_hits == e_ids_all.size
     e_ids, e_scores = _top_m(e_ids_all, e_scores_all, k)
