@@ -182,7 +182,10 @@ def _field_posting_columns(
 def limit_worker_threads(n: int = 1) -> None:
     """Cap Arrow's per-process thread pools inside task workers — many
     concurrent kernels each defaulting to a cores-wide pool oversubscribe
-    the machine (measured ~4x per-kernel slowdown at 32 workers)."""
+    the machine (measured ~4x per-kernel slowdown at 32 workers). Call
+    it only inside Spark task closures: the cap lasts for the process,
+    so a call in the driver would throttle every later driver build and
+    search."""
     try:
         import pyarrow as pa
 
@@ -235,7 +238,6 @@ def build_split_tables_arrow(tbl, config: IndexConfig):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    limit_worker_threads()
     tbl = tbl.sort_by([(k, "ascending") for k in config.doc_key_fields])
     n = len(tbl)
     ts_col = tbl.column(config.timestamp_field)
@@ -566,6 +568,7 @@ def build_index(
         def build_group(key, tbl):
             import pyarrow as pa
 
+            limit_worker_threads()
             split_ord = int(
                 key[0].as_py() if hasattr(key[0], "as_py") else key[0]
             )

@@ -24,7 +24,12 @@ import time
 
 from quickwit_spark.config import IndexConfig
 from quickwit_spark.functions import fs as fsio
-from quickwit_spark.operators.build import DOCS_FILE, build_split, split_metadata
+from quickwit_spark.operators.build import (
+    DOCS_FILE,
+    build_split,
+    limit_worker_threads,
+    split_metadata,
+)
 from quickwit_spark.plans.catalog import Catalog, SplitMetadata
 
 
@@ -101,6 +106,7 @@ def demux_splits(
     def build_group(bkey, tbl):
         import pyarrow as pa
 
+        limit_worker_threads()
         bin_ord = int(bkey[0].as_py() if hasattr(bkey[0], "as_py") else bkey[0])
         meta = build_split(
             tbl.drop_columns(["demux_bin"]), IndexConfig.from_dict(config_dict),

@@ -32,18 +32,19 @@ term-pruned splits. ``Searcher`` caches those stats across queries.
 
 Block-max pruning: posting rows carry (max_tf, min_dl, first/last
 docid) per shard; for ANY pure positive boolean over terms and phrases
-(arbitrary AND/OR nesting, ± negations that are themselves terms,
-phrases, or positive booleans — only MatchAll-based pure-negation
-shapes are excluded) the kernel cuts
-docid space into segments at shard boundaries and processes them
-document-at-a-time in
-descending score-upper-bound order, skipping decode + scoring work that
-cannot reach the running top-k threshold (tantivy's block-max WAND at
-shard granularity, extended across terms — the reference disables
-scoring at this rev, collector.rs:318-323, so this is our addition per
-the north rule; see ``_wand_bool``). A ``wand=False`` flag forces
-exhaustive evaluation; tests assert result equality over the full
-query battery.
+(arbitrary AND/OR nesting and boosts, ± negations that are themselves
+terms, phrases, or positive booleans — only MatchAll-based
+pure-negation shapes are excluded) the kernel cuts docid space into
+segments at shard boundaries, evaluates the query's own tree per
+segment, and processes segments document-at-a-time in descending
+score-upper-bound order, skipping decode + scoring work that cannot
+reach the running top-k threshold (tantivy's block-max WAND at shard
+granularity, extended across terms — the reference disables scoring
+at this rev, collector.rs:318-323, so this is our addition per the
+north rule; see ``_wand_bool``). Time bounds, ``sort_by`` and
+aggregations take the exhaustive evaluator (``_SplitEval``); tests
+force it for every query by patching ``_wand_plan`` to return None
+and assert result equality over the full query battery.
 """
 
 from __future__ import annotations
@@ -61,7 +62,11 @@ from quickwit_spark.functions import fs as fsio
 from quickwit_spark.functions.codec import decode_positions, decode_varint, delta_decode
 from quickwit_spark.functions.lru import LRU
 from quickwit_spark.functions.phrase import phrase_freq_bulk
-from quickwit_spark.operators.build import DOCS_FILE, POSTINGS_FILE
+from quickwit_spark.operators.build import (
+    DOCS_FILE,
+    POSTINGS_FILE,
+    limit_worker_threads,
+)
 from quickwit_spark.plans.catalog import Catalog
 from quickwit_spark.plans.pruning import prune_splits
 from quickwit_spark.plans.query import (
@@ -183,9 +188,7 @@ def _phrase_hits(cand, token_lists, slop: int):
 
 def _node_ok(node) -> bool:
     """True when a (sub-)query is a pure positive boolean over terms
-    and phrases — any depth of AND/OR nesting, no must_not, no mixed
-    must+should at one node (the exhaustive evaluator ignores should
-    when must is present; that quirk stays on the exhaustive path)."""
+    and phrases: any depth of AND/OR nesting and boosts, no must_not."""
     if isinstance(node, (Term, Phrase)):
         return True
     if isinstance(node, Boost):
@@ -194,77 +197,34 @@ def _node_ok(node) -> bool:
         return _node_ok(node.node)
     if not isinstance(node, Bool) or node.must_not:
         return False
-    if node.must and node.should:
-        return False
     kids = node.must or node.should
     return bool(kids) and all(_node_ok(c) for c in kids)
 
 
 def _wand_plan(ast):
-    """Normalize a prunable query into ``(groups, negs)`` where every
-    group is a list of members and the query means "every group has
-    >=1 matching member, scores sum over all matching members, minus
-    docs matching any negation". A member is ANY pure positive boolean
-    node (term, phrase, or arbitrarily nested AND/OR of those): the
-    evaluator (:func:`_wand_bool`) recursively bounds and evaluates
-    member trees per docid segment. A negation may likewise be any
-    pure positive node; a negated disjunction is flattened into its
-    members (set exclusion distributes over union). Only pure-negation
+    """Split a prunable query into ``(pos, negs)``: ``pos`` is its
+    positive tree (the AST itself, or ``Bool(must=..., should=...)``
+    without the negations), a pure positive boolean (:func:`_node_ok`)
+    that :func:`_wand_bool` bounds and evaluates per docid segment;
+    ``negs`` are the docs to exclude. A negation may be any pure
+    positive node: its boost is dropped (exclusion is set-based, so it
+    is score-dead) and a negated disjunction is flattened into its
+    members (set exclusion distributes over union). Pure-negation
     queries (MatchAll base — pruning cannot skip work since every doc
-    scores 0), negated-MatchAll shapes, and mixed must+should nodes
-    return None and take the exhaustive path."""
-
-    def term_group(node):
-        # a top-level must child that is a disjunction contributes one
-        # group PER the disjunction (>=1 member must match); anything
-        # else is a single-member group
-        if (
-            isinstance(node, Bool)
-            and node.should
-            and not node.must
-            and not node.must_not
-            and all(_node_ok(c) for c in node.should)
-        ):
-            return list(node.should)
-        if _node_ok(node):
-            return [node]
-        return None
-
-    if isinstance(ast, (Term, Phrase)):
-        return [[ast]], []
-    if isinstance(ast, Boost):
-        return ([[ast]], []) if _node_ok(ast) else None
+    scores 0) and negated MatchAll shapes return None and take the
+    exhaustive path."""
     if not isinstance(ast, Bool):
-        return None
+        return (ast, []) if _node_ok(ast) else None
     negs = []
     for c in ast.must_not:
         while isinstance(c, Boost):
-            # exclusion is set-based — a negation's boost is score-dead
             c = c.node
-        if isinstance(c, (Term, Phrase)):
-            negs.append(c)
-        elif (
-            isinstance(c, Bool) and c.should and not c.must
-            and not c.must_not and all(_node_ok(x) for x in c.should)
-        ):
-            # -(a OR b) ≡ -a -b: excluding the union equals excluding
-            # each member (exclusion is set-based, no score effect)
-            negs.extend(c.should)
-        elif _node_ok(c):
-            negs.append(c)
-        else:
+        if not _node_ok(c):
             return None
-    if ast.must and not ast.should:
-        groups = [term_group(c) for c in ast.must]
-        if any(g is None for g in groups):
-            return None
-        return groups, negs
-    if ast.should and not ast.must:
-        g = term_group(Bool(should=ast.should))
-        if g is None:
-            return None
-        return [g], negs
-    return None  # pure must_not (MatchAll base) or mixed must+should
+        # -(a OR b) ≡ -a -b
+        negs.extend(c.should if isinstance(c, Bool) and c.should else [c])
+    pos = Bool(must=ast.must, should=ast.should) if ast.must_not else ast
+    return (pos, negs) if _node_ok(pos) else None
 
 
 class _ShardPostings:
@@ -417,36 +377,35 @@ class _ShardPostings:
 
 
 def _wand_bool(
-    split_dir: str, groups, neg, doc_len, stats, config, m: int, cache=None
+    split_dir: str, pos, neg, doc_len, stats, config, m: int, cache=None
 ) -> tuple[np.ndarray, np.ndarray, int, dict]:
-    """Block-max pruned top-m for flat term booleans at shard
-    granularity — the posting-row analog of tantivy's block-max WAND
-    extended document-at-a-time across terms (SURVEY.md §2.6; the
-    reference disables scoring at this rev, collector.rs:318-323, so
-    pruning is our north-rule addition; semantics mirror tantivy's
-    ``Weight::for_each_pruning``).
+    """Block-max pruned top-m at shard granularity — the posting-row
+    analog of tantivy's block-max WAND extended document-at-a-time
+    across terms (SURVEY.md §2.6; the reference disables scoring at
+    this rev, collector.rs:318-323, so pruning is our north-rule
+    addition; semantics mirror tantivy's ``Weight::for_each_pruning``,
+    which prunes on the query's own scorer tree).
 
-    The query is the normal form from :func:`_wand_plan`: a conjunction
-    of GROUPS (each group = a disjunction of MEMBERS; score = sum over
-    matching members) minus negations, where a member — and a negation
-    — is ANY pure positive boolean tree of terms/phrases (arbitrary
-    AND/OR nesting). Docid space is cut into SEGMENTS at the query
-    terms' shard boundaries, so term coverage is constant within a
-    segment. Member trees are annotated bottom-up with per-segment
-    coverage and score upper bounds (conj: AND/Σ over children; group:
-    OR/Σ; leaves from shard stats) and evaluated per segment by the
-    recursive ``_node_seg``, which reproduces the exhaustive
-    evaluator's float association at every level.
+    ``pos`` and ``neg`` come from :func:`_wand_plan`: the query's
+    positive AND/OR tree of terms and phrases (any nesting, boosts),
+    and the negations, each a term or a pure positive tree. Docid space
+    is cut into SEGMENTS at the query terms' shard boundaries, so term
+    coverage is constant within a segment. The tree is annotated
+    bottom-up with per-segment coverage and score upper bounds
+    (``_annotate``) and evaluated per segment by the recursive
+    ``_node_seg``, which reproduces the exhaustive evaluator's float
+    association at every level.
 
-    * conjunction: segments where some group has NO covering member
-      shard cannot contain a match — skipped entirely (no docid
-      decode, no count work). This is the hot∧rare win: the hot term's
-      shards outside the rare term's docid ranges are never touched.
-    * disjunction (one group): the exact num_hits (union cardinality)
-      forces a docid decode of every covering shard, but tf decode +
-      scoring are skipped for segments whose bound falls strictly
-      below the running m-th best score (descending-bound order →
-      sound).
+    * segments the root does not cover cannot contain a match —
+      skipped entirely (no decode, no count work). This is the
+      hot∧rare win: the hot term's shards outside the rare term's
+      docid ranges are never touched.
+    * the exact num_hits counts every covered segment with docid
+      decodes only (a phrase also decodes its tokens' tfs and
+      positions, once per segment); term tf decode + scoring are
+      skipped for segments whose bound falls
+      strictly below the running m-th best score (descending-bound
+      order → sound).
     * single positive term without negation: num_hits = Σ shard dfs
       (shards are disjoint), so even docid decode is skipped for
       pruned shards.
@@ -457,190 +416,188 @@ def _wand_bool(
     """
     # negated single terms exclude via direct shard-overlap scans (no
     # segmentation needed); every other negation (phrase, nested bool)
-    # becomes a node evaluated per segment like a member, score-ignored
+    # becomes a node evaluated per segment, score-ignored
     negk = [(t.field, t.value) for t in neg if isinstance(t, Term)]
     neg_shapes = [n for n in neg if not isinstance(n, Term)]
-
-    def _minfo(node):
-        if isinstance(node, Boost):
-            # score multiplier: cov/keys are the child's, bounds and
-            # per-segment scores scale by the (non-negative) factor
-            child = _minfo(node.node)
-            return ("boost", child[1], (node.factor, child))
-        if isinstance(node, Term):
-            return ("term", [(node.field, node.value)], 0)
-        if isinstance(node, Phrase):
-            return ("phrase", [(node.field, tok) for tok in node.tokens], node.slop)
-        if node.should:
-            # disjunction child inside a conjunction member — the
-            # (a OR b) in ((a OR b) AND c); third slot = SUB-member
-            # minfos, keys flattened in sub-member order
-            subs = [_minfo(c) for c in node.should]
-            flat = [k for _, keys, _ in subs for k in keys]
-            return ("group", flat, subs)
-        # conjunction member from _wand_plan — (a AND b), (a AND "x y")
-        # inside a should; the third slot carries the CHILD minfos and
-        # the keys are the children's keys flattened in child order
-        children = [_minfo(c) for c in node.must]
-        flat = [k for _, keys, _ in children for k in keys]
-        return ("conj", flat, children)
-
-    member_info = [[_minfo(n) for n in g] for g in groups]
-    neg_info = [_minfo(n) for n in neg_shapes]
-    all_pos = [k for g in member_info for (_, keys, _) in g for k in keys]
-    neg_keys = [k for (_, keys, _) in neg_info for k in keys]
-    sp = _ShardPostings(split_dir, all_pos + negk + neg_keys, cache)
+    pos_keys = query_terms(pos)
+    seg_keys = pos_keys.union(*map(query_terms, neg_shapes))
+    sp = _ShardPostings(split_dir, seg_keys | set(negk), cache)
     k1, b = config.k1, config.b
     avgdl = stats["avgdl"]
     empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-    no_work = {"shards": 0, "docid_decoded": 0, "tf_decoded": 0,
-               "pos_decoded": 0}
 
-    # drop members with an absent key (a phrase missing a token, a term
-    # never indexed, matches nothing — the exhaustive evaluator returns
-    # empty for them too); inside a conj member a dead child kills the
-    # member, but a GROUP child only drops its dead sub-members. A group
-    # with no surviving member empties the conjunction.
-    def _prune_minfo(mi_):
-        kind, keys, extra = mi_
-        if kind in ("term", "phrase"):
-            return mi_ if all(k in sp.stats for k in keys) else None
-        if kind == "boost":
-            p = _prune_minfo(extra[1])
-            if p is None:
-                return None
-            return ("boost", p[1], (extra[0], p))
-        if kind == "group":
-            subs = [p for p in map(_prune_minfo, extra) if p is not None]
-            if not subs:
-                return None
-            return ("group", [k for _, kk, _ in subs for k in kk], subs)
-        pruned = [_prune_minfo(c) for c in extra]
-        if any(c is None for c in pruned):
-            return None
-        return ("conj", [k for _, kk, _ in pruned for k in kk], pruned)
-
-    member_info = [
-        [p for p in map(_prune_minfo, g) if p is not None]
-        for g in member_info
-    ]
-    if any(not g for g in member_info):
-        return (*empty, 0, no_work)
-    # a negation that can never match (absent term/token somewhere
-    # required) excludes nothing — drop it
-    neg_info = [p for p in map(_prune_minfo, neg_info) if p is not None]
-
-    # flat member list; memb[i] carries group, kind, keys, and (after
-    # annotation below) the recursive node tree with per-segment
-    # coverage and score upper bounds
-    memb: list[dict] = []
-    n_pos_shards = 0
-    for gi, g in enumerate(member_info):
-        for mi_ in g:
-            memb.append({"g": gi, "minfo": mi_})
-            n_pos_shards += sum(sp.stats[k]["first"].size for k in mi_[1])
-
-    # segment boundaries at every member token's shard edges, so term
-    # coverage is constant within a segment. Non-term negation tokens
-    # also segment the space: their per-segment matchers need ONE
-    # covering shard per token per segment (negated single TERMS don't
-    # — they exclude via direct shard-overlap scans)
-    edges = []
-    for m_ in memb:
-        for k in m_["minfo"][1]:
-            st = sp.stats[k]
-            edges.append(st["first"])
-            edges.append(st["last"] + 1)
-    for _kind, keys, _extra in neg_info:
-        for k in keys:
-            st = sp.stats[k]
-            edges.append(st["first"])
-            edges.append(st["last"] + 1)
+    # segment boundaries at every positive and non-term negation
+    # token's shard edges: a per-segment matcher needs ONE covering
+    # shard per token per segment
+    edges = [np.empty(0, np.int64)]
+    for k in seg_keys & sp.stats.keys():
+        edges += [sp.stats[k]["first"], sp.stats[k]["last"] + 1]
     bounds = np.unique(np.concatenate(edges))
-    seg_lo = bounds[:-1]
-    seg_hi = bounds[1:]
+    seg_lo, seg_hi = bounds[:-1], bounds[1:]
     n_seg = seg_lo.size
-    n_groups = len(member_info)
 
-    def _annotate(mi_):
-        """Recursively annotate one node with per-segment coverage and
-        a per-segment score upper bound (``ub`` is pre-masked: 0 where
+    def _annotate(node):
+        """One AST node annotated with per-segment coverage and a
+        per-segment score upper bound (``ub`` is pre-masked: 0 where
         the node is uncovered, so parents may sum child UBs directly).
 
         term: cov = shard presence; UB = BM25(max_tf, min_dl) of the
-        covering shard. phrase: cov = AND over tokens; a phrase
-        occurrence needs every token present in the doc, so
-        freq ≤ min token max_tf and candidate dl ≥ max token-shard
-        min_dl — UB = Σtoken-idf × norm(min max_tf, max min_dl) ≥ any
-        real phrase score (norm ↑ in freq, ↓ in dl). conj: cov = AND
-        over children, UB = Σ child UBs (score sums over children).
-        group: cov = OR over children, UB = Σ child UBs (the
-        exhaustive Bool.should sums every matching member's score)."""
-        kind, keys, extra = mi_
-        nd = {"kind": kind, "keys": keys}
-        if kind in ("term", "phrase"):
-            tok_k, key_cov = [], []
-            for key in keys:
-                st = sp.stats[key]
-                kk = np.searchsorted(st["first"], seg_lo, side="right") - 1
-                key_cov.append(
-                    (kk >= 0) & (st["last"][np.maximum(kk, 0)] >= seg_lo)
-                )
-                tok_k.append(np.maximum(kk, 0))
-            nd["tok_k"] = tok_k
-            # a term is the one-token case of the phrase bound below
-            nd["val"] = sum(_idf(stats, k) for k in keys)
-            if kind == "phrase":
-                nd["slop"] = extra
-            cov = key_cov[0]
-            for kc in key_cov[1:]:
-                cov = cov & kc
-            f_ub = dl_lb = None
-            for key, kk in zip(keys, tok_k):
-                st = sp.stats[key]
-                mt = st["max_tf"][kk].astype(np.float64)
-                md = st["min_dl"][kk].astype(np.float64)
-                f_ub = mt if f_ub is None else np.minimum(f_ub, mt)
-                dl_lb = md if dl_lb is None else np.maximum(dl_lb, md)
-            raw = _bm25_scores(f_ub, dl_lb, nd["val"], avgdl, k1, b)
-            nd["cov"] = cov
-            nd["ub"] = np.where(cov, raw, 0.0)
-            return nd
-        if kind == "boost":
-            child = _annotate(extra[1])
-            nd["factor"] = extra[0]
-            nd["children"] = [child]
-            nd["cov"] = child["cov"]
+        covering shard. phrase: cov = AND over tokens; phrase freq
+        counts anchors (first-token positions), so freq ≤ the first
+        token's max_tf, and an exact phrase (slop 0) gives each anchor
+        its own position of every token, so freq ≤ min token max_tf;
+        a sloppy one may share later tokens between anchors. A match
+        holds every token, so candidate dl ≥ max token-shard min_dl —
+        UB = Σtoken-idf × norm(freq bound, max min_dl) ≥ any real
+        phrase score (norm ↑ in freq, ↓ in dl); a term is its
+        one-token case. A term or token the split lacks covers
+        nothing. conj (``Bool.must``): cov = AND over children; group
+        (``Bool.should``): cov = OR; UB = Σ child UBs for both (the
+        exhaustive evaluator sums every matching child's score)."""
+        if isinstance(node, Boost):
+            child = _annotate(node.node)
             # child ub is already cov-masked; factor >= 0 keeps the mask
-            nd["ub"] = child["ub"] * extra[0]
+            return {"kind": "boost", "factor": node.factor,
+                    "children": [child], "cov": child["cov"],
+                    "ub": child["ub"] * node.factor}
+        if isinstance(node, Bool):
+            kind = "conj" if node.must else "group"
+            children = [_annotate(c) for c in node.must or node.should]
+            cov = children[0]["cov"]
+            for c in children[1:]:
+                cov = (cov & c["cov"]) if kind == "conj" else (cov | c["cov"])
+            ub = np.zeros(n_seg, dtype=np.float64)
+            for c in children:
+                ub += c["ub"]
+            return {"kind": kind, "children": children, "cov": cov,
+                    "ub": np.where(cov, ub, 0.0), "memo": {}}
+        if isinstance(node, Term):
+            nd = {"kind": "term", "keys": [(node.field, node.value)]}
+        else:
+            nd = {"kind": "phrase", "slop": node.slop, "memo": {},
+                  "keys": [(node.field, tok) for tok in node.tokens]}
+        nd["val"] = sum(_idf(stats, k) for k in nd["keys"])
+        if not all(k in sp.stats for k in nd["keys"]):
+            nd.update(cov=np.zeros(n_seg, dtype=bool), ub=np.zeros(n_seg))
             return nd
-        children = [_annotate(c) for c in extra]
-        nd["children"] = children
-        cov = children[0]["cov"]
-        for c in children[1:]:
-            cov = (cov & c["cov"]) if kind == "conj" else (cov | c["cov"])
-        ub = np.zeros(n_seg, dtype=np.float64)
-        for c in children:
-            ub += c["ub"]
+        cov = np.ones(n_seg, dtype=bool)
+        f_ub = np.full(n_seg, np.inf)
+        dl_lb = np.zeros(n_seg)
+        shards = []
+        for i, key in enumerate(nd["keys"]):
+            st = sp.stats[key]
+            kk = np.searchsorted(st["first"], seg_lo, side="right") - 1
+            cov &= (kk >= 0) & (st["last"][np.maximum(kk, 0)] >= seg_lo)
+            kk = np.maximum(kk, 0)
+            shards.append(st["shard"][kk])
+            if i == 0 or not nd.get("slop"):
+                f_ub = np.minimum(f_ub, st["max_tf"][kk].astype(np.float64))
+            dl_lb = np.maximum(dl_lb, st["min_dl"][kk].astype(np.float64))
+        nd["shard"] = shards
         nd["cov"] = cov
-        nd["ub"] = np.where(cov, ub, 0.0)
+        nd["ub"] = np.where(
+            cov, _bm25_scores(f_ub, dl_lb, nd["val"], avgdl, k1, b), 0.0
+        )
         return nd
 
-    ub_seg = np.zeros(n_seg, dtype=np.float64)
-    g_cov = np.zeros((n_groups, n_seg), dtype=bool)
-    for m_ in memb:
-        nd = _annotate(m_["minfo"])
-        m_["node"] = nd
-        m_["kind"] = nd["kind"]
-        m_["cov"] = nd["cov"]
-        ub_seg += nd["ub"]
-        g_cov[m_["g"]] |= nd["cov"]
-    active = g_cov.all(axis=0)
-    active_idx = np.flatnonzero(active)
+    def _slice(key, shard, s: int):
+        """(decoded docids of one shard, [a, b) of segment s in them)."""
+        dec = sp.docids(key[0], key[1], shard)
+        return dec, np.searchsorted(dec, seg_lo[s]), np.searchsorted(dec, seg_hi[s])
 
-    neg_nodes = [_annotate(mi_) for mi_ in neg_info]
+    def _phrase_match(nd, s: int):
+        """(matching docids, phrase freqs) of one phrase node within
+        segment s; positions decoded ONLY here, i.e. only for shards
+        whose token docid-intersection is non-empty."""
+        toks = []
+        cand = None
+        for key, shards in zip(nd["keys"], nd["shard"]):
+            shard = int(shards[s])
+            dec, a_, b_ = _slice(key, shard, s)
+            cand = dec[a_:b_] if cand is None else np.intersect1d(
+                cand, dec[a_:b_], assume_unique=True
+            )
+            if cand.size == 0:
+                return empty
+            toks.append((key, shard, dec))
+        token_lists = []
+        for key, shard, dec in toks:
+            p = sp.positions(key[0], key[1], shard)
+            if p is None:
+                return empty  # field without positions: phrase matches nothing
+            token_lists.append((dec, sp.tfs(key[0], key[1], shard), p))
+        return _phrase_hits(cand, token_lists, nd["slop"])
 
-    def neg_exclude(ids: np.ndarray, s: int, lo: int, hi: int) -> np.ndarray:
+    def _node_seg(nd, s: int, at=None):
+        """Evaluates one annotated node within segment s; the caller
+        must ensure ``nd["cov"][s]``. With ``at=None``: the node's
+        matching docids there (a term decodes docids only, so the count
+        pass decodes no tfs). With ``at`` (sorted docids that all match
+        the node): their scores. Float association is IDENTICAL to the
+        exhaustive evaluator at every level: conj = zeros + child
+        scores in child order (``Bool.must``); group = zeros + the
+        score of each matching child in child order (``Bool.should``);
+        BM25 is elementwise, so scoring only ``at`` changes no bit."""
+        kind = nd["kind"]
+        if kind == "term":
+            key = nd["keys"][0]
+            shard = int(nd["shard"][0][s])
+            if at is None:
+                dec, a_, b_ = _slice(key, shard, s)
+                return dec[a_:b_]
+            dec = sp.docids(key[0], key[1], shard)
+            tfs = sp.tfs(key[0], key[1], shard)[np.searchsorted(dec, at)]
+            return _bm25_scores(tfs, doc_len[at], nd["val"], avgdl, k1, b)
+        if kind == "phrase":
+            got = nd["memo"].get(s)
+            if got is None:
+                got = nd["memo"][s] = _phrase_match(nd, s)
+            ids, freqs = got
+            if at is None:
+                return ids
+            freqs = freqs[np.searchsorted(ids, at)]
+            return _bm25_scores(freqs, doc_len[at], nd["val"], avgdl, k1, b)
+        if kind == "boost":
+            got = _node_seg(nd["children"][0], s, at)
+            return got if at is None else got * nd["factor"]
+        if kind == "conj":
+            if at is None:
+                ids = _node_seg(nd["children"][0], s)
+                for c in nd["children"][1:]:
+                    if ids.size == 0:
+                        break
+                    ids = np.intersect1d(ids, _node_seg(c, s), assume_unique=True)
+                return ids
+            scores = np.zeros(at.size, dtype=np.float64)
+            for c in nd["children"]:
+                scores += _node_seg(c, s, at)
+            return scores
+        # group: children that do not cover s match nothing there; their
+        # matches are kept per segment for the scoring pass
+        kids = [c for c in nd["children"] if c["cov"][s]]
+        parts = nd["memo"].get(s)
+        if parts is None:
+            parts = nd["memo"][s] = [_node_seg(c, s) for c in kids]
+        if at is None:
+            ids = parts[0]
+            for c_ids in parts[1:]:
+                ids = np.union1d(ids, c_ids)
+            return ids
+        scores = np.zeros(at.size, dtype=np.float64)
+        for c, c_ids in zip(kids, parts):
+            if c_ids.size:
+                j = np.searchsorted(c_ids, at)
+                hit = c_ids[np.minimum(j, c_ids.size - 1)] == at
+                if hit.any():
+                    scores[hit] += _node_seg(c, s, at[hit])
+        return scores
+
+    root = _annotate(pos)
+    neg_nodes = [_annotate(n) for n in neg_shapes]
+    active_idx = np.flatnonzero(root["cov"])
+
+    def neg_exclude(ids: np.ndarray, s: int) -> np.ndarray:
+        lo, hi = int(seg_lo[s]), int(seg_hi[s])
         for key in negk:
             st = sp.stats.get(key)
             if st is None or ids.size == 0:
@@ -656,235 +613,42 @@ def _wand_bool(
                 break
             if not nn["cov"][s]:
                 continue  # negation can't match anything in this segment
-            mids, _ = _node_seg(nn, s, lo, hi)
+            mids = _node_seg(nn, s)
             if mids.size:
                 ids = ids[~np.isin(ids, mids, assume_unique=True)]
         return ids
 
-    def _term_slice(nd, s: int, lo: int, hi: int, with_tf: bool):
-        key = nd["keys"][0]
-        shard = int(sp.stats[key]["shard"][nd["tok_k"][0][s]])
-        dec = sp.docids(key[0], key[1], shard)
-        a_, b_ = np.searchsorted(dec, lo), np.searchsorted(dec, hi)
-        if not with_tf:
-            return dec[a_:b_], None
-        return dec[a_:b_], sp.tfs(key[0], key[1], shard)[a_:b_]
-
-    def _phrase_match(keys, tok_ks, slop, s: int, lo: int, hi: int):
-        """(matching docids, phrase freqs) of one phrase — standalone
-        member or conjunction child — within segment s; positions
-        decoded ONLY here, i.e. only for shards whose token
-        docid-intersection is non-empty."""
-        toks = []
-        cand = None
-        for key, kk in zip(keys, tok_ks):
-            shard = int(sp.stats[key]["shard"][kk[s]])
-            dec = sp.docids(key[0], key[1], shard)
-            a_, b_ = np.searchsorted(dec, lo), np.searchsorted(dec, hi)
-            sl = dec[a_:b_]
-            cand = sl if cand is None else np.intersect1d(
-                cand, sl, assume_unique=True
-            )
-            if cand.size == 0:
-                return empty
-            toks.append((key, shard, dec))
-        token_lists = []
-        for key, shard, dec in toks:
-            pos = sp.positions(key[0], key[1], shard)
-            if pos is None:
-                return empty  # field without positions: phrase matches nothing
-            token_lists.append((dec, sp.tfs(key[0], key[1], shard), pos))
-        return _phrase_hits(cand, token_lists, slop)
-
-    def _node_seg(nd, s: int, lo: int, hi: int):
-        """(matching docids, scores) of one annotated node within
-        segment s; the caller must ensure ``nd["cov"][s]``. Float
-        association is IDENTICAL to the exhaustive evaluator at every
-        level: conj = zeros + child scores gathered at the intersection
-        in child order (``Bool.must``); group = zeros + child scores
-        scatter-added at the union in child order (``Bool.should``);
-        uncovered/empty children of a group contribute nothing exactly
-        like their empty exhaustive eval."""
-        kind = nd["kind"]
-        if kind == "term":
-            key = nd["keys"][0]
-            shard = int(sp.stats[key]["shard"][nd["tok_k"][0][s]])
-            dec = sp.docids(key[0], key[1], shard)
-            a_, b_ = np.searchsorted(dec, lo), np.searchsorted(dec, hi)
-            ids = dec[a_:b_]
-            if ids.size == 0:
-                return empty
-            tfs = sp.tfs(key[0], key[1], shard)[a_:b_]
-            return ids, _bm25_scores(tfs, doc_len[ids], nd["val"], avgdl, k1, b)
-        if kind == "phrase":
-            ids, freqs = _phrase_match(
-                nd["keys"], nd["tok_k"], nd["slop"], s, lo, hi
-            )
-            if ids.size == 0:
-                return empty
-            return ids, _bm25_scores(freqs, doc_len[ids], nd["val"], avgdl, k1, b)
-        if kind == "boost":
-            ids, sc = _node_seg(nd["children"][0], s, lo, hi)
-            return ids, sc * nd["factor"]
-        if kind == "conj":
-            parts = []
-            cand = None
-            for c in nd["children"]:
-                ids_c, sc_c = _node_seg(c, s, lo, hi)
-                parts.append((ids_c, sc_c))
-                cand = ids_c if cand is None else np.intersect1d(
-                    cand, ids_c, assume_unique=True
-                )
-                if cand.size == 0:
-                    return empty
-            scores = np.zeros(cand.size, dtype=np.float64)
-            for p_ids, p_sc in parts:
-                scores += p_sc[np.searchsorted(p_ids, cand)]
-            return cand, scores
-        # group
-        parts = []
-        for c in nd["children"]:
-            if not c["cov"][s]:
-                continue
-            ids_c, sc_c = _node_seg(c, s, lo, hi)
-            if ids_c.size:
-                parts.append((ids_c, sc_c))
-        if not parts:
-            return empty
-        g_ids = parts[0][0]
-        for p_ids, _ in parts[1:]:
-            g_ids = np.union1d(g_ids, p_ids)
-        g_sc = np.zeros(g_ids.size, dtype=np.float64)
-        for p_ids, p_sc in parts:
-            g_sc[np.searchsorted(g_ids, p_ids)] += p_sc
-        return g_ids, g_sc
-
-    pcache: dict[tuple[int, int], tuple] = {}
-
-    def member_ids(mi: int, s: int):
-        """Matching docids of member mi within segment s; None when the
-        member has no covering shard there."""
-        m_ = memb[mi]
-        if not m_["cov"][s]:
-            return None
-        lo, hi = int(seg_lo[s]), int(seg_hi[s])
-        if m_["kind"] == "term":
-            return _term_slice(m_["node"], s, lo, hi, with_tf=False)[0]
-        got = pcache.get((mi, s))
-        if got is None:
-            got = _node_seg(m_["node"], s, lo, hi)
-            pcache[(mi, s)] = got
-        return got[0]
-
-    def seg_candidates(s: int) -> np.ndarray:
-        lo, hi = int(seg_lo[s]), int(seg_hi[s])
-        ids = None
-        for gi in range(n_groups):
-            g_ids = None
-            for mi in range(len(memb)):
-                if memb[mi]["g"] != gi:
-                    continue
-                sl = member_ids(mi, s)
-                if sl is None:
-                    continue
-                g_ids = sl if g_ids is None else np.union1d(g_ids, sl)
-            if g_ids is None:
-                return np.empty(0, np.int64)
-            ids = g_ids if ids is None else np.intersect1d(
-                ids, g_ids, assume_unique=True
-            )
-            if ids.size == 0:
-                return ids
-        return neg_exclude(
-            ids if ids is not None else np.empty(0, np.int64), s, lo, hi
-        )
-
     # ---- exact num_hits ------------------------------------------------
-    cand_cache: dict[int, np.ndarray] = {}
-    single_uncounted = (
-        n_groups == 1 and len(memb) == 1
-        and memb[0]["kind"] == "term" and not negk and not neg_nodes
-    )
-    if single_uncounted:
-        num_hits = int(sp.stats[memb[0]["node"]["keys"][0]]["df"].sum())
+    # per segment, the matches that survive the negations
+    cand: dict[int, np.ndarray] = {}
+    if root["kind"] == "term" and not negk and not neg_nodes:
+        st = sp.stats.get(root["keys"][0])
+        num_hits = 0 if st is None else int(st["df"].sum())
     else:
-        num_hits = 0
-        for s in active_idx:
-            ids = seg_candidates(int(s))
-            cand_cache[int(s)] = ids
-            num_hits += ids.size
+        for s in active_idx.tolist():
+            cand[s] = neg_exclude(_node_seg(root, s), s)
+        num_hits = sum(ids.size for ids in cand.values())
 
     # ---- UB-ordered pruned scoring ------------------------------------
+    ub_seg = root["ub"]
     order = active_idx[np.argsort(-ub_seg[active_idx], kind="stable")]
-    best_ids = np.empty(0, np.int64)
-    best_scores = np.empty(0, np.float64)
+    best_ids, best_scores = empty
     theta = -math.inf
-    for s in order:
-        s = int(s)
+    for s in order.tolist():
         if best_ids.size >= m and ub_seg[s] < theta:
             break  # sound: bounds visited in descending order
-        ids = cand_cache.get(s)
-        if ids is None:
-            ids = seg_candidates(s)
+        ids = cand[s] if s in cand else _node_seg(root, s)
         if ids.size == 0:
             continue
-        lo, hi = int(seg_lo[s]), int(seg_hi[s])
-        # per-group partial sums added group-by-group: the SAME float
-        # association as the exhaustive evaluator (Bool.must sums its
-        # children's score arrays), so scores are bit-identical
-        scores = np.zeros(ids.size, dtype=np.float64)
-        for gi in range(n_groups):
-            g_members = [mi for mi in range(len(memb)) if memb[mi]["g"] == gi]
-            single = len(g_members) == 1
-            g_scores = scores if single else np.zeros(ids.size, dtype=np.float64)
-            for mi in g_members:
-                m_ = memb[mi]
-                sl_ids = member_ids(mi, s)
-                if sl_ids is None:
-                    continue
-                if m_["kind"] == "term":
-                    _, sl_tf = _term_slice(m_["node"], s, lo, hi, with_tf=True)
-                    idf_t = m_["node"]["val"]
-                    if single:
-                        # candidates ⊆ the member's slice (candidates
-                        # were intersected with this very slice)
-                        idx = np.searchsorted(sl_ids, ids)
-                        g_scores += _bm25_scores(
-                            sl_tf[idx], doc_len[ids], idf_t, avgdl, k1, b
-                        )
-                    else:
-                        common, ci, si = np.intersect1d(
-                            ids, sl_ids, assume_unique=True, return_indices=True
-                        )
-                        if common.size:
-                            g_scores[ci] += _bm25_scores(
-                                sl_tf[si], doc_len[common], idf_t,
-                                avgdl, k1, b,
-                            )
-                else:
-                    # phrase/conj/group member: _node_seg already
-                    # produced (ids, scores) with the exhaustive float
-                    # association; gather at the candidates
-                    c_ids, c_scores = pcache[(mi, s)]
-                    if single:
-                        # candidates ⊆ the member's matching ids
-                        idx = np.searchsorted(c_ids, ids)
-                        g_scores += c_scores[idx]
-                    else:
-                        common, ci, si = np.intersect1d(
-                            ids, c_ids, assume_unique=True, return_indices=True
-                        )
-                        if common.size:
-                            g_scores[ci] += c_scores[si]
-            if not single:
-                scores += g_scores
         best_ids = np.concatenate([best_ids, ids])
-        best_scores = np.concatenate([best_scores, scores])
+        best_scores = np.concatenate([best_scores, _node_seg(root, s, ids)])
         best_ids, best_scores = _top_m(best_ids, best_scores, m)
         if best_ids.size >= m:
             theta = best_scores[-1]
     skips = {
-        "shards": n_pos_shards,
+        "shards": sum(
+            sp.stats[k]["first"].size for k in pos_keys & sp.stats.keys()
+        ),
         "docid_decoded": sp.n_docid_decoded,
         "tf_decoded": sp.n_tf_decoded,
         "pos_decoded": sp.n_pos_decoded,
@@ -1054,7 +818,6 @@ def _eval_split_partial(
     sort_by,
     sort_desc,
     aggs: dict | None,
-    wand: bool = True,
     fetch_payload: bool = True,
     cache=None,
 ) -> list[dict]:
@@ -1066,9 +829,6 @@ def _eval_split_partial(
     fetch leaf-side for data locality on a real cluster). ``cache``:
     the decoded row-group LRU the postings reads go through (driver
     mode passes ``Searcher._blocks``; Spark-mode kernels read uncached)."""
-    from quickwit_spark.operators.build import limit_worker_threads
-
-    limit_worker_threads()
     dpath = fsio.join(split_dir, DOCS_FILE)
     fast_cols = ["doc_len", "ts_us"]
     if sort_by and sort_by not in ("ts", "ts_us") and sort_by not in fast_cols:
@@ -1098,7 +858,7 @@ def _eval_split_partial(
 
     # block-max WAND fast path: flat term-boolean relevance top-k with
     # no residual filters — prune segments by score upper bound
-    wplan = _wand_plan(ast) if wand else None
+    wplan = _wand_plan(ast)
     use_wand = (
         wplan is not None
         and sort_by is None
@@ -1108,9 +868,8 @@ def _eval_split_partial(
         and m > 0
     )
     if use_wand:
-        w_groups, w_neg = wplan
         ids, scores, num_hits, _skips = _wand_bool(
-            split_dir, w_groups, w_neg,
+            split_dir, *wplan,
             doc_len.astype(np.float64), stats, config, m, cache,
         )
         return _hit_rows(
@@ -1738,7 +1497,6 @@ class Searcher:
         sort_by: str | None = None,
         sort_desc: bool = True,
         aggs: dict | None = None,
-        wand: bool = True,
         mode: str = "auto",
         search_fields: list | None = None,
     ) -> SearchResponse:
@@ -1751,7 +1509,7 @@ class Searcher:
         aggs = _normalize_aggs(aggs)
         pdf, errors = self.search_partials(
             query, k, offset, start_us, end_us, sort_by, sort_desc, aggs,
-            wand, mode, search_fields,
+            mode, search_fields,
         )
         resp = merge_partials(pdf, k, offset, sort_by, aggs)
         resp.errors = errors
@@ -1807,7 +1565,7 @@ class Searcher:
 
     def search_partials(
         self, query, k, offset=0, start_us=None, end_us=None,
-        sort_by=None, sort_desc=True, aggs=None, wand=True,
+        sort_by=None, sort_desc=True, aggs=None,
         mode: str = "auto", search_fields=None,
     ) -> tuple[pd.DataFrame, list]:
         """Run the leaf phase; returns (partial rows, per-split errors).
@@ -1868,7 +1626,7 @@ class Searcher:
                         hit_rows += _eval_split_partial(
                             split_id, split_dir, ast, stats, config, m,
                             start_us, end_us, sort_by, sort_desc, aggs,
-                            wand, fetch_payload=False, cache=self._blocks,
+                            fetch_payload=False, cache=self._blocks,
                         )
                         break
                     except Exception as exc:  # noqa: BLE001 - reported
@@ -1891,11 +1649,12 @@ class Searcher:
         )
 
         def kernel(iterator):
+            limit_worker_threads()
             for pdf in iterator:
                 for split_id, path in zip(pdf["split_id"], pdf["path"]):
                     yield pd.DataFrame(_eval_split_partial(
                         split_id, path, ast, stats, config, m,
-                        start_us, end_us, sort_by, sort_desc, aggs, wand,
+                        start_us, end_us, sort_by, sort_desc, aggs,
                     ), columns=_HIT_COLS)
 
         out = sdf.mapInPandas(kernel, schema=HIT_SCHEMA)
@@ -2227,6 +1986,7 @@ def stream_fast_field(
     )
 
     def kernel(iterator):
+        limit_worker_threads()
         for pdf in iterator:
             for split_id, path in zip(pdf["split_id"], pdf["path"]):
                 dpath = fsio.join(path, DOCS_FILE)

@@ -39,6 +39,7 @@ import os
 import pandas as pd
 
 from quickwit_spark.functions import fs as fsio
+from quickwit_spark.functions.lru import LRU
 from quickwit_spark.operators.build import POSTINGS_FILE
 from quickwit_spark.plans.catalog import Catalog
 
@@ -56,7 +57,7 @@ _MANIFEST = "_MANIFEST.json"
 # published-set version hash and IMMUTABLE once its manifest commits
 # (same invariant that justifies parquet_file_cached); bounded small —
 # one entry per live stats version.
-_MANIFEST_CACHE: dict[str, dict] = {}
+_MANIFEST_CACHE = LRU(lambda: 32)
 
 
 def _shard_dir(out_path: str) -> str:
@@ -87,7 +88,7 @@ def _load_manifest(shard_dir: str) -> dict | None:
     must read as missing so refresh rewrites it."""
     mpath = fsio.join(shard_dir, _MANIFEST)
     if not fsio.exists(mpath):
-        _MANIFEST_CACHE.pop(mpath, None)
+        _MANIFEST_CACHE.retain(lambda k: k != mpath)
         return None
     cached = _MANIFEST_CACHE.get(mpath)
     if cached is not None:
@@ -98,10 +99,7 @@ def _load_manifest(shard_dir: str) -> dict | None:
         assert isinstance(parts, list)
     except Exception:
         return None
-    if len(_MANIFEST_CACHE) > 32:
-        _MANIFEST_CACHE.clear()
-    _MANIFEST_CACHE[mpath] = manifest
-    return manifest
+    return _MANIFEST_CACHE.put(mpath, manifest, 1)
 
 
 def _stats_exists(out_path: str) -> bool:
@@ -340,7 +338,8 @@ def lookup_term_stats(
             # a cached manifest whose parts vanished (stats dir moved
             # or GC'd out from under this process) must degrade to the
             # distributed fallback, never crash the query path
-            _MANIFEST_CACHE.pop(fsio.join(_shard_dir(path), _MANIFEST), None)
+            mpath = fsio.join(_shard_dir(path), _MANIFEST)
+            _MANIFEST_CACHE.retain(lambda k: k != mpath)
             return None
     found: dict[tuple[str, str], int] = {}
     for tbl in tables:

@@ -60,6 +60,22 @@ def searcher(spark, index_dir):
     return Searcher(spark, index_dir)
 
 
+@pytest.fixture
+def exhaustive(monkeypatch):
+    """``exhaustive(fn, *args, **kwargs)`` calls ``fn`` with block-max
+    WAND off: with no WAND plan every leaf runs the exhaustive
+    evaluator. The patch reaches driver-mode leaves only, not Spark
+    workers."""
+    from quickwit_spark.operators import search
+
+    def run(fn, *args, **kwargs):
+        with monkeypatch.context() as m:
+            m.setattr(search, "_wand_plan", lambda ast: None)
+            return fn(*args, **kwargs)
+
+    return run
+
+
 def assert_rank_identical(oracle_result, resp, check_scores=True):
     n_o, hits_o = oracle_result
     assert resp.num_hits == n_o

@@ -280,6 +280,29 @@ def test_small_file_build_starts_no_spark_job(spark, corpus, config, tmp_path):
     assert jobs("spark-build-test", sdf, "spark")
 
 
+def test_driver_work_keeps_arrow_thread_pools(spark, corpus, config, tmp_path):
+    """The worker thread cap belongs to Spark task closures: a driver
+    build and a driver-mode search leave the process's Arrow pools as
+    they found them."""
+    from quickwit_spark.operators.build import build_index
+    from quickwit_spark.operators.search import Searcher
+
+    before = pa.cpu_count(), pa.io_thread_count()
+    pa.set_cpu_count(4)
+    pa.set_io_thread_count(8)
+    try:
+        src = _write_source(corpus[:300], tmp_path / "src.parquet")
+        idx = str(tmp_path / "idx")
+        build_index(spark, src, idx, config, n_splits=2)
+        assert (pa.cpu_count(), pa.io_thread_count()) == (4, 8)
+        resp = Searcher(spark, idx).search("w00001", k=5, mode="driver")
+        assert resp.num_hits > 0
+        assert (pa.cpu_count(), pa.io_thread_count()) == (4, 8)
+    finally:
+        pa.set_cpu_count(before[0])
+        pa.set_io_thread_count(before[1])
+
+
 def test_driver_build_rejects_null_routing_value(spark, corpus, config, tmp_path):
     """A NULL routing value fails the driver build before any split is
     written or published (the Spark build fails on it too)."""

@@ -158,7 +158,7 @@ class TestMockE2E:
         with pytest.raises(ValueError, match="no split"):
             mock_index.extract_split("nope", str(tmp_path / "ex2"))
 
-    def test_demux_on_mock(self, spark, corpus, mock_backing):
+    def test_demux_on_mock(self, spark, corpus, mock_backing, exhaustive):
         from quickwit_spark.operators.demux import demux_splits
         from quickwit_spark.plans.catalog import Catalog
 
@@ -175,9 +175,11 @@ class TestMockE2E:
         assert new and sum(s.num_docs for s in new) == 400
         assert all(s.tag_has_null is not None for s in new)
         n = idx.search("w00001", k=5).num_hits
-        assert n == idx.search("w00001", k=5, wand=False).num_hits
+        assert n == exhaustive(idx.search, "w00001", k=5).num_hits
 
-    def test_manifest_catalog_on_mock(self, spark, corpus, mock_backing):
+    def test_manifest_catalog_on_mock(
+        self, spark, corpus, mock_backing, exhaustive
+    ):
         """The append-log catalog routed through the FileSystem layer —
         the object-store deployment shape (manifest log + URI split
         I/O) end-to-end."""
@@ -192,7 +194,7 @@ class TestMockE2E:
             os.path.join(mock_backing, "manifest_idx", "manifests", "head.json")
         )
         r = idx.search("w00001", k=5)
-        assert r.num_hits == idx.search("w00001", k=5, wand=False).num_hits
+        assert r.num_hits == exhaustive(idx.search, "w00001", k=5).num_hits
         n = idx.merge()
         assert n >= 1
         idx.gc()

@@ -105,8 +105,10 @@ class TestWand:
         build_index(spark, spark.createDataFrame(corpus), d, cfg, n_splits=4)
         return d
 
-    def test_wand_equals_exhaustive_full_battery(self, spark, sharded_index):
-        """wand=True must be result-identical to wand=False over the
+    def test_wand_equals_exhaustive_full_battery(
+        self, spark, sharded_index, exhaustive
+    ):
+        """WAND must be result-identical to the exhaustive evaluator over the
         whole F7 query battery (head/torso/tail terms, AND/OR/NOT,
         field-scoped, phrases, nested bools) — pruning may only skip
         work, never change the answer."""
@@ -115,8 +117,8 @@ class TestWand:
 
         se = Searcher(spark, sharded_index)
         for q in QUERIES:
-            a = se.search(q, k=10, wand=True)
-            b = se.search(q, k=10, wand=False)
+            a = se.search(q, k=10)
+            b = exhaustive(se.search, q, k=10)
             assert a.num_hits == b.num_hits, q
             assert [(h.split_id, h.docid, h.score) for h in a.hits] == [
                 (h.split_id, h.docid, h.score) for h in b.hits
@@ -126,10 +128,10 @@ class TestWand:
         "query", ['"w00001 hotterm"~20', '"w00001 w00002"', '"w00002 hotterm"~20']
     )
     def test_sharded_phrase_exhaustive_matches_oracle(
-        self, spark, corpus, oracle, sharded_index, query
+        self, spark, corpus, oracle, sharded_index, query, exhaustive
     ):
         """Phrases over salted (multi-shard) postings on the exhaustive
-        path, which sort_by, time bounds and wand=False force, against
+        path, which sort_by, time bounds and a disabled WAND force, against
         the oracle: it reads no postings, so it pins the order in which
         the leaf concatenates a term's shards and their positions.
         Salting changes only the storage, so the session oracle
@@ -140,16 +142,15 @@ class TestWand:
         lo, hi = (int(np.quantile(ts_us, f)) for f in (0.2, 0.8))
         se = Searcher(spark, sharded_index)
         for kw in (
-            dict(k=10, wand=False),
+            dict(k=10),
             dict(k=10, sort_by="ts"),
             dict(k=10, sort_by="ts", sort_desc=False),
             dict(k=10, start_us=lo, end_us=hi),
             dict(k=10, sort_by="ts", start_us=lo, end_us=hi),
         ):
-            resp = se.search(query, **kw)
+            resp = exhaustive(se.search, query, **kw)
             assert resp.num_hits > 0, (query, kw)
-            oracle_kw = {k: v for k, v in kw.items() if k != "wand"}
-            assert_rank_identical(oracle.search(query, **oracle_kw), resp)
+            assert_rank_identical(oracle.search(query, **kw), resp)
 
     @staticmethod
     def _split_env(sharded_index, terms):
@@ -186,7 +187,7 @@ class TestWand:
         )
         t = Term("text", "hotterm")
         ids, scores, num_hits, sk = _wand_bool(
-            sd, [[t]], [], doc_len, stats, cat.config, 5
+            sd, t, [], doc_len, stats, cat.config, 5
         )
         assert sk["shards"] > 2
         assert sk["tf_decoded"] < sk["shards"]      # pruning engaged
@@ -194,7 +195,7 @@ class TestWand:
         assert len(ids) == 5 and num_hits > 5
         # exhaustive check within the split
         ids_all, scores_all, n_all, _ = _wand_bool(
-            sd, [[t]], [], doc_len, stats, cat.config, 10_000
+            sd, t, [], doc_len, stats, cat.config, 10_000
         )
         assert n_all == num_hits == len(ids_all)
         order = np.lexsort((ids_all, -scores_all))
@@ -205,7 +206,7 @@ class TestWand:
         docid ranges are segments that cannot match the conjunction —
         they are skipped without any decode."""
         from quickwit_spark.operators.search import _wand_bool
-        from quickwit_spark.plans.query import Term
+        from quickwit_spark.plans.query import Bool, Term
 
         import pyarrow.parquet as pq
 
@@ -224,7 +225,7 @@ class TestWand:
         cat, sd, doc_len, stats = self._split_env(sharded_index, keys)
         musts = [Term(f, v) for f, v in keys]
         ids, scores, num_hits, sk = _wand_bool(
-            sd, [[t] for t in musts], [], doc_len, stats, cat.config, 5
+            sd, Bool(must=tuple(musts)), [], doc_len, stats, cat.config, 5
         )
         assert sk["shards"] > 3
         # the rare term spans few docid ranges: most hot shards skipped
@@ -240,7 +241,7 @@ class TestWand:
         from quickwit_spark.functions.tokenize import tokenize_default
         from quickwit_spark.operators.build import build_split_tables_arrow, write_split
         from quickwit_spark.operators.search import _wand_bool
-        from quickwit_spark.plans.query import Term
+        from quickwit_spark.plans.query import Bool, Term
         from quickwit_spark.sources.transcripts import fixture_corpus
 
         import numpy as np
@@ -264,9 +265,11 @@ class TestWand:
             "avgdl": meta["sum_doc_len"] / meta["num_docs"],
             "df": {("text", "common"): df_common, ("text", "x000w000"): 1},
         }
-        shoulds = [Term("text", "common"), Term("text", "x000w000")]
+        shoulds = Bool(
+            should=(Term("text", "common"), Term("text", "x000w000"))
+        )
         ids, scores, num_hits, sk = _wand_bool(
-            sd, [shoulds], [], doc_len, stats, cfg, 3
+            sd, shoulds, [], doc_len, stats, cfg, 3
         )
         assert num_hits == 100
         assert len(ids) == 3
@@ -274,7 +277,7 @@ class TestWand:
         assert sk["tf_decoded"] < sk["shards"]      # scoring pruned
         # exact equality with the unpruned evaluation
         ids_all, scores_all, n_all, _ = _wand_bool(
-            sd, [shoulds], [], doc_len, stats, cfg, 10_000
+            sd, shoulds, [], doc_len, stats, cfg, 10_000
         )
         assert n_all == 100
         order = np.lexsort((ids_all, -scores_all))
@@ -319,15 +322,15 @@ class TestWand:
             },
         }
         conj = Bool(must=(Term("text", "x000w000"), Term("text", "x001w000")))
-        shoulds = [Term("text", "common"), conj]
+        shoulds = Bool(should=(Term("text", "common"), conj))
         ids, scores, num_hits, sk = _wand_bool(
-            sd, [shoulds], [], doc_len, stats, cfg, 3
+            sd, shoulds, [], doc_len, stats, cfg, 3
         )
         assert num_hits == 100
         assert len(ids) == 3
         assert sk["tf_decoded"] < sk["shards"]  # scoring still pruned
         ids_all, scores_all, n_all, _ = _wand_bool(
-            sd, [shoulds], [], doc_len, stats, cfg, 10_000
+            sd, shoulds, [], doc_len, stats, cfg, 10_000
         )
         assert n_all == 100
         order = np.lexsort((ids_all, -scores_all))
@@ -336,7 +339,7 @@ class TestWand:
         # single-member-group path: the conj alone matches exactly the
         # one weak doc holding both rare terms
         conj_ids, conj_scores, conj_n, _ = _wand_bool(
-            sd, [[conj]], [], doc_len, stats, cfg, 10
+            sd, conj, [], doc_len, stats, cfg, 10
         )
         assert conj_n == 1 and len(conj_ids) == 1
         # the conj member's single matching doc carries BOTH rare-term
@@ -344,10 +347,67 @@ class TestWand:
         doc0 = conj_ids[0]
         s0 = scores_all[ids_all == doc0]
         only_common = _wand_bool(
-            sd, [[Term("text", "common")]], [], doc_len, stats, cfg, 10_000
+            sd, Term("text", "common"), [], doc_len, stats, cfg, 10_000
         )
         oc = only_common[1][only_common[0] == doc0]
         assert s0.size == 1 and oc.size == 1 and s0[0] > oc[0]
+
+    def test_wand_count_decodes_no_conj_tfs(self, tmp_path):
+        """``common OR (hota AND hotb)`` with k=3: the exact count needs
+        docids only, so tfs are decoded only where the scoring pass
+        goes — the strong ``common`` shard — and not in the hot
+        conjunction's shards (a count pass that scored every non-term
+        member decoded tfs in all 17 shards)."""
+        from quickwit_spark.config import IndexConfig
+        from quickwit_spark.functions.tokenize import tokenize_default
+        from quickwit_spark.operators.build import build_split_tables_arrow, write_split
+        from quickwit_spark.operators.search import (
+            _ShardPostings,
+            _SplitEval,
+            _top_m,
+            _wand_bool,
+            query_terms,
+        )
+        from quickwit_spark.plans.query import Bool, Term
+        from quickwit_spark.sources.transcripts import fixture_corpus
+
+        strong = [("common common common",)] * 8
+        hot = [
+            ("hota hotb " + " ".join(f"x{j:03d}h{i:03d}" for j in range(30)),)
+            for i in range(60)
+        ]
+        filler = [(f"filler{i:03d} pad{i:03d}",) for i in range(92)]
+        pdf = fixture_corpus(strong + hot + filler)
+        cfg = IndexConfig(hot_term_doc_freq=10, salt_docid_range=8)
+        postings, docs, meta = build_split_tables_arrow(
+            pa.Table.from_pandas(pdf, preserve_index=False), cfg
+        )
+        sd = str(tmp_path / "countconj")
+        write_split(postings, docs, sd)
+        doc_len = docs["doc_len"].to_numpy().astype(np.float64)
+        stats = {
+            "N": meta["num_docs"],
+            "avgdl": meta["sum_doc_len"] / meta["num_docs"],
+            "df": {
+                ("text", w): sum(w in tokenize_default(t) for t in pdf["text"])
+                for w in ("common", "hota", "hotb")
+            },
+        }
+        q = Bool(should=(
+            Term("text", "common"),
+            Bool(must=(Term("text", "hota"), Term("text", "hotb"))),
+        ))
+        ids, scores, num_hits, sk = _wand_bool(sd, q, [], doc_len, stats, cfg, 3)
+        assert num_hits == 68 and len(ids) == 3
+        assert sk["shards"] == 17
+        assert sk["docid_decoded"] == sk["shards"]  # exact union count
+        assert sk["tf_decoded"] < sk["shards"]
+        postings_r = _ShardPostings(sd, query_terms(q))
+        e_ids, e_scores = _top_m(
+            *_SplitEval(postings_r, doc_len, stats, cfg).eval(q), 3
+        )
+        np.testing.assert_array_equal(ids, e_ids)
+        np.testing.assert_array_equal(scores, e_scores)
 
     def test_wand_phrase_conjunction_skips_positions(self, tmp_path):
         """rare AND "common common": segments outside the rare term's
@@ -360,7 +420,7 @@ class TestWand:
         from quickwit_spark.functions.tokenize import tokenize_default
         from quickwit_spark.operators.build import build_split_tables_arrow, write_split
         from quickwit_spark.operators.search import _wand_bool
-        from quickwit_spark.plans.query import Phrase, Term
+        from quickwit_spark.plans.query import Bool, Phrase, Term
         from quickwit_spark.sources.transcripts import fixture_corpus
 
         docs = [("common common rareone",)] + [
@@ -385,17 +445,61 @@ class TestWand:
         ph = Phrase("text", ("common", "common"))
         rare = Term("text", "rareone")
         ids, scores, num_hits, sk = _wand_bool(
-            sd, [[rare], [ph]], [], doc_len, stats, cfg, 5
+            sd, Bool(must=(rare, ph)), [], doc_len, stats, cfg, 5
         )
         assert num_hits == 1 and len(ids) == 1
         assert sk["shards"] > 10           # the hot token is sharded
         assert sk["pos_decoded"] <= 2      # only the rare doc's shard
         # and the phrase alone (all segments active) is still exact
         ids_all, scores_all, n_all, sk_all = _wand_bool(
-            sd, [[ph]], [], doc_len, stats, cfg, 10_000
+            sd, ph, [], doc_len, stats, cfg, 10_000
         )
         assert n_all == 100 == len(ids_all)
         assert sk_all["pos_decoded"] >= 10  # honest: unpruned = decode all
+
+    def test_wand_sloppy_phrase_bound(self, tmp_path):
+        """``"hot warm"~1`` matches ``hot hot warm`` at both ``hot``
+        anchors (freq 2) though ``warm`` occurs once: a sloppy phrase's
+        freq is bounded by its first token's max_tf, not by the minimum
+        over its tokens, or the segment holding that doc (here its own
+        ``hot`` shard) is pruned from the top-1."""
+        from quickwit_spark.config import IndexConfig
+        from quickwit_spark.operators.build import build_split_tables_arrow, write_split
+        from quickwit_spark.operators.search import (
+            _ShardPostings,
+            _SplitEval,
+            _top_m,
+            _wand_bool,
+        )
+        from quickwit_spark.plans.query import Bool, Phrase, Term
+        from quickwit_spark.sources.transcripts import fixture_corpus
+
+        docs = [("hot",)] * 15 + [("warm",)] * 3 + [
+            ("hot warm",), ("hot hot warm",)
+        ]
+        pdf = fixture_corpus(docs)
+        cfg = IndexConfig(hot_term_doc_freq=5, salt_docid_range=8)
+        postings, dstore, meta = build_split_tables_arrow(
+            pa.Table.from_pandas(pdf, preserve_index=False), cfg
+        )
+        sd = str(tmp_path / "sloppy")
+        write_split(postings, dstore, sd)
+        doc_len = dstore["doc_len"].to_numpy().astype(np.float64)
+        stats = {
+            "N": meta["num_docs"],
+            "avgdl": meta["sum_doc_len"] / meta["num_docs"],
+            "df": {("text", "hot"): 17, ("text", "warm"): 5},
+        }
+        ph = Phrase("text", ("hot", "warm"), 1)
+        reader = _ShardPostings(sd, [("text", "hot"), ("text", "warm")])
+        for q in (ph, Bool(must=(Term("text", "hot"), ph))):
+            ids, scores, num_hits, _ = _wand_bool(sd, q, [], doc_len, stats, cfg, 1)
+            e_ids, e_scores = _top_m(
+                *_SplitEval(reader, doc_len, stats, cfg).eval(q), 1
+            )
+            assert num_hits == 2 and ids.tolist() == [19], q
+            np.testing.assert_array_equal(ids, e_ids)
+            np.testing.assert_array_equal(scores, e_scores)
 
     def test_wand_nested_group_and_neg_phrase_skip(self, tmp_path):
         """Round-3 shapes actually prune: a disjunction of hot terms
@@ -434,7 +538,7 @@ class TestWand:
             Term("text", "rareone"),
         ))
         ids, scores, num_hits, sk = _wand_bool(
-            sd, [[conj, Term("text", "raretwo")]], [],
+            sd, Bool(should=(conj, Term("text", "raretwo"))), [],
             doc_len, stats, cfg, 5,
         )
         assert num_hits == 2 and len(ids) == 2
@@ -443,7 +547,7 @@ class TestWand:
         # rareone -"hota hotb": the neg phrase is only position-decoded
         # in rareone's segment (1 shard per token), not corpus-wide
         ids2, _sc2, n2, sk2 = _wand_bool(
-            sd, [[Term("text", "rareone")]],
+            sd, Term("text", "rareone"),
             [Phrase("text", ("hota", "hotb"))],
             doc_len, stats, cfg, 5,
         )
@@ -451,7 +555,7 @@ class TestWand:
         assert sk2["pos_decoded"] <= 2
         # and a rare doc WITHOUT the phrase survives the negation
         ids3, _sc3, n3, _sk3 = _wand_bool(
-            sd, [[Term("text", "raretwo")]],
+            sd, Term("text", "raretwo"),
             [Phrase("text", ("hota", "hotb"))],
             doc_len, stats, cfg, 5,
         )
@@ -1031,68 +1135,47 @@ def test_global_df_cold_path_term_range_pruned(spark, index_dir, searcher):
 
 
 def test_wand_plan_covers_nested_should_groups(searcher):
-    """Conjunctions of term/phrase-disjunction groups (incl. the
-    multifield expansion) are WAND-able; deeper nesting falls back."""
+    """Any pure positive AND/OR tree of terms and phrases (incl. the
+    multifield expansion) is WAND-able as the query's own tree; the
+    negations are split off; pure negation falls back."""
     from quickwit_spark.operators.search import _wand_plan
-    from quickwit_spark.plans.query import parse_query
+    from quickwit_spark.plans.query import Bool, Term, parse_query
 
     cfg = searcher.config
-    plan = _wand_plan(parse_query("(w00000 OR w00050) AND (w00001 OR w00120)", cfg))
-    assert plan is not None
-    groups, negs = plan
-    assert [len(g) for g in groups] == [2, 2] and negs == []
-    # multifield expansion: (text:en OR role:en) AND (text:w1 OR role:w1)
-    plan = _wand_plan(
+    for q, fields in [
+        ("(w00000 OR w00050) AND (w00001 OR w00120)", None),
+        # multifield expansion: (text:en OR role:en) AND (text:w1 OR role:w1)
+        ("en AND w00001", ["text", "role"]),
+        ('"w00001 w00002"', None),
+        ('w00000 AND "w00001 w00002"', None),
+        ("w00050 OR (w00001 AND w00120)", None),
+        ("(w00000 AND w00050) OR (w00001 AND w00200)", None),
+        ('(w00000 AND "w00001 w00002") OR w00050', None),
+        ("((w00000 OR w00004) AND w00001) OR w00050", None),
+        ("((w00000 OR (w00002 AND w00003)) AND w00001) OR w00050", None),
+    ]:
+        ast = parse_query(q, cfg, search_fields=fields)
+        assert _wand_plan(ast) == (ast, []), q
+    pos, _ = _wand_plan(
         parse_query("en AND w00001", cfg, search_fields=["text", "role"])
     )
-    assert plan is not None and [len(g) for g in plan[0]] == [2, 2]
-    # phrases are WAND-able members (two-phase pruning); deeper
-    # nesting still falls back
-    plan = _wand_plan(parse_query('"w00001 w00002"', cfg))
-    assert plan is not None and [len(g) for g in plan[0]] == [1]
-    plan = _wand_plan(parse_query('w00000 AND "w00001 w00002"', cfg))
-    assert plan is not None and [len(g) for g in plan[0]] == [1, 1]
-    # conjunction-of-terms members inside a disjunction are WAND-able
-    plan = _wand_plan(parse_query("w00050 OR (w00001 AND w00120)", cfg))
-    assert plan is not None and [len(g) for g in plan[0]] == [2]
-    plan = _wand_plan(
-        parse_query("(w00000 AND w00050) OR (w00001 AND w00200)", cfg)
-    )
-    assert plan is not None and [len(g) for g in plan[0]] == [2]
-    # conj members may contain phrases (round 3)
-    plan = _wand_plan(parse_query('(w00000 AND "w00001 w00002") OR w00050', cfg))
-    assert plan is not None and [len(g) for g in plan[0]] == [2]
-    kinds = [
-        type(m).__name__ for m in plan[0][0]
-    ]
-    assert sorted(kinds) == ["Bool", "Term"]
-    # a disjunction inside a conj member is WAND-able (round 3)
-    plan = _wand_plan(
-        parse_query("((w00000 OR w00004) AND w00001) OR w00050", cfg)
-    )
-    assert plan is not None and [len(g) for g in plan[0]] == [2]
-    # negated phrases are WAND-able (round 3)
-    plan = _wand_plan(parse_query('w00000 -"w00001 w00002"', cfg))
-    assert plan is not None and len(plan[1]) == 1
-    # arbitrary-depth positive nesting is WAND-able (round 3, recursive
-    # node evaluator)
-    plan = _wand_plan(
-        parse_query("((w00000 OR (w00002 AND w00003)) AND w00001) OR w00050",
-                    cfg)
-    )
-    assert plan is not None and [len(g) for g in plan[0]] == [2]
-    # negated sub-booleans are WAND-able: -(a OR b) flattens to two
-    # negations; -(a AND b) evaluates as a score-ignored node
-    plan = _wand_plan(parse_query("w00000 -(w00001 OR w00002)", cfg))
-    assert plan is not None and len(plan[1]) == 2
-    plan = _wand_plan(parse_query("w00000 -(w00001 AND w00002)", cfg))
-    assert plan is not None and len(plan[1]) == 1
+    assert [len(c.should) for c in pos.must] == [2, 2]
+    # negated phrases and conjunctions are single negations; the
+    # positive tree is the query without its must_not
+    for q in ['w00000 -"w00001 w00002"', "w00000 -(w00001 AND w00002)"]:
+        ast = parse_query(q, cfg)
+        assert _wand_plan(ast) == (
+            Bool(must=ast.must), list(ast.must_not)
+        ), q
+    # -(a OR b) flattens to two negations
+    pos, negs = _wand_plan(parse_query("w00000 -(w00001 OR w00002)", cfg))
+    assert pos == Bool(must=(Term("text", "w00000"),))
+    assert negs == [Term("text", "w00001"), Term("text", "w00002")]
     # pure-negation falls back (MatchAll base)
-    plan = _wand_plan(parse_query("-w00001", cfg))
-    assert plan is None
+    assert _wand_plan(parse_query("-w00001", cfg)) is None
 
 
-def test_wand_equals_exhaustive_multifield(searcher):
+def test_wand_equals_exhaustive_multifield(searcher, exhaustive):
     for q, fields in [
         ("en AND w00001", ["text", "role"]),
         ("assistant OR w00050", ["text", "role"]),
@@ -1122,18 +1205,18 @@ def test_wand_equals_exhaustive_multifield(searcher):
         ("(w00000 AND w00004) -(w00001 AND (w00002 OR w00003))", None),
     ]:
         kw = {"search_fields": fields} if fields else {}
-        a = searcher.search(q, k=10, wand=True, **kw)
-        b = searcher.search(q, k=10, wand=False, **kw)
+        a = searcher.search(q, k=10, **kw)
+        b = exhaustive(searcher.search, q, k=10, **kw)
         assert a.num_hits == b.num_hits, q
         assert [(h.split_id, h.docid, h.score) for h in a.hits] == [
             (h.split_id, h.docid, h.score) for h in b.hits
         ], q
 
 
-def test_wand_equals_exhaustive_randomized(searcher):
+def test_wand_equals_exhaustive_randomized(searcher, exhaustive):
     """Randomized flat/nested boolean queries over head/torso/tail
-    vocabulary: wand=True must equal wand=False on every draw (seeded —
-    deterministic across runs)."""
+    vocabulary: WAND must equal the exhaustive evaluator on every draw
+    (seeded — deterministic across runs)."""
     import random
 
     rng = random.Random(1234)
@@ -1196,8 +1279,8 @@ def test_wand_equals_exhaustive_randomized(searcher):
 
     for _ in range(40):
         q = rand_query()
-        a = searcher.search(q, k=8, wand=True)
-        b = searcher.search(q, k=8, wand=False)
+        a = searcher.search(q, k=8)
+        b = exhaustive(searcher.search, q, k=8)
         assert a.num_hits == b.num_hits, q
         assert [(h.split_id, h.docid, h.score) for h in a.hits] == [
             (h.split_id, h.docid, h.score) for h in b.hits

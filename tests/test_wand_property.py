@@ -98,9 +98,9 @@ def test_wand_equals_exhaustive_property(corpus, tree, negs, k):
         "df": df,
     }
 
-    groups, wneg = plan
+    pos, wneg = plan
     w_ids, w_scores, w_hits, _ = _wand_bool(
-        sd, groups, wneg, doc_len, stats, cfg, k
+        sd, pos, wneg, doc_len, stats, cfg, k
     )
 
     postings = _ShardPostings(sd, query_terms(ast))
