@@ -175,8 +175,9 @@ def q_bm25_must_not(spark, sf_dir):
 
 def q_bm25_nested_bool(spark, sf_dir):
     """Disjunction nested inside a conjunctive member —
-    ((vector OR hash) AND merge) OR stream — the round-3 WAND shape
-    (pruned via group-child UB sums; results identical to exhaustive)."""
+    ((vector OR hash) AND merge) OR stream — evaluated as the query's
+    own tree per docid segment, each node's upper bound the sum of its
+    children's (results identical to the whole-term reference)."""
     return _hits_df(
         spark,
         _searcher(spark, sf_dir).search(

@@ -30,21 +30,24 @@ BM25 uses GLOBAL corpus stats: N and avgdl come from the catalog
 tiny first Spark job that reads only the (field, term, df) columns of
 term-pruned splits. ``Searcher`` caches those stats across queries.
 
-Block-max pruning: posting rows carry (max_tf, min_dl, first/last
-docid) per shard; for ANY pure positive boolean over terms and phrases
-(arbitrary AND/OR nesting and boosts, ± negations that are themselves
-terms, phrases, or positive booleans — only MatchAll-based
-pure-negation shapes are excluded) the kernel cuts docid space into
-segments at shard boundaries, evaluates the query's own tree per
-segment, and processes segments document-at-a-time in descending
-score-upper-bound order, skipping decode + scoring work that cannot
-reach the running top-k threshold (tantivy's block-max WAND at shard
-granularity, extended across terms — the reference disables scoring
-at this rev, collector.rs:318-323, so this is our addition per the
-north rule; see ``_wand_bool``). Time bounds, ``sort_by`` and
-aggregations take the exhaustive evaluator (``_SplitEval``); tests
-force it for every query by patching ``_wand_plan`` to return None
-and assert result equality over the full query battery.
+One leaf evaluator (``_wand_bool``) answers every query shape, the
+reference's one scorer tree + one collector per segment
+(collector.rs:422-450): posting rows carry (max_tf, min_dl,
+first/last docid) per shard; the kernel cuts docid space into
+segments at the query keys' shard boundaries (negated keys too),
+evaluates the query's own tree per segment (terms, phrases, any
+AND/OR/NOT nesting, boosts, MatchAll), masks each segment's matches
+by the ``[start_us, end_us)`` window on the ``ts_us`` fast field
+(filters.rs:61-155), and — for relevance ranking only — scores
+segments in descending score-upper-bound order, skipping decode +
+scoring work that cannot reach the running top-k threshold
+(tantivy's block-max WAND at shard granularity, extended across
+terms — the reference disables scoring at this rev,
+collector.rs:318-323, so this is our addition per the north rule).
+``sort_by``, aggregations and search streams read the counted
+matches and decode no tfs. tests/reference_eval.py keeps the
+whole-term evaluator as the reference these answers are compared
+with.
 """
 
 from __future__ import annotations
@@ -186,47 +189,6 @@ def _phrase_hits(cand, token_lists, slop: int):
     return cand[mask], freqs[mask]
 
 
-def _node_ok(node) -> bool:
-    """True when a (sub-)query is a pure positive boolean over terms
-    and phrases: any depth of AND/OR nesting and boosts, no must_not."""
-    if isinstance(node, (Term, Phrase)):
-        return True
-    if isinstance(node, Boost):
-        # boost scales the child's scores by a non-negative factor:
-        # upper bounds scale the same way, so prunability is the child's
-        return _node_ok(node.node)
-    if not isinstance(node, Bool) or node.must_not:
-        return False
-    kids = node.must or node.should
-    return bool(kids) and all(_node_ok(c) for c in kids)
-
-
-def _wand_plan(ast):
-    """Split a prunable query into ``(pos, negs)``: ``pos`` is its
-    positive tree (the AST itself, or ``Bool(must=..., should=...)``
-    without the negations), a pure positive boolean (:func:`_node_ok`)
-    that :func:`_wand_bool` bounds and evaluates per docid segment;
-    ``negs`` are the docs to exclude. A negation may be any pure
-    positive node: its boost is dropped (exclusion is set-based, so it
-    is score-dead) and a negated disjunction is flattened into its
-    members (set exclusion distributes over union). Pure-negation
-    queries (MatchAll base — pruning cannot skip work since every doc
-    scores 0) and negated MatchAll shapes return None and take the
-    exhaustive path."""
-    if not isinstance(ast, Bool):
-        return (ast, []) if _node_ok(ast) else None
-    negs = []
-    for c in ast.must_not:
-        while isinstance(c, Boost):
-            c = c.node
-        if not _node_ok(c):
-            return None
-        # -(a OR b) ≡ -a -b
-        negs.extend(c.should if isinstance(c, Bool) and c.should else [c])
-    pos = Bool(must=ast.must, should=ast.should) if ast.must_not else ast
-    return (pos, negs) if _node_ok(pos) else None
-
-
 class _ShardPostings:
     """The one postings reader of a leaf: the query terms' posting
     shards in one split, decoded on demand. Stat columns (df, max_tf,
@@ -234,19 +196,26 @@ class _ShardPostings:
     pushdown-filtered scan; a blob is DECODED only when an evaluator
     asks for its shard, and the position blobs are read in a second
     scan on the first position request, which only phrases make. The
-    block-max evaluator asks per shard (:meth:`docids`, :meth:`tfs`,
-    :meth:`positions`), the exhaustive one per term (:meth:`term`,
-    :meth:`term_positions`: shards concatenated in first_docid order).
-    Both scans read through ``cache``, see :func:`read_pruned`."""
+    leaf evaluator asks per shard (:meth:`docids`, :meth:`tfs`,
+    :meth:`positions`). Both scans read through ``cache``, see
+    :func:`read_pruned`; a query without terms reads nothing."""
 
     def __init__(self, split_dir: str, keys, cache=None):
         from quickwit_spark.functions.parquet_io import read_pruned
 
         self._path = fsio.join(split_dir, POSTINGS_FILE)
         self._cache = cache
+        self._pos_row: dict[tuple[str, str, int], int] | None = None
+        self._pos_tbl = None
+        self._doc_cache: dict[tuple[str, str, int], np.ndarray] = {}
+        self._tf_cache: dict[tuple[str, str, int], np.ndarray] = {}
+        self._pos_cache: dict[tuple[str, str, int], np.ndarray | None] = {}
+        self.stats: dict[tuple[str, str], dict] = {}
         keyset = set(keys)
         term_values = sorted({t for _, t in keyset})
         self._term_values = term_values
+        if not term_values:
+            return
         # stats + posting blobs in ONE pushdown scan: the blob columns
         # of the query terms' rows are (almost) always needed anyway —
         # decode-on-demand skips the DECODE per shard, not the read —
@@ -263,7 +232,6 @@ class _ShardPostings:
             key = (fields[i], terms[i])
             if key in keyset:
                 by_key.setdefault(key, []).append(i)
-        self.stats: dict[tuple[str, str], dict] = {}
         for key, idxs in by_key.items():
             idxs = np.asarray(idxs)
             order = np.argsort(cols["first_docid"][idxs], kind="stable")
@@ -283,11 +251,6 @@ class _ShardPostings:
                 zip(fields, terms, cols["shard"].tolist())
             )
         }
-        self._pos_row: dict[tuple[str, str, int], int] | None = None
-        self._pos_tbl = None
-        self._doc_cache: dict[tuple[str, str, int], np.ndarray] = {}
-        self._tf_cache: dict[tuple[str, str, int], np.ndarray] = {}
-        self._pos_cache: dict[tuple[str, str, int], np.ndarray | None] = {}
 
     def docids(self, field: str, term: str, shard: int) -> np.ndarray:
         key = (field, term, shard)
@@ -341,28 +304,6 @@ class _ShardPostings:
         self._pos_cache[key] = got
         return got
 
-    def term(self, field: str, term: str):
-        """(docids, tfs) of one term over all its shards, concatenated in
-        first_docid order so the docids stay sorted; None when the split
-        lacks the term."""
-        st = self.stats.get((field, term))
-        if st is None:
-            return None
-        shards = st["shard"].tolist()
-        return (
-            np.concatenate([self.docids(field, term, sh) for sh in shards]),
-            np.concatenate([self.tfs(field, term, sh) for sh in shards]),
-        )
-
-    def term_positions(self, field: str, term: str):
-        """Positions of every shard of :meth:`term`, concatenated in the
-        same order; None when the field has no positions."""
-        parts = [
-            self.positions(field, term, sh)
-            for sh in self.stats[(field, term)]["shard"].tolist()
-        ]
-        return None if parts[0] is None else np.concatenate(parts)
-
     @property
     def n_docid_decoded(self) -> int:
         return len(self._doc_cache)
@@ -377,61 +318,58 @@ class _ShardPostings:
 
 
 def _wand_bool(
-    split_dir: str, pos, neg, doc_len, stats, config, m: int, cache=None
-) -> tuple[np.ndarray, np.ndarray, int, dict]:
-    """Block-max pruned top-m at shard granularity — the posting-row
-    analog of tantivy's block-max WAND extended document-at-a-time
-    across terms (SURVEY.md §2.6; the reference disables scoring at
-    this rev, collector.rs:318-323, so pruning is our north-rule
-    addition; semantics mirror tantivy's ``Weight::for_each_pruning``,
-    which prunes on the query's own scorer tree).
+    split_dir: str, ast, doc_len, stats, config, m: int, cache=None,
+    ts_us=None, start_us=None, end_us=None, collect: bool = False,
+):
+    """The leaf evaluator: every match of ``ast`` in one split whose
+    timestamp lies in ``[start_us, end_us)`` (filters.rs:61-155; a
+    None bound is open), counted exactly, and the top-m of them by
+    (BM25 desc, docid asc), block-max pruned at shard granularity —
+    the posting-row analog of tantivy's block-max WAND extended
+    document-at-a-time across terms (SURVEY.md §2.6; the reference
+    disables scoring at this rev, collector.rs:318-323, so pruning is
+    our north-rule addition; semantics mirror tantivy's
+    ``Weight::for_each_pruning``, which prunes on the query's own
+    scorer tree).
 
-    ``pos`` and ``neg`` come from :func:`_wand_plan`: the query's
-    positive AND/OR tree of terms and phrases (any nesting, boosts),
-    and the negations, each a term or a pure positive tree. Docid space
-    is cut into SEGMENTS at the query terms' shard boundaries, so term
-    coverage is constant within a segment. The tree is annotated
-    bottom-up with per-segment coverage and score upper bounds
-    (``_annotate``) and evaluated per segment by the recursive
-    ``_node_seg``, which reproduces the exhaustive evaluator's float
-    association at every level.
+    Docid space ``[0, n_split)`` is cut into SEGMENTS at the shard
+    boundaries of every query key, negated ones included, so term
+    coverage is constant within a segment. The query's own tree is
+    annotated bottom-up with per-segment coverage and score upper
+    bounds (``_annotate``) and evaluated per segment by ``_match`` and
+    ``_score``, which reproduce the float association of the whole-term
+    evaluation at every level.
 
-    * segments the root does not cover cannot contain a match —
-      skipped entirely (no decode, no count work). This is the
-      hot∧rare win: the hot term's shards outside the rare term's
-      docid ranges are never touched.
-    * the exact num_hits counts every covered segment with docid
-      decodes only (a phrase also decodes its tokens' tfs and
-      positions, once per segment); term tf decode + scoring are
-      skipped for segments whose bound falls
-      strictly below the running m-th best score (descending-bound
-      order → sound).
-    * single positive term without negation: num_hits = Σ shard dfs
-      (shards are disjoint), so even docid decode is skipped for
-      pruned shards.
+    * count pass: per covered segment, the root's matches (docid
+      decodes only; a phrase also decodes its tokens' tfs and
+      positions, once per segment), masked by the window on ``ts_us``.
+      Segments the root does not cover cannot contain a match and are
+      skipped entirely (no decode, no count work) — the hot∧rare win:
+      the hot term's shards outside the rare term's docid ranges are
+      never touched. A single term with no window and no ``collect``
+      needs no pass at all: num_hits = Σ shard dfs (shards are
+      disjoint).
+    * scoring pass (``m > 0`` only): segments in descending bound
+      order; term tf decode + scoring stop at the first segment whose
+      bound falls strictly below the running m-th best score (sound:
+      bounds are visited in descending order).
 
-    Scores are EXACT (identical to the exhaustive evaluator): pruning
-    only ever skips work that cannot change the top-m. Returns
-    (ids, scores, num_hits, skip_stats).
-    """
-    # negated single terms exclude via direct shard-overlap scans (no
-    # segmentation needed); every other negation (phrase, nested bool)
-    # becomes a node evaluated per segment, score-ignored
-    negk = [(t.field, t.value) for t in neg if isinstance(t, Term)]
-    neg_shapes = [n for n in neg if not isinstance(n, Term)]
-    pos_keys = query_terms(pos)
-    seg_keys = pos_keys.union(*map(query_terms, neg_shapes))
-    sp = _ShardPostings(split_dir, seg_keys | set(negk), cache)
+    Scores are EXACT: pruning only ever skips work that cannot change
+    the top-m. Returns ``(ids, scores, num_hits, skips, matches)``;
+    ``matches`` (``collect=True``, else None) holds every counted docid
+    in ascending order, for sort_by, aggregations and search streams,
+    which need no scores and so decode no tfs (pass ``m=0``)."""
+    sp = _ShardPostings(split_dir, query_terms(ast), cache)
     k1, b = config.k1, config.b
     avgdl = stats["avgdl"]
     empty = (np.empty(0, np.int64), np.empty(0, np.float64))
 
-    # segment boundaries at every positive and non-term negation
-    # token's shard edges: a per-segment matcher needs ONE covering
-    # shard per token per segment
-    edges = [np.empty(0, np.int64)]
-    for k in seg_keys & sp.stats.keys():
-        edges += [sp.stats[k]["first"], sp.stats[k]["last"] + 1]
+    # segment edges: the split's own ends (MatchAll and pure negation
+    # cover every docid) and every query key's shard edges — a
+    # per-segment matcher needs ONE covering shard per token per segment
+    edges = [np.array([0, doc_len.size], np.int64)]
+    for st in sp.stats.values():
+        edges += [st["first"], st["last"] + 1]
     bounds = np.unique(np.concatenate(edges))
     seg_lo, seg_hi = bounds[:-1], bounds[1:]
     n_seg = seg_lo.size
@@ -453,24 +391,36 @@ def _wand_bool(
         one-token case. A term or token the split lacks covers
         nothing. conj (``Bool.must``): cov = AND over children; group
         (``Bool.should``): cov = OR; UB = Σ child UBs for both (the
-        exhaustive evaluator sums every matching child's score)."""
+        whole-term evaluation sums every matching child's score).
+        all (MatchAll, and a Bool with only ``must_not``): covers every
+        segment with score 0. A Bool's ``must_not`` children become
+        its ``negs``: excluded by ``_match``, score-dead, so the
+        node keeps its positive part's cov and UB."""
         if isinstance(node, Boost):
             child = _annotate(node.node)
             # child ub is already cov-masked; factor >= 0 keeps the mask
             return {"kind": "boost", "factor": node.factor,
                     "children": [child], "cov": child["cov"],
                     "ub": child["ub"] * node.factor}
+        if isinstance(node, MatchAll):
+            return {"kind": "all", "cov": np.ones(n_seg, dtype=bool),
+                    "ub": np.zeros(n_seg)}
         if isinstance(node, Bool):
-            kind = "conj" if node.must else "group"
-            children = [_annotate(c) for c in node.must or node.should]
-            cov = children[0]["cov"]
-            for c in children[1:]:
-                cov = (cov & c["cov"]) if kind == "conj" else (cov | c["cov"])
-            ub = np.zeros(n_seg, dtype=np.float64)
-            for c in children:
-                ub += c["ub"]
-            return {"kind": kind, "children": children, "cov": cov,
-                    "ub": np.where(cov, ub, 0.0), "memo": {}}
+            if not (node.must or node.should):
+                nd = _annotate(MatchAll())  # pure negation
+            else:
+                kind = "conj" if node.must else "group"
+                children = [_annotate(c) for c in node.must or node.should]
+                cov = children[0]["cov"]
+                for c in children[1:]:
+                    cov = (cov & c["cov"]) if kind == "conj" else (cov | c["cov"])
+                ub = np.zeros(n_seg, dtype=np.float64)
+                for c in children:
+                    ub += c["ub"]
+                nd = {"kind": kind, "children": children, "cov": cov,
+                      "ub": np.where(cov, ub, 0.0), "memo": {}}
+            nd["negs"] = [_annotate(c) for c in node.must_not]
+            return nd
         if isinstance(node, Term):
             nd = {"kind": "term", "keys": [(node.field, node.value)]}
         else:
@@ -528,232 +478,139 @@ def _wand_bool(
             token_lists.append((dec, sp.tfs(key[0], key[1], shard), p))
         return _phrase_hits(cand, token_lists, nd["slop"])
 
-    def _node_seg(nd, s: int, at=None):
-        """Evaluates one annotated node within segment s; the caller
-        must ensure ``nd["cov"][s]``. With ``at=None``: the node's
-        matching docids there (a term decodes docids only, so the count
-        pass decodes no tfs). With ``at`` (sorted docids that all match
-        the node): their scores. Float association is IDENTICAL to the
-        exhaustive evaluator at every level: conj = zeros + child
-        scores in child order (``Bool.must``); group = zeros + the
-        score of each matching child in child order (``Bool.should``);
-        BM25 is elementwise, so scoring only ``at`` changes no bit."""
+    def _phrase_memo(nd, s: int):
+        got = nd["memo"].get(s)
+        if got is None:
+            got = nd["memo"][s] = _phrase_match(nd, s)
+        return got
+
+    def _group_parts(nd, s: int):
+        """(covering children, their matches) of a group within segment
+        s, memoized for the scoring pass; a child that does not cover s
+        matches nothing there."""
+        got = nd["memo"].get(s)
+        if got is None:
+            kids = [c for c in nd["children"] if c["cov"][s]]
+            got = nd["memo"][s] = (kids, [_match(c, s) for c in kids])
+        return got
+
+    def _match(nd, s: int) -> np.ndarray:
+        """Sorted matching docids of one annotated node within segment
+        s; the caller must ensure ``nd["cov"][s]``. A term decodes
+        docids only, so the count pass decodes no term tfs. A negation
+        that does not cover s excludes nothing there."""
         kind = nd["kind"]
+        if kind == "all":
+            ids = np.arange(seg_lo[s], seg_hi[s], dtype=np.int64)
+        elif kind == "term":
+            dec, a_, b_ = _slice(nd["keys"][0], int(nd["shard"][0][s]), s)
+            ids = dec[a_:b_]
+        elif kind == "phrase":
+            ids = _phrase_memo(nd, s)[0]
+        elif kind == "boost":
+            ids = _match(nd["children"][0], s)
+        elif kind == "conj":
+            ids = _match(nd["children"][0], s)
+            for c in nd["children"][1:]:
+                if ids.size == 0:
+                    break
+                ids = np.intersect1d(ids, _match(c, s), assume_unique=True)
+        else:
+            parts = _group_parts(nd, s)[1]
+            ids = parts[0]
+            for c_ids in parts[1:]:
+                ids = np.union1d(ids, c_ids)
+        for neg in nd.get("negs", ()):
+            if ids.size == 0:
+                break
+            if neg["cov"][s]:
+                ids = ids[~np.isin(ids, _match(neg, s), assume_unique=True)]
+        return ids
+
+    def _score(nd, s: int, at: np.ndarray) -> np.ndarray:
+        """Scores of ``at`` (sorted docids of segment s that all match
+        the node). Float association is IDENTICAL to the whole-term
+        evaluation at every level: conj = zeros + child scores in child
+        order (``Bool.must``); group = zeros + the score of each
+        matching child in child order (``Bool.should``); BM25 is
+        elementwise, so scoring only ``at`` changes no bit."""
+        kind = nd["kind"]
+        if kind == "all":
+            return np.zeros(at.size)
         if kind == "term":
             key = nd["keys"][0]
             shard = int(nd["shard"][0][s])
-            if at is None:
-                dec, a_, b_ = _slice(key, shard, s)
-                return dec[a_:b_]
             dec = sp.docids(key[0], key[1], shard)
             tfs = sp.tfs(key[0], key[1], shard)[np.searchsorted(dec, at)]
             return _bm25_scores(tfs, doc_len[at], nd["val"], avgdl, k1, b)
         if kind == "phrase":
-            got = nd["memo"].get(s)
-            if got is None:
-                got = nd["memo"][s] = _phrase_match(nd, s)
-            ids, freqs = got
-            if at is None:
-                return ids
+            ids, freqs = _phrase_memo(nd, s)
             freqs = freqs[np.searchsorted(ids, at)]
             return _bm25_scores(freqs, doc_len[at], nd["val"], avgdl, k1, b)
         if kind == "boost":
-            got = _node_seg(nd["children"][0], s, at)
-            return got if at is None else got * nd["factor"]
-        if kind == "conj":
-            if at is None:
-                ids = _node_seg(nd["children"][0], s)
-                for c in nd["children"][1:]:
-                    if ids.size == 0:
-                        break
-                    ids = np.intersect1d(ids, _node_seg(c, s), assume_unique=True)
-                return ids
-            scores = np.zeros(at.size, dtype=np.float64)
-            for c in nd["children"]:
-                scores += _node_seg(c, s, at)
-            return scores
-        # group: children that do not cover s match nothing there; their
-        # matches are kept per segment for the scoring pass
-        kids = [c for c in nd["children"] if c["cov"][s]]
-        parts = nd["memo"].get(s)
-        if parts is None:
-            parts = nd["memo"][s] = [_node_seg(c, s) for c in kids]
-        if at is None:
-            ids = parts[0]
-            for c_ids in parts[1:]:
-                ids = np.union1d(ids, c_ids)
-            return ids
+            return _score(nd["children"][0], s, at) * nd["factor"]
         scores = np.zeros(at.size, dtype=np.float64)
-        for c, c_ids in zip(kids, parts):
+        if kind == "conj":
+            for c in nd["children"]:
+                scores += _score(c, s, at)
+            return scores
+        for c, c_ids in zip(*_group_parts(nd, s)):
             if c_ids.size:
                 j = np.searchsorted(c_ids, at)
                 hit = c_ids[np.minimum(j, c_ids.size - 1)] == at
                 if hit.any():
-                    scores[hit] += _node_seg(c, s, at[hit])
+                    scores[hit] += _score(c, s, at[hit])
         return scores
 
-    root = _annotate(pos)
-    neg_nodes = [_annotate(n) for n in neg_shapes]
+    root = _annotate(ast)
     active_idx = np.flatnonzero(root["cov"])
-
-    def neg_exclude(ids: np.ndarray, s: int) -> np.ndarray:
-        lo, hi = int(seg_lo[s]), int(seg_hi[s])
-        for key in negk:
-            st = sp.stats.get(key)
-            if st is None or ids.size == 0:
-                continue
-            # neg shards overlapping [lo, hi)
-            j0 = np.searchsorted(st["last"], lo, side="left")
-            j1 = np.searchsorted(st["first"], hi - 1, side="right")
-            for j in range(j0, j1):
-                dec = sp.docids(key[0], key[1], int(st["shard"][j]))
-                ids = ids[~np.isin(ids, dec, assume_unique=True)]
-        for nn in neg_nodes:
-            if ids.size == 0:
-                break
-            if not nn["cov"][s]:
-                continue  # negation can't match anything in this segment
-            mids = _node_seg(nn, s)
-            if mids.size:
-                ids = ids[~np.isin(ids, mids, assume_unique=True)]
-        return ids
+    windowed = start_us is not None or end_us is not None
 
     # ---- exact num_hits ------------------------------------------------
-    # per segment, the matches that survive the negations
     cand: dict[int, np.ndarray] = {}
-    if root["kind"] == "term" and not negk and not neg_nodes:
+    matches = None
+    if root["kind"] == "term" and not windowed and not collect:
         st = sp.stats.get(root["keys"][0])
         num_hits = 0 if st is None else int(st["df"].sum())
     else:
         for s in active_idx.tolist():
-            cand[s] = neg_exclude(_node_seg(root, s), s)
+            ids = _match(root, s)
+            if windowed and ids.size:
+                t = ts_us[ids]
+                keep = np.ones(ids.size, dtype=bool)
+                if start_us is not None:
+                    keep &= t >= start_us
+                if end_us is not None:
+                    keep &= t < end_us
+                ids = ids[keep]
+            cand[s] = ids
         num_hits = sum(ids.size for ids in cand.values())
+        if collect:
+            matches = np.concatenate([empty[0], *cand.values()])
 
     # ---- UB-ordered pruned scoring ------------------------------------
     ub_seg = root["ub"]
     order = active_idx[np.argsort(-ub_seg[active_idx], kind="stable")]
     best_ids, best_scores = empty
     theta = -math.inf
-    for s in order.tolist():
+    for s in order.tolist() if m > 0 else ():
         if best_ids.size >= m and ub_seg[s] < theta:
             break  # sound: bounds visited in descending order
-        ids = cand[s] if s in cand else _node_seg(root, s)
+        ids = cand[s] if s in cand else _match(root, s)
         if ids.size == 0:
             continue
         best_ids = np.concatenate([best_ids, ids])
-        best_scores = np.concatenate([best_scores, _node_seg(root, s, ids)])
+        best_scores = np.concatenate([best_scores, _score(root, s, ids)])
         best_ids, best_scores = _top_m(best_ids, best_scores, m)
         if best_ids.size >= m:
             theta = best_scores[-1]
     skips = {
-        "shards": sum(
-            sp.stats[k]["first"].size for k in pos_keys & sp.stats.keys()
-        ),
+        "shards": sum(st["first"].size for st in sp.stats.values()),
         "docid_decoded": sp.n_docid_decoded,
         "tf_decoded": sp.n_tf_decoded,
         "pos_decoded": sp.n_pos_decoded,
     }
-    return best_ids, best_scores, num_hits, skips
-
-
-class _SplitEval:
-    """Evaluates a query AST against one split, vectorized, over the
-    whole postings of each query term (``postings``: a
-    :class:`_ShardPostings`, None when the query has no terms)."""
-
-    def __init__(self, postings, doc_len, stats, config):
-        self.postings = postings
-        self.doc_len = doc_len.astype(np.float64)
-        self.n_split = doc_len.size
-        self.stats = stats
-        self.avgdl = stats["avgdl"]
-        self.k1 = config.k1
-        self.b = config.b
-
-    def eval(self, node):
-        """Returns (docids sorted int64, scores float64)."""
-        empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-        if isinstance(node, MatchAll):
-            return np.arange(self.n_split, dtype=np.int64), np.zeros(self.n_split)
-        if isinstance(node, Boost):
-            ids, scores = self.eval(node.node)
-            return ids, scores * node.factor
-        if isinstance(node, Term):
-            p = self.postings.term(node.field, node.value)
-            if p is None:
-                return empty
-            docids, tfs = p
-            idf = _idf(self.stats, (node.field, node.value))
-            return docids, _bm25_scores(
-                tfs, self.doc_len[docids], idf, self.avgdl, self.k1, self.b
-            )
-        if isinstance(node, Phrase):
-            plists = [self.postings.term(node.field, t) for t in node.tokens]
-            if any(p is None for p in plists):
-                return empty
-            cand = plists[0][0]
-            for p in plists[1:]:
-                cand = np.intersect1d(cand, p[0], assume_unique=True)
-            if cand.size == 0:
-                return empty
-            token_lists = []
-            for t, (docids, tfs) in zip(node.tokens, plists):
-                pos = self.postings.term_positions(node.field, t)
-                if pos is None:
-                    return empty  # field without positions
-                token_lists.append((docids, tfs, pos))
-            cand, freqs = _phrase_hits(cand, token_lists, node.slop)
-            idf = sum(_idf(self.stats, (node.field, t)) for t in node.tokens)
-            return cand, _bm25_scores(
-                freqs, self.doc_len[cand], idf, self.avgdl, self.k1, self.b
-            )
-        if isinstance(node, Bool):
-            if node.must:
-                parts = [self.eval(c) for c in node.must]
-                ids = parts[0][0]
-                for p in parts[1:]:
-                    ids = np.intersect1d(ids, p[0], assume_unique=True)
-                scores = np.zeros(ids.size)
-                for pids, pscores in parts:
-                    scores += pscores[np.searchsorted(pids, ids)]
-            elif node.should:
-                parts = [self.eval(c) for c in node.should]
-                ids = parts[0][0]
-                for p in parts[1:]:
-                    ids = np.union1d(ids, p[0])
-                scores = np.zeros(ids.size)
-                for pids, pscores in parts:
-                    pos = np.searchsorted(ids, pids)
-                    scores[pos] += pscores
-            else:
-                ids = np.arange(self.n_split, dtype=np.int64)
-                scores = np.zeros(self.n_split)
-            for c in node.must_not:
-                eids, _ = self.eval(c)
-                keep = ~np.isin(ids, eids, assume_unique=True)
-                ids, scores = ids[keep], scores[keep]
-            return ids, scores
-        raise TypeError(f"unknown AST node {node!r}")
-
-
-def _exhaustive_matches(
-    split_dir, ast, doc_len, ts_us, stats, config, start_us, end_us, cache=None
-):
-    """(docids, scores) of EVERY match of ``ast`` in one split whose
-    timestamp lies in [start_us, end_us) (filters.rs:61-155; a None
-    bound is open). ``cache``: see :func:`read_pruned`."""
-    terms = query_terms(ast)
-    postings = _ShardPostings(split_dir, terms, cache) if terms else None
-    ids, scores = _SplitEval(postings, doc_len, stats, config).eval(ast)
-    if start_us is not None or end_us is not None:
-        tvals = ts_us[ids]
-        keep = np.ones(ids.size, dtype=bool)
-        if start_us is not None:
-            keep &= tvals >= start_us
-        if end_us is not None:
-            keep &= tvals < end_us
-        ids, scores = ids[keep], scores[keep]
-    return ids, scores
+    return best_ids, best_scores, num_hits, skips, matches
 
 
 def _top_m(ids, scores, m):
@@ -856,52 +713,26 @@ def _eval_split_partial(
     doc_len = fast.column("doc_len").to_numpy().astype(np.int64)
     ts_us = fast.column("ts_us").to_numpy()
 
-    # block-max WAND fast path: flat term-boolean relevance top-k with
-    # no residual filters — prune segments by score upper bound
-    wplan = _wand_plan(ast)
-    use_wand = (
-        wplan is not None
-        and sort_by is None
-        and not aggs
-        and start_us is None
-        and end_us is None
-        and m > 0
+    # sort_by, aggregations and k=0 read the count pass's matches and
+    # score nothing; only relevance ranking runs the scoring pass
+    ids, scores, num_hits, _skips, matches = _wand_bool(
+        split_dir, ast, doc_len.astype(np.float64), stats, config,
+        0 if sort_by else m, cache, ts_us, start_us, end_us,
+        collect=bool(sort_by or aggs),
     )
-    if use_wand:
-        ids, scores, num_hits, _skips = _wand_bool(
-            split_dir, *wplan,
-            doc_len.astype(np.float64), stats, config, m, cache,
-        )
-        return _hit_rows(
-            split_id, dpath, ids, scores, scores, ts_us, fetch_payload
-        ) + [_count_row(split_id, num_hits)]
-
-    ids, scores = _exhaustive_matches(
-        split_dir, ast, doc_len, ts_us, stats, config, start_us, end_us, cache
-    )
-
-    out_rows: list[dict] = []
-
-    # partial top-m hits (+ count row)
-    if m > 0 and ids.size:
-        if sort_by:
-            col = ts_us if sort_by in ("ts", "ts_us") else fast.column(sort_by).to_numpy()
-            keys = col[ids].astype(np.float64)
-            # Asc sort via negated key — the reference's u64::MAX - v
-            # trick (collector.rs:41-92); ``sort_value`` is always a
-            # descending-merge key, ``score`` the real field value.
-            order_key = keys if sort_desc else -keys
-            top_ids, sel = _top_m(ids, order_key, m)
-            real_vals = col[top_ids].astype(np.float64)
-        else:
-            top_ids, sel = _top_m(ids, scores, m)
-            real_vals = sel
-        out_rows.extend(
-            _hit_rows(split_id, dpath, top_ids, sel, real_vals, ts_us,
-                      fetch_payload)
-        )
-
-    out_rows.append(_count_row(split_id, ids.size))
+    sel = real_vals = scores
+    if sort_by and m > 0 and matches.size:
+        col = ts_us if sort_by in ("ts", "ts_us") else fast.column(sort_by).to_numpy()
+        keys = col[matches].astype(np.float64)
+        # Asc sort via negated key — the reference's u64::MAX - v
+        # trick (collector.rs:41-92); ``sort_value`` is always a
+        # descending-merge key, ``score`` the real field value.
+        order_key = keys if sort_desc else -keys
+        ids, sel = _top_m(matches, order_key, m)
+        real_vals = col[ids].astype(np.float64)
+    out_rows = _hit_rows(
+        split_id, dpath, ids, sel, real_vals, ts_us, fetch_payload
+    ) + [_count_row(split_id, num_hits)]
 
     # partial aggregations (collector.rs:214-221 intermediate results).
     # A zero-match split still participates when a terms agg asks for
@@ -910,7 +741,7 @@ def _eval_split_partial(
         "terms" in spec and int(spec["terms"].get("min_doc_count", 1)) == 0
         for spec in aggs.values()
     )
-    if aggs and (ids.size or _mdc0):
+    if aggs and (matches.size or _mdc0):
         agg_cols_needed = set()
         for spec in aggs.values():
             for params in spec.values():
@@ -928,9 +759,9 @@ def _eval_split_partial(
                 col_arrays[c] = col.to_numpy(zero_copy_only=False)
         for name, spec in aggs.items():
             kind, params = next(iter(spec.items()))
-            vals = col_arrays[params["field"]][ids]
+            vals = col_arrays[params["field"]][matches]
             extra = (
-                {params["stats_field"]: col_arrays[params["stats_field"]][ids]}
+                {params["stats_field"]: col_arrays[params["stats_field"]][matches]}
                 if params.get("stats_field")
                 else None
             )
@@ -1996,10 +1827,11 @@ def stream_fast_field(
                 if partition_by and partition_by not in cols:
                     cols.append(partition_by)
                 fast = _fast_table_cached(dpath, tuple(cols))
-                doc_len = fast.column("doc_len").to_numpy().astype(np.int64)
+                doc_len = fast.column("doc_len").to_numpy().astype(np.float64)
                 ts_us = fast.column("ts_us").to_numpy()
-                ids, _ = _exhaustive_matches(
-                    path, ast, doc_len, ts_us, stats, config, start_us, end_us
+                *_, ids = _wand_bool(
+                    path, ast, doc_len, stats, config, 0, None,
+                    ts_us, start_us, end_us, collect=True,
                 )
                 vals = (
                     ts_us if fast_field in ("ts", "ts_us")

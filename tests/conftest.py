@@ -62,15 +62,16 @@ def searcher(spark, index_dir):
 
 @pytest.fixture
 def exhaustive(monkeypatch):
-    """``exhaustive(fn, *args, **kwargs)`` calls ``fn`` with block-max
-    WAND off: with no WAND plan every leaf runs the exhaustive
-    evaluator. The patch reaches driver-mode leaves only, not Spark
-    workers."""
+    """``exhaustive(fn, *args, **kwargs)`` calls ``fn`` with every leaf
+    answered by the whole-term reference evaluator
+    (tests/reference_eval.py) instead of the per-segment one. The patch
+    reaches driver-mode leaves only, not Spark workers."""
     from quickwit_spark.operators import search
+    from tests.reference_eval import reference_leaf
 
     def run(fn, *args, **kwargs):
         with monkeypatch.context() as m:
-            m.setattr(search, "_wand_plan", lambda ast: None)
+            m.setattr(search, "_wand_bool", reference_leaf)
             return fn(*args, **kwargs)
 
     return run

@@ -17,9 +17,9 @@ from quickwit_spark.functions.lru import LRU
 from quickwit_spark.operators import search as search_mod
 from quickwit_spark.operators.search import Searcher
 
-# WAND (term, conj, disj, negation), the positions scan (phrase), and
-# the exhaustive evaluator (sort_by, aggs): every evaluator path ends
-# in the cached root doc fetch
+# ranked shapes (term, conj, disj, negation), the positions scan
+# (phrase), and the count-pass-only shapes (sort_by, aggs): every leaf
+# path ends in the cached root doc fetch
 QUERIES = [
     ("w00001", {}),
     ("w00003 w00007", {}),
@@ -59,9 +59,9 @@ def test_repeated_queries_decode_no_new_row_group(spark, index_dir):
 
 
 # the two postings reads, by the columns in their cache key: the stats +
-# blob scan and the positions scan; the WAND and the exhaustive evaluator
-# (sort_by, aggs) share the one reader behind them, so a row group is
-# cached at most once per column set
+# blob scan and the positions scan; every query shape reads through the
+# one reader behind them, so a row group is cached at most once per
+# column set
 WAND_COLS = ("field", "term", "shard", "df", "max_tf", "min_dl",
              "first_docid", "last_docid", "doc_ids", "tfs")
 POSITION_COLS = ("field", "term", "shard", "positions")
@@ -87,9 +87,9 @@ def test_leaf_postings_reads_go_through_the_block_cache(spark, index_dir):
 def test_exhaustive_term_queries_read_no_positions(
     spark, index_dir, corpus, monkeypatch
 ):
-    """Only phrases use positions: a term-only query on the exhaustive
-    path (time bounds, sort_by and aggs each rule out the block-max
-    one) reads no position row group and decodes no position blob."""
+    """Only phrases use positions: a term-only query under a time
+    window, sort_by or aggs reads no position row group and decodes no
+    position blob."""
     import numpy as np
     import pandas as pd
 

@@ -1,16 +1,21 @@
-"""Hypothesis property: block-max WAND (`_wand_bool`) is result- and
-score-identical to the exhaustive evaluator (`_SplitEval`) on random
-corpora and random positive boolean query trees with random negations.
+"""Hypothesis property: the leaf evaluator (`_wand_bool`) is result- and
+score-identical to the whole-term reference evaluator
+(`tests/reference_eval.py`) on random corpora and random query trees:
+AND/OR nesting, boosts, phrases, MatchAll, and negations at any depth
+(pure-negation nodes and roots included), under an optional
+``[start, end)`` window, ranked by relevance or sorted by ts, with k=0.
 
 Spark-free: splits build via the pure Arrow kernel
 (`build_split_tables_arrow`), so hundreds of examples run in seconds. This is
 the strongest guard on the recursive node evaluator — every tree shape
-the planner accepts must yield bit-identical (ids, scores, num_hits).
+must yield bit-identical (ids, scores, num_hits), and the whole leaf
+(`_eval_split_partial`) bit-identical partial rows.
 """
 
 from __future__ import annotations
 
 import tempfile
+from unittest import mock
 
 import numpy as np
 import pyarrow as pa
@@ -18,17 +23,11 @@ from hypothesis import given, settings, strategies as st
 
 from quickwit_spark.config import IndexConfig
 from quickwit_spark.functions.tokenize import tokenize_default
+from quickwit_spark.operators import search
 from quickwit_spark.operators.build import build_split_tables_arrow, write_split
-from quickwit_spark.operators.search import (
-    _ShardPostings,
-    _SplitEval,
-    _top_m,
-    _wand_bool,
-    _wand_plan,
-    query_terms,
-)
-from quickwit_spark.plans.query import Bool, Boost, Phrase, Term
+from quickwit_spark.plans.query import Bool, Boost, MatchAll, Phrase, Term
 from quickwit_spark.sources.transcripts import fixture_corpus
+from tests.reference_eval import reference_leaf
 
 VOCAB = ["hot", "warm", "mid", "rare", "cool", "odd", "few", "one"]
 
@@ -39,55 +38,55 @@ _leaf = st.one_of(
     st.tuples(_words, _words, st.integers(0, 2)).map(
         lambda t: Phrase("text", (t[0], t[1]), t[2])
     ),
+    st.just(MatchAll()),
 )
 _tree = st.recursive(
     _leaf,
     lambda ch: st.one_of(
-        st.lists(ch, min_size=2, max_size=3).map(
-            lambda cs: Bool(must=tuple(cs))
+        st.tuples(st.lists(ch, min_size=2, max_size=3), st.lists(ch, max_size=2)).map(
+            lambda t: Bool(must=tuple(t[0]), must_not=tuple(t[1]))
         ),
-        st.lists(ch, min_size=2, max_size=3).map(
-            lambda cs: Bool(should=tuple(cs))
+        st.tuples(st.lists(ch, min_size=2, max_size=3), st.lists(ch, max_size=2)).map(
+            lambda t: Bool(should=tuple(t[0]), must_not=tuple(t[1]))
+        ),
+        # pure negation: every doc but the negated ones, score 0
+        st.lists(ch, min_size=1, max_size=2).map(
+            lambda cs: Bool(must_not=tuple(cs))
         ),
         st.tuples(ch, _factors).map(lambda t: Boost(t[0], t[1])),
     ),
     max_leaves=6,
-)
-# negations: leaves or one-level bools (what _wand_plan accepts)
-_neg = st.one_of(
-    _leaf,
-    st.lists(_leaf, min_size=2, max_size=2).map(
-        lambda cs: Bool(must=tuple(cs))
-    ),
-    st.lists(_leaf, min_size=2, max_size=2).map(
-        lambda cs: Bool(should=tuple(cs))
-    ),
 )
 # skew the draw so "hot" blankets most docs (forces multi-shard salting)
 _doc = st.lists(
     st.sampled_from(VOCAB + ["hot"] * 4), min_size=1, max_size=12
 )
 _corpus = st.lists(_doc, min_size=20, max_size=50)
+# window ends as row offsets (fixture rows are one second apart); None
+# leaves that side open
+_bound = st.one_of(st.none(), st.integers(0, 50))
 
 
 @settings(max_examples=80, deadline=None)
-@given(corpus=_corpus, tree=_tree, negs=st.lists(_neg, max_size=2),
-       k=st.integers(1, 8))
-def test_wand_equals_exhaustive_property(corpus, tree, negs, k):
+@given(corpus=_corpus, ast=_tree, k=st.integers(0, 8),
+       window=st.one_of(st.none(), st.tuples(_bound, _bound)),
+       sort_by=st.sampled_from([None, "ts"]), sort_desc=st.booleans())
+def test_wand_equals_exhaustive_property(corpus, ast, k, window, sort_by,
+                                         sort_desc):
     docs = [(" ".join(toks),) for toks in corpus]
     pdf = fixture_corpus(docs)
     cfg = IndexConfig(hot_term_doc_freq=5, salt_docid_range=8)
     postings_tbl, dstore, meta = build_split_tables_arrow(
         pa.Table.from_pandas(pdf, preserve_index=False), cfg
     )
-    sd = tempfile.mkdtemp(prefix="wandprop")
-    write_split(postings_tbl, dstore, sd)
-
-    ast = Bool(must=(tree,), must_not=tuple(negs)) if negs else tree
-    plan = _wand_plan(ast)
-    assert plan is not None  # every generated shape must be prunable
-
     doc_len = dstore["doc_len"].to_numpy().astype(np.float64)
+    ts_us = dstore["ts_us"].to_numpy()
+    start_us = end_us = None
+    if window is not None:
+        t0 = int(ts_us.min())
+        start_us, end_us = (
+            None if off is None else t0 + off * 1_000_000 for off in window
+        )
     df = {
         ("text", w): sum(w in tokenize_default(t) for t in pdf["text"])
         for w in VOCAB
@@ -98,15 +97,28 @@ def test_wand_equals_exhaustive_property(corpus, tree, negs, k):
         "df": df,
     }
 
-    pos, wneg = plan
-    w_ids, w_scores, w_hits, _ = _wand_bool(
-        sd, pos, wneg, doc_len, stats, cfg, k
-    )
+    def leaf(sd):
+        # the whole leaf: relevance or ts order, k=0 included
+        return search._eval_split_partial(
+            "s0", sd, ast, stats, cfg, k, start_us, end_us, sort_by,
+            sort_desc, None, fetch_payload=False,
+        )
 
-    postings = _ShardPostings(sd, query_terms(ast))
-    e_ids_all, e_scores_all = _SplitEval(postings, doc_len, stats, cfg).eval(ast)
-    assert w_hits == e_ids_all.size
-    e_ids, e_scores = _top_m(e_ids_all, e_scores_all, k)
+    with tempfile.TemporaryDirectory(prefix="wandprop") as sd:
+        write_split(postings_tbl, dstore, sd)
+        args = (sd, ast, doc_len, stats, cfg, k, None, ts_us, start_us, end_us)
+        w_ids, w_scores, w_hits, _, w_matches = search._wand_bool(
+            *args, collect=True
+        )
+        e_ids, e_scores, e_hits, _, e_matches = reference_leaf(
+            *args, collect=True
+        )
+        rows = leaf(sd)
+        with mock.patch.object(search, "_wand_bool", reference_leaf):
+            ref_rows = leaf(sd)
+    assert w_hits == e_hits
+    np.testing.assert_array_equal(w_matches, e_matches)
     np.testing.assert_array_equal(w_ids, e_ids)
     # bit-identical, not approximately equal: same float association
     np.testing.assert_array_equal(w_scores, e_scores)
+    assert rows == ref_rows
