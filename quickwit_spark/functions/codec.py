@@ -44,24 +44,26 @@ def encode_varint(values: np.ndarray) -> bytes:
 
 
 def decode_varint(buf: bytes) -> np.ndarray:
-    """Decode a LEB128 blob back to a uint64 array."""
+    """Decode a LEB128 blob back to a uint64 array. A value's 7-bit
+    groups occupy disjoint bits, so summing them per value
+    (``np.add.reduceat``) equals OR-ing them; a blob of single-byte
+    values needs no reassembly at all."""
     arr = np.frombuffer(buf, dtype=np.uint8)
     if arr.size == 0:
         return np.empty(0, dtype=np.uint64)
-    is_last = (arr & 0x80) == 0
-    ends = np.flatnonzero(is_last)
+    if arr.max() < 0x80:
+        return arr.astype(np.uint64)
+    ends = np.flatnonzero(arr < 0x80)
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1
-    lens = ends - starts + 1
-    group_id = np.repeat(np.arange(ends.size, dtype=np.int64), lens)
-    within = np.arange(arr.size, dtype=np.int64) - np.repeat(starts, lens)
+    within = np.arange(arr.size, dtype=np.int64) - np.repeat(
+        starts, ends - starts + 1
+    )
     payload = (arr & np.uint8(0x7F)).astype(np.uint64) << (
         np.uint64(7) * within.astype(np.uint64)
     )
-    out = np.zeros(ends.size, dtype=np.uint64)
-    np.bitwise_or.at(out, group_id, payload)
-    return out
+    return np.add.reduceat(payload, starts)
 
 
 def varint_sizes(values: np.ndarray) -> np.ndarray:

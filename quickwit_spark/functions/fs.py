@@ -107,12 +107,13 @@ class _SyncParquetFile:
     parallel, so the lock only bites when two concurrent searches hit
     the same split."""
 
-    __slots__ = ("_pf", "_lock", "_bounds")
+    __slots__ = ("_pf", "_lock", "_bounds", "_schema")
 
     def __init__(self, pf, lock) -> None:
         self._pf = pf
         self._lock = lock
         self._bounds: dict = {}
+        self._schema = None
 
     def __getattr__(self, name):
         return getattr(self._pf, name)
@@ -132,6 +133,16 @@ class _SyncParquetFile:
                 has = st is not None and st.has_min_max
                 got.append((st.min, st.max) if has else None)
             self._bounds[col] = got
+        return got
+
+    @property
+    def schema_arrow(self):
+        """The file's Arrow schema, built once: pyarrow rebuilds it from
+        the footer on every access (~90 us), and the root doc fetch
+        reads it once per winner split per query."""
+        got = self._schema
+        if got is None:
+            got = self._schema = self._pf.schema_arrow
         return got
 
     def read_row_group(self, *args, **kwargs):

@@ -33,7 +33,10 @@ def read_pruned(path: str, columns, key_col: str, values, cache=None):
     ``cache`` (an :class:`~quickwit_spark.functions.lru.LRU`) keeps the
     DECODED row groups under ``(path, row group, columns)``, so a
     repeated read skips the decompress + decode and only re-applies the
-    residual mask."""
+    residual mask. The root doc fetch reads through it on every query;
+    the leaves only on a miss of their decoded postings entries (see
+    ``search._ShardPostings``), so a term new to a warm handle pays the
+    mask, not a second decompress of its row group."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

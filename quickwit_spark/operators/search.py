@@ -143,13 +143,26 @@ class SearchResponse:
 # split-local evaluation (runs inside the mapInPandas kernel)
 # ---------------------------------------------------------------------------
 
-# the two postings column sets the leaves read (each its own block-cache
-# entry per row group): stats + docid/tf blobs, and the position blobs
+# the two postings column sets a leaf reads on a cache miss (each its
+# own row-group entry in the block cache): stats + docid/tf blobs, and
+# the position blobs
 _WAND_COLS = (
     "field", "term", "shard", "df", "max_tf", "min_dl",
     "first_docid", "last_docid", "doc_ids", "tfs",
 )
 _POSITION_COLS = ("field", "term", "shard", "positions")
+# a term's per-shard stats, as ``_ShardPostings.stats`` names them
+_STAT_COLS = {
+    "shard": "shard", "df": "df", "max_tf": "max_tf", "min_dl": "min_dl",
+    "first": "first_docid", "last": "last_docid",
+}
+# the Python objects behind one decoded-postings entry (key, dict and
+# array headers, LRU slot), charged on top of its arrays' nbytes so that
+# the entries of absent terms and tiny shards still count
+_ENTRY_OVERHEAD = 512
+# the cached positions of a field indexed without them
+_NO_POSITIONS = np.empty(0, np.int64)
+_NO_POSITIONS.flags.writeable = False
 
 
 def _idf(stats: dict, key: tuple[str, str]) -> float:
@@ -191,130 +204,146 @@ def _phrase_hits(cand, token_lists, slop: int):
 
 class _ShardPostings:
     """The one postings reader of a leaf: the query terms' posting
-    shards in one split, decoded on demand. Stat columns (df, max_tf,
-    min_dl, first/last_docid) and the doc_ids / tfs blobs come from one
-    pushdown-filtered scan; a blob is DECODED only when an evaluator
-    asks for its shard, and the position blobs are read in a second
-    scan on the first position request, which only phrases make. The
-    leaf evaluator asks per shard (:meth:`docids`, :meth:`tfs`,
-    :meth:`positions`). Both scans read through ``cache``, see
-    :func:`read_pruned`; a query without terms reads nothing."""
+    shards in one split, decoded on demand and cached DECODED in
+    ``cache`` (an :class:`LRU`; driver mode passes ``Searcher._blocks``).
+
+    Entries, every key led by the postings file path:
+
+    * ``(path, "term", field, term)``: the term's per-shard stats
+      (:attr:`stats`: shard, df, max_tf, min_dl, first, last), sorted by
+      first_docid; an empty dict when the split lacks the term, so a
+      repeated absent term reads nothing;
+    * ``(path, blob column, field, term, shard)``: one shard's decoded
+      docids (``doc_ids``), tfs or positions, decoded on the first
+      request only, so shards an evaluator never visits stay undecoded.
+
+    Every cached array is read-only: the evaluator hands out views of
+    them. A miss reads through :func:`read_pruned` and its row-group
+    entries in the same cache: one pushdown scan of the stats and
+    docid/tf blobs of every query term, and a second scan of the
+    position blobs on the first position miss, which only phrases make
+    (each at most once per query). Without ``cache`` (Spark-mode
+    kernels, search streams, tests) a per-query LRU takes its place, so
+    nothing outlives the query. A query without terms reads nothing."""
 
     def __init__(self, split_dir: str, keys, cache=None):
-        from quickwit_spark.functions.parquet_io import read_pruned
-
         self._path = fsio.join(split_dir, POSTINGS_FILE)
-        self._cache = cache
-        self._pos_row: dict[tuple[str, str, int], int] | None = None
-        self._pos_tbl = None
-        self._doc_cache: dict[tuple[str, str, int], np.ndarray] = {}
-        self._tf_cache: dict[tuple[str, str, int], np.ndarray] = {}
-        self._pos_cache: dict[tuple[str, str, int], np.ndarray | None] = {}
-        self.stats: dict[tuple[str, str], dict] = {}
-        keyset = set(keys)
-        term_values = sorted({t for _, t in keyset})
-        self._term_values = term_values
-        if not term_values:
-            return
-        # stats + posting blobs in ONE pushdown scan: the blob columns
-        # of the query terms' rows are (almost) always needed anyway —
-        # decode-on-demand skips the DECODE per shard, not the read —
-        # and one scan halves the per-query row-group read count
-        tbl = read_pruned(self._path, _WAND_COLS, "term", term_values, cache)
-        fields = tbl.column("field").to_pylist()
-        terms = tbl.column("term").to_pylist()
-        cols = {
-            c: tbl.column(c).to_numpy()
-            for c in ("shard", "df", "max_tf", "min_dl", "first_docid", "last_docid")
+        self._cache = (
+            LRU(lambda: _BLOCK_CACHE_MAX_BYTES) if cache is None else cache
+        )
+        self._term_values = sorted({t for _, t in keys})
+        # per query: each scan's table and row of every (field, term,
+        # shard) in it, and every array this query asked for, by blob
+        # column (the skip counters count these)
+        self._scans: dict[tuple, tuple] = {}
+        self._asked: dict[str, dict] = {"doc_ids": {}, "tfs": {}, "positions": {}}
+        keys = sorted(set(keys))
+        got = {k: self._cache.get((self._path, "term") + k) for k in keys}
+        missing = [k for k in keys if got[k] is None]
+        if missing:
+            built = self._read_stats(missing)
+            for k in missing:
+                st = built.get(k, {})
+                got[k] = self._cache.put(
+                    (self._path, "term") + k, st,
+                    _ENTRY_OVERHEAD + sum(a.nbytes for a in st.values()),
+                )
+        self.stats: dict[tuple[str, str], dict] = {
+            k: st for k, st in got.items() if st
         }
+
+    def _scan(self, cols: tuple):
+        """The pushdown scan of ``cols`` over every query term, read once
+        per query through the row-group cache, and the row of each
+        (field, term, shard) in it."""
+        got = self._scans.get(cols)
+        if got is None:
+            from quickwit_spark.functions.parquet_io import read_pruned
+
+            tbl = read_pruned(
+                self._path, cols, "term", self._term_values, self._cache
+            )
+            rows = {
+                (f, t, int(sh)): i
+                for i, (f, t, sh) in enumerate(zip(
+                    tbl.column("field").to_pylist(),
+                    tbl.column("term").to_pylist(),
+                    tbl.column("shard").to_pylist(),
+                ))
+            }
+            got = self._scans[cols] = (tbl, rows)
+        return got
+
+    def _read_stats(self, keys) -> dict:
+        """{(field, term): stats} of the ``keys`` the split holds."""
+        tbl, rows = self._scan(_WAND_COLS)
+        want = set(keys)
         by_key: dict[tuple[str, str], list[int]] = {}
-        for i in range(len(fields)):
-            key = (fields[i], terms[i])
-            if key in keyset:
-                by_key.setdefault(key, []).append(i)
+        for (f, t, _), i in rows.items():
+            if (f, t) in want:
+                by_key.setdefault((f, t), []).append(i)
+        if not by_key:
+            return {}
+        cols = {c: tbl.column(c).to_numpy() for c in _STAT_COLS.values()}
+        out = {}
         for key, idxs in by_key.items():
             idxs = np.asarray(idxs)
-            order = np.argsort(cols["first_docid"][idxs], kind="stable")
-            idxs = idxs[order]
-            self.stats[key] = {
-                "shard": cols["shard"][idxs],
-                "df": cols["df"][idxs],
-                "max_tf": cols["max_tf"][idxs],
-                "min_dl": cols["min_dl"][idxs],
-                "first": cols["first_docid"][idxs],
-                "last": cols["last_docid"][idxs],
-            }
-        self._blob_tbl = tbl
-        self._blob_row = {
-            (f, t, int(sh)): i
-            for i, (f, t, sh) in enumerate(
-                zip(fields, terms, cols["shard"].tolist())
-            )
-        }
+            idxs = idxs[np.argsort(cols["first_docid"][idxs], kind="stable")]
+            st = {name: cols[c][idxs] for name, c in _STAT_COLS.items()}
+            for a in st.values():
+                a.flags.writeable = False
+            out[key] = st
+        return out
+
+    def _array(self, col: str, key: tuple[str, str, int]) -> np.ndarray:
+        """One shard's decoded ``col`` blob, from this query's memo, the
+        cache, or (a miss) the scan, decoded and cached read-only."""
+        asked = self._asked[col]
+        got = asked.get(key)
+        if got is None:
+            ckey = (self._path, col) + key
+            got = self._cache.get(ckey)
+            if got is None:
+                tbl, rows = self._scan(
+                    _POSITION_COLS if col == "positions" else _WAND_COLS
+                )
+                blob = tbl.column(col)[rows[key]].as_py()
+                if col == "doc_ids":
+                    got = delta_decode(blob).astype(np.int64)
+                elif col == "tfs":
+                    got = decode_varint(blob).astype(np.int64)
+                elif blob is None:
+                    got = _NO_POSITIONS
+                else:
+                    got = decode_positions(blob, self.tfs(*key)).astype(np.int64)
+                got.flags.writeable = False
+                got = self._cache.put(ckey, got, _ENTRY_OVERHEAD + got.nbytes)
+            asked[key] = got
+        return got
 
     def docids(self, field: str, term: str, shard: int) -> np.ndarray:
-        key = (field, term, shard)
-        got = self._doc_cache.get(key)
-        if got is None:
-            blob = self._blob_tbl.column("doc_ids")[self._blob_row[key]].as_py()
-            got = delta_decode(blob).astype(np.int64)
-            self._doc_cache[key] = got
-        return got
+        return self._array("doc_ids", (field, term, shard))
 
     def tfs(self, field: str, term: str, shard: int) -> np.ndarray:
-        key = (field, term, shard)
-        got = self._tf_cache.get(key)
-        if got is None:
-            blob = self._blob_tbl.column("tfs")[self._blob_row[key]].as_py()
-            got = decode_varint(blob).astype(np.int64)
-            self._tf_cache[key] = got
-        return got
+        return self._array("tfs", (field, term, shard))
 
     def positions(self, field: str, term: str, shard: int):
         """Decoded positions for one shard, or None when the field has
-        no positions. Read from a SEPARATE pushdown scan so term-only
-        queries never touch the (large) position blobs."""
-        key = (field, term, shard)
-        if key in self._pos_cache:
-            return self._pos_cache[key]
-        if self._pos_tbl is None:
-            from quickwit_spark.functions.parquet_io import read_pruned
-
-            self._pos_tbl = read_pruned(
-                self._path, _POSITION_COLS, "term", self._term_values, self._cache
-            )
-            self._pos_row = {
-                (f, t, int(s)): i
-                for i, (f, t, s) in enumerate(
-                    zip(
-                        self._pos_tbl.column("field").to_pylist(),
-                        self._pos_tbl.column("term").to_pylist(),
-                        self._pos_tbl.column("shard").to_pylist(),
-                    )
-                )
-            }
-        blob = self._pos_tbl.column("positions")[self._pos_row[key]].as_py()
-        got = (
-            None
-            if blob is None
-            else decode_positions(blob, self.tfs(field, term, shard)).astype(
-                np.int64
-            )
-        )
-        self._pos_cache[key] = got
-        return got
+        no positions."""
+        got = self._array("positions", (field, term, shard))
+        return None if got is _NO_POSITIONS else got
 
     @property
     def n_docid_decoded(self) -> int:
-        return len(self._doc_cache)
+        return len(self._asked["doc_ids"])
 
     @property
     def n_tf_decoded(self) -> int:
-        return len(self._tf_cache)
+        return len(self._asked["tfs"])
 
     @property
     def n_pos_decoded(self) -> int:
-        return len(self._pos_cache)
+        return len(self._asked["positions"])
 
 
 def _wand_bool(
@@ -644,13 +673,16 @@ _FAST_CACHE_MAX_BYTES = int(
 # fast_field_cache_capacity (cli.py) resizes a live cache
 _FAST_CACHE = LRU(lambda: _FAST_CACHE_MAX_BYTES)
 
-# Per-Searcher budget of decoded postings and doc-store row groups (see
-# Searcher._blocks). The leaves' postings scans and the root fetch each
-# decode whole row groups for a few terms or payloads, so a hit saves
-# that decode. It pays off only while the groups holding the query
-# terms and the winners fit in the budget. A 40k-turn, 8-split index
-# keeps about 13 MB resident (7 MB postings, 6 MB docs), so 128 MB
-# holds every group of an index of roughly 400k turns.
+# Per-Searcher budget of the block cache (see Searcher._blocks): the
+# leaves' decoded postings (each term's shard stats, each visited
+# shard's docid / tf / position arrays) and the decoded row groups that
+# their misses and the root doc fetch read through. A warm leaf hit
+# skips the pushdown scan and every varint decode; it pays off while
+# the query terms' postings and the winners' doc groups fit. After the
+# search_warm mix, a 40k-turn, 8-split index keeps about 12.7 MB
+# resident (2.8 MB decoded postings in 288 entries, 3.9 MB postings
+# and 6.0 MB doc-store row groups), so 128 MB holds roughly a
+# 400k-turn index with that query variety.
 _BLOCK_CACHE_MAX_BYTES = 128 << 20
 
 
@@ -684,8 +716,9 @@ def _eval_split_partial(
     ``fetch_payload=False`` defers doc-store reads to the root's
     fetch_docs phase (driver mode only — spark-mode kernels keep the
     fetch leaf-side for data locality on a real cluster). ``cache``:
-    the decoded row-group LRU the postings reads go through (driver
-    mode passes ``Searcher._blocks``; Spark-mode kernels read uncached)."""
+    the LRU that keeps the decoded postings (driver mode passes
+    ``Searcher._blocks``; Spark-mode kernels pass None and keep them for
+    one query), see :class:`_ShardPostings`."""
     dpath = fsio.join(split_dir, DOCS_FILE)
     fast_cols = ["doc_len", "ts_us"]
     if sort_by and sort_by not in ("ts", "ts_us") and sort_by not in fast_cols:
@@ -1193,9 +1226,10 @@ def _df_candidate_splits(splits, missing, default_field):
 
 class Searcher:
     """Warm search handle over one index: caches catalog, global stats,
-    per-term global doc-freqs and decoded postings and doc-store row
-    groups across queries (the root's metastore + footer + byte-range
-    caches, leaf.rs:64-107 analog)."""
+    per-term global doc-freqs, decoded postings (per-term shard stats
+    and per-shard docid / tf / position arrays) and decoded row groups
+    across queries (the root's metastore + footer + byte-range caches,
+    leaf.rs:64-107 analog)."""
 
     def __init__(self, spark, index_dir: str, at_seq: int | None = None):
         self.spark = spark
@@ -1211,13 +1245,17 @@ class Searcher:
         self.config = self.catalog.config
         self._df_cache: dict[tuple[str, str], int] = {}
         self._warned_no_stats = False
-        # decoded postings and doc-store row groups of the driver-mode
-        # leaves and root fetch, keyed (file path, row group, columns).
-        # Per HANDLE, not per process: a fresh Searcher always re-reads
-        # the disk, so a corrupted split surfaces as a per-split error
-        # instead of being served from memory. Split files are
-        # immutable, so entries stay valid across refresh(), which
-        # drops only unpublished splits.
+        # the driver-mode leaves' decoded postings, keyed (postings
+        # path, "term", field, term) and (postings path, blob column,
+        # field, term, shard) (see _ShardPostings), and the decoded row
+        # groups the leaves' misses and the root fetch read through,
+        # keyed (file path, row group, columns); every key leads with
+        # its file path, so refresh() drops by path. Per HANDLE, not per
+        # process: a fresh Searcher always re-reads the disk, so a
+        # corrupted split surfaces as a per-split error instead of
+        # being served from memory. Split files are immutable, so
+        # entries stay valid across refresh(), which drops only
+        # unpublished splits.
         self._blocks = LRU(lambda: _BLOCK_CACHE_MAX_BYTES)
         self._catalog_mtime = self._mtime()
 

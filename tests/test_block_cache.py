@@ -1,8 +1,10 @@
-"""The Searcher's decoded row-group cache (``Searcher._blocks``) and the
-LRU behind it: the driver-mode leaves' postings reads and the root doc
-fetch both go through it, warm queries decode nothing new and answer
-exactly as cold ones, refresh() keeps still-published splits' entries
-and drops merged-away ones, and the byte budget holds under eviction.
+"""The Searcher's block cache (``Searcher._blocks``) and the LRU behind
+it: the driver-mode leaves keep decoded postings in it (term stats and
+per-shard arrays, read-only), read through its decoded row groups on a
+miss, and the root doc fetch reads doc-store row groups through it;
+warm queries scan and decode nothing new and answer exactly as cold
+ones, refresh() keeps still-published splits' entries and drops
+merged-away ones, and the byte budget holds under eviction.
 Also: footer key bounds cached per file handle prune like a fresh
 footer walk."""
 
@@ -58,17 +60,14 @@ def test_repeated_queries_decode_no_new_row_group(spark, index_dir):
     assert _run_all(fresh) == cold
 
 
-# the two postings reads, by the columns in their cache key: the stats +
-# blob scan and the positions scan; every query shape reads through the
-# one reader behind them, so a row group is cached at most once per
-# column set
-WAND_COLS = ("field", "term", "shard", "df", "max_tf", "min_dl",
-             "first_docid", "last_docid", "doc_ids", "tfs")
-POSITION_COLS = ("field", "term", "shard", "positions")
-
-
 def _postings_keys(s):
     return {k for k in s._blocks._data if k[0].endswith("/postings.parquet")}
+
+
+def _decoded_kinds(s):
+    """The decoded-postings entry kinds held: "term" (a term's shard
+    stats) and the blob columns "doc_ids", "tfs", "positions"."""
+    return {k[1] for k in _postings_keys(s) if isinstance(k[1], str)}
 
 
 def test_leaf_postings_reads_go_through_the_block_cache(spark, index_dir):
@@ -77,11 +76,83 @@ def test_leaf_postings_reads_go_through_the_block_cache(spark, index_dir):
     misses = s._blocks.misses
     assert _run_all(s) == cold
     assert s._blocks.misses == misses
-    cols = {k[2] for k in _postings_keys(s)}
-    assert cols == {WAND_COLS, POSITION_COLS}
+    assert _decoded_kinds(s) == {"term", "doc_ids", "tfs", "positions"}
     assert {k[0].rsplit("/", 1)[1] for k in s._blocks._data} == {
         "postings.parquet", "docs.parquet"
     }
+
+
+def test_warm_pass_reads_and_decodes_no_postings(
+    spark, index_dir, monkeypatch
+):
+    """Once a pass of QUERIES has run, a second one is answered from the
+    decoded entries: no postings scan, no varint decode."""
+    from quickwit_spark.functions import parquet_io
+
+    s = Searcher(spark, index_dir)
+    cold = _run_all(s)
+    calls = []
+
+    def counting(name, real):
+        def wrapped(*args, **kwargs):
+            calls.append(name)
+            return real(*args, **kwargs)
+        return wrapped
+
+    real_read = parquet_io.read_pruned
+
+    def read(path, *args, **kwargs):
+        if path.endswith("/postings.parquet"):
+            calls.append("read_pruned")
+        return real_read(path, *args, **kwargs)
+
+    monkeypatch.setattr(parquet_io, "read_pruned", read)
+    for name in ("delta_decode", "decode_varint", "decode_positions"):
+        monkeypatch.setattr(
+            search_mod, name, counting(name, getattr(search_mod, name))
+        )
+    assert _run_all(s) == cold
+    assert calls == []
+    # the counting wrappers are live: a fresh handle scans and decodes
+    assert _run_all(Searcher(spark, index_dir)) == cold
+    assert {"read_pruned", "delta_decode", "decode_varint",
+            "decode_positions"} <= set(calls)
+
+
+def test_positions_entries_only_after_a_phrase(spark, index_dir):
+    s = Searcher(spark, index_dir)
+    for q, kw in QUERIES:
+        if '"' not in q:
+            s.search(q, k=10, **kw)
+    assert "positions" not in _decoded_kinds(s)
+    assert {"term", "doc_ids", "tfs"} <= _decoded_kinds(s)
+    s.search('"w00001 w00002"~2', k=10)
+    assert "positions" in _decoded_kinds(s)
+
+
+def test_cached_postings_are_read_only(spark, index_dir):
+    """The evaluator hands out views of cached arrays, so an in-place
+    write to one must raise instead of corrupting later answers."""
+    import numpy as np
+
+    s = Searcher(spark, index_dir)
+    want = _run_all(s)
+    arrays = [
+        v for k, (v, _) in s._blocks._data.items()
+        if isinstance(k[1], str) and k[1] != "term"
+    ] + [
+        a for k, (st, _) in s._blocks._data.items() if k[1:2] == ("term",)
+        for a in st.values()
+    ]
+    assert arrays
+    for a in arrays:
+        assert isinstance(a, np.ndarray) and not a.flags.writeable
+        if a.size:
+            with pytest.raises(ValueError):
+                a[:1] += 1
+            with pytest.raises(ValueError):
+                a[: a.size // 2 + 1][0] = 0  # a view of it
+    assert _run_all(s) == want
 
 
 def test_exhaustive_term_queries_read_no_positions(
@@ -111,11 +182,11 @@ def test_exhaustive_term_queries_read_no_positions(
     ]:
         assert s.search(q, k=10, **kw).num_hits > 0, q
     assert decoded == []
-    assert POSITION_COLS not in {k[2] for k in _postings_keys(s)}
+    assert "positions" not in _decoded_kinds(s)
     # a phrase on the same path does read and decode them
     assert s.search('"w00001 w00002"~2', k=10, sort_by="ts_us").num_hits > 0
     assert decoded
-    assert POSITION_COLS in {k[2] for k in _postings_keys(s)}
+    assert "positions" in _decoded_kinds(s)
 
 
 def test_byte_budget_holds_under_eviction(spark, index_dir, monkeypatch):

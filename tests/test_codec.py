@@ -30,6 +30,32 @@ def test_varint_known_bytes():
     assert encode_varint(np.array([1], dtype=np.uint64)) == bytes([0x01])
 
 
+def test_varint_ten_byte_values():
+    # 2**64-1 takes ten LEB128 bytes; its tenth byte carries bit 63 only
+    vals = np.array([2**64 - 1, 0, 2**63, 2**64 - 2, 1], dtype=np.uint64)
+    buf = encode_varint(vals)
+    assert len(buf) == 10 + 1 + 10 + 10 + 1
+    got = decode_varint(buf)
+    assert got.dtype == np.uint64
+    assert np.array_equal(got, vals)
+
+
+def test_varint_all_single_byte_blob():
+    vals = np.arange(128, dtype=np.uint64)
+    buf = encode_varint(vals)
+    assert len(buf) == vals.size
+    got = decode_varint(buf)
+    assert got.dtype == np.uint64
+    assert np.array_equal(got, vals)
+
+
+def test_varint_decode_dtype():
+    for vals in ([], [5], [300], [1, 2**40, 3]):
+        got = decode_varint(encode_varint(np.array(vals, dtype=np.uint64)))
+        assert got.dtype == np.uint64
+        assert got.tolist() == vals
+
+
 @given(
     st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=500)
 )

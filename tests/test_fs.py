@@ -243,6 +243,27 @@ class TestMockE2E:
         assert not os.path.exists(os.path.join(mock_backing, "todelete"))
 
 
+def test_cached_schema_is_memoized_and_equals_fresh(tmp_path):
+    """The cached handle builds its Arrow schema once and hands back the
+    same object, equal to a fresh open's schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quickwit_spark.functions import fs as fsio
+
+    path = str(tmp_path / "schema.parquet")
+    pq.write_table(
+        pa.table({"docid": pa.array([1, 2], pa.int64()),
+                  "text": ["a", "b"], "ts_us": pa.array([3, 4], pa.int64())}),
+        path,
+    )
+    pf = fsio.parquet_file_cached(path)
+    first = pf.schema_arrow
+    assert pf.schema_arrow is first
+    assert first.equals(fsio.parquet_file(path).schema_arrow)
+    assert first.names == ["docid", "text", "ts_us"]
+
+
 def test_listdir_mock_and_local(tmp_path):
     from quickwit_spark.functions import fs as fsio
 

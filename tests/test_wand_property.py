@@ -9,7 +9,9 @@ Spark-free: splits build via the pure Arrow kernel
 (`build_split_tables_arrow`), so hundreds of examples run in seconds. This is
 the strongest guard on the recursive node evaluator — every tree shape
 must yield bit-identical (ids, scores, num_hits), and the whole leaf
-(`_eval_split_partial`) bit-identical partial rows.
+(`_eval_split_partial`) bit-identical partial rows. The evaluator also
+answers the same through one decoded-postings cache shared across
+examples, cold and warm, as without one.
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from quickwit_spark.config import IndexConfig
+from quickwit_spark.functions.lru import LRU
 from quickwit_spark.functions.tokenize import tokenize_default
 from quickwit_spark.operators import search
 from quickwit_spark.operators.build import build_split_tables_arrow, write_split
@@ -65,6 +68,9 @@ _corpus = st.lists(_doc, min_size=20, max_size=50)
 # window ends as row offsets (fixture rows are one second apart); None
 # leaves that side open
 _bound = st.one_of(st.none(), st.integers(0, 50))
+# one decoded-postings cache shared by every example, as a Searcher's is
+# by every query (each example's split has its own path)
+_SHARED = LRU(lambda: 1 << 30)
 
 
 @settings(max_examples=80, deadline=None)
@@ -107,12 +113,23 @@ def test_wand_equals_exhaustive_property(corpus, ast, k, window, sort_by,
     with tempfile.TemporaryDirectory(prefix="wandprop") as sd:
         write_split(postings_tbl, dstore, sd)
         args = (sd, ast, doc_len, stats, cfg, k, None, ts_us, start_us, end_us)
-        w_ids, w_scores, w_hits, _, w_matches = search._wand_bool(
-            *args, collect=True
-        )
+        uncached = search._wand_bool(*args, collect=True)
+        w_ids, w_scores, w_hits, _, w_matches = uncached
         e_ids, e_scores, e_hits, _, e_matches = reference_leaf(
             *args, collect=True
         )
+        # through the shared cache, cold then warm: the same bits and
+        # the same per-query skip counts as without a cache
+        for _ in range(2):
+            got = search._wand_bool(
+                *args[:6], _SHARED, *args[7:], collect=True
+            )
+            for a, b in zip(got, uncached):
+                if isinstance(a, np.ndarray):
+                    np.testing.assert_array_equal(a, b)
+                    assert a.dtype == b.dtype
+                else:
+                    assert a == b
         rows = leaf(sd)
         with mock.patch.object(search, "_wand_bool", reference_leaf):
             ref_rows = leaf(sd)
