@@ -12,18 +12,18 @@ The Spark re-expression of the reference's root/leaf search
   predicate pushdown = the reference's warmup downloading only needed
   postings) through one reader, ``_ShardPostings``, decodes
   delta+varint lists (positions only for phrases), evaluates the
-  boolean/phrase AST vectorized in numpy, scores BM25, and emits a
-  partial top-k
-  (collector.rs:136-231 analog) + per-split match count + partial agg
-  buckets;
+  boolean/phrase AST vectorized in numpy, scores BM25, and returns one
+  ``LeafResponse`` per split (collector.rs:183-231
+  ``LeafSearchResponse``): the partial top-k as doc addresses, the
+  split's match count and its partial agg buckets;
 * root merge (collector.rs:325-419, root.rs:263-288) = a driver-side
-  pandas merge of the tiny partials: final order
+  numpy merge of the leaf responses: final order
   ``(score desc, split_id asc, docid asc)`` — the reference's
   ``(Reverse(sort_value), GlobalDocAddress)`` tie order
   (quickwit-search/src/lib.rs:100-105, search_api.proto:184-204);
 * fetch_docs (quickwit-search/src/fetch_docs.rs:98-173) = targeted
-  docid-filtered reads of the split doc store, done inside the kernel
-  for its own top-k only.
+  docid-filtered reads of the split doc store, done by the root for
+  the final hits only, whichever mode ran the leaves.
 
 BM25 uses GLOBAL corpus stats: N and avgdl come from the catalog
 (num_docs/sum_doc_len per split — free), per-term global doc-freq from a
@@ -82,27 +82,48 @@ from quickwit_spark.plans.query import (
     query_terms,
 )
 
-HIT_SCHEMA = (
-    "kind string, split_id string, docid long, score double, "
-    "sort_value double, doc string, ts_us long, "
-    "agg_name string, agg_key string, agg_count long, agg_sum double, "
-    "agg_min double, agg_max double, agg_sq double"
+# one partial agg bucket; a terms agg's split_size summary has a null
+# agg_key, and buckets without a sub-agg leave the four moments out
+_AGG_COLS = ["agg_key", "agg_count", "agg_sum", "agg_min", "agg_max", "agg_sq"]
+# the Spark-mode wire: one row per split, its LeafResponse's fields
+LEAF_SCHEMA = (
+    "split_id string, num_hits long, docid array<long>, "
+    "sort_value array<double>, score array<double>, ts_us array<long>, "
+    "aggs array<struct<agg_name:string, agg_key:string, agg_count:long, "
+    "agg_sum:double, agg_min:double, agg_max:double, agg_sq:double>>"
 )
-_HIT_COLS = [c.split(" ")[0] for c in HIT_SCHEMA.split(", ")]
 
 _log = logging.getLogger(__name__)
+
+
+@dataclass
+class LeafResponse:
+    """One split's answer to the root (collector.rs:183-231
+    ``LeafSearchResponse``): ``num_hits`` matches, the top-m hits as
+    columns (``sort_value`` is the descending merge key, ``score`` the
+    reported value) and the partial agg buckets, each a record of
+    ``agg_name`` plus the ``_AGG_COLS`` it sets."""
+
+    split_id: str
+    num_hits: int
+    docid: np.ndarray  # int64
+    sort_value: np.ndarray  # float64
+    score: np.ndarray  # float64
+    ts_us: np.ndarray  # int64
+    aggs: list = dc_field(default_factory=list)
 
 
 @dataclass
 class SearchHit:
     """One hit: the stored document comes back as a dict (the reference
     returns the reconstructed user JSON — convert_leaf_hit,
-    quickwit-search/src/lib.rs:173-185)."""
+    quickwit-search/src/lib.rs:173-185). ``doc`` is None from the root
+    merge until the fetch phase fills it."""
 
     split_id: str
     docid: int
     score: float
-    doc: dict
+    doc: dict | None
     ts_us: int | None = None
 
     # transcript-schema conveniences
@@ -707,18 +728,15 @@ def _eval_split_partial(
     sort_by,
     sort_desc,
     aggs: dict | None,
-    fetch_payload: bool = True,
     cache=None,
-) -> list[dict]:
-    """One leaf search: returns partial rows (hits + count + agg buckets)
-    as ``_HIT_COLS`` records; the caller frames them (per query in
-    driver mode, per split at the Spark-mode ``mapInPandas`` boundary).
-    ``fetch_payload=False`` defers doc-store reads to the root's
-    fetch_docs phase (driver mode only — spark-mode kernels keep the
-    fetch leaf-side for data locality on a real cluster). ``cache``:
-    the LRU that keeps the decoded postings (driver mode passes
-    ``Searcher._blocks``; Spark-mode kernels pass None and keep them for
-    one query), see :class:`_ShardPostings`."""
+) -> LeafResponse:
+    """One leaf search: the split's ``LeafResponse``. Hits are doc
+    addresses; the root fetches the payloads of the final hits only
+    (fetch_docs.rs:98-173), since the merge keeps k+offset of the
+    splits × m candidates. ``cache``: the LRU that keeps the decoded
+    postings (driver mode passes ``Searcher._blocks``; Spark-mode
+    kernels pass None and keep them for one query), see
+    :class:`_ShardPostings`."""
     dpath = fsio.join(split_dir, DOCS_FILE)
     fast_cols = ["doc_len", "ts_us"]
     if sort_by and sort_by not in ("ts", "ts_us") and sort_by not in fast_cols:
@@ -763,9 +781,11 @@ def _eval_split_partial(
         order_key = keys if sort_desc else -keys
         ids, sel = _top_m(matches, order_key, m)
         real_vals = col[ids].astype(np.float64)
-    out_rows = _hit_rows(
-        split_id, dpath, ids, sel, real_vals, ts_us, fetch_payload
-    ) + [_count_row(split_id, num_hits)]
+    out = LeafResponse(
+        split_id, int(num_hits), np.asarray(ids, np.int64),
+        np.asarray(sel, np.float64), np.asarray(real_vals, np.float64),
+        np.asarray(ts_us[ids], np.int64),
+    )
 
     # partial aggregations (collector.rs:214-221 intermediate results).
     # A zero-match split still participates when a terms agg asks for
@@ -805,12 +825,10 @@ def _eval_split_partial(
                 extra["__all__"] = col_arrays[params["field"]]
             rows = _partial_agg(kind, params, vals, extra)
             for r in rows:
-                r["kind"] = "agg"
-                r["split_id"] = split_id
                 r["agg_name"] = name
-            out_rows.extend(rows)
+            out.aggs.extend(rows)
 
-    return out_rows
+    return out
 
 
 def fetch_doc_payloads(dpath: str, docids, cache=None) -> dict[int, str]:
@@ -831,37 +849,6 @@ def fetch_doc_payloads(dpath: str, docids, cache=None) -> dict[int, str]:
         did = rec.pop("docid")
         out[int(did)] = _json.dumps(rec, default=str)
     return out
-
-
-def _hit_rows(
-    split_id: str, dpath: str, top_ids, sel, real_vals, ts_us,
-    fetch_payload: bool = True,
-) -> list[dict]:
-    """Per-split hit rows for the partial top-m. ``fetch_payload=False``
-    defers the doc-store read to the root (the reference's separate
-    fetch_docs phase): the root merges k+offset winners out of
-    m×splits candidates, so fetching per-leaf reads splits× more doc
-    rows than the response needs."""
-    if len(top_ids) == 0:
-        return []
-    dmap = fetch_doc_payloads(dpath, top_ids) if fetch_payload else {}
-    base = dict.fromkeys(_HIT_COLS)
-    return [
-        {
-            **base, "kind": "hit", "split_id": split_id, "docid": int(did),
-            "score": float(val), "sort_value": float(ordkey),
-            "doc": dmap.get(int(did)), "ts_us": int(ts_us[did]),
-        }
-        for did, ordkey, val in zip(top_ids, sel, real_vals)
-    ]
-
-
-def _count_row(split_id: str, num_hits) -> dict:
-    """The split's num_hits partial (collector.rs:191)."""
-    return {
-        **dict.fromkeys(_HIT_COLS), "kind": "count", "split_id": split_id,
-        "agg_count": int(num_hits),
-    }
 
 
 _AGG_KINDS = ("terms", "histogram", "range", "stats", "avg")
@@ -1005,8 +992,7 @@ def _partial_agg(
     """Per-split partial aggregation buckets (ES-compatible subset the
     reference wires through — docs/reference/aggregation.md: terms
     (with optional stats sub-agg + order-by-sub-agg), histogram, range,
-    avg, stats)."""
-    base = {c: None for c in _HIT_COLS}
+    avg, stats): bucket records of the ``_AGG_COLS`` each sets."""
     rows = []
     if kind == "terms":
         ser = pd.Series(vals)
@@ -1026,19 +1012,15 @@ def _partial_agg(
             grouped = sv.groupby(ser).agg(["count", "sum", "min", "max"])
             grouped["sq"] = (sv * sv).groupby(ser).sum()
             for key, g in grouped.iterrows():
-                r = dict(base)
-                r.update(
+                rows.append(dict(
                     agg_key=str(key), agg_count=int(g["count"]),
                     agg_sum=float(g["sum"]), agg_min=float(g["min"]),
                     agg_max=float(g["max"]), agg_sq=float(g["sq"]),
-                )
-                rows.append(r)
+                ))
         else:
             counts = ser.value_counts(dropna=True)
             for key, cnt in counts.items():
-                r = dict(base)
-                r.update(agg_key=str(key), agg_count=int(cnt))
-                rows.append(r)
+                rows.append(dict(agg_key=str(key), agg_count=int(cnt)))
         # min_doc_count=0: 'return all terms in the field'
         # (aggregation.md) — zero-count buckets for field values the
         # query didn't match (the split-local term dictionary)
@@ -1057,8 +1039,7 @@ def _partial_agg(
                 )
             for key in all_keys:
                 if str(key) not in seen:
-                    r = dict(base)
-                    r.update(agg_key=str(key), agg_count=0)
+                    r = dict(agg_key=str(key), agg_count=0)
                     if stats_field is not None:
                         r.update(agg_sum=0.0, agg_min=np.nan, agg_max=np.nan,
                                  agg_sq=0.0)
@@ -1088,7 +1069,6 @@ def _partial_agg(
 
                 rows.sort(key=mkey)
             kept, cut = rows[:split_size], rows[split_size:]
-            summary = dict(base)
             # the largest CUT bucket bounds the per-split error ONLY
             # under count-desc cut order (aggregation.md defines
             # doc_count_error_upper_bound for count ordering; under
@@ -1100,7 +1080,7 @@ def _partial_agg(
                 if (target == "_count" and not asc)
                 else 0.0
             )
-            summary.update(
+            summary = dict(
                 agg_key=None,
                 agg_count=int(sum(r["agg_count"] for r in cut)),
                 agg_sum=err_part,
@@ -1139,19 +1119,15 @@ def _partial_agg(
             g = svs.groupby(pd.Series(buckets)).agg(["sum", "min", "max"])
             g["sq"] = (svs * svs).groupby(pd.Series(buckets)).sum()
             for key, c in zip(uniq, cnt):
-                r = dict(base)
                 st = g.loc[key]
-                r.update(
+                rows.append(dict(
                     agg_key=repr(float(key)), agg_count=int(c),
                     agg_sum=float(st["sum"]), agg_min=float(st["min"]),
                     agg_max=float(st["max"]), agg_sq=float(st["sq"]),
-                )
-                rows.append(r)
+                ))
         else:
             for key, c in zip(uniq, cnt):
-                r = dict(base)
-                r.update(agg_key=repr(float(key)), agg_count=int(c))
-                rows.append(r)
+                rows.append(dict(agg_key=repr(float(key)), agg_count=int(c)))
     elif kind == "range":
         v = vals.astype(np.float64)
         stats_field = params.get("stats_field")
@@ -1168,8 +1144,7 @@ def _partial_agg(
                 mask &= v >= lo
             if hi is not None:
                 mask &= v < hi
-            r = dict(base)
-            r.update(
+            r = dict(
                 agg_key=f"{lo if lo is not None else '*'}-{hi if hi is not None else '*'}",
                 agg_count=int(mask.sum()),
             )
@@ -1186,16 +1161,14 @@ def _partial_agg(
     elif kind in ("stats", "avg"):
         v = vals[~pd.isna(vals)].astype(np.float64)
         if v.size:
-            r = dict(base)
-            r.update(
+            rows.append(dict(
                 agg_key="",
                 agg_count=int(v.size),
                 agg_sum=float(v.sum()),
                 agg_min=float(v.min()),
                 agg_max=float(v.max()),
                 agg_sq=float((v * v).sum()),
-            )
-            rows.append(r)
+            ))
     else:
         raise ValueError(f"unsupported aggregation {kind!r}")
     return rows
@@ -1376,11 +1349,11 @@ class Searcher:
             # request validation (quickwit-search/src/root.rs:112-133)
             raise ValueError("max_hits + start_offset must be ≤ 10,000")
         aggs = _normalize_aggs(aggs)
-        pdf, errors = self.search_partials(
+        leaves, errors = self.search_partials(
             query, k, offset, start_us, end_us, sort_by, sort_desc, aggs,
             mode, search_fields,
         )
-        resp = merge_partials(pdf, k, offset, sort_by, aggs)
+        resp = merge_partials(leaves, k, offset, sort_by, aggs)
         resp.errors = errors
         self._fetch_missing_docs(resp)
         resp.elapsed_sec = _time.time() - t0
@@ -1388,8 +1361,9 @@ class Searcher:
 
     def _fetch_missing_docs(self, resp: SearchResponse) -> None:
         """Root fetch_docs phase (fetch_docs.rs:98-173): payloads for
-        the final winners only, grouped per split and read through the
-        block cache in the calling thread.
+        the final hits only, grouped per split and read through the
+        block cache in the calling thread, whichever mode ran the
+        leaves.
 
         Same failure tolerance as the leaf phase: a split whose doc
         fetch fails (e.g. GC'd between the leaf phase and the root
@@ -1401,10 +1375,7 @@ class Searcher:
 
         pending: dict[str, list] = {}
         for h in resp.hits:
-            if h.doc is None:
-                pending.setdefault(h.split_id, []).append(h)
-        if not pending:
-            return
+            pending.setdefault(h.split_id, []).append(h)
 
         dropped: set[int] = set()
         for split_id, hs in pending.items():
@@ -1432,12 +1403,38 @@ class Searcher:
     # split sets go through the Spark job (the root→leaf fan-out)
     DRIVER_EXEC_MAX_SPLITS = 32
 
+    def _plan(self, query, start_us, end_us, search_fields=None):
+        """The root's planning, shared by searches and search streams:
+        reload a stale catalog, parse and validate the query, prune the
+        splits (lib.rs:107-156) and gather the BM25 stats
+        ``{N, avgdl, df}``. Returns ``(ast, [(split_id, split_dir)],
+        stats)``; stats is None when no split survives pruning."""
+        self._refresh_if_stale()
+        ast = parse_query(query, self.config, search_fields)
+        _validate_phrase_fields(ast, self.config)
+        splits = prune_splits(
+            self.catalog.published_splits(), ast, self.config, start_us, end_us
+        )
+        if not splits:
+            return ast, [], None
+        stats = {
+            "N": self.n_docs,
+            "avgdl": (self.catalog.total_doc_len() / max(self.n_docs, 1)) or 1.0,
+            "df": self._global_df(query_terms(ast)),
+        }
+        rows = [
+            (s.split_id, self.catalog.split_dir(s.split_id)) for s in splits
+        ]
+        return ast, rows, stats
+
     def search_partials(
         self, query, k, offset=0, start_us=None, end_us=None,
         sort_by=None, sort_desc=True, aggs=None,
         mode: str = "auto", search_fields=None,
-    ) -> tuple[pd.DataFrame, list]:
-        """Run the leaf phase; returns (partial rows, per-split errors).
+    ) -> tuple[list[LeafResponse], list]:
+        """Run the leaf phase; returns (one ``LeafResponse`` per split
+        that answered, per-split errors). Hits carry doc addresses; the
+        root fetches payloads after the merge.
 
         mode: 'spark' (distributed mapInPandas over splits), 'driver'
         (in-process, same kernel function), or 'auto'.
@@ -1449,6 +1446,11 @@ class Searcher:
         pool only added hand-off cost: on a warm 40k-turn, 8-split index
         the mix's p50 was ~23 ms pooled, ~14 ms inline (both cached).
 
+        Spark mode ships each split's response as one ``LEAF_SCHEMA``
+        row with typed array columns and rebuilds it here; the wire
+        turns a NaN inside an array into a null, which the dtype'd
+        ``np.asarray`` turns back into NaN.
+
         Failure tolerance mirrors the reference root: a failing split
         is retried once (quickwit-search/src/retry/search.rs), then its
         error is REPORTED while the other splits' results still answer
@@ -1459,24 +1461,11 @@ class Searcher:
         "retry on a different node").
         """
         aggs = _normalize_aggs(aggs)
-        self._refresh_if_stale()
-        ast = parse_query(query, self.config, search_fields)
-        _validate_phrase_fields(ast, self.config)
-        splits = prune_splits(
-            self.catalog.published_splits(), ast, self.config, start_us, end_us
-        )
-        if not splits:
-            return pd.DataFrame(columns=_HIT_COLS), []
-        stats = {
-            "N": self.n_docs,
-            "avgdl": (self.catalog.total_doc_len() / max(self.n_docs, 1)) or 1.0,
-            "df": self._global_df(query_terms(ast)),
-        }
+        ast, rows, stats = self._plan(query, start_us, end_us, search_fields)
+        if not rows:
+            return [], []
         m = k + offset
         config = self.config
-        rows = [
-            (s.split_id, self.catalog.split_dir(s.split_id)) for s in splits
-        ]
         if mode == "auto":
             mode = (
                 "driver"
@@ -1485,18 +1474,15 @@ class Searcher:
             )
 
         if mode == "driver":
-            # leaves return doc ADDRESSES; the root fetches payloads for
-            # the k winners only (the reference's fetch_docs phase) —
-            # per-leaf fetching reads splits× more doc rows than needed
-            hit_rows, errors = [], []
+            leaves, errors = [], []
             for split_id, split_dir in rows:
                 for attempt in (0, 1):
                     try:
-                        hit_rows += _eval_split_partial(
+                        leaves.append(_eval_split_partial(
                             split_id, split_dir, ast, stats, config, m,
                             start_us, end_us, sort_by, sort_desc, aggs,
-                            fetch_payload=False, cache=self._blocks,
-                        )
+                            cache=self._blocks,
+                        ))
                         break
                     except Exception as exc:  # noqa: BLE001 - reported
                         if attempt:
@@ -1508,9 +1494,7 @@ class Searcher:
                 raise RuntimeError(
                     f"all {len(rows)} splits failed; first: {errors[0]}"
                 )
-            # one frame per query: per-leaf frames + concat cost more
-            # than the leaves' parquet decode
-            return pd.DataFrame(hit_rows, columns=_HIT_COLS), errors
+            return leaves, errors
 
         sdf = self.spark.createDataFrame(
             self.spark.sparkContext.parallelize(rows, len(rows)),
@@ -1521,13 +1505,25 @@ class Searcher:
             limit_worker_threads()
             for pdf in iterator:
                 for split_id, path in zip(pdf["split_id"], pdf["path"]):
-                    yield pd.DataFrame(_eval_split_partial(
+                    r = _eval_split_partial(
                         split_id, path, ast, stats, config, m,
                         start_us, end_us, sort_by, sort_desc, aggs,
-                    ), columns=_HIT_COLS)
+                    )
+                    yield pd.DataFrame({f: [v] for f, v in vars(r).items()})
 
-        out = sdf.mapInPandas(kernel, schema=HIT_SCHEMA)
-        return out.toPandas(), []
+        out = sdf.mapInPandas(kernel, schema=LEAF_SCHEMA).toPandas()
+        leaves = [
+            LeafResponse(
+                r.split_id, int(r.num_hits),
+                np.asarray(r.docid, np.int64),
+                np.asarray(r.sort_value, np.float64),
+                np.asarray(r.score, np.float64),
+                np.asarray(r.ts_us, np.int64),
+                list(r.aggs),
+            )
+            for r in out.itertuples(index=False)
+        ]
+        return leaves, []
 
 
 def _validate_phrase_fields(ast, config) -> None:
@@ -1547,39 +1543,42 @@ def _validate_phrase_fields(ast, config) -> None:
         _validate_phrase_fields(ast.node, config)
 
 
-def merge_partials(pdf: pd.DataFrame, k, offset, sort_by, aggs) -> SearchResponse:
-    """Root merge (collector.rs:325-419 + root.rs:263-288) of per-split
-    partials: hits ordered by (sort_value desc, split_id asc, docid asc)
-    with one stable lexsort (NaN sort values last), offset applied once
-    (root.rs:341-356), agg buckets merged and finalized."""
-    if pdf.empty:
+def merge_partials(
+    leaves: list[LeafResponse], k, offset, sort_by, aggs
+) -> SearchResponse:
+    """Root merge (collector.rs:325-419 + root.rs:263-288) of the leaf
+    responses: hits ordered by (sort_value desc, split_id asc, docid
+    asc) with one stable lexsort (NaN sort values last), offset applied
+    once (root.rs:341-356), agg buckets merged and finalized. Hits
+    leave with ``doc=None``; the fetch phase fills them."""
+    if not leaves:
         return SearchResponse(0, [], {})
-    import json as _json
-
-    kind = pdf["kind"].to_numpy()
-    num_hits = int(pdf["agg_count"].to_numpy()[kind == "count"].sum())
-    h = np.flatnonzero(kind == "hit")
-    split_id, docid, score, doc, ts_us = (
-        pdf[c].to_numpy()[h]
-        for c in ("split_id", "docid", "score", "doc", "ts_us")
+    num_hits = sum(leaf.num_hits for leaf in leaves)
+    leaf_of = np.repeat(
+        np.arange(len(leaves)), [leaf.docid.size for leaf in leaves]
     )
-    split_rank = np.unique(split_id, return_inverse=True)[1]
-    sort_value = pdf["sort_value"].to_numpy(dtype=np.float64)[h]
+    split_rank = np.unique(
+        [leaf.split_id for leaf in leaves], return_inverse=True
+    )[1][leaf_of]
+    docid, sort_value, score, ts_us = (
+        np.concatenate([getattr(leaf, c) for leaf in leaves])
+        for c in ("docid", "sort_value", "score", "ts_us")
+    )
     order = np.lexsort((docid, split_rank, -sort_value))[offset : offset + k]
     hits = [
         SearchHit(
-            split_id[i], int(docid[i]), float(score[i]),
-            _json.loads(doc[i]) if doc[i] is not None else None, int(ts_us[i]),
+            leaves[leaf_of[i]].split_id, int(docid[i]), float(score[i]),
+            None, int(ts_us[i]),
         )
         for i in order
     ]
     final_aggs: dict = {}
-    if aggs:
-        agg_rows = pdf[pdf["kind"] == "agg"]
-        for name, spec in aggs.items():
-            kind, params = next(iter(spec.items()))
-            sub = agg_rows[agg_rows["agg_name"] == name]
-            final_aggs[name] = _final_agg(kind, params, sub)
+    for name, spec in (aggs or {}).items():
+        kind, params = next(iter(spec.items()))
+        records = [
+            r for leaf in leaves for r in leaf.aggs if r["agg_name"] == name
+        ]
+        final_aggs[name] = _final_agg(kind, params, records)
     return SearchResponse(num_hits, hits, final_aggs)
 
 
@@ -1618,7 +1617,11 @@ def _sub_stats_payload(
     return stats
 
 
-def _final_agg(kind: str, params: dict, sub: pd.DataFrame):
+def _final_agg(kind: str, params: dict, records: list[dict]):
+    """One agg's final result from every split's bucket records."""
+    sub = pd.DataFrame(records, columns=_AGG_COLS).astype(
+        {c: np.float64 for c in _AGG_COLS[2:]}
+    )
     if kind == "terms":
         size = int(params.get("size", 10))
         min_doc = int(params.get("min_doc_count", 1))
@@ -1833,22 +1836,12 @@ def stream_fast_field(
     (`.write.csv(...)` = the reference's CSV/ClickHouseRowBinary
     output formats).
     """
-    ast = parse_query(query, searcher.config)
-    splits = prune_splits(
-        searcher.catalog.published_splits(), ast, searcher.config,
-        start_us, end_us,
-    )
+    ast, rows, stats = searcher._plan(query, start_us, end_us)
     spark = searcher.spark
     schema = STREAM_SCHEMA + (", partition double" if partition_by else "")
-    if not splits:
+    if not rows:
         return spark.createDataFrame([], schema)
-    stats = {
-        "N": searcher.n_docs,
-        "avgdl": (searcher.catalog.total_doc_len() / max(searcher.n_docs, 1)) or 1.0,
-        "df": searcher._global_df(query_terms(ast)),
-    }
     config = searcher.config
-    rows = [(s.split_id, searcher.catalog.split_dir(s.split_id)) for s in splits]
     sdf = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, len(rows)),
         "split_id string, path string",

@@ -8,10 +8,9 @@ operators/search._partial_agg + _final_agg directly, no Spark."""
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from hypothesis import given, settings, strategies as st
 
-from quickwit_spark.operators.search import _HIT_COLS, _final_agg, _partial_agg
+from quickwit_spark.operators.search import _final_agg, _partial_agg
 
 ROWS = st.lists(
     st.tuples(
@@ -25,8 +24,7 @@ ROWS = st.lists(
 
 
 def _finalize(kind, params, split_rows):
-    rows = [r for rs in split_rows for r in rs]
-    return _final_agg(kind, params, pd.DataFrame(rows, columns=_HIT_COLS))
+    return _final_agg(kind, params, [r for rs in split_rows for r in rs])
 
 
 def _run(kind, params, rows):

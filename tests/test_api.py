@@ -205,6 +205,23 @@ def test_stale_searcher_survives_merge_and_gc(spark, corpus, tmp_path):
     ]
 
 
+def test_stream_sees_other_writers_appends(spark, corpus, tmp_path):
+    """A long-lived handle's search stream reloads a catalog another
+    writer republished, as its searches do: it streams every match of
+    the current split set, not the one it first loaded."""
+    from quickwit_spark.operators.build import build_index
+    from quickwit_spark.operators.search import Searcher, stream_fast_field
+
+    d = str(tmp_path / "streamfresh")
+    build_index(spark, spark.createDataFrame(corpus), d, n_splits=2)
+    se = Searcher(spark, d)
+    before = se.search("w00001", k=0).num_hits
+    build_index(spark, spark.createDataFrame(corpus), d, n_splits=2,
+                ingest_id="b0001")  # another writer appends
+    n_stream = stream_fast_field(se, "w00001", "doc_len").count()
+    assert n_stream == se.search("w00001", k=0).num_hits == 2 * before
+
+
 def test_merge_and_gc_and_lineage(index, corpus):
     assert index.merge() >= 1
     assert index.describe()["num_published_splits"] == 1

@@ -1,18 +1,17 @@
-"""Root merge of leaf partial rows (collector.rs:325-419), no Spark:
+"""Root merge of leaf responses (collector.rs:325-419), no Spark:
 ``merge_partials`` must order hits exactly as a ``sorted()`` reference
 on (sort_value desc, split_id asc, docid asc), NaN sort values last,
-and sum ``num_hits`` over the count rows as an int."""
+and sum the leaves' ``num_hits`` as an int."""
 
 from __future__ import annotations
 
-import json
 import math
 import random
 
-import pandas as pd
+import numpy as np
 import pytest
 
-from quickwit_spark.operators.search import _HIT_COLS, merge_partials
+from quickwit_spark.operators.search import LeafResponse, merge_partials
 
 # insertion order differs from string order ("split-a10-..." sorts
 # before "split-a9-..."), so a merge keyed on arrival order fails
@@ -22,46 +21,55 @@ SPLITS = [
 WINDOWS = [(0, 10), (0, 1), (3, 5), (17, 4), (0, 1000), (55, 10), (200, 5)]
 
 
-def _partials(seed: int, sort_desc: bool, with_nan: bool) -> list[dict]:
-    """Per-split rows as the leaves emit them: hits (a few distinct
-    values, so scores tie across every split) then one count row."""
+def _leaf(split_id: str, num_hits: int, hits: list[tuple]) -> LeafResponse:
+    """A leaf response from (docid, sort_value, score, ts_us) hits."""
+    docid, sort_value, score, ts_us = list(zip(*hits)) or [()] * 4
+    return LeafResponse(
+        split_id, num_hits, np.asarray(docid, np.int64),
+        np.asarray(sort_value, np.float64), np.asarray(score, np.float64),
+        np.asarray(ts_us, np.int64),
+    )
+
+
+def _partials(seed: int, sort_desc: bool, with_nan: bool) -> list[LeafResponse]:
+    """Leaf responses as the leaves return them: a few distinct hit
+    values, so scores tie across every split."""
     rng = random.Random(seed)
-    base = dict.fromkeys(_HIT_COLS)
-    rows = []
+    leaves = []
     for split_id in SPLITS:
         n = rng.randint(6, 25)
-        docids = rng.sample(range(500), n)
-        for docid in docids:
+        hits = []
+        for docid in rng.sample(range(500), n):
             key = float(rng.choice([1.0, 2.5, 2.5, 4.0, 7.25]))
             if with_nan and rng.random() < 0.15:
                 key = math.nan
-            rows.append({
-                **base, "kind": "hit", "split_id": split_id,
-                "docid": docid, "score": key,
-                # ascending sorts ship negated keys (collector.rs:41-92)
-                "sort_value": key if sort_desc else -key,
-                "ts_us": 1_700_000_000_000_000 + docid,
-                "doc": json.dumps({"d": docid}) if docid % 3 else None,
-            })
-        rows.append({
-            **base, "kind": "count", "split_id": split_id,
-            "agg_count": n + rng.randint(0, 50),
-        })
-    rng.shuffle(rows)  # leaves finish in any order
-    return rows
+            # ascending sorts ship negated keys (collector.rs:41-92)
+            hits.append((docid, key if sort_desc else -key, key,
+                         1_700_000_000_000_000 + docid))
+        leaves.append(_leaf(split_id, n + rng.randint(0, 50), hits))
+    rng.shuffle(leaves)  # leaves finish in any order
+    return leaves
 
 
-def _reference(rows: list[dict], k: int, offset: int) -> list[tuple]:
-    hits = [r for r in rows if r["kind"] == "hit"]
-    hits = sorted(hits, key=lambda r: (
+def _hit_tuples(leaves: list[LeafResponse]) -> list[dict]:
+    return [
+        {"split_id": leaf.split_id, "docid": int(d), "sort_value": float(v),
+         "score": float(s), "ts_us": int(t)}
+        for leaf in leaves
+        for d, v, s, t in zip(leaf.docid, leaf.sort_value, leaf.score,
+                              leaf.ts_us)
+    ]
+
+
+def _reference(leaves: list[LeafResponse], k: int, offset: int) -> list[tuple]:
+    hits = sorted(_hit_tuples(leaves), key=lambda r: (
         math.isnan(r["sort_value"]),
         0.0 if math.isnan(r["sort_value"]) else -r["sort_value"],
         r["split_id"],
         r["docid"],
     ))
     return [
-        (r["split_id"], r["docid"], r["score"], r["ts_us"],
-         None if r["doc"] is None else json.loads(r["doc"]))
+        (r["split_id"], r["docid"], r["score"], r["ts_us"], None)
         for r in hits[offset : offset + k]
     ]
 
@@ -77,49 +85,47 @@ def _same(a: tuple, b: tuple) -> bool:
 @pytest.mark.parametrize("sort_desc", [True, False])
 @pytest.mark.parametrize("with_nan", [False, True])
 def test_merge_order_matches_sorted_reference(seed, sort_desc, with_nan):
-    rows = _partials(seed, sort_desc, with_nan)
-    pdf = pd.DataFrame(rows, columns=_HIT_COLS)
-    n_hits = sum(r["kind"] == "hit" for r in rows)
+    leaves = _partials(seed, sort_desc, with_nan)
+    n_hits = sum(leaf.docid.size for leaf in leaves)
     assert n_hits > 20
     for offset, k in WINDOWS:
-        resp = merge_partials(pdf, k, offset, None, None)
+        resp = merge_partials(leaves, k, offset, None, None)
         got = [(h.split_id, h.docid, h.score, h.ts_us, h.doc) for h in resp.hits]
-        want = _reference(rows, k, offset)
+        want = _reference(leaves, k, offset)
         assert len(got) == len(want) == max(0, min(k, n_hits - offset))
         assert all(_same(g, w) for g, w in zip(got, want)), (offset, k)
         assert all(type(h.docid) is int and type(h.ts_us) is int
                    for h in resp.hits)
-        num_hits = sum(r["agg_count"] for r in rows if r["kind"] == "count")
+        num_hits = sum(leaf.num_hits for leaf in leaves)
         assert resp.num_hits == num_hits and type(resp.num_hits) is int
 
 
 def test_ties_span_three_splits():
     """The fixture really exercises cross-split ties: one sort value is
     shared by hits of at least three splits."""
-    rows = _partials(0, True, False)
     by_value: dict[float, set] = {}
-    for r in rows:
-        if r["kind"] == "hit":
-            by_value.setdefault(r["sort_value"], set()).add(r["split_id"])
+    for r in _hit_tuples(_partials(0, True, False)):
+        by_value.setdefault(r["sort_value"], set()).add(r["split_id"])
     assert max(len(s) for s in by_value.values()) >= 3
 
 
 def test_nan_sort_values_rank_last():
-    rows = _partials(3, False, True)
-    pdf = pd.DataFrame(rows, columns=_HIT_COLS)
-    resp = merge_partials(pdf, 1000, 0, None, None)
+    resp = merge_partials(_partials(3, False, True), 1000, 0, None, None)
     nan_at = [i for i, h in enumerate(resp.hits) if math.isnan(h.score)]
     assert nan_at and nan_at == list(range(len(resp.hits) - len(nan_at),
                                            len(resp.hits)))
 
 
 def test_empty_and_count_only_partials():
-    assert merge_partials(
-        pd.DataFrame([], columns=_HIT_COLS), 10, 0, None, None
-    ).num_hits == 0
-    base = dict.fromkeys(_HIT_COLS)
-    rows = [{**base, "kind": "count", "split_id": s, "agg_count": 0}
-            for s in SPLITS]
-    resp = merge_partials(pd.DataFrame(rows, columns=_HIT_COLS), 10, 0,
-                          None, None)
+    # no leaf answered (every split pruned)
+    resp = merge_partials([], 10, 0, None, None)
     assert resp.num_hits == 0 and resp.hits == [] and resp.aggs == {}
+    # every leaf empty
+    leaves = [_leaf(s, 0, []) for s in SPLITS]
+    resp = merge_partials(leaves, 10, 0, None, None)
+    assert resp.num_hits == 0 and resp.hits == [] and resp.aggs == {}
+    # count-only leaves (k=0): num_hits sums, no hits
+    leaves = [_leaf(s, i + 3, []) for i, s in enumerate(SPLITS)]
+    resp = merge_partials(leaves, 0, 0, None, None)
+    assert resp.num_hits == 3 + 4 + 5 + 6 and type(resp.num_hits) is int
+    assert resp.hits == []

@@ -63,12 +63,15 @@ def _response(resp):
 
 
 def test_spark_and_driver_modes_agree(oracle, searcher, corpus):
-    """The distributed mapInPandas path and the single-node thread-pool
+    """The distributed mapInPandas path and the single-node in-process
     path (single_node_search analog, lib.rs:189-251) share the kernel
     and must return identical responses: hits with payloads, num_hits
-    and aggs, value types included."""
+    and aggs, value types included. The agg shapes cover every bucket
+    record the Spark wire carries: a split_size summary (null key),
+    NaN min/max of zero-count stats buckets, and gap-filled histograms."""
     ts_us = (pd.to_datetime(corpus["ts"]).astype("int64") // 1000).to_numpy()
     lo, hi = (int(np.quantile(ts_us, f)) for f in (0.25, 0.75))
+    len_stats = {"len_stats": {"stats": {"field": "doc_len"}}}
     shapes = [
         dict(query=q, k=10)
         for q in ["w00001", "hotterm", '"w00001 w00002"~2', "w00004 -w00001"]
@@ -76,9 +79,31 @@ def test_spark_and_driver_modes_agree(oracle, searcher, corpus):
         dict(query="w00002", k=12, sort_by="ts"),
         dict(query="w00002", k=12, sort_by="ts", sort_desc=False),
         dict(query="w00001", k=15, start_us=lo, end_us=hi),
+        dict(query="w00001", k=6, offset=7),
         dict(
             query="w00001", k=5,
             aggs={"by_role": {"terms": {"field": "role", "size": 5}}},
+        ),
+        dict(
+            query="w00001", k=0,
+            aggs={"cut": {"terms": {"field": "role", "size": 1,
+                                    "split_size": 1}}},
+        ),
+        dict(
+            query="role:tool", k=3,
+            aggs={"all_roles": {
+                "terms": {"field": "role", "size": 10, "min_doc_count": 0},
+                "aggs": len_stats,
+            }},
+        ),
+        dict(
+            query="w00001", k=0,
+            aggs={"grid": {
+                "histogram": {"field": "doc_len", "interval": 3.0,
+                              "min_doc_count": 0,
+                              "extended_bounds": {"min": 0, "max": 900}},
+                "aggs": len_stats,
+            }},
         ),
     ]
     for kw in shapes:
@@ -92,6 +117,15 @@ def test_spark_and_driver_modes_agree(oracle, searcher, corpus):
             assert all(type(b["doc_count"]) is int for b in agg["buckets"]), kw
         oracle_kw = {k: v for k, v in kw.items() if k != "aggs"}
         assert_rank_identical(oracle.search(**oracle_kw), a)
+    # the agg shapes really reach the records they are meant to carry
+    grid = a.aggs["grid"]["buckets"]
+    assert any(b["len_stats"]["count"] > 0 for b in grid)
+    assert any(b["doc_count"] == 0 for b in grid)
+    cut = searcher.search(mode="spark", **shapes[-3]).aggs["cut"]
+    assert cut["sum_other_doc_count"] > 0
+    zero = [b for b in searcher.search(mode="spark", **shapes[-2])
+            .aggs["all_roles"]["buckets"] if b["doc_count"] == 0]
+    assert zero and all(b["len_stats"]["min"] is None for b in zero)
 
 
 class TestWand:
@@ -869,8 +903,7 @@ class TestAggregations:
 
         def run(params, vals, final_params=None):
             rows = _partial_agg("histogram", params, np.asarray(vals, float))
-            sub = pd.DataFrame(rows)
-            return _final_agg("histogram", final_params or params, sub)
+            return _final_agg("histogram", final_params or params, rows)
 
         p = {"field": "x", "interval": 10.0}
         got = run(p, [2.0, 12.0, 42.0])
@@ -1091,7 +1124,7 @@ class TestAggregations:
 def test_terms_agg_modes_agree(searcher):
     """Driver-thread and distributed (mapInPandas) leaf modes produce
     identical terms aggregations including the split_size summary-row
-    plumbing (sum_other / error bound ride the HIT_SCHEMA)."""
+    plumbing (sum_other / error bound ride the LEAF_SCHEMA buckets)."""
     aggs = {"t": {"terms": {"field": "role", "size": 2, "split_size": 1}}}
     a = searcher.search("w00001", k=0, aggs=aggs, mode="spark")
     b = searcher.search("w00001", k=0, aggs=aggs, mode="driver")
@@ -1127,7 +1160,7 @@ def test_terms_cut_invariants_property(vals, n_splits, size, split_size):
     chunks = [np.array(vals[i::n_splits], dtype=object)
               for i in range(n_splits)]
     rows = [r for c in chunks if c.size for r in _partial_agg("terms", params, c)]
-    got = _final_agg("terms", params, pd.DataFrame(rows))
+    got = _final_agg("terms", params, rows)
     total = len(vals)
     assert sum(b["doc_count"] for b in got["buckets"]) + got[
         "sum_other_doc_count"
@@ -1137,7 +1170,7 @@ def test_terms_cut_invariants_property(vals, n_splits, size, split_size):
               for r in _partial_agg("terms", exact_params, c)]
     exact = {
         b["key"]: b["doc_count"]
-        for b in _final_agg("terms", exact_params, pd.DataFrame(rows_x))["buckets"]
+        for b in _final_agg("terms", exact_params, rows_x)["buckets"]
     }
     bound = got["doc_count_error_upper_bound"]
     for b in got["buckets"]:
@@ -1168,7 +1201,7 @@ def test_histogram_grid_property(vals, n_splits, interval, offset):
     chunks = [np.array(vals[i::n_splits]) for i in range(n_splits)]
     rows = [r for c in chunks if c.size
             for r in _partial_agg("histogram", params, c)]
-    got = _final_agg("histogram", params, pd.DataFrame(rows))["buckets"]
+    got = _final_agg("histogram", params, rows)["buckets"]
     assert sum(b["doc_count"] for b in got) == len(vals)
     keys = [b["key"] for b in got]
     assert keys == sorted(keys)

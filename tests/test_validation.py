@@ -73,7 +73,7 @@ def test_en_stem_field_end_to_end(spark, tmp_path):
 
 def test_phrase_on_positionless_field_rejected(spark, corpus, tmp_path):
     from quickwit_spark.operators.build import build_index
-    from quickwit_spark.operators.search import Searcher
+    from quickwit_spark.operators.search import Searcher, stream_fast_field
 
     cfg = IndexConfig(
         fields=(
@@ -88,3 +88,6 @@ def test_phrase_on_positionless_field_rejected(spark, corpus, tmp_path):
     assert se.search("w00001", k=3).num_hits >= 0  # terms fine
     with pytest.raises(ValueError, match="without positions"):
         se.search('"w00001 w00002"', k=3)
+    # a search stream plans through the same validation
+    with pytest.raises(ValueError, match="without positions"):
+        stream_fast_field(se, '"w00001 w00002"', "doc_len")

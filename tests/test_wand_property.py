@@ -9,13 +9,14 @@ Spark-free: splits build via the pure Arrow kernel
 (`build_split_tables_arrow`), so hundreds of examples run in seconds. This is
 the strongest guard on the recursive node evaluator — every tree shape
 must yield bit-identical (ids, scores, num_hits), and the whole leaf
-(`_eval_split_partial`) bit-identical partial rows. The evaluator also
+(`_eval_split_partial`) a bit-identical `LeafResponse`. The evaluator also
 answers the same through one decoded-postings cache shared across
 examples, cold and warm, as without one.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import tempfile
 from unittest import mock
 
@@ -107,7 +108,7 @@ def test_wand_equals_exhaustive_property(corpus, ast, k, window, sort_by,
         # the whole leaf: relevance or ts order, k=0 included
         return search._eval_split_partial(
             "s0", sd, ast, stats, cfg, k, start_us, end_us, sort_by,
-            sort_desc, None, fetch_payload=False,
+            sort_desc, None,
         )
 
     with tempfile.TemporaryDirectory(prefix="wandprop") as sd:
@@ -130,12 +131,18 @@ def test_wand_equals_exhaustive_property(corpus, ast, k, window, sort_by,
                     assert a.dtype == b.dtype
                 else:
                     assert a == b
-        rows = leaf(sd)
+        got_leaf = leaf(sd)
         with mock.patch.object(search, "_wand_bool", reference_leaf):
-            ref_rows = leaf(sd)
+            ref_leaf = leaf(sd)
     assert w_hits == e_hits
     np.testing.assert_array_equal(w_matches, e_matches)
     np.testing.assert_array_equal(w_ids, e_ids)
     # bit-identical, not approximately equal: same float association
     np.testing.assert_array_equal(w_scores, e_scores)
-    assert rows == ref_rows
+    for f in dataclasses.fields(search.LeafResponse):
+        a, b = getattr(got_leaf, f.name), getattr(ref_leaf, f.name)
+        if isinstance(a, np.ndarray):
+            np.testing.assert_array_equal(a, b)
+            assert a.dtype == b.dtype, f.name
+        else:
+            assert a == b, f.name
