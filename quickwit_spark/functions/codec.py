@@ -7,11 +7,14 @@ positions delta) — but use LEB128 varints, which vectorize cleanly in
 numpy for both encode (build path) and decode (query kernel hot path).
 
 All functions operate on uint64 numpy arrays; no per-element Python.
+The build path's grouped encoder hands its per-row blobs over as an
+Arrow binary array built on the encoded buffer.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 
 _MASKS = [np.uint64(0x7F) << np.uint64(7 * j) for j in range(10)]
 
@@ -22,7 +25,10 @@ def _encode_varint_parts(values) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     v = np.asarray(values, dtype=np.uint64)
     nbytes = np.ones(v.size, dtype=np.int64)
     for j in range(1, 10):
-        nbytes += (v >= (np.uint64(1) << np.uint64(7 * j))).astype(np.int64)
+        step = v >= (np.uint64(1) << np.uint64(7 * j))
+        if not step.any():
+            break
+        nbytes += step
     offsets = np.concatenate(([0], np.cumsum(nbytes)))
     out = np.zeros(int(offsets[-1]), dtype=np.uint8)
     for j in range(10):
@@ -66,17 +72,9 @@ def decode_varint(buf: bytes) -> np.ndarray:
     return np.add.reduceat(payload, starts)
 
 
-def varint_sizes(values: np.ndarray) -> np.ndarray:
-    """Per-value LEB128 byte length (vectorized); lets callers slice one
-    big encoded blob at group boundaries without re-encoding."""
-    v = np.asarray(values, dtype=np.uint64)
-    nbytes = np.ones(v.size, dtype=np.int64)
-    for j in range(1, 10):
-        step = v >= (np.uint64(1) << np.uint64(7 * j))
-        if not step.any():
-            break
-        nbytes += step.astype(np.int64)
-    return nbytes
+# An Arrow binary array addresses its data with int32 offsets, so one
+# array holds less than 2 GiB of blob bytes: the format's limit.
+_BINARY_CHUNK_BYTES = 2**31 - 1
 
 
 def grouped_delta_encode(
@@ -84,10 +82,10 @@ def grouped_delta_encode(
     reset_starts: np.ndarray,
     slice_starts: np.ndarray | None = None,
     delta: bool = True,
-) -> list[bytes]:
+):
     """Encode ``values`` as ONE vectorized varint pass, with the delta
     chain reset at each ``reset_starts`` index (absolute value stored at
-    each reset head), then slice the blob back into per-group bytes at
+    each reset head), then cut the blob into per-group binary values at
     ``slice_starts`` (defaults to the reset points).
 
     This is the build-path hot loop: instead of encoding each term's
@@ -96,24 +94,40 @@ def grouped_delta_encode(
     ``slice_starts`` must be a subset of ``reset_starts`` (a slice head
     is always a fresh delta chain), e.g. positions reset per doc but are
     sliced per posting-row.
+
+    Returns a ``pa.ChunkedArray`` of ``binary``, one value per group:
+    each chunk is built zero-copy over the encoded blob and its int32
+    slice offsets, and a new chunk starts at the group boundary where
+    the bytes would pass ``_BINARY_CHUNK_BYTES``.
     """
     v = np.asarray(values, dtype=np.uint64)
     resets = np.asarray(reset_starts, dtype=np.int64)
     starts = resets if slice_starts is None else np.asarray(slice_starts, dtype=np.int64)
-    if v.size == 0:
-        return [b"" for _ in range(starts.size)]
-    if delta:
+    if delta and v.size:
         deltas = np.empty_like(v)
         deltas[0] = v[0]
         np.subtract(v[1:], v[:-1], out=deltas[1:])
         deltas[resets] = v[resets]
     else:
         deltas = v
-    blob = encode_varint(deltas)
-    sizes = varint_sizes(deltas)
-    byte_offsets = np.concatenate(([0], np.cumsum(sizes)))
-    bounds = np.concatenate((byte_offsets[starts], [byte_offsets[-1]]))
-    return [blob[bounds[i] : bounds[i + 1]] for i in range(starts.size)]
+    blob, _, offsets = _encode_varint_parts(deltas)
+    bounds = np.append(offsets[starts], offsets[-1])
+    chunks = []
+    row = 0
+    while row < starts.size:
+        end = int(np.searchsorted(
+            bounds, bounds[row] + _BINARY_CHUNK_BYTES, side="right"
+        )) - 1
+        if end == row:
+            raise ValueError("one posting row's blob exceeds the Arrow binary limit")
+        base = int(bounds[row])
+        chunks.append(pa.Array.from_buffers(
+            pa.binary(), end - row,
+            [None, pa.py_buffer((bounds[row:end + 1] - base).astype(np.int32)),
+             pa.py_buffer(blob[base:int(bounds[end])])],
+        ))
+        row = end
+    return pa.chunked_array(chunks, pa.binary())
 
 
 def read_first_varint(blob: bytes) -> tuple[int, int]:

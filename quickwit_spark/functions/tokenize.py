@@ -14,10 +14,11 @@
 Rank-identity of BM25 vs the oracle depends on these semantics being
 locked; see tests/test_tokenize.py for char-level cases.
 
-The same pure-Python functions back (a) the pytest oracle engine and
-(b) the pandas-UDF build path (applied per Arrow batch via
-``pandas.Series.map`` over *columns of strings*, which is vectorized at
-the batch level — the per-string regex is C-level re2-like CPython).
+The pure-Python functions are the semantic reference: the oracle
+engine, query parsing and the build path's ``en_stem``/``json`` fields
+run them per value. The build path tokenizes ``default`` and ``raw``
+fields in Arrow instead (:func:`tokenize_encode`), with parity locked by
+tests/test_tokenize_arrow.py.
 """
 
 from __future__ import annotations
@@ -315,27 +316,32 @@ def tokenize_series(texts: pd.Series, tokenizer: str) -> pd.Series:
 # ---------------------------------------------------------------------------
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 _ARROW_SPLIT_PATTERN = "[^\\p{L}\\p{N}]+"
 
 
-def tokenize_encode(values: pd.Series, tokenizer: str):
+def tokenize_encode(values, tokenizer: str):
     """Tokenize a column and dictionary-encode the flat token stream.
 
     Returns ``(lens, codes, uniq)``:
     * ``lens[i]``  — token count of doc i (int64),
     * ``codes``    — flat per-token term ids in doc order (int64),
-    * ``uniq``     — SORTED unique terms (object ndarray); ``codes``
+    * ``uniq``     — SORTED unique terms (``pa.StringArray``); ``codes``
                      index into it.
     Output is identical to tokenizing with ``TOKENIZERS[tokenizer]``
-    and factorizing with sort=True.
+    and factorizing with sort=True. ``default`` and ``raw`` run in
+    Arrow; the other tokenizers run the Python reference per value.
     """
     if tokenizer == "default":
         return _tokenize_encode_arrow(values)
+    if tokenizer == "raw":
+        return _tokenize_encode_raw_arrow(values)
     from itertools import chain
 
     if not isinstance(values, (list, pd.Series)):
-        values = values.to_pylist()  # pyarrow column (raw/en_stem fields)
+        values = values.to_pylist()  # pyarrow column (en_stem/json fields)
     fn = TOKENIZERS[tokenizer]
     tok_lists = [fn(v) for v in values]
     n = len(tok_lists)
@@ -343,7 +349,7 @@ def tokenize_encode(values: pd.Series, tokenizer: str):
     flat = np.empty(int(lens.sum()), dtype=object)
     flat[:] = list(chain.from_iterable(tok_lists))
     codes, uniq = pd.factorize(flat, sort=True)
-    return lens, codes.astype(np.int64), uniq
+    return lens, codes.astype(np.int64), pa.array(uniq, type=pa.string())
 
 
 # Characters whose Python str.lower() is context-sensitive or expanding
@@ -353,18 +359,52 @@ def tokenize_encode(values: pd.Series, tokenizer: str):
 _PY_LOWER_SPECIAL = "[İΣ]"
 
 
-def _tokenize_encode_arrow(values):
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
+def _string_array(values):
+    """One contiguous ``pa.string()`` array of a column."""
     if isinstance(values, pa.ChunkedArray):
         arr = values.combine_chunks()
     elif isinstance(values, pa.Array):
         arr = values
     else:
         arr = pa.array(values, type=pa.string(), from_pandas=True)
-    if arr.type != pa.string():
-        arr = arr.cast(pa.string())
+    return arr if arr.type == pa.string() else arr.cast(pa.string())
+
+
+def _encode_sorted(flat):
+    """``(codes, uniq)`` of a flat non-null token array: dictionary
+    encode, then rank the dictionary so codes index the SORTED terms.
+    UTF-8 byte order == code-point order, so Arrow's sort matches
+    Python string comparison (and ``pd.factorize(sort=True)``)."""
+    enc = pc.dictionary_encode(flat)
+    indices = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    dictionary = enc.dictionary
+    sort_idx = pc.array_sort_indices(dictionary)
+    rank = np.empty(len(dictionary), dtype=np.int64)
+    rank[sort_idx.to_numpy(zero_copy_only=False)] = np.arange(
+        len(dictionary), dtype=np.int64
+    )
+    return rank[indices], dictionary.take(sort_idx)
+
+
+def _tokenize_encode_raw_arrow(values):
+    """``raw`` in Arrow: a value of 1-100 code points (``utf8_length``
+    counts code points, as Python ``len``) is one token, as is; null,
+    empty and longer values give none."""
+    arr = _string_array(values)
+    tok_len = pc.utf8_length(arr)
+    keep = pc.fill_null(
+        pc.and_(
+            pc.greater(tok_len, 0),
+            pc.less_equal(tok_len, MAX_TOKEN_LEN_RAW),
+        ),
+        False,
+    )
+    lens = keep.to_numpy(zero_copy_only=False).astype(np.int64)
+    return (lens, *_encode_sorted(pc.filter(arr, keep)))
+
+
+def _tokenize_encode_arrow(values):
+    arr = _string_array(values)
     n = len(arr)
     # mirror the Python reference's order exactly: split the ORIGINAL
     # text, cap on the pre-lowercase token length, then lowercase each
@@ -388,8 +428,6 @@ def _tokenize_encode_arrow(values):
         dropped = np.bincount(doc_of_tok[~keep_np], minlength=n)
         lens = lens - dropped
         flat = pc.filter(flat, keep)
-    if len(flat) == 0:
-        return lens, np.empty(0, np.int64), np.empty(0, dtype=object)
     lowered = pc.utf8_lower(flat)
     special = pc.match_substring_regex(flat, _PY_LOWER_SPECIAL)
     special_np = special.to_numpy(zero_copy_only=False)
@@ -401,14 +439,4 @@ def _tokenize_encode_arrow(values):
         flat = pa.array(low_np, type=pa.string())
     else:
         flat = lowered
-    enc = pc.dictionary_encode(flat)
-    indices = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-    dictionary = enc.dictionary
-    # UTF-8 byte order == code-point order, so Arrow's sort matches
-    # Python string comparison
-    sort_idx = pc.array_sort_indices(dictionary).to_numpy(zero_copy_only=False)
-    rank = np.empty(len(dictionary), dtype=np.int64)
-    rank[sort_idx] = np.arange(len(dictionary), dtype=np.int64)
-    codes = rank[indices]
-    uniq = dictionary.take(pa.array(sort_idx)).to_numpy(zero_copy_only=False)
-    return lens, codes, uniq.astype(object)
+    return (lens, *_encode_sorted(flat))

@@ -10,8 +10,9 @@ The Spark-first re-expression of the reference's indexing pipeline
 * Indexer+Packager (tokenize, build in-RAM index, serialize one segment —
   quickwit-indexing/src/actors/indexer.rs:230-286, packager.rs:168-233)
   become one vectorized kernel per split group (:func:`build_split`):
-  numpy factorize/lexsort posting construction, delta+varint encoding in
-  one pass (no per-row Python), written as Parquet where it runs.
+  Arrow dictionary-encode + numpy argsort posting construction,
+  delta+varint encoding in one pass (no per-row Python), written as
+  Parquet where it runs.
 * A small single-file input (``DRIVER_BUILD_MAX_ROWS``) is routed and
   built in the calling process instead, like the reference's in-process
   ``quickwit index ingest``; both places write byte-identical splits.
@@ -46,7 +47,7 @@ import os
 import time
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from quickwit_spark.config import IndexConfig
 from quickwit_spark.functions import fs as fsio
@@ -56,6 +57,22 @@ from quickwit_spark.plans.catalog import Catalog, SplitMetadata
 
 POSTINGS_FILE = "postings.parquet"
 DOCS_FILE = "docs.parquet"
+
+# postings.parquet: one row per (field, term, shard), rows sorted by
+# (field order of the config, term, shard)
+POSTINGS_SCHEMA = pa.schema([
+    ("field", pa.string()),
+    ("term", pa.string()),
+    ("shard", pa.int64()),
+    ("df", pa.int64()),
+    ("max_tf", pa.int64()),
+    ("min_dl", pa.int64()),
+    ("first_docid", pa.int64()),
+    ("last_docid", pa.int64()),
+    ("doc_ids", pa.binary()),
+    ("tfs", pa.binary()),
+    ("positions", pa.binary()),  # null for fields without positions
+])
 
 # Publish batch size: each atomic catalog commit covers a chunk of
 # splits + their checkpoint keys (the reference's PackagedSplitBatch →
@@ -80,21 +97,21 @@ DRIVER_BUILD_MAX_ROWS = 65_536
 def _field_posting_columns(
     lens: np.ndarray,
     codes: np.ndarray,
-    uniq_terms: np.ndarray,
+    uniq_terms: pa.Array,
     doc_len: np.ndarray,
     field_name: str,
     with_positions: bool,
     hot_term_doc_freq: int,
     salt_docid_range: int,
-) -> dict | None:
+) -> pa.Table | None:
     """Vectorized posting construction for one field of one split.
 
     Input is the dictionary-encoded flat token stream from
     ``tokenize_encode`` (lens per doc, term codes in doc order, sorted
-    term dictionary). lexsort → run-length boundaries, then ONE varint
-    pass per component sliced at row boundaries (grouped_delta_encode).
-    Returns parallel column lists for the postings Parquet, rows
-    sorted by (term, shard).
+    term dictionary). One stable sort on the term code → run-length
+    boundaries, then ONE varint pass per component sliced at row
+    boundaries (grouped_delta_encode). Returns the field's postings
+    rows as a ``POSTINGS_SCHEMA`` table, sorted by (term, shard).
     """
     n = lens.size
     total = int(codes.size)
@@ -104,7 +121,9 @@ def _field_posting_columns(
     doc_starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
     pos = np.arange(total, dtype=np.int64) - np.repeat(doc_starts, lens)
 
-    order = np.lexsort((pos, docids, codes))
+    # codes are in (docid, position) order already, so a stable sort on
+    # the code alone yields the (term, docid, position) order
+    order = np.argsort(codes, kind="stable")
     codes, docids, pos = codes[order], docids[order], pos[order]
 
     # (term, docid) pair boundaries — token-index space
@@ -148,35 +167,32 @@ def _field_posting_columns(
     max_tf = np.maximum.reduceat(tf, row_starts)
     min_dl = np.minimum.reduceat(p_dl, row_starts)
     row_ends = np.append(row_starts[1:], p_code.size) - 1
-    first_docid = p_docid[row_starts]
-    last_docid = p_docid[row_ends]
 
-    doc_id_blobs = grouped_delta_encode(p_docid, row_starts, delta=True)
-    tf_blobs = grouped_delta_encode(tf, row_starts, delta=False)
     if with_positions:
-        pos_blobs = grouped_delta_encode(
+        positions = grouped_delta_encode(
             pos,
             reset_starts=pair_tok_starts,
             slice_starts=pair_tok_starts[row_starts],
             delta=True,
         )
     else:
-        pos_blobs = [None] * n_rows
-
-    return {
-        "field": [field_name] * n_rows,
-        "term": uniq_terms[row_code].tolist(),
-        "shard": shard,
-        "df": row_dfs,
-        "max_tf": max_tf.astype(np.int64),
-        "min_dl": min_dl.astype(np.int64),
-        "first_docid": first_docid.astype(np.int64),
-        "last_docid": last_docid.astype(np.int64),
-        "doc_ids": doc_id_blobs,
-        "tfs": tf_blobs,
-        "positions": pos_blobs,
-        "_uniq_terms": uniq_terms,  # caller pops for term_range/tags
-    }
+        positions = pa.nulls(n_rows, pa.binary())
+    return pa.table(
+        [
+            pa.repeat(field_name, n_rows),
+            uniq_terms.take(row_code),
+            shard,
+            row_dfs,
+            max_tf,
+            min_dl,
+            p_docid[row_starts],
+            p_docid[row_ends],
+            grouped_delta_encode(p_docid, row_starts, delta=True),
+            grouped_delta_encode(tf, row_starts, delta=False),
+            positions,
+        ],
+        schema=POSTINGS_SCHEMA,
+    )
 
 
 def limit_worker_threads(n: int = 1) -> None:
@@ -187,8 +203,6 @@ def limit_worker_threads(n: int = 1) -> None:
     so a call in the driver would throttle every later driver build and
     search."""
     try:
-        import pyarrow as pa
-
         if pa.cpu_count() > n:
             pa.set_cpu_count(n)
         if pa.io_thread_count() > 2:
@@ -197,19 +211,17 @@ def limit_worker_threads(n: int = 1) -> None:
         pass
 
 
-def write_split(postings: pd.DataFrame, docs, split_dir: str) -> int:
+def write_split(postings: pa.Table, docs: pa.Table, split_dir: str) -> int:
     """Write a split's two Parquet files (zstd, like the reference's doc
-    store — index_config.rs:172-178); returns total bytes. ``docs`` is
-    the pyarrow Table :func:`build_split_tables_arrow` returns.
-    ``split_dir`` may be any pyarrow-supported URI (functions/fs) — the
-    storage-trait analog."""
-    import pyarrow as pa
-
+    store — index_config.rs:172-178) as they are; returns total bytes.
+    ``postings`` and ``docs`` are the tables
+    :func:`build_split_tables_arrow` returns. ``split_dir`` may be any
+    pyarrow-supported URI (functions/fs) — the storage-trait analog."""
     fsio.makedirs(split_dir)
     ppath = fsio.join(split_dir, POSTINGS_FILE)
     dpath = fsio.join(split_dir, DOCS_FILE)
     fsio.write_table(
-        pa.Table.from_pandas(postings, preserve_index=False),
+        postings,
         ppath,
         compression="zstd",
         # small row groups keep stats-pruned term point reads tight
@@ -224,10 +236,11 @@ def write_split(postings: pd.DataFrame, docs, split_dir: str) -> int:
 
 def build_split_tables_arrow(tbl, config: IndexConfig):
     """Pure (no-Spark) split build, the ``applyInArrow`` kernel body:
-    one routing partition's docs (a pyarrow Table) → (postings
-    DataFrame, docs Table, metadata dict). Keeps every string in C++
-    buffers (sort_by, tokenize, dictionary-encode, doc-store assembly)
-    so 32 concurrent kernels don't fight over Python object allocation.
+    one routing partition's docs (a pyarrow Table) → (postings Table
+    with ``POSTINGS_SCHEMA``, docs Table, metadata dict). Keeps every
+    token, term and blob in Arrow or numpy buffers (sort_by, tokenize,
+    dictionary-encode, posting blobs, doc-store assembly) so 32
+    concurrent kernels don't fight over Python object allocation.
 
     Docid assignment is the stable ``(conv_id, turn_idx)`` sort —
     SURVEY.md §7.2 tie-breaking: the reference's
@@ -235,7 +248,6 @@ def build_split_tables_arrow(tbl, config: IndexConfig):
     is deterministic here because docids are a deterministic function of
     doc identity.
     """
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     tbl = tbl.sort_by([(k, "ascending") for k in config.doc_key_fields])
@@ -250,13 +262,7 @@ def build_split_tables_arrow(tbl, config: IndexConfig):
         field_tokens[f.name] = tokenize_encode(tbl.column(f.name), f.tokenizer)
     doc_len = field_tokens[config.default_search_field][0]
 
-    posting_cols: dict[str, list] = {
-        k: []
-        for k in (
-            "field", "term", "shard", "df", "max_tf", "min_dl",
-            "first_docid", "last_docid", "doc_ids", "tfs", "positions",
-        )
-    }
+    parts = []
     term_range = None
     tags: dict[str, list | None] = {}
     tag_has_null: dict[str, bool] = {}
@@ -266,24 +272,22 @@ def build_split_tables_arrow(tbl, config: IndexConfig):
             # presence marker: some doc contributed NO tag token
             # (null / empty / dropped) — keeps must_not pruning sound
             tag_has_null[f.name] = bool((f_lens == 0).any())
-        cols = _field_posting_columns(
+        part = _field_posting_columns(
             f_lens, f_codes, f_uniq, doc_len, f.name, f.with_positions,
             config.hot_term_doc_freq, config.salt_docid_range,
         )
-        if cols is None:
+        if part is None:
             continue
-        uniq = cols.pop("_uniq_terms")
+        parts.append(part)
         if f.name == config.default_search_field:
-            term_range = (str(uniq[0]), str(uniq[-1]))
+            term_range = (f_uniq[0].as_py(), f_uniq[-1].as_py())
         if f.name in config.tag_fields:
             tags[f.name] = (
-                sorted(map(str, uniq))
-                if uniq.size <= config.max_tag_values
+                f_uniq.to_pylist()  # sorted already
+                if len(f_uniq) <= config.max_tag_values
                 else None  # overflow ⇒ uninformative (packager.rs:36-43)
             )
-        for k, v in cols.items():
-            posting_cols[k].extend(v if isinstance(v, list) else v.tolist())
-    postings = pd.DataFrame(posting_cols)
+    postings = pa.concat_tables(parts) if parts else POSTINGS_SCHEMA.empty_table()
 
     docs = pa.table(
         {
@@ -356,7 +360,6 @@ def _driver_route(source, config: IndexConfig, n_splits: int):
     read uncached: a source file may be rewritten between appends. A
     non-string routing column goes to Spark, whose cast-to-string is not
     reproduced; rows route by ``oracle.route_split``, once per value."""
-    import pyarrow as pa
     from pyarrow.fs import FileType
 
     from quickwit_spark.oracle import route_split
@@ -566,8 +569,6 @@ def build_index(
         config_dict = config.to_dict()
 
         def build_group(key, tbl):
-            import pyarrow as pa
-
             limit_worker_threads()
             split_ord = int(
                 key[0].as_py() if hasattr(key[0], "as_py") else key[0]

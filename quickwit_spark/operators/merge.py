@@ -48,7 +48,11 @@ import pandas as pd
 from quickwit_spark.config import IndexConfig
 from quickwit_spark.functions import fs as fsio
 from quickwit_spark.functions.codec import splice_first_varints
-from quickwit_spark.operators.build import DOCS_FILE, POSTINGS_FILE
+from quickwit_spark.operators.build import (
+    DOCS_FILE,
+    POSTINGS_FILE,
+    limit_worker_threads,
+)
 from quickwit_spark.plans.catalog import Catalog, SplitMetadata
 
 # ---------------------------------------------------------------------------
@@ -127,9 +131,6 @@ def merge_split_files(
     (sorted by split_id). Returns the new split's metadata dict."""
     import pyarrow as pa
 
-    from quickwit_spark.operators.build import limit_worker_threads
-
-    limit_worker_threads()
     # --- doc stores: concat with docid offsets --------------------------
     doc_tables = []
     offsets = []
@@ -339,6 +340,7 @@ def execute_merge_round(
     cfg_dict = config.to_dict()
 
     def kernel(iterator):
+        limit_worker_threads()
         for pdf in iterator:
             for new_id, in_dirs, out_dir in zip(
                 pdf["new_id"], pdf["in_dirs"], pdf["out_dir"]

@@ -1302,6 +1302,7 @@ class Searcher:
                 def read_dfs(iterator):
                     from quickwit_spark.functions.parquet_io import read_pruned
 
+                    limit_worker_threads()
                     for pdf in iterator:
                         out = []
                         for path in pdf["path"]:
@@ -1550,9 +1551,18 @@ def merge_partials(
     responses: hits ordered by (sort_value desc, split_id asc, docid
     asc) with one stable lexsort (NaN sort values last), offset applied
     once (root.rs:341-356), agg buckets merged and finalized. Hits
-    leave with ``doc=None``; the fetch phase fills them."""
+    leave with ``doc=None``; the fetch phase fills them. Every
+    requested agg is finalized, over no records when no split survived
+    pruning, so the response shape does not depend on pruning."""
+    final_aggs: dict = {}
+    for name, spec in (aggs or {}).items():
+        kind, params = next(iter(spec.items()))
+        records = [
+            r for leaf in leaves for r in leaf.aggs if r["agg_name"] == name
+        ]
+        final_aggs[name] = _final_agg(kind, params, records)
     if not leaves:
-        return SearchResponse(0, [], {})
+        return SearchResponse(0, [], final_aggs)
     num_hits = sum(leaf.num_hits for leaf in leaves)
     leaf_of = np.repeat(
         np.arange(len(leaves)), [leaf.docid.size for leaf in leaves]
@@ -1572,13 +1582,6 @@ def merge_partials(
         )
         for i in order
     ]
-    final_aggs: dict = {}
-    for name, spec in (aggs or {}).items():
-        kind, params = next(iter(spec.items()))
-        records = [
-            r for leaf in leaves for r in leaf.aggs if r["agg_name"] == name
-        ]
-        final_aggs[name] = _final_agg(kind, params, records)
     return SearchResponse(num_hits, hits, final_aggs)
 
 
@@ -1903,6 +1906,7 @@ def write_stream_clickhouse_rowbinary(
     def kernel(iterator):
         import uuid
 
+        limit_worker_threads()
         n = 0
         path = fsio.join(out_dir, f"part-{uuid.uuid4().hex}.bin")
         with fsio.open_output(path) as f:

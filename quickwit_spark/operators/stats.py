@@ -147,7 +147,7 @@ def refresh_term_stats(spark, catalog: Catalog) -> str | None:
             .rename_columns(["field", "term", "df"])
             .sort_by([("field", "ascending"), ("term", "ascending")])
         )
-        return _write_stats(merged.to_pandas(), out_path)
+        return _write_stats(merged, out_path)
 
     rows = [(catalog.split_dir(s.split_id),) for s in splits]
     sdf = spark.createDataFrame(rows, "path string").repartition(
@@ -242,11 +242,10 @@ def refresh_term_stats(spark, catalog: Catalog) -> str | None:
     return out_path
 
 
-def _write_stats(agg: pd.DataFrame, out_path: str) -> str:
-    import pyarrow as pa
-
+def _write_stats(tbl, out_path: str) -> str:
+    """Write the aggregated ``(field, term, df)`` pyarrow Table as the
+    single-file stats artifact."""
     fsio.makedirs(fsio.dirname(out_path))
-    tbl = pa.Table.from_pandas(agg, preserve_index=False)
     if fsio.is_local(out_path):
         # local: write-then-rename so readers never see a torn file
         local = fsio.strip_local(out_path)

@@ -7,31 +7,45 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from quickwit_spark.config import IndexConfig
 from quickwit_spark.functions.codec import (
+    _encode_varint_parts,
     decode_varint,
     delta_decode,
     encode_varint,
     grouped_delta_encode,
-    varint_sizes,
 )
 from quickwit_spark.functions.tokenize import tokenize_default
-from quickwit_spark.operators.build import build_split_tables_arrow
+from quickwit_spark.operators.build import (
+    POSTINGS_FILE,
+    POSTINGS_SCHEMA,
+    build_split_tables_arrow,
+    write_split,
+)
 from quickwit_spark.sources.transcripts import generate_transcripts
 
 
-def test_varint_sizes_match_encoding():
+def test_varint_part_offsets_match_encoding():
     rng = np.random.default_rng(0)
     vals = rng.integers(0, 2**40, size=1000, dtype=np.uint64)
-    blob = encode_varint(vals)
-    assert varint_sizes(vals).sum() == len(blob)
+    blob, nbytes, offsets = _encode_varint_parts(vals)
+    assert blob.tobytes() == encode_varint(vals)
+    assert offsets[-1] == len(blob) == nbytes.sum()
+    for i in (0, 1, 500, 999):
+        one = encode_varint(vals[i : i + 1])
+        assert blob[offsets[i] : offsets[i + 1]].tobytes() == one
+        assert nbytes[i] == len(one)
 
 
 def test_grouped_delta_encode_slices():
     vals = np.array([5, 9, 14, 3, 3, 10, 100], dtype=np.uint64)
     starts = np.array([0, 3, 5])
     blobs = grouped_delta_encode(vals, starts, delta=True)
+    assert blobs.type == pa.binary()
+    blobs = blobs.to_pylist()
     assert len(blobs) == 3
     np.testing.assert_array_equal(delta_decode(blobs[0]), [5, 9, 14])
     np.testing.assert_array_equal(delta_decode(blobs[1]), [3, 3])
@@ -40,7 +54,7 @@ def test_grouped_delta_encode_slices():
 
 def test_grouped_encode_no_delta():
     vals = np.array([1, 2, 300, 4], dtype=np.uint64)
-    blobs = grouped_delta_encode(vals, np.array([0, 2]), delta=False)
+    blobs = grouped_delta_encode(vals, np.array([0, 2]), delta=False).to_pylist()
     np.testing.assert_array_equal(decode_varint(blobs[0]), [1, 2])
     np.testing.assert_array_equal(decode_varint(blobs[1]), [300, 4])
 
@@ -53,7 +67,7 @@ class TestBuildSplitTables:
         postings, docs, meta = build_split_tables_arrow(
             pa.Table.from_pandas(pdf, preserve_index=False), cfg
         )
-        return pdf, cfg, (postings, docs.to_pandas(), meta)
+        return pdf, cfg, (postings.to_pandas(), docs.to_pandas(), meta)
 
     def test_doc_conservation(self, built):
         pdf, cfg, (postings, docs, meta) = built
@@ -102,6 +116,62 @@ class TestBuildSplitTables:
         lo, hi = meta["time_range"]
         assert lo <= hi
         assert meta["tags"]["tool"] is not None  # ≤ 20 tools
+
+
+@pytest.mark.parametrize("case", ["transcripts", "positionless", "empty"])
+def test_postings_table_has_the_on_disk_schema(tmp_path, case):
+    """The kernel returns the postings as a pyarrow Table with exactly
+    the schema write_split puts on disk, written as is: no pandas
+    metadata, and the same types for positionless fields and for a
+    split without any token."""
+    import pyarrow.parquet as pq
+
+    from quickwit_spark.config import FieldConfig
+
+    tbl = pa.Table.from_pandas(
+        generate_transcripts(200, seed=4), preserve_index=False
+    )
+    cfg = IndexConfig()
+    if case == "positionless":
+        cfg = IndexConfig(fields=(FieldConfig("text", "default", "freq"),))
+    elif case == "empty":
+        tbl = tbl.slice(0, 0)
+    postings, docs, _ = build_split_tables_arrow(tbl, cfg)
+    assert isinstance(postings, pa.Table)
+    assert postings.schema.equals(POSTINGS_SCHEMA, check_metadata=True)
+    assert postings.schema.metadata is None
+    write_split(postings, docs, str(tmp_path))
+    on_disk = pq.read_schema(str(tmp_path / POSTINGS_FILE))
+    assert on_disk.equals(POSTINGS_SCHEMA, check_metadata=True)
+    back = pq.read_table(str(tmp_path / POSTINGS_FILE))
+    assert back.equals(postings)
+    if case == "positionless":
+        assert postings.column("positions").null_count == len(postings) > 0
+    if case == "empty":
+        assert len(postings) == 0
+
+
+@given(
+    st.lists(st.integers(0, 6), max_size=40).flatmap(
+        lambda lens: st.tuples(
+            st.just(np.array(lens, dtype=np.int64)),
+            st.lists(st.integers(0, 5), min_size=sum(lens), max_size=sum(lens)),
+        )
+    )
+)
+@settings(max_examples=200, deadline=None)
+def test_stable_code_argsort_is_the_three_key_lexsort(stream):
+    """Token codes come in (docid, position) order, so the kernel's
+    stable argsort on the code alone equals the (code, docid,
+    position) lexsort."""
+    lens, codes = stream
+    codes = np.array(codes, dtype=np.int64)
+    docids = np.repeat(np.arange(lens.size, dtype=np.int64), lens)
+    starts = np.cumsum(lens) - lens
+    pos = np.arange(codes.size, dtype=np.int64) - np.repeat(starts, lens)
+    np.testing.assert_array_equal(
+        np.argsort(codes, kind="stable"), np.lexsort((pos, docids, codes))
+    )
 
 
 def test_append_builds_with_the_index_config(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Round-trip + property tests for the delta+varint posting codec."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -179,3 +180,40 @@ def test_splice_first_varints_equals_scalar_loop():
     # empty input
     ebuf, eoffs = splice_first_varints([], np.empty(0, dtype=np.int64))
     assert ebuf.size == 0 and list(eoffs) == [0]
+
+
+def test_grouped_encode_chunks_at_the_binary_limit(monkeypatch):
+    """A blob past the Arrow binary limit (int32 offsets) is cut into
+    chunks at group boundaries; with the limit patched small, the
+    chunked output decodes to the same per-group blobs as one chunk."""
+    import pyarrow as pa
+
+    from quickwit_spark.functions import codec
+
+    rng = np.random.default_rng(11)
+    vals = np.cumsum(rng.integers(0, 300, size=2000)).astype(np.uint64)
+    resets = np.sort(rng.choice(np.arange(1, 2000), 300, replace=False))
+    resets = np.concatenate(([0], resets))
+    slices = resets[::3]
+    whole = codec.grouped_delta_encode(vals, resets, slices, delta=True)
+    assert whole.num_chunks == 1
+    limit = 256
+    monkeypatch.setattr(codec, "_BINARY_CHUNK_BYTES", limit)
+    chunked = codec.grouped_delta_encode(vals, resets, slices, delta=True)
+    assert chunked.type == pa.binary() and chunked.num_chunks > 1
+    for c in chunked.chunks:
+        assert sum(len(b) for b in c.to_pylist()) <= limit
+    assert chunked.to_pylist() == whole.to_pylist()
+    # the blobs still decode: per-slice delta chains over the values
+    blobs = chunked.to_pylist()
+    bounds = np.append(slices, vals.size)
+    for i, b in enumerate(blobs):
+        seg = vals[bounds[i]:bounds[i + 1]]
+        heads = resets[(resets >= bounds[i]) & (resets < bounds[i + 1])] - bounds[i]
+        want = np.diff(seg, prepend=np.uint64(0))
+        want[heads] = seg[heads]
+        assert np.array_equal(decode_varint(b), want)
+    # a single group over the limit cannot be represented
+    monkeypatch.setattr(codec, "_BINARY_CHUNK_BYTES", 2)
+    with pytest.raises(ValueError):
+        codec.grouped_delta_encode(np.array([300, 1], np.uint64), np.array([0]))

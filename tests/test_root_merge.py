@@ -129,3 +129,34 @@ def test_empty_and_count_only_partials():
     resp = merge_partials(leaves, 0, 0, None, None)
     assert resp.num_hits == 3 + 4 + 5 + 6 and type(resp.num_hits) is int
     assert resp.hits == []
+
+
+def test_agg_shape_does_not_depend_on_pruning(tmp_path):
+    """A query every split prunes away answers each requested agg like
+    one whose splits survive and match nothing: the empty result, not
+    a missing key. Spark-free: a single small file builds in the
+    driver and a 2-split index searches in driver mode."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quickwit_spark.operators.build import build_index
+    from quickwit_spark.operators.search import Searcher
+    from quickwit_spark.sources.transcripts import generate_transcripts
+
+    src = str(tmp_path / "src.parquet")
+    pq.write_table(
+        pa.Table.from_pandas(generate_transcripts(300, seed=5), preserve_index=False),
+        src, coerce_timestamps="us",
+    )
+    idx = str(tmp_path / "idx")
+    build_index(None, src, idx, n_splits=2)
+    s = Searcher(None, idx)
+    aggs = {
+        "r": {"terms": {"field": "role"}},
+        "h": {"histogram": {"field": "turn_idx", "interval": 5}},
+    }
+    pruned = s.search("zzznotfound", k=5, aggs=aggs)
+    matches_nothing = s.search("w00001 -w00001", k=5, aggs=aggs)
+    assert pruned.num_hits == matches_nothing.num_hits == 0
+    assert pruned.aggs == matches_nothing.aggs
+    assert pruned.aggs["r"]["buckets"] == [] and pruned.aggs["h"]["buckets"] == []

@@ -6,12 +6,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from quickwit_spark.functions.tokenize import (
     TOKENIZERS,
     tokenize_encode,
+    tokenize_raw,
 )
 
 
@@ -26,9 +28,10 @@ def assert_parity(values, tokenizer="default"):
     lens, codes, uniq = tokenize_encode(pd.Series(values, dtype=object), tokenizer)
     want_lens, want_flat = _reference(values, tokenizer)
     assert lens.tolist() == want_lens
+    uniq = uniq.to_pylist()
     got_flat = [uniq[c] for c in codes]
     assert got_flat == want_flat
-    assert list(uniq) == sorted(set(want_flat))
+    assert uniq == sorted(set(want_flat))
 
 
 def test_ascii_basics():
@@ -78,3 +81,43 @@ def test_parity_property(values):
 def test_raw_and_en_stem_paths():
     assert_parity(["UserName", "x" * 101, "", None], tokenizer="raw")
     assert_parity(["running quickly", "caresses ponies"], tokenizer="en_stem")
+
+
+RAW_CHARS = st.sampled_from(list("aZ9 _-.") + ["é", "日", "😀", "İ", "Σ", "\n"])
+
+
+def _raw_value():
+    """Values around the raw tokenizer's edges: null, empty,
+    whitespace-only, and 99-101 code points with multibyte chars."""
+    return st.one_of(
+        st.none(),
+        st.just(""),
+        st.text(st.sampled_from(" \t\n\u3000"), min_size=1, max_size=4),
+        st.text(RAW_CHARS, max_size=12),
+        st.integers(99, 101).flatmap(
+            lambda n: st.text(RAW_CHARS, min_size=n, max_size=n)
+        ),
+    )
+
+
+@given(
+    st.lists(_raw_value(), max_size=12).flatmap(
+        # duplicates: repeat a drawn prefix
+        lambda vs: st.integers(0, len(vs)).map(lambda j: vs + vs[:j])
+    )
+)
+@settings(max_examples=300, deadline=None)
+def test_raw_parity_property(values):
+    """The Arrow ``raw`` path equals ``tokenize_raw`` + a sorted
+    factorize, on pandas and Arrow input alike."""
+    toks = [tokenize_raw(v) for v in values]
+    flat = np.array([t for ts in toks for t in ts], dtype=object)
+    want_codes, want_uniq = pd.factorize(flat, sort=True)
+    for col in (pd.Series(values, dtype=object),
+                pa.chunked_array([pa.array(values, pa.string())])):
+        lens, codes, uniq = tokenize_encode(col, "raw")
+        assert lens.tolist() == [len(t) for t in toks]
+        assert codes.dtype == np.int64
+        assert codes.tolist() == want_codes.tolist()
+        assert uniq.type == pa.string()
+        assert uniq.to_pylist() == list(want_uniq)
