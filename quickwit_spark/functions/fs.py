@@ -107,13 +107,14 @@ class _SyncParquetFile:
     parallel, so the lock only bites when two concurrent searches hit
     the same split."""
 
-    __slots__ = ("_pf", "_lock", "_bounds", "_schema")
+    __slots__ = ("_pf", "_lock", "_bounds", "_schema", "_row_starts")
 
     def __init__(self, pf, lock) -> None:
         self._pf = pf
         self._lock = lock
         self._bounds: dict = {}
         self._schema = None
+        self._row_starts = None
 
     def __getattr__(self, name):
         return getattr(self._pf, name)
@@ -133,6 +134,25 @@ class _SyncParquetFile:
                 has = st is not None and st.has_min_max
                 got.append((st.min, st.max) if has else None)
             self._bounds[col] = got
+        return got
+
+    def row_starts(self):
+        """The first row of each row group, then the file's row count
+        (an int64 array, ``num_row_groups + 1`` long), built once like
+        :meth:`key_bounds`: the root doc fetch maps docids to
+        ``(row group, row)`` with one ``searchsorted`` over it."""
+        got = self._row_starts
+        if got is None:
+            import numpy as np
+
+            md = self._pf.metadata
+            got = np.zeros(md.num_row_groups + 1, dtype=np.int64)
+            np.cumsum(
+                [md.row_group(g).num_rows for g in range(md.num_row_groups)],
+                out=got[1:],
+            )
+            got.flags.writeable = False
+            self._row_starts = got
         return got
 
     @property

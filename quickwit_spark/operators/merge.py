@@ -51,6 +51,7 @@ from quickwit_spark.functions.codec import splice_first_varints
 from quickwit_spark.operators.build import (
     DOCS_FILE,
     POSTINGS_FILE,
+    POSTINGS_SCHEMA,
     limit_worker_threads,
 )
 from quickwit_spark.plans.catalog import Catalog, SplitMetadata
@@ -242,23 +243,26 @@ def merge_split_files(
         for i, j in zip(cs_l, ce_l)
     ]
 
-    postings = pd.DataFrame(
+    out_fields = fields[cs]
+    out_terms = terms[cs]
+    postings = pa.table(
         {
-            "field": fields[cs],
-            "term": terms[cs],
+            "field": out_fields,
+            "term": out_terms,
             "shard": np.asarray(chunk_shard, dtype=np.int64),
-            "df": out_df.astype(np.int64),
-            "max_tf": out_max_tf.astype(np.int64),
-            "min_dl": out_min_dl.astype(np.int64),
+            "df": out_df,
+            "max_tf": out_max_tf,
+            "min_dl": out_min_dl,
             "first_docid": firsts[cs],
             "last_docid": lasts[ce - 1],
             "doc_ids": doc_out,
             "tfs": tf_out,
             "positions": pos_out,
-        }
+        },
+        schema=POSTINGS_SCHEMA,
     )
     fsio.write_table(
-        pa.Table.from_pandas(postings, preserve_index=False),
+        postings,
         fsio.join(out_dir, POSTINGS_FILE),
         compression="zstd",
         row_group_size=2048,
@@ -269,15 +273,15 @@ def merge_split_files(
         for f in (POSTINGS_FILE, DOCS_FILE)
     )
     ts_us = docs.column("ts_us").to_numpy()
-    text_rows = postings[postings["field"] == config.default_search_field]
+    text_terms = out_terms[out_fields == config.default_search_field]
     return {
         "num_docs": int(len(docs)),
         "sum_doc_len": int(docs.column("doc_len").to_numpy().sum()),
         "size_in_bytes": int(size),
         "time_range": (int(ts_us.min()), int(ts_us.max())) if len(docs) else None,
         "term_range": (
-            (str(text_rows["term"].min()), str(text_rows["term"].max()))
-            if len(text_rows)
+            (str(text_terms.min()), str(text_terms.max()))
+            if len(text_terms)
             else None
         ),
     }

@@ -21,9 +21,9 @@ The Spark re-expression of the reference's root/leaf search
   ``(score desc, split_id asc, docid asc)`` — the reference's
   ``(Reverse(sort_value), GlobalDocAddress)`` tie order
   (quickwit-search/src/lib.rs:100-105, search_api.proto:184-204);
-* fetch_docs (quickwit-search/src/fetch_docs.rs:98-173) = targeted
-  docid-filtered reads of the split doc store, done by the root for
-  the final hits only, whichever mode ran the leaves.
+* fetch_docs (quickwit-search/src/fetch_docs.rs:98-173) = reads of the
+  split doc store addressed by docid (a docid is its row number), done
+  by the root for the final hits only, whichever mode ran the leaves.
 
 BM25 uses GLOBAL corpus stats: N and avgdl come from the catalog
 (num_docs/sum_doc_len per split — free), per-term global doc-freq from a
@@ -696,23 +696,44 @@ _FAST_CACHE = LRU(lambda: _FAST_CACHE_MAX_BYTES)
 
 # Per-Searcher budget of the block cache (see Searcher._blocks): the
 # leaves' decoded postings (each term's shard stats, each visited
-# shard's docid / tf / position arrays) and the decoded row groups that
-# their misses and the root doc fetch read through. A warm leaf hit
-# skips the pushdown scan and every varint decode; it pays off while
-# the query terms' postings and the winners' doc groups fit. After the
-# search_warm mix, a 40k-turn, 8-split index keeps about 12.7 MB
-# resident (2.8 MB decoded postings in 288 entries, 3.9 MB postings
-# and 6.0 MB doc-store row groups), so 128 MB holds roughly a
-# 400k-turn index with that query variety.
+# shard's docid / tf / position arrays), the decoded postings row
+# groups their misses read through, and the decoded doc-store row
+# groups the root doc fetch addresses by docid. A warm leaf hit skips
+# the pushdown scan and every varint decode, a warm fetch every
+# decompress; it pays off while the query terms' postings and the
+# winners' doc groups fit. After the search_warm mix, a 40k-turn,
+# 8-split index keeps about 12.7 MB resident (2.8 MB decoded postings
+# in 288 entries, 3.9 MB postings and 6.0 MB doc-store row groups), so
+# 128 MB holds roughly a 400k-turn index with that query variety.
 _BLOCK_CACHE_MAX_BYTES = 128 << 20
 
 
-def _fast_table_cached(dpath: str, cols: tuple):
-    key = (dpath, cols)
+def _fast_column_cached(dpath: str, col: str):
+    """One docs.parquet column as stored (a ChunkedArray): a sort,
+    aggregation or search-stream column."""
+    key = (dpath, col)
     got = _FAST_CACHE.get(key)
     if got is None:
-        tbl = fsio.read_table(dpath, columns=list(cols))
-        got = _FAST_CACHE.put(key, tbl, tbl.nbytes)
+        got = fsio.read_table(dpath, columns=[col]).column(col)
+        got = _FAST_CACHE.put(key, got, got.nbytes)
+    return got
+
+
+def _fast_array_cached(dpath: str, col: str, dtype) -> np.ndarray:
+    """The leaf's view of a fast column every query reads (``doc_len``
+    as float64, ``ts_us`` as int64): one contiguous read-only array per
+    docs path, decoded once instead of copied per split per query.
+    Aggregations and sorts read the stored column
+    (:func:`_fast_column_cached`), so their values keep its type."""
+    key = (dpath, col, np.dtype(dtype).str)
+    got = _FAST_CACHE.get(key)
+    if got is None:
+        got = np.ascontiguousarray(
+            fsio.read_table(dpath, columns=[col]).column(col).to_numpy(),
+            dtype=dtype,
+        )
+        got.flags.writeable = False
+        got = _FAST_CACHE.put(key, got, got.nbytes)
     return got
 
 
@@ -738,8 +759,8 @@ def _eval_split_partial(
     kernels pass None and keep them for one query), see
     :class:`_ShardPostings`."""
     dpath = fsio.join(split_dir, DOCS_FILE)
-    fast_cols = ["doc_len", "ts_us"]
-    if sort_by and sort_by not in ("ts", "ts_us") and sort_by not in fast_cols:
+    sort_col = None
+    if sort_by and sort_by not in ("ts", "ts_us"):
         # validate against the split schema BEFORE the column read so
         # the errors carry the reference's exact strings
         # (sort_by.rs:95-115 validate_sort_by_field_name); every doc
@@ -748,32 +769,29 @@ def _eval_split_partial(
         schema = fsio.parquet_file_cached(dpath).schema_arrow
         if sort_by not in schema.names:
             raise ValueError(f"Unknown sort by field: `{sort_by}`")
-        fast_cols.append(sort_by)
-    import pyarrow as pa
+        import pyarrow as pa
 
-    fast = _fast_table_cached(dpath, tuple(fast_cols))
-    if sort_by and sort_by in fast.column_names:
+        sort_col = _fast_column_cached(dpath, sort_by)
         if not (
-            pa.types.is_integer(fast.column(sort_by).type)
-            or pa.types.is_floating(fast.column(sort_by).type)
+            pa.types.is_integer(sort_col.type)
+            or pa.types.is_floating(sort_col.type)
         ):
             raise ValueError(
                 f"Sort by field on type text is currently not supported "
                 f"`{sort_by}`."
             )
-    doc_len = fast.column("doc_len").to_numpy().astype(np.int64)
-    ts_us = fast.column("ts_us").to_numpy()
+    ts_us = _fast_array_cached(dpath, "ts_us", np.int64)
 
     # sort_by, aggregations and k=0 read the count pass's matches and
     # score nothing; only relevance ranking runs the scoring pass
     ids, scores, num_hits, _skips, matches = _wand_bool(
-        split_dir, ast, doc_len.astype(np.float64), stats, config,
-        0 if sort_by else m, cache, ts_us, start_us, end_us,
+        split_dir, ast, _fast_array_cached(dpath, "doc_len", np.float64),
+        stats, config, 0 if sort_by else m, cache, ts_us, start_us, end_us,
         collect=bool(sort_by or aggs),
     )
     sel = real_vals = scores
     if sort_by and m > 0 and matches.size:
-        col = ts_us if sort_by in ("ts", "ts_us") else fast.column(sort_by).to_numpy()
+        col = ts_us if sort_col is None else sort_col.to_numpy()
         keys = col[matches].astype(np.float64)
         # Asc sort via negated key — the reference's u64::MAX - v
         # trick (collector.rs:41-92); ``sort_value`` is always a
@@ -805,10 +823,8 @@ def _eval_split_partial(
         for c in agg_cols_needed:
             if c in ("ts", "ts_us"):
                 col_arrays[c] = ts_us
-            elif c == "doc_len":
-                col_arrays[c] = doc_len
             else:
-                col = _fast_table_cached(dpath, (c,)).column(c)
+                col = _fast_column_cached(dpath, c)
                 col_arrays[c] = col.to_numpy(zero_copy_only=False)
         for name, spec in aggs.items():
             kind, params = next(iter(spec.items()))
@@ -831,23 +847,41 @@ def _eval_split_partial(
     return out
 
 
-def fetch_doc_payloads(dpath: str, docids, cache=None) -> dict[int, str]:
-    """fetch_docs for one split (fetch_docs.rs:98-173 — grouped,
-    docid-filtered doc-store read): {docid: doc json}. ``cache``: the
-    decoded row-group LRU, see :func:`read_pruned`."""
-    import json as _json
+def fetch_doc_payloads(dpath: str, docids, cache) -> list[dict]:
+    """fetch_docs for one split (fetch_docs.rs:98-173, docs "accessed
+    by (segment_ord, doc_id)"): the record of each of ``docids``, in
+    order — every doc-store column but ``docid`` and the fast fields,
+    as plain Python values.
 
-    from quickwit_spark.functions.parquet_io import read_pruned
+    A docid IS its doc-store row number (the build writes
+    ``arange(n)``, merges concatenate with offsets), so one
+    ``searchsorted`` over the footer's row counts addresses each hit's
+    (row group, row); the groups are read whole through ``cache`` (the
+    decoded row-group LRU, see ``parquet_io.cached_row_groups``) and
+    each value is taken by index — no predicate scan, no filter. The
+    stored docid of every row read is checked against its address: a
+    doc store whose rows are not in docid order raises instead of
+    answering with another doc's payload."""
+    from quickwit_spark.functions.parquet_io import cached_row_groups
 
-    schema_cols = fsio.parquet_file_cached(dpath).schema_arrow.names
-    fetch_cols = [c for c in schema_cols if c not in ("ts_us", "doc_len")]
-    doc_tbl = read_pruned(
-        dpath, fetch_cols, "docid", [int(d) for d in docids], cache
-    )
-    out = {}
-    for rec in doc_tbl.to_pylist():
-        did = rec.pop("docid")
-        out[int(did)] = _json.dumps(rec, default=str)
+    pf = fsio.parquet_file_cached(dpath)
+    cols = [c for c in pf.schema_arrow.names if c not in ("ts_us", "doc_len")]
+    starts = pf.row_starts()
+    ids = np.asarray(docids, dtype=np.int64)
+    at = np.searchsorted(starts, ids, side="right") - 1
+    groups = sorted(set(at.tolist()))
+    tables = cached_row_groups(dpath, groups, cols, cache)
+    arrays = {g: t.columns for g, t in zip(groups, tables)}
+    at_docid = cols.index("docid")
+    out = []
+    for did, g, row in zip(ids.tolist(), at.tolist(), (ids - starts[at]).tolist()):
+        vals = [arr[row].as_py() for arr in arrays[g]]
+        if vals[at_docid] != did:
+            raise ValueError(
+                f"{dpath}: row {did} holds docid {vals[at_docid]}; the doc "
+                "store is not in docid order"
+            )
+        out.append({c: v for c, v in zip(cols, vals) if c != "docid"})
     return out
 
 
@@ -1217,7 +1251,11 @@ class Searcher:
         self.catalog = Catalog.load(index_dir, at_seq=at_seq)
         self.config = self.catalog.config
         self._df_cache: dict[tuple[str, str], int] = {}
+        # each logged once per handle; every occurrence lands in the
+        # response's errors
         self._warned_no_stats = False
+        self._warned_leaf_drop = False
+        self._warned_fetch_drop = False
         # the driver-mode leaves' decoded postings, keyed (postings
         # path, "term", field, term) and (postings path, blob column,
         # field, term, shard) (see _ShardPostings), and the decoded row
@@ -1362,9 +1400,10 @@ class Searcher:
 
     def _fetch_missing_docs(self, resp: SearchResponse) -> None:
         """Root fetch_docs phase (fetch_docs.rs:98-173): payloads for
-        the final hits only, grouped per split and read through the
-        block cache in the calling thread, whichever mode ran the
-        leaves.
+        the final hits only, grouped per split, addressed by docid and
+        read through the block cache in the calling thread, whichever
+        mode ran the leaves (see :func:`fetch_doc_payloads`); then one
+        JSON round trip over every fetched record of the response.
 
         Same failure tolerance as the leaf phase: a split whose doc
         fetch fails (e.g. GC'd between the leaf phase and the root
@@ -1378,25 +1417,36 @@ class Searcher:
         for h in resp.hits:
             pending.setdefault(h.split_id, []).append(h)
 
-        dropped: set[int] = set()
+        fetched, records = [], []
         for split_id, hs in pending.items():
             dpath = fsio.join(self.catalog.split_dir(split_id), DOCS_FILE)
             for _attempt in (0, 1):
                 try:
-                    dmap = fetch_doc_payloads(
+                    got = fetch_doc_payloads(
                         dpath, [h.docid for h in hs], self._blocks
                     )
                     break
                 except Exception as exc:  # noqa: BLE001 - reported
-                    dmap = exc
-            if isinstance(dmap, Exception):
-                resp.errors.append(f"split {split_id}: doc fetch: {dmap}")
-                dropped.update(id(h) for h in hs)
+                    got = exc
+            if isinstance(got, Exception):
+                resp.errors.append(f"split {split_id}: doc fetch: {got}")
+                if not self._warned_fetch_drop:
+                    self._warned_fetch_drop = True
+                    _log.warning(
+                        "index %s: split %s dropped from a response: doc "
+                        "fetch: %s (later drops only in the responses' "
+                        "errors)", self.index_dir, split_id, got,
+                    )
                 continue
-            for h in hs:
-                h.doc = _json.loads(dmap[h.docid])
-        if dropped:
-            resp.hits = [h for h in resp.hits if id(h) not in dropped]
+            fetched.extend(hs)
+            records.extend(got)
+        # one JSON round trip for the whole response: datetimes become
+        # their str(), as a per-document dumps/loads made them
+        for h, doc in zip(fetched, _json.loads(_json.dumps(records, default=str))):
+            h.doc = doc
+        if len(fetched) < len(resp.hits):
+            kept = {id(h) for h in fetched}
+            resp.hits = [h for h in resp.hits if id(h) in kept]
 
     # a leaf search is executed in the calling thread when the pruned
     # split set is small — the reference's single_node_search skips the
@@ -1494,6 +1544,13 @@ class Searcher:
                 # reference errors out when no leaf responds too)
                 raise RuntimeError(
                     f"all {len(rows)} splits failed; first: {errors[0]}"
+                )
+            if errors and not self._warned_leaf_drop:
+                self._warned_leaf_drop = True
+                _log.warning(
+                    "index %s: %d split(s) dropped from a response: %s "
+                    "(later drops only in the responses' errors)",
+                    self.index_dir, len(errors), errors[0],
                 )
             return leaves, errors
 
@@ -1855,22 +1912,19 @@ def stream_fast_field(
         for pdf in iterator:
             for split_id, path in zip(pdf["split_id"], pdf["path"]):
                 dpath = fsio.join(path, DOCS_FILE)
-                cols = ["doc_len", "ts_us"]
-                if fast_field not in cols:
-                    cols.append(fast_field)
-                if partition_by and partition_by not in cols:
-                    cols.append(partition_by)
-                fast = _fast_table_cached(dpath, tuple(cols))
-                doc_len = fast.column("doc_len").to_numpy().astype(np.float64)
-                ts_us = fast.column("ts_us").to_numpy()
+                ts_us = _fast_array_cached(dpath, "ts_us", np.int64)
                 *_, ids = _wand_bool(
-                    path, ast, doc_len, stats, config, 0, None,
-                    ts_us, start_us, end_us, collect=True,
+                    path, ast, _fast_array_cached(dpath, "doc_len", np.float64),
+                    stats, config, 0, None, ts_us, start_us, end_us,
+                    collect=True,
                 )
-                vals = (
-                    ts_us if fast_field in ("ts", "ts_us")
-                    else fast.column(fast_field).to_numpy()
-                )
+
+                def column(c):
+                    if c in ("ts", "ts_us"):
+                        return ts_us
+                    return _fast_column_cached(dpath, c).to_numpy()
+
+                vals = column(fast_field)
                 out = {
                     "split_id": split_id,
                     "docid": ids,
@@ -1879,11 +1933,9 @@ def stream_fast_field(
                 if partition_by:
                     # PartitionnedFastFieldCollector analog
                     # (search_stream/collector.rs:31-170)
-                    pvals = (
-                        ts_us if partition_by in ("ts", "ts_us")
-                        else fast.column(partition_by).to_numpy()
+                    out["partition"] = column(partition_by)[ids].astype(
+                        np.float64
                     )
-                    out["partition"] = pvals[ids].astype(np.float64)
                 yield pd.DataFrame(out)
 
     return sdf.mapInPandas(kernel, schema=schema)

@@ -119,6 +119,43 @@ def test_warm_pass_reads_and_decodes_no_postings(
             "decode_positions"} <= set(calls)
 
 
+def test_doc_fetch_addresses_rows_without_a_scan(
+    spark, index_dir, monkeypatch
+):
+    """The root doc fetch reads hit rows by docid address: no pass over
+    QUERIES runs read_pruned on a doc store, and a warm pass runs no
+    is_in at all (its postings come from the decoded entries)."""
+    import pyarrow.compute as pc
+
+    from quickwit_spark.functions import parquet_io
+
+    calls = []
+    real_read, real_is_in = parquet_io.read_pruned, pc.is_in
+
+    def read(path, *args, **kwargs):
+        calls.append(("read_pruned", path.rsplit("/", 1)[1]))
+        return real_read(path, *args, **kwargs)
+
+    def is_in(*args, **kwargs):
+        calls.append(("is_in", None))
+        return real_is_in(*args, **kwargs)
+
+    monkeypatch.setattr(parquet_io, "read_pruned", read)
+    monkeypatch.setattr(pc, "is_in", is_in)
+    s = Searcher(spark, index_dir)
+    cold = _run_all(s)
+    # the wrappers are live: the cold pass scans postings
+    assert ("read_pruned", "postings.parquet") in calls
+    assert ("is_in", None) in calls
+    assert ("read_pruned", "docs.parquet") not in calls
+    calls.clear()
+    assert _run_all(s) == cold
+    assert calls == []
+    assert any(
+        k[0].endswith("/docs.parquet") for k in s._blocks._data
+    )
+
+
 def test_positions_entries_only_after_a_phrase(spark, index_dir):
     s = Searcher(spark, index_dir)
     for q, kw in QUERIES:

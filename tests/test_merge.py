@@ -262,6 +262,43 @@ class TestMergeExecution:
             assert not os.path.exists(cat.split_dir(sid))
 
 
+def test_merged_postings_have_the_on_disk_schema(tmp_path):
+    """A merged split's postings.parquet carries exactly the schema a
+    built split writes: no pandas metadata, and a binary ``positions``
+    column even when no field records positions."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from quickwit_spark.config import FieldConfig
+    from quickwit_spark.operators.build import (
+        POSTINGS_FILE,
+        POSTINGS_SCHEMA,
+        build_split_tables_arrow,
+        write_split,
+    )
+    from quickwit_spark.operators.merge import merge_split_files
+    from quickwit_spark.sources.transcripts import generate_transcripts
+
+    cfg = IndexConfig(fields=(FieldConfig("text", "default", "freq"),))
+    src = pa.Table.from_pandas(
+        generate_transcripts(400, seed=4), preserve_index=False
+    )
+    dirs = []
+    for i, part in enumerate((src.slice(0, 200), src.slice(200))):
+        postings, docs, _ = build_split_tables_arrow(part, cfg)
+        dirs.append(str(tmp_path / f"in{i}"))
+        write_split(postings, docs, dirs[-1])
+    meta = merge_split_files(dirs, str(tmp_path / "out"), cfg)
+    path = str(tmp_path / "out" / POSTINGS_FILE)
+    assert pq.read_schema(path).equals(POSTINGS_SCHEMA, check_metadata=True)
+    merged = pq.read_table(path)
+    assert merged.column("positions").null_count == len(merged) > 0
+    texts = merged.filter(pc.equal(merged.column("field"), "text"))
+    terms = texts.column("term").to_pylist()
+    assert meta["term_range"] == (min(terms), max(terms))
+    assert meta["num_docs"] == 400
+
+
 class TestMergeIdsAndFanout:
     def test_alloc_merge_ids_unique_across_invocations(self, tmp_path):
         """Merge split ids must never repeat across run_merge_pipeline

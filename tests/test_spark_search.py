@@ -1426,12 +1426,16 @@ def test_wand_equals_exhaustive_randomized(searcher, exhaustive):
         ], q
 
 
-def test_partial_results_on_split_failure(spark, corpus, tmp_path):
+def test_partial_results_on_split_failure(spark, corpus, tmp_path, caplog):
     """Root failure tolerance (search_api.proto `errors`;
     quickwit-search/src/retry/): a split whose files are gone is
     retried once, then reported in resp.errors while the healthy
-    splits still answer the query with correct counts."""
+    splits still answer the query with correct counts. The handle logs
+    the first such drop once."""
+    import logging
     import os
+
+    from quickwit_spark.operators import search as search_mod
 
     from quickwit_spark.config import IndexConfig
     from quickwit_spark.operators.build import build_index
@@ -1455,11 +1459,15 @@ def test_partial_results_on_split_failure(spark, corpus, tmp_path):
         f.write(b"not a parquet file")
 
     s2 = Searcher(spark, d)
-    resp = s2.search("w00001", k=10)
-    assert len(resp.errors) == 1 and victim in resp.errors[0]
-    assert 0 < resp.num_hits < full.num_hits  # 3 of 4 splits answered
-    assert all(h.split_id != victim for h in resp.hits)
-    assert all(h.doc is not None for h in resp.hits)
+    with caplog.at_level(logging.WARNING, logger=search_mod.__name__):
+        for _ in range(2):
+            resp = s2.search("w00001", k=10)
+            assert len(resp.errors) == 1 and victim in resp.errors[0]
+            assert 0 < resp.num_hits < full.num_hits  # 3 of 4 answered
+            assert all(h.split_id != victim for h in resp.hits)
+            assert all(h.doc is not None for h in resp.hits)
+    warned = [r for r in caplog.records if r.name == search_mod.__name__]
+    assert len(warned) == 1 and victim in warned[0].getMessage()
 
     # every split failing is NOT a partial result — it raises
     for sm in cat.published_splits():
@@ -1471,12 +1479,16 @@ def test_partial_results_on_split_failure(spark, corpus, tmp_path):
         s3.search("w00001", k=10)
 
 
-def test_partial_results_on_doc_fetch_failure(spark, corpus, tmp_path):
+def test_partial_results_on_doc_fetch_failure(spark, corpus, tmp_path, caplog):
     """Root fetch_docs failure tolerance: a split whose DOC STORE dies
     between the leaf phase and the root payload fetch (e.g. GC'd by a
     concurrent merge) drops only its own hits and reports the failure
-    in resp.errors — it must not discard the other splits' results."""
+    in resp.errors — it must not discard the other splits' results.
+    The handle logs the first such drop once."""
+    import logging
     import os
+
+    from quickwit_spark.operators import search as search_mod
 
     from quickwit_spark.config import IndexConfig
     from quickwit_spark.operators.build import build_index
@@ -1500,13 +1512,17 @@ def test_partial_results_on_doc_fetch_failure(spark, corpus, tmp_path):
         f.write(b"not a parquet file")
 
     s2 = Searcher(spark, d)
-    resp = s2.search("w00001", k=20)
-    assert len(resp.errors) == 1
-    assert victim in resp.errors[0] and "doc fetch" in resp.errors[0]
-    assert all(h.split_id != victim for h in resp.hits)
-    assert all(h.doc is not None for h in resp.hits)
     n_victim_hits = sum(1 for h in full.hits if h.split_id == victim)
-    assert len(resp.hits) == len(full.hits) - n_victim_hits
+    with caplog.at_level(logging.WARNING, logger=search_mod.__name__):
+        for _ in range(2):
+            resp = s2.search("w00001", k=20)
+            assert len(resp.errors) == 1
+            assert victim in resp.errors[0] and "doc fetch" in resp.errors[0]
+            assert all(h.split_id != victim for h in resp.hits)
+            assert all(h.doc is not None for h in resp.hits)
+            assert len(resp.hits) == len(full.hits) - n_victim_hits
+    warned = [r for r in caplog.records if r.name == search_mod.__name__]
+    assert len(warned) == 1 and "doc fetch" in warned[0].getMessage()
 
 
 def test_invalid_sort_fields_use_reference_errors(searcher):
