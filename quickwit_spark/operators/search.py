@@ -55,7 +55,9 @@ from __future__ import annotations
 import logging
 import math
 import os
+import sys
 from dataclasses import dataclass, field as dc_field
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -708,33 +710,80 @@ _FAST_CACHE = LRU(lambda: _FAST_CACHE_MAX_BYTES)
 _BLOCK_CACHE_MAX_BYTES = 128 << 20
 
 
-def _fast_column_cached(dpath: str, col: str):
-    """One docs.parquet column as stored (a ChunkedArray): a sort,
-    aggregation or search-stream column."""
-    key = (dpath, col)
-    got = _FAST_CACHE.get(key)
-    if got is None:
-        got = fsio.read_table(dpath, columns=[col]).column(col)
-        got = _FAST_CACHE.put(key, got, got.nbytes)
-    return got
-
-
 def _fast_array_cached(dpath: str, col: str, dtype) -> np.ndarray:
-    """The leaf's view of a fast column every query reads (``doc_len``
-    as float64, ``ts_us`` as int64): one contiguous read-only array per
-    docs path, decoded once instead of copied per split per query.
-    Aggregations and sorts read the stored column
-    (:func:`_fast_column_cached`), so their values keep its type."""
+    """One docs.parquet column as a contiguous read-only ``dtype`` array,
+    decoded once per (docs path, column, dtype) and charged its nbytes:
+    the leaf's ``doc_len`` (float64) and ``ts_us`` (int64), and the
+    float64 values a histogram, range, stats or sub-agg, a ``sort_by``
+    or a search stream reads. Values convert as numpy ``astype`` does
+    (a timestamp becomes its count of its unit); a null becomes NaN."""
     key = (dpath, col, np.dtype(dtype).str)
     got = _FAST_CACHE.get(key)
     if got is None:
-        got = np.ascontiguousarray(
-            fsio.read_table(dpath, columns=[col]).column(col).to_numpy(),
-            dtype=dtype,
-        )
+        arr = fsio.read_table(dpath, columns=[col]).column(col)
+        got = arr.to_numpy(zero_copy_only=False).astype(dtype)
+        if arr.null_count:
+            got[arr.is_null().to_numpy()] = np.nan
         got.flags.writeable = False
         got = _FAST_CACHE.put(key, got, got.nbytes)
     return got
+
+
+class _TermsColumn(NamedTuple):
+    """A terms agg field decoded for the leaves (see _terms_cached)."""
+
+    codes: np.ndarray  # int32 per row; len(keys) = no bucket (null, NaN)
+    keys: tuple  # bucket-key strings, in first-seen order
+    order: np.ndarray  # positions of ``keys`` in ascending value order
+
+
+def _terms_column(arr) -> _TermsColumn:
+    """Dictionary-encode one column (a ChunkedArray) for terms aggs.
+    A key is ``str`` of the column's own Python value: an int column
+    keys ``"2"`` whether or not the split holds a null, a timestamp
+    its pandas ``Timestamp`` form in UTC (``"1970-01-01 00:00:01"``),
+    and -0.0 shares 0.0's bucket as it did in pandas, keyed ``"0.0"``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    arr = arr.combine_chunks()
+    if pa.types.is_timestamp(arr.type) or pa.types.is_date(arr.type):
+        arr = arr.cast(pa.timestamp(getattr(arr.type, "unit", "s")))
+    if pa.types.is_floating(arr.type):  # NaN: no bucket; -0.0 + 0.0 is 0.0
+        zero = pa.scalar(0.0, arr.type)
+        arr = pc.if_else(pc.is_nan(arr), None, pc.add(arr, zero))
+    enc = arr.dictionary_encode()
+    keys = tuple(map(str, enc.dictionary.to_pylist()))
+    out = _TermsColumn(
+        enc.indices.fill_null(len(keys)).to_numpy().astype(np.int32),
+        keys, pc.array_sort_indices(enc.dictionary).to_numpy().astype(np.int32),
+    )
+    out.codes.flags.writeable = out.order.flags.writeable = False
+    return out
+
+
+def _terms_cached(dpath: str, col: str) -> _TermsColumn:
+    """:func:`_terms_column` of a docs.parquet column, decoded once per
+    docs path and charged its arrays' nbytes plus its keys' sizes."""
+    key = (dpath, col, "terms")
+    got = _FAST_CACHE.get(key)
+    if got is None:
+        got = _terms_column(fsio.read_table(dpath, columns=[col]).column(col))
+        nbytes = got.codes.nbytes + got.order.nbytes
+        got = _FAST_CACHE.put(key, got, nbytes + sum(map(sys.getsizeof, got.keys)))
+    return got
+
+
+def _leaf_column(dpath: str, field: str, ts_us: np.ndarray, terms=False):
+    """A field as a leaf reads it for an aggregation, a sort or a
+    search stream: terms its cached codes (``ts`` those of ``ts_us``),
+    else ``ts``/``ts_us`` the leaf's int64 ``ts_us`` and any other
+    field its cached float64 values."""
+    if terms:
+        return _terms_cached(dpath, "ts_us" if field == "ts" else field)
+    if field in ("ts", "ts_us"):
+        return ts_us
+    return _fast_array_cached(dpath, field, np.float64)
 
 
 def _eval_split_partial(
@@ -759,7 +808,6 @@ def _eval_split_partial(
     kernels pass None and keep them for one query), see
     :class:`_ShardPostings`."""
     dpath = fsio.join(split_dir, DOCS_FILE)
-    sort_col = None
     if sort_by and sort_by not in ("ts", "ts_us"):
         # validate against the split schema BEFORE the column read so
         # the errors carry the reference's exact strings
@@ -771,11 +819,8 @@ def _eval_split_partial(
             raise ValueError(f"Unknown sort by field: `{sort_by}`")
         import pyarrow as pa
 
-        sort_col = _fast_column_cached(dpath, sort_by)
-        if not (
-            pa.types.is_integer(sort_col.type)
-            or pa.types.is_floating(sort_col.type)
-        ):
+        sort_type = schema.field(sort_by).type
+        if not (pa.types.is_integer(sort_type) or pa.types.is_floating(sort_type)):
             raise ValueError(
                 f"Sort by field on type text is currently not supported "
                 f"`{sort_by}`."
@@ -791,7 +836,7 @@ def _eval_split_partial(
     )
     sel = real_vals = scores
     if sort_by and m > 0 and matches.size:
-        col = ts_us if sort_col is None else sort_col.to_numpy()
+        col = _leaf_column(dpath, sort_by, ts_us)
         keys = col[matches].astype(np.float64)
         # Asc sort via negated key — the reference's u64::MAX - v
         # trick (collector.rs:41-92); ``sort_value`` is always a
@@ -813,33 +858,12 @@ def _eval_split_partial(
         for spec in aggs.values()
     )
     if aggs and (matches.size or _mdc0):
-        agg_cols_needed = set()
-        for spec in aggs.values():
-            for params in spec.values():
-                agg_cols_needed.add(params["field"])
-                if params.get("stats_field"):
-                    agg_cols_needed.add(params["stats_field"])
-        col_arrays = {}
-        for c in agg_cols_needed:
-            if c in ("ts", "ts_us"):
-                col_arrays[c] = ts_us
-            else:
-                col = _fast_column_cached(dpath, c)
-                col_arrays[c] = col.to_numpy(zero_copy_only=False)
         for name, spec in aggs.items():
             kind, params = next(iter(spec.items()))
-            vals = col_arrays[params["field"]][matches]
-            extra = (
-                {params["stats_field"]: col_arrays[params["stats_field"]][matches]}
-                if params.get("stats_field")
-                else None
-            )
-            if kind == "terms" and int(params.get("min_doc_count", 1)) == 0:
-                # zero-count buckets need the split's full term
-                # dictionary, not just the matched docs
-                extra = dict(extra or {})
-                extra["__all__"] = col_arrays[params["field"]]
-            rows = _partial_agg(kind, params, vals, extra)
+            sf = params.get("stats_field")
+            col = _leaf_column(dpath, params["field"], ts_us, kind == "terms")
+            sub = _leaf_column(dpath, sf, ts_us) if sf else None
+            rows = _partial_agg(kind, params, col, matches, sub)
             for r in rows:
                 r["agg_name"] = name
             out.aggs.extend(rows)
@@ -1020,64 +1044,90 @@ def _terms_order(params: dict) -> tuple[str, bool]:
     return target, direction == "asc"
 
 
+def _group_moments(groups: np.ndarray, vals, n: int):
+    """Per group ``0..n-1`` of ``groups`` (one per value): the count,
+    sum, min, max and sum of squares of its non-NaN ``vals``, each an
+    array of n (min and max NaN for a group without a value)."""
+    vals = np.asarray(vals, np.float64)
+    ok = ~np.isnan(vals)
+    g, v = groups[ok], vals[ok]
+    count = np.bincount(g, minlength=n)
+    lo = np.full(n, np.inf)
+    hi = np.full(n, -np.inf)
+    np.minimum.at(lo, g, v)
+    np.maximum.at(hi, g, v)
+    lo[count == 0] = hi[count == 0] = np.nan
+    return count, np.bincount(g, v, n), lo, hi, np.bincount(g, v * v, n)
+
+
+def _moment_records(keys, counts, moments) -> list[dict]:
+    """Bucket records: key, count and the sub-agg moments when given."""
+    if moments is None:
+        return [dict(agg_key=k, agg_count=int(c)) for k, c in zip(keys, counts)]
+    return [
+        dict(agg_key=k, agg_count=int(c), agg_sum=s, agg_min=lo, agg_max=hi,
+             agg_sq=sq)
+        for k, c, s, lo, hi, sq in zip(keys, counts, *(m.tolist() for m in moments))
+    ]
+
+
 def _partial_agg(
-    kind: str, params: dict, vals: np.ndarray, extra_cols: dict | None = None
+    kind: str, params: dict, col, matches: np.ndarray, sub=None
 ) -> list[dict]:
-    """Per-split partial aggregation buckets (ES-compatible subset the
-    reference wires through — docs/reference/aggregation.md: terms
-    (with optional stats sub-agg + order-by-sub-agg), histogram, range,
-    avg, stats): bucket records of the ``_AGG_COLS`` each sets."""
+    """One split's partial buckets for one agg (collector.rs:214-221;
+    the aggregation.md subset: terms with an optional avg/stats sub-agg
+    and order by it, histogram, range, avg, stats) as records of the
+    ``_AGG_COLS`` each sets. ``col`` is the field as
+    :func:`_leaf_column` caches it (a :class:`_TermsColumn` for terms,
+    else numbers, NaN for null), ``sub`` the sub-agg field or None,
+    ``matches`` the matched docids. Numpy over the matched rows: terms
+    count with one ``bincount`` of the codes, sub-agg moments come from
+    :func:`_group_moments`. Terms records come in key value order, then
+    ``min_doc_count=0``'s zero-count keys in first-seen order."""
     rows = []
+    stats_field = params.get("stats_field")
     if kind == "terms":
-        ser = pd.Series(vals)
+        n = len(col.keys)
+        at = col.codes[matches]
+        counts = np.bincount(at, minlength=n + 1)
         # shard_size analog: fail fast IN THE LEAF on high-cardinality
         # terms aggs — without this cap every split ships its full
         # per-split cardinality through the root merge before the root
         # cap (collector.rs:273) gets a chance to reject the query
-        n_buckets = ser.nunique(dropna=True)
+        n_buckets = int(np.count_nonzero(counts[:n]))
         if n_buckets > AGGREGATION_BUCKET_LIMIT:
             raise ValueError(
                 f"aggregation bucket limit exceeded in split: {n_buckets} "
                 f"> {AGGREGATION_BUCKET_LIMIT} distinct terms keys"
             )
-        stats_field = params.get("stats_field")
-        if stats_field is not None:
-            sv = pd.Series(extra_cols[stats_field]).astype(float)
-            grouped = sv.groupby(ser).agg(["count", "sum", "min", "max"])
-            grouped["sq"] = (sv * sv).groupby(ser).sum()
-            for key, g in grouped.iterrows():
-                rows.append(dict(
-                    agg_key=str(key), agg_count=int(g["count"]),
-                    agg_sum=float(g["sum"]), agg_min=float(g["min"]),
-                    agg_max=float(g["max"]), agg_sq=float(g["sq"]),
-                ))
+        present = col.order[counts[col.order] > 0]
+        keys = [col.keys[i] for i in present.tolist()]
+        if stats_field is None:
+            rows = _moment_records(keys, counts[present].tolist(), None)
         else:
-            counts = ser.value_counts(dropna=True)
-            for key, cnt in counts.items():
-                rows.append(dict(agg_key=str(key), agg_count=int(cnt)))
+            # a bucket's agg_count counts its non-null sub-agg values
+            cnt, *moments = _group_moments(at, sub[matches], n + 1)
+            rows = _moment_records(
+                keys, cnt[present].tolist(), [m[present] for m in moments]
+            )
         # min_doc_count=0: 'return all terms in the field'
         # (aggregation.md) — zero-count buckets for field values the
         # query didn't match (the split-local term dictionary)
-        if (
-            int(params.get("min_doc_count", 1)) == 0
-            and extra_cols is not None
-            and "__all__" in extra_cols
-        ):
-            seen = {r["agg_key"] for r in rows}
-            all_keys = pd.Series(extra_cols["__all__"]).dropna().unique()
-            if len(all_keys) > AGGREGATION_BUCKET_LIMIT:
+        if int(params.get("min_doc_count", 1)) == 0:
+            if n > AGGREGATION_BUCKET_LIMIT:
                 raise ValueError(
                     "aggregation bucket limit exceeded in split: "
-                    f"{len(all_keys)} > {AGGREGATION_BUCKET_LIMIT} "
+                    f"{n} > {AGGREGATION_BUCKET_LIMIT} "
                     "distinct terms keys (min_doc_count=0)"
                 )
-            for key in all_keys:
-                if str(key) not in seen:
-                    r = dict(agg_key=str(key), agg_count=0)
-                    if stats_field is not None:
-                        r.update(agg_sum=0.0, agg_min=np.nan, agg_max=np.nan,
-                                 agg_sq=0.0)
-                    rows.append(r)
+            zero = dict(agg_count=0)
+            if stats_field is not None:
+                zero.update(agg_sum=0.0, agg_min=np.nan, agg_max=np.nan,
+                            agg_sq=0.0)
+            rows += [
+                dict(agg_key=col.keys[i], **zero)
+                for i in np.flatnonzero(counts[:n] == 0).tolist()
+            ]
         # split_size cut (aggregation.md 'results from one split are
         # cut off at split_size', default size*1.5+10) + one summary
         # row (agg_key=None) so the root can compute
@@ -1120,20 +1170,20 @@ def _partial_agg(
                 agg_sum=err_part,
             )
             rows = kept + [summary]
-    elif kind == "histogram":
+        return rows
+    if kind not in ("histogram", "range", "stats", "avg"):
+        raise ValueError(f"unsupported aggregation {kind!r}")
+    v = np.asarray(col[matches], np.float64)
+    sv = None if stats_field is None else np.asarray(sub[matches], np.float64)
+    if kind == "histogram":
         interval = float(params["interval"])
         # aggregation.md histogram: bucket key =
         # ((val - offset) / interval).floor() * interval + offset
         off = float(params.get("offset", 0.0))
-        notna = ~pd.isna(vals)
-        v = vals[notna].astype(np.float64)
-        buckets = np.floor((v - off) / interval) * interval + off
-        stats_field = params.get("stats_field")
-        sv = (
-            np.asarray(extra_cols[stats_field], dtype=np.float64)[notna]
-            if stats_field is not None
-            else None
-        )
+        notna = ~np.isnan(v)
+        buckets = np.floor((v[notna] - off) / interval) * interval + off
+        if sv is not None:
+            sv = sv[notna]
         hard = params.get("hard_bounds")
         if hard is not None:
             # limits the BUCKETS to the [min, max] closed interval
@@ -1143,33 +1193,18 @@ def _partial_agg(
             buckets = buckets[mask]
             if sv is not None:
                 sv = sv[mask]
-        uniq, cnt = np.unique(buckets, return_counts=True)
-        if sv is not None:
-            # doc_count stays bucket MEMBERSHIP (identical to the
-            # no-sub-agg path); the stats ride along as sum/min/max of
-            # the sub-agg field within the bucket (aggregation.md
-            # 'histogram with stats in each bucket')
-            svs = pd.Series(sv)
-            g = svs.groupby(pd.Series(buckets)).agg(["sum", "min", "max"])
-            g["sq"] = (svs * svs).groupby(pd.Series(buckets)).sum()
-            for key, c in zip(uniq, cnt):
-                st = g.loc[key]
-                rows.append(dict(
-                    agg_key=repr(float(key)), agg_count=int(c),
-                    agg_sum=float(st["sum"]), agg_min=float(st["min"]),
-                    agg_max=float(st["max"]), agg_sq=float(st["sq"]),
-                ))
-        else:
-            for key, c in zip(uniq, cnt):
-                rows.append(dict(agg_key=repr(float(key)), agg_count=int(c)))
-    elif kind == "range":
-        v = vals.astype(np.float64)
-        stats_field = params.get("stats_field")
-        sv = (
-            np.asarray(extra_cols[stats_field], dtype=np.float64)
-            if stats_field is not None
-            else None
+        uniq, inv, cnt = np.unique(
+            buckets, return_inverse=True, return_counts=True
         )
+        # doc_count stays bucket MEMBERSHIP (identical to the no-sub-agg
+        # path); the stats ride along as sum/min/max of the sub-agg
+        # field within the bucket (aggregation.md 'histogram with stats
+        # in each bucket')
+        rows = _moment_records(
+            [repr(k) for k in uniq.tolist()], cnt.tolist(),
+            None if sv is None else _group_moments(inv, sv, uniq.size)[1:],
+        )
+    elif kind == "range":
         for rng in params["ranges"]:
             lo = rng.get("from")
             hi = rng.get("to")
@@ -1192,8 +1227,8 @@ def _partial_agg(
                     agg_sq=float((mv * mv).sum()) if mv.size else 0.0,
                 )
             rows.append(r)
-    elif kind in ("stats", "avg"):
-        v = vals[~pd.isna(vals)].astype(np.float64)
+    else:
+        v = v[~np.isnan(v)]
         if v.size:
             rows.append(dict(
                 agg_key="",
@@ -1203,8 +1238,6 @@ def _partial_agg(
                 agg_max=float(v.max()),
                 agg_sq=float((v * v).sum()),
             ))
-    else:
-        raise ValueError(f"unsupported aggregation {kind!r}")
     return rows
 
 
@@ -1677,78 +1710,92 @@ def _sub_stats_payload(
     return stats
 
 
+def _present(rs: list[dict], col: str) -> list:
+    """``col`` of records ``rs`` without NaN and null (pandas' skipna)."""
+    return [r[col] for r in rs if r[col] is not None and r[col] == r[col]]
+
+
+def _merge_buckets(records: list[dict], has_stats: bool) -> dict:
+    """Leaf bucket records merged per ``agg_key``, keys in first-seen
+    order (terms summaries, key None, left out): key -> [doc_count,
+    sum, min, max, sum of squares], the moments skipping NaN and null
+    like pandas' groupby (min/max NaN for a bucket without a value)."""
+    out: dict = {}
+    for r in records:
+        if r["agg_key"] is not None:
+            out.setdefault(r["agg_key"], []).append(r)
+    for key, rs in out.items():
+        out[key] = [sum(r["agg_count"] for r in rs)] + (
+            [sum(_present(rs, "agg_sum"), 0.0),
+             min(_present(rs, "agg_min"), default=math.nan),
+             max(_present(rs, "agg_max"), default=math.nan),
+             sum(_present(rs, "agg_sq"), 0.0)]
+            if has_stats else [0.0, math.nan, math.nan, 0.0]
+        )
+    return out
+
+
 def _final_agg(kind: str, params: dict, records: list[dict]):
-    """One agg's final result from every split's bucket records."""
-    sub = pd.DataFrame(records, columns=_AGG_COLS).astype(
-        {c: np.float64 for c in _AGG_COLS[2:]}
-    )
+    """One agg's final result from every split's bucket records, merged
+    with dicts (:func:`_merge_buckets`). Terms buckets sort by key, then
+    stably by count or sub-agg metric (NaN last); histogram buckets fill
+    the offset grid's gaps; range buckets keep first-seen order."""
+    has_stats = bool(params.get("stats_field"))
+    sub_name = params.get("sub_name", "stats")
     if kind == "terms":
         size = int(params.get("size", 10))
         min_doc = int(params.get("min_doc_count", 1))
         # per-split summary rows (agg_key=None): docs dropped by the
-        # split_size cut + the largest cut bucket per split
-        summaries = sub[sub["agg_key"].isna()]
-        bucket_rows = sub[sub["agg_key"].notna()]
-        leaf_dropped = (
-            int(summaries["agg_count"].sum()) if len(summaries) else 0
-        )
-        # doc_count_error_upper_bound (aggregation.md): 'the sum of the
-        # size of the largest bucket on each split that didn't fit into
-        # split_size'
-        error_bound = int(summaries["agg_sum"].sum()) if len(summaries) else 0
-        has_stats = bool(params.get("stats_field"))
-        if has_stats:
-            m = bucket_rows.groupby("agg_key").agg(
-                doc_count=("agg_count", "sum"), s_sum=("agg_sum", "sum"),
-                s_min=("agg_min", "min"), s_max=("agg_max", "max"),
-                s_sq=("agg_sq", "sum"),
-            )
-            m["s_avg"] = m["s_sum"] / m["doc_count"].clip(lower=1)
-        else:
-            m = bucket_rows.groupby("agg_key").agg(
-                doc_count=("agg_count", "sum")
-            )
-        if len(m) > AGGREGATION_BUCKET_LIMIT:
+        # split_size cut + the largest cut bucket per split;
+        # doc_count_error_upper_bound (aggregation.md) is 'the sum of
+        # the size of the largest bucket on each split that didn't fit
+        # into split_size'
+        summaries = [r for r in records if r["agg_key"] is None]
+        leaf_dropped = sum(r["agg_count"] for r in summaries)
+        error_bound = int(sum(r["agg_sum"] for r in summaries))
+        merged = _merge_buckets(records, has_stats)
+        if len(merged) > AGGREGATION_BUCKET_LIMIT:
             raise ValueError("aggregation bucket limit exceeded")
-        total_docs = int(m["doc_count"].sum()) + leaf_dropped
-        m = m[m["doc_count"] >= min_doc]
+        total_docs = sum(m[0] for m in merged.values()) + leaf_dropped
         target, asc = _terms_order(params)
+        ordered = sorted(
+            (key, m) for key, m in merged.items() if m[0] >= min_doc
+        )
         if target == "_key":
-            ordered = m.sort_index(ascending=asc)
-        elif target == "_count":
-            ordered = m.sort_index().sort_values(
-                "doc_count", ascending=asc, kind="mergesort"
-            )
+            if not asc:
+                ordered.reverse()
         else:
-            if not has_stats:
+            if target == "_count":
+                metric = "count"
+            elif not has_stats:
                 raise ValueError(
                     f"terms order target {target!r} without a sub-aggregation"
                 )
-            metric = _subagg_metric_col(target, params)
-            col = {
-                "count": "doc_count", "sum": "s_sum", "min": "s_min",
-                "max": "s_max", "avg": "s_avg",
-            }[metric]
-            ordered = m.sort_index().sort_values(
-                col, ascending=asc, kind="mergesort"
-            )
-        top = ordered.head(size)
-        sub_name = params.get("sub_name", "stats")
+            else:
+                metric = _subagg_metric_col(target, params)
+            at = {"count": 0, "sum": 1, "min": 2, "max": 3}.get(metric)
+
+            def value(item):
+                m = item[1]
+                return m[1] / max(m[0], 1) if at is None else m[at]
+
+            # stable, so ties keep key order; NaN last either way
+            ordered = sorted(
+                (it for it in ordered if value(it) == value(it)),
+                key=value, reverse=not asc,
+            ) + [it for it in ordered if value(it) != value(it)]
+        top = ordered[:size]
         out_buckets = []
-        for key, g in top.iterrows():
-            b = {"key": key, "doc_count": int(g["doc_count"])}
+        for key, m in top:
+            b = {"key": key, "doc_count": int(m[0])}
             if has_stats:
-                b[sub_name] = _sub_stats_payload(
-                    params, int(g["doc_count"]), g["s_sum"],
-                    g["s_min"], g["s_max"], g["s_sq"],
-                )
+                b[sub_name] = _sub_stats_payload(params, int(m[0]), *m[1:])
             out_buckets.append(b)
         out = {
             "buckets": out_buckets,
             # docs that didn't make it into the top `size` buckets —
             # either cut at the root or at split_size in a leaf
-            "sum_other_doc_count": total_docs
-            - int(top["doc_count"].sum()),
+            "sum_other_doc_count": int(total_docs - sum(m[0] for _, m in top)),
         }
         show_err = params.get("show_term_doc_count_error")
         if show_err is None:
@@ -1773,28 +1820,14 @@ def _final_agg(kind: str, params: dict, records: list[dict]):
             raise ValueError(
                 "extended_bounds cannot be combined with min_doc_count > 0"
             )
-        has_stats = bool(params.get("stats_field"))
-        if has_stats:
-            mdf = sub.groupby("agg_key").agg(
-                doc_count=("agg_count", "sum"), s_sum=("agg_sum", "sum"),
-                s_min=("agg_min", "min"), s_max=("agg_max", "max"),
-                s_sq=("agg_sq", "sum"),
-            )
-            merged = mdf["doc_count"]
-            stats_by_idx = {
-                int(round((float(k) - off) / interval)):
-                    (g["s_sum"], g["s_min"], g["s_max"], g["s_sq"])
-                for k, g in mdf.iterrows()
-            }
-        else:
-            merged = sub.groupby("agg_key")["agg_count"].sum()
-            stats_by_idx = {}
+        merged = _merge_buckets(records, has_stats)
         # bucket index on the offset grid: keys regenerate bit-identical
         # as float(i) * interval + off (same float64 ops as the leaf)
-        counts = {
-            int(round((float(k) - off) / interval)): int(c)
-            for k, c in merged.items()
+        at = {
+            int(round((float(k) - off) / interval)): merged[k]
+            for k in sorted(merged)
         }
+        counts = {i: int(m[0]) for i, m in at.items()}
         if not counts and ext is None:
             return {"buckets": []}
         lo = min(counts) if counts else None
@@ -1819,55 +1852,33 @@ def _final_agg(kind: str, params: dict, records: list[dict]):
                 continue
             b = {"key": float(i) * interval + off, "doc_count": c}
             if has_stats:
-                ss, sm, sx, sq = stats_by_idx.get(
-                    i, (0.0, np.nan, np.nan, 0.0)
-                )
-                b[params.get("sub_name", "stats")] = _sub_stats_payload(
-                    params, c, ss, sm, sx, sq
-                )
+                m = at.get(i, (0, 0.0, math.nan, math.nan, 0.0))
+                b[sub_name] = _sub_stats_payload(params, c, *m[1:])
             out_buckets.append(b)
         return {"buckets": out_buckets}
     if kind == "range":
-        has_stats = bool(params.get("stats_field"))
-        if has_stats:
-            mdf = sub.groupby("agg_key", sort=False).agg(
-                doc_count=("agg_count", "sum"), s_sum=("agg_sum", "sum"),
-                s_min=("agg_min", "min"), s_max=("agg_max", "max"),
-                s_sq=("agg_sq", "sum"),
-            )
-            sub_name = params.get("sub_name", "stats")
-            return {
-                "buckets": [
-                    {
-                        "key": key, "doc_count": int(g["doc_count"]),
-                        sub_name: _sub_stats_payload(
-                            params, int(g["doc_count"]), g["s_sum"],
-                            g["s_min"], g["s_max"], g["s_sq"],
-                        ),
-                    }
-                    for key, g in mdf.iterrows()
-                ]
-            }
-        merged = sub.groupby("agg_key", sort=False)["agg_count"].sum()
-        return {
-            "buckets": [
-                {"key": key, "doc_count": int(cnt)} for key, cnt in merged.items()
-            ]
-        }
+        buckets = []
+        for key, m in _merge_buckets(records, has_stats).items():
+            b = {"key": key, "doc_count": int(m[0])}
+            if has_stats:
+                b[sub_name] = _sub_stats_payload(params, int(m[0]), *m[1:])
+            buckets.append(b)
+        return {"buckets": buckets}
     if kind in ("stats", "avg"):
-        count = int(sub["agg_count"].sum())
+        count = sum(r["agg_count"] for r in records)
         if count == 0:
             return {"count": 0}
-        total = float(sub["agg_sum"].sum())
+        total, sq = (
+            float(np.sum([r[c] for r in records], dtype=np.float64))
+            for c in ("agg_sum", "agg_sq")
+        )
         stats = {
-            "count": count,
+            "count": int(count),
             "sum": total,
-            "min": float(sub["agg_min"].min()),
-            "max": float(sub["agg_max"].max()),
+            "min": float(min(r["agg_min"] for r in records)),
+            "max": float(max(r["agg_max"] for r in records)),
             "avg": total / count,
-            "standard_deviation": _std_from_moments(
-                count, total, float(sub["agg_sq"].sum())
-            ),
+            "standard_deviation": _std_from_moments(count, total, sq),
         }
         return {"value": stats["avg"]} if kind == "avg" else stats
     raise ValueError(f"unsupported aggregation {kind!r}")
@@ -1918,13 +1929,7 @@ def stream_fast_field(
                     stats, config, 0, None, ts_us, start_us, end_us,
                     collect=True,
                 )
-
-                def column(c):
-                    if c in ("ts", "ts_us"):
-                        return ts_us
-                    return _fast_column_cached(dpath, c).to_numpy()
-
-                vals = column(fast_field)
+                vals = _leaf_column(dpath, fast_field, ts_us)
                 out = {
                     "split_id": split_id,
                     "docid": ids,
@@ -1933,26 +1938,44 @@ def stream_fast_field(
                 if partition_by:
                     # PartitionnedFastFieldCollector analog
                     # (search_stream/collector.rs:31-170)
-                    out["partition"] = column(partition_by)[ids].astype(
-                        np.float64
-                    )
+                    out["partition"] = _leaf_column(
+                        dpath, partition_by, ts_us
+                    )[ids].astype(np.float64)
                 yield pd.DataFrame(out)
 
     return sdf.mapInPandas(kernel, schema=schema)
+
+
+_ROWBINARY_DTYPES = {"i64": "<i8", "u64": "<u8", "f64": "<f8"}
+
+
+def rowbinary(values, value_type: str = "i64") -> bytes:
+    """ClickHouse RowBinary of one column
+    (quickwit-search/src/search_stream/leaf.rs:120-284
+    OutputFormat::ClickHouseRowBinary): fixed-width little-endian
+    values, no header or delimiters; floats become ints by truncation,
+    and a null (NaN) or infinite value has no integer encoding, so it
+    raises. The one encoder of the library sink and the REST stream."""
+    vals = np.asarray(values, np.float64)
+    if value_type != "f64" and not np.isfinite(vals).all():
+        raise ValueError(
+            f"RowBinary {value_type} cannot encode a null or non-finite value"
+        )
+    return vals.astype(_ROWBINARY_DTYPES[value_type]).tobytes()
 
 
 def write_stream_clickhouse_rowbinary(
     stream_df, out_dir: str, value_type: str = "i64"
 ) -> list[str]:
     """Sink a search-stream DataFrame's ``value`` column as ClickHouse
-    RowBinary part files (quickwit-search/src/search_stream/leaf.rs:120-284
-    OutputFormat::ClickHouseRowBinary): fixed-width little-endian
-    values, no header/delimiters — `cat parts | clickhouse-client
-    --query 'INSERT ... FORMAT RowBinary'`. One file per task, written
-    from the workers (no driver collect). Returns the part paths."""
+    RowBinary part files (:func:`rowbinary`) — `cat parts |
+    clickhouse-client --query 'INSERT ... FORMAT RowBinary'`. One file
+    per task, written from the workers (no driver collect). Returns the
+    part paths."""
     import pandas as pd
 
-    dtype = {"i64": "<i8", "u64": "<u8", "f64": "<f8"}[value_type]
+    if value_type not in _ROWBINARY_DTYPES:  # fail before the job
+        raise KeyError(value_type)
     fsio.makedirs(out_dir)
 
     def kernel(iterator):
@@ -1963,8 +1986,7 @@ def write_stream_clickhouse_rowbinary(
         path = fsio.join(out_dir, f"part-{uuid.uuid4().hex}.bin")
         with fsio.open_output(path) as f:
             for pdf in iterator:
-                vals = pdf["value"].to_numpy()
-                f.write(np.ascontiguousarray(vals.astype(dtype)).tobytes())
+                f.write(rowbinary(pdf["value"].to_numpy(), value_type))
                 n += len(pdf)
         if n == 0:
             fsio.delete(path)

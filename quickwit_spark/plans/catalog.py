@@ -446,29 +446,32 @@ class Catalog:
 
     def append_lineage(self, rows: list[dict]) -> None:
         """Append per-split lineage/metrics rows (split id, term range,
-        doc count, bytes, wall time) to the metrics parquet table."""
-        import pandas as pd
+        doc count, bytes, wall time) to the metrics parquet table. Every
+        file has one pinned schema (the field types lineage files have
+        always had), so the files of build, merge and demux read as one
+        table; a null ``partition`` is written as -1."""
+        import pyarrow as pa
 
         if not rows:
             return
-        df = pd.DataFrame(rows)
-        # pin dtypes so lineage files from different ops (build / merge /
-        # demux) present one mergeable parquet schema
-        df["partition"] = (
-            df["partition"].map(lambda v: -1 if v is None else int(v)).astype("int64")
+        schema = pa.schema([
+            ("split_id", pa.string()), ("op", pa.string()),
+            ("partition", pa.int64()), ("num_docs", pa.int64()),
+            ("size_in_bytes", pa.int64()), ("term_min", pa.string()),
+            ("term_max", pa.string()), ("wall_time_sec", pa.float64()),
+            ("ts", pa.float64()),
+        ])
+        table = pa.Table.from_pylist(
+            [
+                {**r, "partition": -1 if r["partition"] is None else r["partition"]}
+                for r in rows
+            ],
+            schema=schema,
         )
-        for c in ("num_docs", "size_in_bytes"):
-            df[c] = df[c].astype("int64")
-        for c in ("term_min", "term_max", "split_id", "op"):
-            df[c] = df[c].astype("string")
-        for c in ("wall_time_sec", "ts"):
-            df[c] = df[c].astype("float64")
-        import pyarrow as pa
-
         out = fsio.join(
             self.index_dir, "lineage", f"lineage-{uuid.uuid4().hex}.parquet"
         )
-        fsio.write_table(pa.Table.from_pandas(df, preserve_index=False), out)
+        fsio.write_table(table, out)
 
 
 class SqliteCatalog:

@@ -50,8 +50,9 @@ from quickwit_spark.api import Index
 
 _ROUTE = re.compile(r"^/api/v1/(?P<index>[\w.-]+)/(?P<verb>search/stream|search|ingest|tail|describe)$")
 
-# flush threshold for chunked /search/stream responses (module-level so
-# tests can shrink it to force multi-chunk bodies)
+# flush threshold for chunked /search/stream responses: a chunk holds
+# STREAM_CHUNK_BYTES / 8 rows, that many bytes of RowBinary (module-level
+# so tests can shrink it to force multi-chunk bodies)
 STREAM_CHUNK_BYTES = 64 * 1024
 
 
@@ -196,22 +197,20 @@ class _Handler(BaseHTTPRequestHandler):
                 if out_fmt == "csv":
                     ctype = "text/csv"
 
-                    def encode(v) -> bytes:
+                    def encode(vals) -> bytes:
                         # STREAM_SCHEMA types value as double for any
                         # fast field; i64 fields print as integers,
                         # like the reference's CSV output
-                        if isinstance(v, float) and v.is_integer():
-                            v = int(v)
-                        return f"{v}\n".encode()
+                        return "".join(
+                            f"{int(v) if isinstance(v, float) and v.is_integer() else v}\n"
+                            for v in vals
+                        ).encode()
                 elif out_fmt == "clickHouseRowBinary":
-                    import struct
+                    from quickwit_spark.operators.search import rowbinary
 
                     ctype = "application/octet-stream"
-
-                    def encode(v) -> bytes:
-                        # fast fields are i64 — little-endian fixed
-                        # width, matching the library RowBinary sink
-                        return struct.pack("<q", int(v))
+                    # fast fields are i64, the library sink's encoder
+                    encode = rowbinary
                 else:
                     raise ValueError(f"unknown output_format {out_fmt!r}")
                 # stream the export: toLocalIterator pulls one Spark
@@ -219,25 +218,24 @@ class _Handler(BaseHTTPRequestHandler):
                 # transfer forwards it — driver memory stays bounded by
                 # one partition + one chunk, never the whole result
                 # (the old .collect() + single body string OOMed the
-                # driver at real export sizes)
+                # driver at real export sizes); each chunk's rows are
+                # encoded at once
                 it = idx.search_stream(query, fast_field).toLocalIterator()
                 self.send_response(200)
                 self.send_header("content-type", ctype)
                 self.send_header("transfer-encoding", "chunked")
                 self.send_header("trailer", "X-Stream-Error")
                 self.end_headers()
-                buf: list[bytes] = []
-                size = 0
+                rows = max(1, STREAM_CHUNK_BYTES // 8)
+                vals: list = []
                 try:
                     for row in it:
-                        piece = encode(row.value)
-                        buf.append(piece)
-                        size += len(piece)
-                        if size >= STREAM_CHUNK_BYTES:
-                            self._write_chunk(b"".join(buf))
-                            buf, size = [], 0
-                    if buf:
-                        self._write_chunk(b"".join(buf))
+                        vals.append(row.value)
+                        if len(vals) >= rows:
+                            self._write_chunk(encode(vals))
+                            vals = []
+                    if vals:
+                        self._write_chunk(encode(vals))
                     self.wfile.write(b"0\r\n\r\n")  # chunked terminator
                 except Exception as exc:  # headers already sent — the
                     # error travels as a trailer, like the reference

@@ -236,6 +236,46 @@ def test_merge_and_gc_and_lineage(index, corpus):
     assert (lin["wall_time_sec"] >= 0).all()
 
 
+def test_lineage_files_of_both_writers_read_as_one_table(spark, tmp_path):
+    """A lineage file written through pandas (how lineage was written
+    before the pinned Arrow schema) and one written now read as one
+    table, through Spark and through pandas."""
+    import os
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from quickwit_spark.plans.catalog import Catalog
+
+    idx = Index.create(spark, str(tmp_path / "idx"))
+    row = {"split_id": "s-new", "op": "merge", "partition": None,
+           "num_docs": 3, "size_in_bytes": 10, "term_min": None,
+           "term_max": "zz", "wall_time_sec": 1, "ts": 5.0}
+    Catalog.load(idx.index_dir).append_lineage([row])
+    old = pd.DataFrame([{**row, "split_id": "s-old", "op": "build",
+                         "partition": 2, "term_min": "aa"}])
+    for c, t in [("partition", "int64"), ("num_docs", "int64"),
+                 ("size_in_bytes", "int64"), ("term_min", "string"),
+                 ("term_max", "string"), ("split_id", "string"),
+                 ("op", "string"), ("wall_time_sec", "float64"),
+                 ("ts", "float64")]:
+        old[c] = old[c].astype(t)
+    lin_dir = os.path.join(idx.index_dir, "lineage")
+    pq.write_table(pa.Table.from_pandas(old, preserve_index=False),
+                           os.path.join(lin_dir, "lineage-old.parquet"))
+    want = {("s-new", "merge", -1, None), ("s-old", "build", 2, "aa")}
+    via_spark = idx.lineage().toPandas()
+    via_pandas = pd.read_parquet(lin_dir)
+    for lin in (via_spark, via_pandas):
+        assert len(lin) == 2
+        assert {
+            (r.split_id, r.op, r.partition, None if pd.isna(r.term_min) else r.term_min)
+            for r in lin.itertuples()
+        } == want
+        assert (lin["num_docs"] == 3).all() and (lin["wall_time_sec"] == 1.0).all()
+
+
 def test_catalog_scales_to_10k_splits(tmp_path):
     """10k-split catalog: adaptive chunked publishing keeps the number
     of atomic commits bounded (<=9 for any split count), and load /
@@ -302,6 +342,20 @@ def test_search_stream_clickhouse_rowbinary(index):
     assert len(got) == index.search("w00002", k=1).num_hits
 
 
+def test_rowbinary_encoder():
+    """The one RowBinary encoder: little-endian fixed width, floats
+    truncate to ints, and a null (NaN) has no integer encoding."""
+    import struct
+
+    from quickwit_spark.operators.search import rowbinary
+
+    assert rowbinary([1.0, 2.9, -3.7]) == struct.pack("<3q", 1, 2, -3)
+    assert rowbinary([7.0], "u64") == struct.pack("<Q", 7)
+    assert rowbinary([1.5], "f64") == struct.pack("<d", 1.5)
+    with pytest.raises(ValueError, match="non-finite"):
+        rowbinary([1.0, float("nan")])
+
+
 def test_ingest_bulk_es_shim(spark, tmp_path):
     """ES _bulk NDJSON (action line + doc line pairs) ingests the docs
     and ignores the action lines."""
@@ -326,7 +380,7 @@ def test_ingest_bulk_es_shim(spark, tmp_path):
     assert idx.search("bulk", k=10).num_hits == 4
 
 
-def test_http_rest_server(index, corpus):
+def test_http_rest_server(index, corpus, tmp_path):
     """A real HTTP listener over the Index facade: /search (REST param
     names), /search/stream, /tail, /describe respond with the
     reference's shapes (rest_handler.rs:83-166)."""
@@ -371,6 +425,13 @@ def test_http_rest_server(index, corpus):
             raw = r.read()
         assert len(raw) == 8 * len(vals)
         assert sorted(struct.unpack(f"<{len(vals)}q", raw)) == sorted(vals)
+        # the same multiset as the library sink's part files (one part
+        # per task, so compared unordered)
+        parts = index.search_stream_rowbinary("w00002", "doc_len", str(tmp_path / "rb"))
+        sink = b"".join(open(p, "rb").read() for p in parts)
+        assert sorted(struct.unpack(f"<{len(sink) // 8}q", sink)) == sorted(
+            struct.unpack(f"<{len(raw) // 8}q", raw)
+        )
 
         # aggs JSON param (rest_handler.rs SearchRequestQueryString.aggs)
         from urllib.parse import quote

@@ -878,14 +878,14 @@ class TestAggregations:
 
         rows = _partial_agg(
             "histogram", {"field": "x", "interval": 10.0},
-            np.array([8.0, 12.0]),
+            np.array([8.0, 12.0]), np.arange(2),
         )
         assert [(float(r["agg_key"]), r["agg_count"]) for r in rows] == [
             (0.0, 1), (10.0, 1)
         ]
         rows = _partial_agg(
             "histogram", {"field": "x", "interval": 10.0, "offset": 5.0},
-            np.array([8.0, 12.0]),
+            np.array([8.0, 12.0]), np.arange(2),
         )
         assert [(float(r["agg_key"]), r["agg_count"]) for r in rows] == [
             (5.0, 2)
@@ -902,7 +902,9 @@ class TestAggregations:
         from quickwit_spark.operators.search import _final_agg, _partial_agg
 
         def run(params, vals, final_params=None):
-            rows = _partial_agg("histogram", params, np.asarray(vals, float))
+            rows = _partial_agg(
+                "histogram", params, np.asarray(vals, float), np.arange(len(vals))
+            )
             return _final_agg("histogram", final_params or params, rows)
 
         p = {"field": "x", "interval": 10.0}
@@ -1153,21 +1155,26 @@ def test_terms_cut_invariants_property(vals, n_splits, size, split_size):
     most doc_count_error_upper_bound, (3) lifting split_size past the
     cardinality reproduces the exact aggregation."""
     import numpy as np
+    import pyarrow as pa
 
-    from quickwit_spark.operators.search import _final_agg, _partial_agg
+    from quickwit_spark.operators.search import (
+        _final_agg,
+        _partial_agg,
+        _terms_column,
+    )
 
     params = {"field": "x", "size": size, "split_size": split_size}
-    chunks = [np.array(vals[i::n_splits], dtype=object)
-              for i in range(n_splits)]
-    rows = [r for c in chunks if c.size for r in _partial_agg("terms", params, c)]
+    chunks = [vals[i::n_splits] for i in range(n_splits)]
+    cols = [(_terms_column(pa.chunked_array([pa.array(c)])), np.arange(len(c)))
+            for c in chunks if c]
+    rows = [r for c, m in cols for r in _partial_agg("terms", params, c, m)]
     got = _final_agg("terms", params, rows)
     total = len(vals)
     assert sum(b["doc_count"] for b in got["buckets"]) + got[
         "sum_other_doc_count"
     ] == total
     exact_params = {"field": "x", "size": 10_000, "split_size": 100_000}
-    rows_x = [r for c in chunks if c.size
-              for r in _partial_agg("terms", exact_params, c)]
+    rows_x = [r for c, m in cols for r in _partial_agg("terms", exact_params, c, m)]
     exact = {
         b["key"]: b["doc_count"]
         for b in _final_agg("terms", exact_params, rows_x)["buckets"]
@@ -1200,7 +1207,7 @@ def test_histogram_grid_property(vals, n_splits, interval, offset):
     params = {"field": "x", "interval": interval, "offset": offset}
     chunks = [np.array(vals[i::n_splits]) for i in range(n_splits)]
     rows = [r for c in chunks if c.size
-            for r in _partial_agg("histogram", params, c)]
+            for r in _partial_agg("histogram", params, c, np.arange(c.size))]
     got = _final_agg("histogram", params, rows)["buckets"]
     assert sum(b["doc_count"] for b in got) == len(vals)
     keys = [b["key"] for b in got]
@@ -1222,22 +1229,27 @@ def test_terms_agg_bucket_cap_fails_fast_in_leaf():
     raise in the LEAF kernel (shard_size analog) instead of shipping
     unbounded partials to the root."""
     import numpy as np
+    import pyarrow as pa
     import pytest
 
     from quickwit_spark.operators.search import (
         AGGREGATION_BUCKET_LIMIT,
         _partial_agg,
+        _terms_column,
     )
 
-    vals = np.arange(AGGREGATION_BUCKET_LIMIT + 1).astype(str)
+    col = _terms_column(pa.chunked_array(
+        [pa.array(np.arange(AGGREGATION_BUCKET_LIMIT + 1).astype(str))]
+    ))
     with pytest.raises(ValueError, match="bucket limit exceeded in split"):
-        _partial_agg("terms", {"field": "x"}, vals)
+        _partial_agg("terms", {"field": "x"}, col, np.arange(len(col.codes)))
     # at the limit it still works (split_size lifted past cardinality)
-    ok = _partial_agg("terms", {"field": "x", "split_size": 2000}, vals[:1000])
+    first = np.arange(1000)
+    ok = _partial_agg("terms", {"field": "x", "split_size": 2000}, col, first)
     assert len(ok) == 1000
     # default split_size (size*1.5+10) cuts the leaf result and appends
     # ONE summary row (agg_key=None) carrying dropped-count + max-cut
-    cut = _partial_agg("terms", {"field": "x"}, vals[:1000])
+    cut = _partial_agg("terms", {"field": "x"}, col, first)
     assert len(cut) == 26 and cut[-1]["agg_key"] is None
     assert cut[-1]["agg_count"] == 1000 - 25 and cut[-1]["agg_sum"] == 1.0
 
