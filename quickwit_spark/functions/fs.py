@@ -290,11 +290,15 @@ def spark_read_path(path: str) -> str:
 
 
 def rmtree(path: str) -> None:
+    """Remove ``path``, a directory tree or a file; no-op if missing."""
     from pyarrow.fs import FileType
 
     fs, p = resolve_fs(path)
-    if fs.get_file_info(p).type != FileType.NotFound:
+    kind = fs.get_file_info(p).type
+    if kind == FileType.Directory:
         fs.delete_dir(p)
+    elif kind != FileType.NotFound:
+        fs.delete_file(p)
 
 
 def copy_file(src: str, dst: str) -> None:

@@ -465,7 +465,7 @@ def run_merge_pipeline(spark, index_dir: str, max_rounds: int = 100) -> int:
             refresh_term_stats,
         )
 
-        # global dfs are invariant under merge — reuse the stats file
+        # global dfs are invariant under merge — reuse the stats artifact
         if not carry_forward_term_stats(catalog, pre_version):
             refresh_term_stats(spark, catalog)
     return total
@@ -480,7 +480,10 @@ def gc_deleted_splits(
     """Garbage collection (garbage_collection.rs analog): physically
     delete marked-for-deletion splits, plus Staged splits older than
     the grace period (orphans from a crashed build that will never be
-    published — the reference's staged-grace sweep)."""
+    published — the reference's staged-grace sweep). An index that
+    keeps no history also loses its superseded term-stats artifacts
+    (stats.gc_term_stats); with retain_history a time-travel handle
+    reads its own version's artifact, so none is deleted."""
     catalog = Catalog.load(index_dir)
     now = time.time()
     # retained time-travel history pins split files: a snapshot that
@@ -505,4 +508,8 @@ def gc_deleted_splits(
         )
     ]
     catalog.delete_splits(doomed)
+    if not catalog.retain_history:
+        from quickwit_spark.operators.stats import gc_term_stats
+
+        gc_term_stats(index_dir)
     return doomed

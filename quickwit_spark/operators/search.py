@@ -1245,25 +1245,6 @@ def _partial_agg(
 # driver side
 # ---------------------------------------------------------------------------
 
-def _df_candidate_splits(splits, missing, default_field):
-    """Splits that can contribute a non-zero doc-freq for any of the
-    ``missing`` (field, term) pairs: non-default-field terms have no
-    recorded range (keep all splits); default-field terms prune on the
-    split's (min, max) term range."""
-    if any(f != default_field for f, _ in missing):
-        return splits
-    terms = [t for f, t in missing]
-    out = []
-    for s in splits:
-        if s.term_range is None:
-            out.append(s)
-            continue
-        lo, hi = s.term_range
-        if any(lo <= t <= hi for t in terms):
-            out.append(s)
-    return out
-
-
 class Searcher:
     """Warm search handle over one index: caches catalog, global stats,
     per-term global doc-freqs, decoded postings (per-term shard stats
@@ -1335,68 +1316,26 @@ class Searcher:
     # -- global term stats -------------------------------------------------
 
     def _global_df(self, terms: set[tuple[str, str]]) -> dict:
-        missing = sorted(t for t in terms if t not in self._df_cache)
+        missing = {t for t in terms if t not in self._df_cache}
         if missing:
             # fast path: precomputed index-level term stats (hotcache
             # analog — see operators/stats.py), driver-side point read
-            from quickwit_spark.operators.stats import lookup_term_stats
+            from quickwit_spark.operators.stats import lookup_term_stats, sum_dfs
 
-            found = lookup_term_stats(self.catalog, set(missing))
-            if found is not None:
-                self._df_cache.update(found)
-                return {t: self._df_cache[t] for t in terms}
-            if not self._warned_no_stats:
-                # once per handle: every later miss takes the same path
-                self._warned_no_stats = True
-                _log.warning(
-                    "index %s: term-stats artifact missing or unreadable; "
-                    "global doc freqs fall back to a Spark job over the "
-                    "splits until refresh_term_stats rewrites it",
-                    self.index_dir,
-                )
-            # term-range pruning is sound for df too: a split whose
-            # default-field term range excludes EVERY missing term has
-            # zero occurrences of them
-            splits = _df_candidate_splits(
-                self.catalog.published_splits(), missing,
-                self.config.default_search_field,
-            )
-            rows = [
-                (s.split_id, self.catalog.split_dir(s.split_id))
-                for s in splits
-            ]
-            term_values = sorted({t for _, t in missing})
-            if rows:
-                sdf = self.spark.createDataFrame(rows, "split_id string, path string")
-                sdf = sdf.repartition(min(len(rows), 64))
-
-                def read_dfs(iterator):
-                    from quickwit_spark.functions.parquet_io import read_pruned
-
-                    limit_worker_threads()
-                    for pdf in iterator:
-                        out = []
-                        for path in pdf["path"]:
-                            t = read_pruned(
-                                fsio.join(path, POSTINGS_FILE),
-                                ["field", "term", "df"],
-                                "term", term_values,
-                            )
-                            out.append(t.to_pandas())
-                        if out:
-                            yield pd.concat(out, ignore_index=True)
-
-                res = (
-                    sdf.mapInPandas(read_dfs, schema="field string, term string, df long")
-                    .groupBy("field", "term")
-                    .sum("df")
-                    .collect()
-                )
-                found = {(r["field"], r["term"]): r["sum(df)"] for r in res}
-            else:
-                found = {}
-            for t in missing:
-                self._df_cache[t] = int(found.get(t, 0))
+            found = lookup_term_stats(self.catalog, missing)
+            if found is None:
+                if not self._warned_no_stats:
+                    # once per handle: every later miss takes the same path
+                    self._warned_no_stats = True
+                    _log.warning(
+                        "index %s: term-stats artifact missing or unreadable; "
+                        "global doc freqs are summed from the splits' "
+                        "postings (stats.sum_dfs) until refresh_term_stats "
+                        "rewrites it",
+                        self.index_dir,
+                    )
+                found = sum_dfs(self.spark, self.catalog, missing)
+            self._df_cache.update(found)
         return {t: self._df_cache[t] for t in terms}
 
     # -- search ------------------------------------------------------------

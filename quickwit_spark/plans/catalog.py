@@ -425,13 +425,15 @@ class Catalog:
 
     def stats_version(self) -> str:
         """Deterministic version tag of the published split set — names
-        the precomputed index-level term-stats file."""
+        the precomputed index-level term-stats artifact."""
         import hashlib
 
         ids = ",".join(s.split_id for s in self.published_splits())
         return hashlib.md5(ids.encode()).hexdigest()[:16]
 
     def term_stats_path(self) -> str:
+        """Base path of this version's term-stats artifact, which is the
+        ``<base>.shards/`` directory (operators/stats.py)."""
         return fsio.join(
             self.index_dir, "term_stats", f"stats-{self.stats_version()}.parquet"
         )

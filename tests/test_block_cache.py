@@ -398,12 +398,18 @@ def test_read_pruned_cached_key_bounds_equal_full_scan(
     from quickwit_spark.functions.parquet_io import read_pruned
     from quickwit_spark.plans.catalog import Catalog
 
+    from quickwit_spark.operators import stats
+
     cat = Catalog.load(index_dir)
     split_dir = cat.split_dir(cat.published_splits()[0].split_id)
+    stats_dir = stats._shard_dir(cat.term_stats_path())
     src, key = {
         "postings": (fsio.join(split_dir, "postings.parquet"), "term"),
         "docs": (fsio.join(split_dir, "docs.parquet"), "docid"),
-        "term_stats": (cat.term_stats_path(), "term"),
+        # the artifact's first part (the driver refresh writes one)
+        "term_stats": (fsio.join(
+            stats_dir, stats._load_manifest(stats_dir)["parts"][0]["part"]
+        ), "term"),
     }[kind]
     full = pq.read_table(src)
     multi = str(tmp_path / "multi.parquet")

@@ -144,6 +144,14 @@ class TestMockE2E:
             assert not os.path.exists(
                 os.path.join(mock_backing, "idx", "splits", sid)
             )
+        # the merge republished the term stats under the new version;
+        # GC deleted the superseded artifact through the fs
+        from quickwit_spark.plans.catalog import Catalog
+
+        cur = Catalog.load(mock_index.index_dir).stats_version()
+        assert os.listdir(os.path.join(mock_backing, "idx", "term_stats")) == [
+            f"stats-{cur}.parquet.shards"
+        ]
         after = mock_index.search(q, k=20)
         assert after.num_hits == before.num_hits
         assert _doc_key(after) == _doc_key(before)

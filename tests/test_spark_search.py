@@ -1255,13 +1255,14 @@ def test_terms_agg_bucket_cap_fails_fast_in_leaf():
 
 
 def test_global_df_cold_path_term_range_pruned(spark, index_dir, searcher):
-    """With the term-stats file absent, the distributed df aggregation
-    must term-range-prune splits and still return the correct global
-    doc freqs (cache parity with the stats-file fast path)."""
+    """With the term-stats artifact absent, the fallback df sum must
+    term-range-prune splits and still return the correct global doc
+    freqs (cache parity with the artifact's fast path)."""
     import os
     import shutil
 
-    from quickwit_spark.operators.search import Searcher, _df_candidate_splits
+    from quickwit_spark.operators.search import Searcher
+    from quickwit_spark.operators.stats import _df_candidate_splits
     from quickwit_spark.plans.catalog import SplitMetadata
 
     # unit: a split whose range excludes the term is dropped
@@ -1273,8 +1274,8 @@ def test_global_df_cold_path_term_range_pruned(spark, index_dir, searcher):
     got = _df_candidate_splits([s_in, s_out], {("tool", "ccc")}, "text")
     assert len(got) == 2
 
-    # e2e: warm df via the fast path, then hide the stats file and
-    # compare the cold (pruned, distributed) aggregation
+    # e2e: warm df via the fast path, then hide the stats artifact and
+    # compare the cold (pruned) fallback sum
     terms = {("text", "w00001"), ("text", "w00400"), ("tool", "git")}
     warm = Searcher(spark, index_dir)
     want = warm._global_df(terms)
